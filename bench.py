@@ -435,6 +435,9 @@ def main() -> None:
             break  # waiting can no longer help on a busy box
 
     total = round(sum(timings.values()), 3)
+    # cores Spark actually schedules on (local[N]) — the number a
+    # cross-host comparison needs next to the seconds
+    cpus = spark.sparkContext.defaultParallelism
     # Diagnostic blobs go to a SIDECAR file, not the stdout line: the
     # round-4 driver record (BENCH_r04.json "parsed": null) was lost
     # because the JSON line with fingerprint/gc/cpu outgrew the
@@ -442,6 +445,7 @@ def main() -> None:
     # contract is now: diagnostics line first (best-effort), then the
     # compact headline JSON as the FINAL short line.
     detail = {
+        "cpus": cpus,
         "scan_tasks": scan_tasks,
         # per-query receipts for attributing time deltas:
         # gc_ms/cpu_ms are deltas over the FIRST warm run
@@ -502,6 +506,7 @@ def main() -> None:
                 "shuffle_bytes": shuffles,
                 "baseline_comparable_total": comparable,
                 "baseline_comparable_queries": len(legacy),
+                "cpus": cpus,
             }
         )
     )

@@ -42,7 +42,6 @@ from typing import NamedTuple
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
-from mongodb_etl_migration_spark.operators.text import lit_int_array
 
 TURN_STRUCT = "array<struct<turn_idx:int,role:string,content:string>>"
 
@@ -259,10 +258,6 @@ def loss_mask_spans(
     return F.aggregate(t, zero, step, lambda acc: acc["spans"])
 
 
-def _lit_int_array(ids: list[int]) -> Column:
-    return lit_int_array(ids)
-
-
 def special_token_ids(
     merges: list[tuple[str, str]], tokens: list[str]
 ) -> dict[str, int]:
@@ -314,7 +309,7 @@ def _encode_constant(
 
 
 def sft_tokens(
-    turns: Column | str,
+    turns: str,
     merges: list[tuple[str, str]],
     template: ChatTemplate | str = "tagged",
     special_ids: dict[str, int] | None = None,
@@ -338,6 +333,12 @@ def sft_tokens(
     property test). Inline whole-string encoding cannot promise this
     — a pretoken can span punctuation at a content/suffix boundary.
 
+    ``turns`` names the turns column (a dotted name is a struct field,
+    as under ``F.col``). The expression is built as ONE parsed SQL
+    string: the Column-API build of the two per-turn encode chains
+    cost ~4,400 py4j round-trips per construction (r14 cProfile
+    receipt).
+
     Plan shape: constant segments (bos/suffix/eos) are encoded
     DRIVER-SIDE into literal id arrays; per-turn header/content
     encodes run inside ONE ``transform`` over the turns array (each
@@ -358,13 +359,7 @@ def sft_tokens(
     becomes [pre ids] + encode(role) + [post ids] (the role is data
     and still BPE-encodes). Without it, behavior is unchanged —
     template text BPE-encodes like any text."""
-    from .text import (
-        _sql_str,
-        gpt2_token_ids,
-        gpt2_token_ids_sql,
-        sql_int_array,
-        sql_name_ok,
-    )
+    from .text import _sql_str, gpt2_token_ids_sql, sql_ident, sql_int_array
 
     tpl = resolve_template(template)
 
@@ -375,173 +370,77 @@ def sft_tokens(
     sfx_ids = const_ids(tpl.suffix)
     eos_ids = const_ids(tpl.eos)
 
-    if isinstance(turns, str) and sql_name_ok(turns):
-        # One-parse SQL template (identical expression tree — pinned
-        # value-equal to the Column form below by
-        # tests/test_chat_sql_forms.py): the Column-API build of the
-        # two per-turn encode chains cost ~4,400 py4j round-trips per
-        # construction (r14 cProfile receipt; the pass-6/pass-12
-        # template device applied to the chat path). Dotted/backticked
-        # names fall through to the Column form (ADVICE r14).
-        role_sql = "coalesce(__ct.role, '')"
-        # Header-encode CONSTANT FOLD (r15): real corpora have ~3
-        # distinct roles, yet the dynamic form re-runs the whole
-        # merge chain (|merges| × 4 replace passes) on
-        # pre_role+role+post_role for EVERY turn — at sf0.1 the
-        # header was ~40% of c_sft's per-turn encode CPU. The known
-        # roles fold to literal id arrays via the SAME driver-side
-        # exact encoder already trusted for bos/suffix/eos
-        # (_encode_constant — reference==chain is property-tested);
-        # any other role takes the unchanged dynamic chain through
-        # the CASE's else, so values are identical for ALL inputs.
-        if special_ids:
-            pre_ids = const_ids(tpl.pre_role)
-            post_ids = const_ids(tpl.post_role)
-            hdr_dyn = (
-                f"concat({sql_int_array(pre_ids)}, "
-                f"{gpt2_token_ids_sql(role_sql, merges)}, "
-                f"{sql_int_array(post_ids)})"
-            )
-            # role is DATA: plain BPE (no special scan), like the
-            # dynamic gpt2_token_ids it replaces
-            hdr_folds = {
-                r: pre_ids + _encode_constant(r, merges, None) + post_ids
-                for r in _FOLDED_ROLES
-            }
-        else:
-            hdr_dyn = gpt2_token_ids_sql(
-                f"concat({_sql_str(tpl.pre_role)}, "
-                f"{role_sql}, {_sql_str(tpl.post_role)})",
-                merges,
-            )
-            hdr_folds = {
-                r: const_ids(tpl.pre_role + r + tpl.post_role)
-                for r in _FOLDED_ROLES
-            }
-        whens = " ".join(
-            f"when {_sql_str(r)} then {sql_int_array(ids)}"
-            for r, ids in hdr_folds.items()
-        )
-        hdr = f"(case {role_sql} {whens} else {hdr_dyn} end)"
-        cnt = gpt2_token_ids_sql("coalesce(__ct.content, '')", merges)
-        enc_sql = (
-            f"transform(`{turns}`, __ct -> named_struct("
-            f"'turn_idx', __ct.turn_idx, "
-            f"'is_assistant', (__ct.role = 'assistant'), "
-            f"'hdr', {hdr}, 'cnt', {cnt}))"
-        )
-        zero_sql = (
-            f"named_struct('ids', {sql_int_array(bos_ids)}, "
-            f"'spans', cast(array() as {TOKSPAN_STRUCT}))"
-        )
-        start_sql = "cast((size(__acc.ids) + size(__cx.hdr)) as bigint)"
-        end_sql = f"{start_sql} + cast(size(__cx.cnt) as bigint)"
-        span_sql = (
-            f"named_struct('turn_idx', __cx.turn_idx, "
-            f"'tok_start', {start_sql}, 'tok_end', {end_sql})"
-        )
-        step_sql = (
-            f"named_struct('ids', concat(__acc.ids, __cx.hdr, __cx.cnt, "
-            f"{sql_int_array(sfx_ids)}), "
-            f"'spans', case when __cx.is_assistant "
-            f"then concat(__acc.spans, array({span_sql})) "
-            f"else __acc.spans end)"
-        )
-        finish_sql = (
-            f"named_struct('token_ids', concat(__fa.ids, "
-            f"{sql_int_array(eos_ids)}), 'mask_spans', __fa.spans)"
-        )
-        return F.expr(
-            f"aggregate({enc_sql}, {zero_sql}, "
-            f"(__acc, __cx) -> {step_sql}, __fa -> {finish_sql})"
-        )
-
-    t = turns
-    # same header-role constant fold as the SQL branch above (the two
-    # forms stay expression-equal — pinned by test_chat_sql_forms)
+    role_sql = "coalesce(__ct.role, '')"
+    # Header-encode CONSTANT FOLD (r15): real corpora have ~3
+    # distinct roles, yet the dynamic form re-runs the whole
+    # merge chain (|merges| × 4 replace passes) on
+    # pre_role+role+post_role for EVERY turn — at sf0.1 the
+    # header was ~40% of c_sft's per-turn encode CPU. The known
+    # roles fold to literal id arrays via the SAME driver-side
+    # exact encoder already trusted for bos/suffix/eos
+    # (_encode_constant — reference==chain is property-tested);
+    # any other role takes the unchanged dynamic chain through
+    # the CASE's else, so values are identical for ALL inputs.
     if special_ids:
-        pre_ids, post_ids = const_ids(tpl.pre_role), const_ids(tpl.post_role)
-        c_folds = {
+        pre_ids = const_ids(tpl.pre_role)
+        post_ids = const_ids(tpl.post_role)
+        hdr_dyn = (
+            f"concat({sql_int_array(pre_ids)}, "
+            f"{gpt2_token_ids_sql(role_sql, merges)}, "
+            f"{sql_int_array(post_ids)})"
+        )
+        # role is DATA: plain BPE (no special scan), like the
+        # dynamic gpt2_token_ids it replaces
+        hdr_folds = {
             r: pre_ids + _encode_constant(r, merges, None) + post_ids
             for r in _FOLDED_ROLES
         }
-
-        def hdr_dyn_of(x: Column) -> Column:
-            return F.concat(
-                _lit_int_array(pre_ids),
-                gpt2_token_ids(F.coalesce(x["role"], F.lit("")), merges),
-                _lit_int_array(post_ids),
-            )
-
     else:
-        c_folds = {
+        hdr_dyn = gpt2_token_ids_sql(
+            f"concat({_sql_str(tpl.pre_role)}, "
+            f"{role_sql}, {_sql_str(tpl.post_role)})",
+            merges,
+        )
+        hdr_folds = {
             r: const_ids(tpl.pre_role + r + tpl.post_role)
             for r in _FOLDED_ROLES
         }
-
-        def hdr_dyn_of(x: Column) -> Column:
-            return gpt2_token_ids(
-                F.concat(
-                    F.lit(tpl.pre_role),
-                    F.coalesce(x["role"], F.lit("")),
-                    F.lit(tpl.post_role),
-                ),
-                merges,
-            )
-
-    def hdr_of(x: Column) -> Column:
-        role = F.coalesce(x["role"], F.lit(""))
-        folded = list(c_folds.items())
-        c = F.when(role == F.lit(folded[0][0]), _lit_int_array(folded[0][1]))
-        for r, ids in folded[1:]:
-            c = c.when(role == F.lit(r), _lit_int_array(ids))
-        return c.otherwise(hdr_dyn_of(x))
-
-    enc = F.transform(
-        t,
-        lambda x: F.struct(
-            x["turn_idx"].alias("turn_idx"),
-            (x["role"] == F.lit("assistant")).alias("is_assistant"),
-            hdr_of(x).alias("hdr"),
-            gpt2_token_ids(
-                F.coalesce(x["content"], F.lit("")), merges
-            ).alias("cnt"),
-        ),
+    whens = " ".join(
+        f"when {_sql_str(r)} then {sql_int_array(ids)}"
+        for r, ids in hdr_folds.items()
     )
-    zero = F.struct(
-        _lit_int_array(bos_ids).alias("ids"),
-        F.array().cast(TOKSPAN_STRUCT).alias("spans"),
+    hdr = f"(case {role_sql} {whens} else {hdr_dyn} end)"
+    cnt = gpt2_token_ids_sql("coalesce(__ct.content, '')", merges)
+    enc_sql = (
+        f"transform({sql_ident(turns)}, __ct -> named_struct("
+        f"'turn_idx', __ct.turn_idx, "
+        f"'is_assistant', (__ct.role = 'assistant'), "
+        f"'hdr', {hdr}, 'cnt', {cnt}))"
     )
-
-    def step(acc: Column, x: Column) -> Column:
-        start = (F.size(acc["ids"]) + F.size(x["hdr"])).cast("bigint")
-        end = start + F.size(x["cnt"]).cast("bigint")
-        span = F.struct(
-            x["turn_idx"].alias("turn_idx"),
-            start.alias("tok_start"),
-            end.alias("tok_end"),
-        )
-        return F.struct(
-            F.concat(
-                acc["ids"], x["hdr"], x["cnt"], _lit_int_array(sfx_ids)
-            ).alias("ids"),
-            F.when(
-                x["is_assistant"], F.concat(acc["spans"], F.array(span))
-            )
-            .otherwise(acc["spans"])
-            .alias("spans"),
-        )
-
-    return F.aggregate(
-        enc,
-        zero,
-        step,
-        lambda acc: F.struct(
-            F.concat(acc["ids"], _lit_int_array(eos_ids)).alias(
-                "token_ids"
-            ),
-            acc["spans"].alias("mask_spans"),
-        ),
+    zero_sql = (
+        f"named_struct('ids', {sql_int_array(bos_ids)}, "
+        f"'spans', cast(array() as {TOKSPAN_STRUCT}))"
+    )
+    start_sql = "cast((size(__acc.ids) + size(__cx.hdr)) as bigint)"
+    end_sql = f"{start_sql} + cast(size(__cx.cnt) as bigint)"
+    span_sql = (
+        f"named_struct('turn_idx', __cx.turn_idx, "
+        f"'tok_start', {start_sql}, 'tok_end', {end_sql})"
+    )
+    step_sql = (
+        f"named_struct('ids', concat(__acc.ids, __cx.hdr, __cx.cnt, "
+        f"{sql_int_array(sfx_ids)}), "
+        f"'spans', case when __cx.is_assistant "
+        f"then concat(__acc.spans, array({span_sql})) "
+        f"else __acc.spans end)"
+    )
+    finish_sql = (
+        f"named_struct('token_ids', concat(__fa.ids, "
+        f"{sql_int_array(eos_ids)}), 'mask_spans', __fa.spans)"
+    )
+    return F.expr(
+        f"aggregate({enc_sql}, {zero_sql}, "
+        f"(__acc, __cx) -> {step_sql}, __fa -> {finish_sql})"
     )
 
 
@@ -562,7 +461,7 @@ def sft_tokens_batch(
     LOSSLESS on any input — no OOV. Output: (id_col, n_tokens bigint,
     token_ids string — space-joined, mask_spans string —
     'turn:start:end' comma-joined; scalar so the driver hash gate can
-    canonicalize). Identical to the Column path on its ASCII scope
+    canonicalize). Identical to sft_tokens on its ASCII scope
     (property-tested)."""
     from .text import gpt2_apply_reference, gpt2_vocab
 

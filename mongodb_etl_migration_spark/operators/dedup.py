@@ -8,8 +8,8 @@ are lexicographic, so every stage is deterministic and oracle-checkable.
 Scale design notes (100 TB):
 - exact dedup: one shuffle on the content hash; map-side partial
   aggregation shrinks it to #distinct rows.
-- MinHash: shingling is a narrow explode; signatures are one shuffle on
-  (doc, seed) collapsed by partial min; LSH banding turns the O(n²)
+- MinHash: shingles and signatures are narrow per-row projections
+  (no explode, no shuffle); LSH banding turns the O(n²)
   pair space into per-bucket self-joins — the only quadratic work is
   inside a bucket, and bucket sizes are bounded by collision rate, not
   corpus size. Hot buckets (boilerplate docs) are the skew risk → AQE
@@ -49,42 +49,14 @@ def exact_dedup(df: DataFrame, id_col: str, content_col: str) -> DataFrame:
 
 
 # ---------------------------------------------------------- shingles
-def shingle_array(text_col: Column | str, k: int = 3) -> Column:
-    """Distinct k-token shingles as an array column — pure narrow
-    array ops (tokenize → indexed window-concat → array_distinct), no
-    explode, no shuffle.
-
-    NOTE: the returned expression inlines the tokenizer regexp k+2
-    times; evaluate it over a MATERIALIZED token column (see
-    :func:`with_shingle_column`) in hot paths — higher-order-function
-    lambdas are outside whole-stage codegen, so Catalyst performs no
-    common-subexpression elimination inside them and every duplicated
-    reference re-runs its whole subtree."""
-    return _shingle_expr(tokens(text_col), k)
-
-
-def _shingle_expr(toks: Column, k: int) -> Column:
-    """Shingle-array expression over an (ideally materialized) token
-    array column."""
-    n = F.size(toks)
-
-    def mk(i: Column) -> Column:
-        # element_at is 1-based; i ranges over 0..n-k
-        return F.concat_ws(
-            " ", *[F.element_at(toks, i + j + 1) for j in range(k)]
-        )
-
-    return F.when(
-        n >= k, F.array_distinct(F.transform(F.sequence(F.lit(0), n - k), mk))
-    ).otherwise(F.array().cast("array<string>"))
-
-
-# --- SQL-template twins (one parse instead of per-node py4j chatter;
-# the pass-12/13 device — value-equality with the Column forms pinned
-# by tests/test_dedup_sql_forms.py, d1-d10 oracle-green) -------------
-
 def _shingle_expr_sql(toks: str, k: int) -> str:
-    """SQL fragment: :func:`_shingle_expr` over a token-array fragment."""
+    """SQL fragment: distinct k-token shingles over a token-array
+    fragment (indexed window-concat → array_distinct; shorter than k
+    → empty array). Pure narrow array ops, no explode, no shuffle.
+    Evaluate it over a MATERIALIZED token column: the fragment
+    references ``toks`` k+2 times, and higher-order-function lambdas
+    get no codegen CSE, so an inlined tokenizer would re-run per
+    reference."""
     cells = ", ".join(f"element_at({toks}, (__si + {j}) + 1)" for j in range(k))
     return (
         f"case when size({toks}) >= {k} then "
@@ -95,7 +67,8 @@ def _shingle_expr_sql(toks: str, k: int) -> str:
 
 
 def _shingle_base_hash_sql(inp: str) -> str:
-    """SQL fragment: :func:`shingle_base_hash` over a fragment."""
+    """SQL fragment: 60-bit md5-derived base hash of a shingle,
+    reduced mod p (see the MinHash hash-family note)."""
     return (
         f"cast(conv(substring(md5({inp}), 1, 15), 16, 10) as bigint) "
         f"% {MINHASH_P}"
@@ -140,7 +113,7 @@ def shingles(
     )
     return toked.select(
         F.col(id_col),
-        F.explode(_shingle_expr(F.col("_toks"), k)).alias("shingle"),
+        F.explode(F.expr(_shingle_expr_sql("`_toks`", k))).alias("shingle"),
     )
 
 
@@ -168,35 +141,6 @@ def affine_params(num_hashes: int) -> list[tuple[int, int]]:
     ]
 
 
-def shingle_base_hash(shingle: Column) -> Column:
-    """60-bit md5-derived base hash of a shingle, reduced mod p."""
-    return (
-        F.conv(F.substring(F.md5(shingle), 1, 15), 16, 10).cast("long")
-        % MINHASH_P
-    )
-
-
-def minhash_signatures(
-    shingle_df: DataFrame, id_col: str, num_hashes: int = 16
-) -> DataFrame:
-    """MinHash signature per document, WIDE form over shingle rows.
-    Output: (id_col, sig_0 .. sig_{n-1}), sig_i = min_s (a_i*h(s)+b_i) mod p.
-
-    One groupBy(doc) with n `min` aggregate columns — NO seed explode:
-    the naive long form multiplies the shuffle by num_hashes (n× rows);
-    here partial map-side mins reduce each partition to one row per doc
-    before the single shuffle. At 100 TB this is the difference between
-    shuffling n×corpus and shuffling ~#docs rows."""
-    hashed = shingle_df.select(
-        F.col(id_col), shingle_base_hash(F.col("shingle")).alias("_h")
-    )
-    aggs = [
-        F.min((F.lit(a) * F.col("_h") + F.lit(b)) % MINHASH_P).alias(f"sig_{i}")
-        for i, (a, b) in enumerate(affine_params(num_hashes))
-    ]
-    return hashed.groupBy(id_col).agg(*aggs)
-
-
 def minhash_signatures_narrow(
     df: DataFrame, id_col: str, text_col: str, k: int = 3, num_hashes: int = 16
 ) -> DataFrame:
@@ -219,7 +163,7 @@ def minhash_signatures_narrow(
 
     def sig(i: int, a: int, b: int) -> Column:
         # one parse per seed: (a*h + b) % p folded over the base-hash
-        # array — same tree as the Column form (see _shingle_expr_sql)
+        # array
         return F.expr(
             f"array_min(transform(`_h`, "
             f"__mh -> (({a} * __mh) + {b}) % {MINHASH_P}))"

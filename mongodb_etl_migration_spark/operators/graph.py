@@ -73,6 +73,15 @@ def pagerank_integer(
     reclaims them). The returned frame is self-contained (plan =
     checkpoint scan), materializing on first use.
 
+    Executor-loss caveat: localCheckpoint blocks live on the executor
+    that computed them and carry NO lineage, so the loop invariants
+    do not survive an executor loss or decommission — a lost block
+    fails the consumer's job instead of being recomputed (Spark's own
+    localCheckpoint caveat). Do not rely on this operator under
+    dynamic allocation or executor decommissioning. Until the first
+    action materializes the result, each fresh action on it replays
+    the full round chain.
+
     Output: (node, pr) — fixed-point rank, a bigint in units of 1/scale
     ("pr" because RANK is a window-function keyword in both SQL dialects).
     """
@@ -197,7 +206,9 @@ def hits_integer(
     the renormalizing join, and without the pin the join+sum chain
     would compute twice per round (the d2 broadcast-fragility
     lesson — ReuseExchange is not guaranteed across the broadcast
-    boundary).
+    boundary). The lazy checkpoints carry no lineage: like
+    pagerank_integer, this operator does not survive executor loss or
+    decommission mid-job (see the caveat there).
 
     Output: (node, auth, hub) — bigints in units of 1/scale.
     """

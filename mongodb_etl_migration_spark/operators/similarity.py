@@ -25,31 +25,25 @@ from pyspark.sql import functions as F
 from mongodb_etl_migration_spark.functions.scalars import stable_round
 from mongodb_etl_migration_spark.operators.text import (
     lit_long_array,
-    sql_name_ok,
+    sql_ident,
 )
 
 
-# --- SQL-template fast paths for the vector helpers -------------------
-# The pyspark higher-order-function builders (F.transform/F.aggregate/
-# F.zip_with) do several py4j round-trips PER LAMBDA, which made the
-# vector-query CONSTRUCTION cost scale with plane count × join sides
-# (sim_bitext_margin: ~3,400 round-trips / 0.6 s socket time per build,
-# r14 cProfile receipt — the same disease pass 6 cured for the gopher
-# folds). Each helper therefore emits its expression as ONE parseable
-# SQL string when given column NAMES / literal vectors, and keeps the
-# original Column form for Column inputs; the two forms build the same
-# resolved tree (CASE/lambda/cast shapes identical; double literals via
-# repr round-trip exactly) and are pinned value-equal by
-# tests/test_vector_sql_forms.py.
+# --- vector expressions as SQL fragments ------------------------------
+# Every vector helper emits ONE parseable SQL string: building the same
+# higher-order functions through F.transform/F.aggregate/F.zip_with
+# costs several py4j round-trips per lambda, which made vector-query
+# construction scale with plane count × join sides (sim_bitext_margin:
+# ~3,400 round-trips / 0.6 s per build, r14 cProfile receipt). Public
+# builders take column NAMES (a dotted name is a struct field, exactly
+# as under ``F.col``); internal callers compose the ``*_sql`` fragments.
 
 def _f8_sql(x: float) -> str:
     """Exact SQL double literal: repr() is the shortest round-tripping
     decimal and Java's parseDouble lands on the same IEEE-754 value;
-    the D suffix makes the parser emit the same DoubleType Literal
-    node as ``F.lit(float)``. Non-finite components take the CAST
-    spelling (repr's 'inf'/'nan' would not parse) so the SQL and
-    Column forms stay equivalent for pathological inputs (ADVICE
-    r14)."""
+    the D suffix makes the parser emit a DoubleType Literal node.
+    Non-finite components take the CAST spelling (repr's 'inf'/'nan'
+    would not parse)."""
     x = float(x)
     if x != x:
         return "cast('NaN' as double)"
@@ -61,8 +55,8 @@ def _f8_sql(x: float) -> str:
 
 
 def _vec_sql(name: str) -> str:
-    """SQL fragment: the :func:`_dvec` cast-to-double transform."""
-    return f"transform(`{name}`, __vx -> cast(__vx as double))"
+    """SQL fragment: column ``name`` cast element-wise to double."""
+    return f"transform({sql_ident(name)}, __vx -> cast(__vx as double))"
 
 
 def lit_vec_sql(v: Sequence[float]) -> str:
@@ -73,8 +67,8 @@ def lit_vec_sql(v: Sequence[float]) -> str:
 
 
 def dot_sql(a: str, b: str) -> str:
-    """SQL fragment: the :func:`dot` fold over two array fragments.
-    Lambda variables dunder-named so they can never collide with (or
+    """SQL fragment: dot product of two array fragments. Lambda
+    variables dunder-named so they can never collide with (or
     silently shadow) a data column referenced by ``a``/``b``."""
     return (
         f"aggregate(zip_with({a}, {b}, (__zx, __zy) -> __zx * __zy), "
@@ -83,65 +77,37 @@ def dot_sql(a: str, b: str) -> str:
 
 
 def norm_sql(a: str) -> str:
-    """SQL fragment: the :func:`norm` fold over an array fragment."""
+    """SQL fragment: L2 norm of an array fragment."""
     return f"sqrt(aggregate({a}, 0.0D, (__acc, __x) -> __acc + __x * __x))"
 
 
-def _dvec(c: Column | str) -> Column:
-    if isinstance(c, str) and sql_name_ok(c):
-        return F.expr(_vec_sql(c))
-    if isinstance(c, str):
-        c = F.col(c)  # dotted/backticked name: Column path (ADVICE r14)
-    return F.transform(c, lambda x: x.cast("double"))
+def cosine_sql(a: str, b: str) -> str:
+    """SQL fragment: cosine of two array fragments."""
+    return f"{dot_sql(a, b)} / ({norm_sql(a)} * {norm_sql(b)})"
 
 
-def dot(a: Column | str, b: Column | str) -> Column:
-    """Dot product of two array<double> columns. Column names take the
-    one-parse SQL path; Column objects keep the HOF-builder form."""
-    if (
-        isinstance(a, str)
-        and isinstance(b, str)
-        and sql_name_ok(a)
-        and sql_name_ok(b)
-    ):
-        return F.expr(dot_sql(f"`{a}`", f"`{b}`"))
-    a = F.col(a) if isinstance(a, str) else a
-    b = F.col(b) if isinstance(b, str) else b
-    return F.aggregate(
-        F.zip_with(a, b, lambda x, y: x * y), F.lit(0.0), lambda acc, x: acc + x
+def _dvec(name: str) -> Column:
+    return F.expr(_vec_sql(name))
+
+
+def dot(a: str, b: str) -> Column:
+    """Dot product of two array<double> columns (dotted name = struct
+    field)."""
+    return F.expr(dot_sql(sql_ident(a), sql_ident(b)))
+
+
+def norm(a: str) -> Column:
+    """L2 norm of an array<double> column (dotted name = struct
+    field)."""
+    return F.expr(norm_sql(sql_ident(a)))
+
+
+def _cos_to_query(vec_col: str, query_vec: Sequence[float]) -> Column:
+    """Cosine of column ``vec_col`` (cast to double) against a literal
+    query vector, rounded to 4 places."""
+    return stable_round(
+        F.expr(cosine_sql(_vec_sql(vec_col), lit_vec_sql(query_vec))), 4
     )
-
-
-def norm(a: Column | str) -> Column:
-    """L2 norm of an array<double> column (name → one-parse SQL path)."""
-    if isinstance(a, str) and sql_name_ok(a):
-        return F.expr(norm_sql(f"`{a}`"))
-    if isinstance(a, str):
-        a = F.col(a)  # dotted/backticked name: Column path (ADVICE r14)
-    return F.sqrt(
-        F.aggregate(a, F.lit(0.0), lambda acc, x: acc + x * x)
-    )
-
-
-def cosine(a: Column, b: Column) -> Column:
-    return dot(a, b) / (norm(a) * norm(b))
-
-
-def lit_vec(v: Sequence[float]) -> Column:
-    # ONE py4j call (array<double> literal, identical schema/values to
-    # the old per-element F.array(F.lit(x).cast("double"), ...) form —
-    # verified non-null double elements both ways). The per-element
-    # form cost ~2*dim driver round-trips PER VECTOR; with 4+ planes
-    # per bucket expression and two join sides that was the dominant
-    # driver-side plan-construction cost of every LSH query
-    # (sim_bitext_margin: ~2 s of pure build time, r14 receipt).
-    # numpy (not F.lit(list), which recurses per element): the 1-D
-    # ndarray crosses py4j as one Array[Double].
-    import numpy as np
-
-    if not len(v):
-        return F.array().cast("array<double>")
-    return F.lit(np.asarray([float(x) for x in v], dtype="float64"))
 
 
 def cosine_topk(
@@ -154,11 +120,10 @@ def cosine_topk(
     """Brute-force cosine top-k: scan + per-row cosine + global top-k.
     orderBy+limit compiles to TakeOrderedAndProject — a per-partition
     heap and a k-row driver merge, NOT a full sort/shuffle."""
-    q = lit_vec(query_vec)
     return (
         emb.select(
             F.col(id_col),
-            stable_round(cosine(_dvec(vec_col), q), 4).alias("cos_sim"),
+            _cos_to_query(vec_col, query_vec).alias("cos_sim"),
         )
         .orderBy(F.desc("cos_sim"), F.col(id_col))
         .limit(k)
@@ -166,28 +131,17 @@ def cosine_topk(
 
 
 def hyperplane_bucket(
-    vec_col: Column | str, planes: Sequence[Sequence[float]]
+    vec_col: str, planes: Sequence[Sequence[float]]
 ) -> Column:
     """LSH bucket id: sign bit of the dot product against each plane,
-    concatenated ('110…'). Deterministic given the planes. A column
-    NAME takes the one-parse SQL template (CASE WHEN == the Column
-    form's F.when; see the fast-path note above :func:`_f8_sql`)."""
-    if isinstance(vec_col, str) and sql_name_ok(vec_col):
-        v = _vec_sql(vec_col)
-        bits = ",".join(
-            f"case when {dot_sql(v, lit_vec_sql(p))} >= 0 "
-            "then '1' else '0' end"
-            for p in planes
-        )
-        return F.expr(f"concat({bits})")
-    if isinstance(vec_col, str):
-        vec_col = F.col(vec_col)  # dotted/backticked: Column path
-    v = _dvec(vec_col)
-    bits = [
-        F.when(dot(v, lit_vec(p)) >= 0, F.lit("1")).otherwise(F.lit("0"))
+    concatenated ('110…'). Deterministic given the planes. A dotted
+    ``vec_col`` names a struct field, as under ``F.col``."""
+    v = _vec_sql(vec_col)
+    bits = ",".join(
+        f"case when {dot_sql(v, lit_vec_sql(p))} >= 0 then '1' else '0' end"
         for p in planes
-    ]
-    return F.concat(*bits)
+    )
+    return F.expr(f"concat({bits})")
 
 
 def ann_topk_lsh(
@@ -213,7 +167,7 @@ def ann_topk_lsh(
         bucketed.filter(F.col("bucket") == qbucket)
         .select(
             F.col(id_col),
-            stable_round(cosine(_dvec(vec_col), lit_vec(query_vec)), 4).alias("cos_sim"),
+            _cos_to_query(vec_col, query_vec).alias("cos_sim"),
         )
         .orderBy(F.desc("cos_sim"), F.col(id_col))
         .limit(k)
@@ -253,9 +207,7 @@ def ann_topk_multiprobe(
         bucketed.filter(F.col("bucket").isin(probe_set))
         .select(
             F.col(id_col),
-            stable_round(
-                cosine(_dvec(vec_col), lit_vec(query_vec)), 4
-            ).alias("cos_sim"),
+            _cos_to_query(vec_col, query_vec).alias("cos_sim"),
         )
         .orderBy(F.desc("cos_sim"), F.col(id_col))
         .limit(k)
@@ -474,20 +426,19 @@ def ivf_probe_topk(
         "1" if sum(float(a) * float(b) for a, b in zip(query_vec, p)) >= 0 else "0"
         for p in planes
     )
-    q = lit_vec(query_vec)
     return (
         spark.read.parquet(path)
         .filter(F.col("bucket") == qbits)
         .select(
             F.col(id_col),
-            stable_round(cosine(_dvec(vec_col), q), 4).alias("cos_sim"),
+            _cos_to_query(vec_col, query_vec).alias("cos_sim"),
         )
         .orderBy(F.desc("cos_sim"), F.col(id_col))
         .limit(k)
     )
 
 
-def l2_normalize(vec: Column | str) -> Column:
+def l2_normalize(vec: str) -> Column:
     """Unit-norm embedding (the preprocessing step before cosine ANN —
     normalized vectors turn cosine into dot product).
 
@@ -502,7 +453,7 @@ def l2_normalize(vec: Column | str) -> Column:
     v = _dvec(vec)
     return F.element_at(
         F.transform(
-            F.array(norm(v)),
+            F.array(F.expr(norm_sql(_vec_sql(vec)))),
             lambda n: F.transform(
                 v,
                 lambda x: F.when(n == 0.0, F.lit(0.0)).otherwise(x / n),
@@ -591,7 +542,7 @@ def nearest_centroid_assign(
     )
 
 
-def _quantize(vec_col: Column | str, scale: int) -> Column:
+def _quantize(vec_col: str, scale: int) -> Column:
     """floor(x·scale + 0.5) per element as bigint — the shared
     engine-deterministic quantizer."""
     return F.transform(
@@ -765,7 +716,7 @@ def group_centroids(df: DataFrame, key: str, vec_col: str, dim: int) -> DataFram
     )
 
 
-def matryoshka(vec: Column | str, k: int) -> Column:
+def matryoshka(vec: str, k: int) -> Column:
     """Matryoshka (MRL) truncation: keep the first ``k`` dimensions
     and re-unit-normalize the PREFIX — the serving-side trick that
     trades recall for k/d of the memory and FLOPs when embeddings
@@ -774,10 +725,11 @@ def matryoshka(vec: Column | str, k: int) -> Column:
     per row, not once per element); pure Column, zero shuffle. An
     all-zero PREFIX — possible even when the full vector is nonzero —
     stays the zero vector rather than silently NULLing out."""
-    v = F.slice(_dvec(vec), 1, k)
+    v_sql = f"slice({_vec_sql(vec)}, 1, {int(k)})"
+    v = F.expr(v_sql)
     return F.element_at(
         F.transform(
-            F.array(norm(v)),
+            F.array(F.expr(norm_sql(v_sql))),
             lambda n: F.transform(
                 v,
                 lambda x: F.when(n == 0.0, F.lit(0.0)).otherwise(x / n),
@@ -917,14 +869,14 @@ def cosine_topk_batch(
     """
     from pyspark.sql import Window
 
-    qarr = F.array(
-        *[
-            F.struct(
-                F.lit(int(qid)).cast("long").alias("query_id"),
-                lit_vec(v).alias("qv"),
-            )
+    qarr = F.expr(
+        "array("
+        + ",".join(
+            f"named_struct('query_id', cast({int(qid)} as bigint), "
+            f"'qv', {lit_vec_sql(v)})"
             for qid, v in queries
-        ]
+        )
+        + ")"
     )
     ex = emb.select(F.col(id_col), _dvec(vec_col).alias("_v")).select(
         id_col, "_v", F.explode(qarr).alias("q")
@@ -932,9 +884,9 @@ def cosine_topk_batch(
     scored = ex.select(
         F.col("q.query_id").alias("query_id"),
         F.col(id_col),
-        stable_round(cosine(F.col("_v"), F.col("q.qv")), 4).alias(
-            "cos_sim"
-        ),
+        stable_round(
+            F.expr(cosine_sql(sql_ident("_v"), sql_ident("q.qv"))), 4
+        ).alias("cos_sim"),
     )
     w = Window.partitionBy("query_id").orderBy(
         F.desc("cos_sim"), F.col(id_col)

@@ -12,6 +12,8 @@ across engines (the DuckDB oracle computes the identical value).
 
 from __future__ import annotations
 
+import re
+
 import pandas as pd
 from pyspark.sql import Column
 from pyspark.sql import functions as F
@@ -65,20 +67,42 @@ def lit_long_array(vals) -> Column:
     return F.lit(np.asarray([int(v) for v in vals], dtype="int64"))
 
 
+def _sql_str(s: str) -> str:
+    """SQL string literal whose value is the same under either setting
+    of ``spark.sql.parser.escapedStringLiterals``: characters pass
+    through raw (tabs and newlines included) and each ``'`` or ``\\``
+    is spliced in as ``chr(39)``/``chr(92)`` inside ``concat(...)``,
+    so no escape sequence is ever left for a parser to read. Constant
+    folding turns the concat back into one literal in the optimized
+    plan."""
+    parts = [p for p in re.split(r"(['\\])", s) if p]
+    if not any(p in ("'", "\\") for p in parts):
+        return f"'{s}'"
+    return "concat(" + ", ".join(
+        f"chr({ord(p)})" if p in ("'", "\\") else f"'{p}'" for p in parts
+    ) + ")"
+
+
+def sql_ident(name: str) -> str:
+    """SQL reference to column ``name`` that resolves exactly like
+    ``F.col(name)``: each dot-separated segment is backticked, so a
+    dotted name is a struct field (``s.txt`` → `` `s`.`txt` ``). A
+    name containing a backtick is rejected."""
+    if "`" in name:
+        raise ValueError(f"column name with a backtick: {name!r}")
+    return ".".join(f"`{seg}`" for seg in name.split("."))
+
+
 def lit_string_array(vals) -> Column:
     """array<string> literal in ONE expr parse (numpy has no py4j
     string-array converter; a SQL array literal does it in a single
-    round-trip). Backslashes and quotes escaped for Spark's default
-    (non-escapedStringLiterals) parser; element values and the
-    array<string> containsNull=false type match the element-wise
-    ``F.array(*[F.lit(s) ...])`` form exactly (tested)."""
+    round-trip). Elements go through :func:`_sql_str`, so values are
+    the same under either parser escaping mode; the array<string>
+    containsNull=false type matches the element-wise
+    ``F.array(*[F.lit(s) ...])`` form."""
     if not len(vals):
         return F.array().cast("array<string>")
-    esc = (
-        "'" + str(v).replace("\\", "\\\\").replace("'", "\\'") + "'"
-        for v in vals
-    )
-    return F.expr("array(" + ",".join(esc) + ")")
+    return F.expr("array(" + ",".join(_sql_str(str(v)) for v in vals) + ")")
 
 
 def cpu_fan_out(df, fan_out: bool | None = None):
@@ -1783,6 +1807,13 @@ def bm25_topk(
     Nothing is quadratic; the only corpus-sized traffic is the token
     stream.
 
+    Single-split tradeoff: with no fan-out repartition, a source with
+    ONE input split (an unsplittable file, or a ``coalesce(1)`` frame)
+    runs the whole tokenize+explode map side as one task — single-
+    threaded until the (doc, term) exchange. The pinned A/B that
+    removed the fan-out ran on a many-split corpus; such a source
+    should be repartitioned by the caller before the build.
+
     Output: (query_id, doc_id, score_milli, rn) — k rows per query,
     ties broken by doc_id ascending.
     """
@@ -1998,7 +2029,9 @@ def bm25_tf(df, id_col: str = "doc_id", text_col: str = "text"):
     token explode + ONE (doc, term) exchange — and nothing else: the
     r15 pinned A/B on bm25_topk showed the gated fan-out loses for
     this operator's cheap-per-byte tokenize leg (see bm25_topk), so
-    neither bm25 build path adds a repartition."""
+    neither bm25 build path adds a repartition — and a single-split
+    source runs the map side as one task (bm25_topk's single-split
+    tradeoff)."""
     toks = df.select(
         F.col(id_col), F.explode(tokens(text_col)).alias("term")
     )
@@ -2871,7 +2904,7 @@ def classifier_margin_inline(
 # symbol created by merge k only ever appears in merges of rank > k).
 # Real vocabularies carry ~50k merges; this table is sized so the
 # whole hierarchy (char pairs -> multi-char symbols -> word pieces)
-# is exercised and the compiled Column chain stays readable.
+# is exercised and the compiled merge chain stays readable.
 BPE_MERGES: list[tuple[str, str]] = [
     ("t", "a"),
     ("b", "l"),
@@ -2906,12 +2939,12 @@ def bpe_apply_reference(
     rank: dict[tuple[str, str], int] | None = None,
 ) -> list[str]:
     """Plain-Python reference BPE encoder (the classic lowest-rank-
-    first greedy loop, list-based) — the ground truth the Column chain
-    and the pandas-UDF path are both property-tested against. Driver-
-    side only; never called in a plan. Callers encoding MANY words
-    against a production-sized vocabulary pass ``rank`` precomputed —
-    rebuilding a 50k-entry dict per pretoken dominated the real-vocab
-    receipt's first run (BENCH_sft_vocab)."""
+    first greedy loop, list-based) — the ground truth the compiled
+    merge chain and the pandas-UDF path are both property-tested
+    against. Driver-side only; never called in a plan. Callers
+    encoding MANY words against a production-sized vocabulary pass
+    ``rank`` precomputed — rebuilding a 50k-entry dict per pretoken
+    dominated the real-vocab receipt's first run (BENCH_sft_vocab)."""
     merges = BPE_MERGES if merges is None else merges
     if rank is None:
         rank = {pair: i for i, pair in enumerate(merges)}
@@ -2955,7 +2988,7 @@ def _validate_flat_merges(merges: list[tuple[str, str]]) -> None:
     for a, b in merges:
         if a == b:
             raise ValueError(
-                f"self-pair merge ({a!r},{b!r}): the compiled Column "
+                f"self-pair merge ({a!r},{b!r}): the compiled merge-chain "
                 "path cannot reproduce greedy run pairing — use "
                 "bpe_encode_batch for this table"
             )
@@ -2964,10 +2997,13 @@ def _validate_flat_merges(merges: list[tuple[str, str]]) -> None:
         seen.add((a, b))
 
 
-def bpe_encoded_word(w: Column, merges: list[tuple[str, str]] | None = None) -> Column:
-    """Compile the BPE merge table into a pure Column expression: the
-    word becomes a space-delimited symbol string (leading + trailing
-    space pin the boundaries), then each merge in RANK ORDER becomes
+def bpe_encoded_word_sql(
+    inp: str, merges: list[tuple[str, str]] | None = None
+) -> str:
+    """Compile the BPE merge table into a SQL fragment over the
+    fragment ``inp`` (typically a lambda variable): the word becomes a
+    space-delimited symbol string (leading + trailing space pin the
+    boundaries), then each merge in RANK ORDER becomes
     ``replace(s, ' a b ', ' ab ')`` repeated ``_BPE_PASSES`` times
     (exhaustive application; see the rank-order equivalence note on
     BPE_MERGES). For duplicate-free, self-pair-free tables this is
@@ -2979,38 +3015,43 @@ def bpe_encoded_word(w: Column, merges: list[tuple[str, str]] | None = None) -> 
     (pandas UDF); the two agree exactly (property-tested)."""
     merges = BPE_MERGES if merges is None else merges
     _validate_flat_merges(merges)
-    s = F.concat(F.lit(" "), F.regexp_replace(w, "(.)", "$1 "))
+    s = f"concat(' ', regexp_replace({inp}, '(.)', '$1 '))"
     for a, b in merges:
-        pat, rep = F.lit(f" {a} {b} "), F.lit(f" {a}{b} ")
+        pat, rep = _sql_str(f" {a} {b} "), _sql_str(f" {a}{b} ")
         for _ in range(_BPE_PASSES):
-            s = F.replace(s, pat, rep)
+            s = f"replace({s}, {pat}, {rep})"
     return s
 
 
 def bpe_token_count(
-    c: Column | str,
-    toks: Column | None = None,
+    c: str,
+    toks: str | None = None,
     merges: list[tuple[str, str]] | None = None,
 ) -> Column:
     """Per-document REAL BPE token count — the budgeting number every
     pre-training pipeline reports (approx_bpe_token_count is the
-    cheap regex proxy; this one runs the actual merge table). Encoded
-    word carries leading+trailing delimiters, so its token count is
+    cheap regex proxy; this one runs the actual merge table). ``c``
+    names the text column; ``toks`` optionally names an already
+    materialized :func:`tokens` array of it. Encoded word carries
+    leading+trailing delimiters, so its token count is
     (#spaces - 1); the document total folds over the token array in
     one codegen'd expression — zero shuffle at any scale."""
-    toks = tokens(c) if toks is None else toks
+    toks_sql = (
+        f"regexp_extract_all(lower({sql_ident(c)}), {_sql_str(TOKEN_RE)}, 0)"
+        if toks is None
+        else sql_ident(toks)
+    )
     # encode in one transform, THEN fold lengths: higher-order lambdas
     # are outside codegen CSE, so referencing the encoded string twice
     # inside one lambda would run the whole replace chain twice per
     # word — staging through the array element makes it a cheap ref
-    enc = F.transform(toks, lambda w: bpe_encoded_word(w, merges))
-    return F.aggregate(
-        enc,
-        F.lit(0).cast("long"),
-        lambda acc, s: acc
-        + (
-            F.length(s) - F.length(F.replace(s, F.lit(" "), F.lit(""))) - 1
-        ).cast("long"),
+    enc = (
+        f"transform({toks_sql}, "
+        f"__bw -> {bpe_encoded_word_sql('__bw', merges)})"
+    )
+    return F.expr(
+        f"aggregate({enc}, cast(0 as bigint), (__acc, __s) -> __acc + "
+        f"cast(length(__s) - length(replace(__s, ' ', '')) - 1 as bigint))"
     )
 
 
@@ -3022,8 +3063,8 @@ def bpe_encode_batch(df, id_col: str, text_col: str, merges: list[tuple[str, str
     serialized function (broadcast-variable shape); rows stream
     through Arrow batches, so memory is batch-bounded. Output:
     (id_col, bpe_tokens bigint, encoded string — space-joined symbols
-    of the whole document). Agrees exactly with the Column path
-    (tested)."""
+    of the whole document). Agrees exactly with the compiled merge
+    chain (tested)."""
     from pyspark.sql.functions import pandas_udf
 
     merges = BPE_MERGES if merges is None else merges
@@ -3172,7 +3213,7 @@ def gpt2_apply_reference(
     """Reference byte-level BPE encode: pretokenize, map each
     pretoken's UTF-8 bytes through the GPT-2 alphabet, run the greedy
     merge loop per pretoken. Driver-side ground truth; the plan-side
-    twins are gpt2_encode_batch (pandas UDF) and the compiled Column
+    twins are gpt2_encode_batch (pandas UDF) and the compiled merge
     chain in gpt2_encoded. Pass a precomputed ``rank`` when encoding
     many texts against a large vocabulary (see bpe_apply_reference)."""
     b2u = gpt2_bytes_to_unicode()
@@ -3195,82 +3236,9 @@ def gpt2_pretokenize(c: Column | str) -> Column:
     return F.regexp_extract_all(_cc(c), F.lit(GPT2_PRETOKEN_RE), 0)
 
 
-# --- SQL-template twins of the BPE encode chain -----------------------
-# Building the compiled merge chain through the Column API costs a py4j
-# round-trip per F.replace/F.lit (|merges| x _BPE_PASSES of them) plus
-# several per HOF lambda, which made the chat/BPE queries'
-# CONSTRUCTION the dominant residual cost after pass 7 (c_sft_tokens:
-# 4,435 round-trips / 0.73 s build, r14 cProfile receipt). These
-# builders emit the IDENTICAL expression tree as one parseable SQL
-# string — the pass-6 gram-fold device applied to the encode chain.
-# Equivalence with the Column forms is pinned by
-# tests/test_chat_sql_forms.py (adversarial texts + both templates).
-
-def sql_name_ok(name: str) -> bool:
-    """True when a column NAME may be interpolated into a SQL template
-    as ``\\`name\\``` — simple top-level names only. A dotted name
-    resolves as a nested-field reference under ``F.col`` but as a
-    literal backticked column in SQL, and an embedded backtick breaks
-    the parse outright; such names fall back to the Column-builder
-    path at every string-name fast-path site (ADVICE r14)."""
-    return "." not in name and "`" not in name
-
-
-_ESCAPE_CONF_CHECKED: set[str] = set()
-
-
-def _assert_default_escaping() -> None:
-    """The SQL templates built on :func:`_sql_str` are only correct
-    under the default ``spark.sql.parser.escapedStringLiterals=false``
-    — under the legacy conf every templated literal silently changes
-    value while the Column twins keep working. Checked ONCE per
-    process (ADVICE r14), loudly. The empty-set fast path matters:
-    ``getActiveSession`` is a ~0.5 ms py4j round-trip and _sql_str
-    runs per template LITERAL — probing the JVM before the memo
-    would re-create the construction-cost disease the templates
-    exist to fix (measured: +0.7 ms/literal)."""
-    if _ESCAPE_CONF_CHECKED:
-        return
-    from pyspark.sql import SparkSession
-
-    s = SparkSession.getActiveSession()
-    if s is None:
-        return
-    key = s.sparkContext.applicationId
-    if (
-        s.conf.get("spark.sql.parser.escapedStringLiterals", "false")
-        .lower()
-        == "true"
-    ):
-        raise ValueError(
-            "spark.sql.parser.escapedStringLiterals=true: the SQL-"
-            "templated literal fast paths (GPT-2 merges, vector "
-            "planes, gram folds) would silently mis-escape under the "
-            "legacy parser — disable the conf or use the Column forms"
-        )
-    _ESCAPE_CONF_CHECKED.add(key)
-
-
-def _sql_str(s: str) -> str:
-    """SQL string literal under the default escape-processing parser:
-    backslash/quote/control characters escaped, everything else (incl.
-    the GPT-2 alphabet's non-ASCII codepoints) passes through raw.
-    Raises if the session runs the legacy escaping parser
-    (:func:`_assert_default_escaping`)."""
-    _assert_default_escaping()
-    out = (
-        s.replace("\\", "\\\\")
-        .replace("'", "\\'")
-        .replace("\t", "\\t")
-        .replace("\n", "\\n")
-        .replace("\r", "\\r")
-    )
-    return f"'{out}'"
-
-
 def sql_int_array(vals) -> str:
-    """SQL fragment: array<int> literal (empty arrays keep the typed
-    cast the Column form uses)."""
+    """SQL fragment: array<int> literal (empty arrays keep a typed
+    cast)."""
     vals = list(vals)
     if not vals:
         return "cast(array() as array<int>)"
@@ -3285,21 +3253,6 @@ def sql_bigint_array(vals) -> str:
     if not vals:
         return "cast(array() as array<bigint>)"
     return "array(" + ",".join(f"{int(v)}L" for v in vals) + ")"
-
-
-def bpe_encoded_word_sql(
-    inp: str, merges: list[tuple[str, str]] | None = None
-) -> str:
-    """SQL fragment: :func:`bpe_encoded_word`'s compiled merge chain
-    over the fragment ``inp`` (typically a lambda variable)."""
-    merges = BPE_MERGES if merges is None else merges
-    _validate_flat_merges(merges)
-    s = f"concat(' ', regexp_replace({inp}, '(.)', '$1 '))"
-    for a, b in merges:
-        pat, rep = _sql_str(f" {a} {b} "), _sql_str(f" {a}{b} ")
-        for _ in range(_BPE_PASSES):
-            s = f"replace({s}, {pat}, {rep})"
-    return s
 
 
 def gpt2_encoded_sql(inp: str, merges: list[tuple[str, str]]) -> str:
@@ -3320,8 +3273,7 @@ def gpt2_encoded_sql(inp: str, merges: list[tuple[str, str]]) -> str:
 
 def gpt2_vocab_map_sql(merges: list[tuple[str, str]]) -> str:
     """SQL fragment: the rank-ordered symbol→id literal map of
-    :func:`gpt2_token_ids` (same array<string>/array<int> element
-    types as the Column form's lit_string_array/lit_int_array)."""
+    :func:`gpt2_token_ids` (array<string> keys, array<int> ids)."""
     vocab = gpt2_vocab(merges)
     syms = list(vocab)
     keys = "array(" + ",".join(_sql_str(s) for s in syms) + ")"
@@ -3331,8 +3283,13 @@ def gpt2_vocab_map_sql(merges: list[tuple[str, str]]) -> str:
 
 def gpt2_token_ids_sql(inp: str, merges: list[tuple[str, str]]) -> str:
     """SQL fragment: :func:`gpt2_token_ids` over the fragment ``inp``
-    (split → filter-empty → literal-map lookup, try_element_at so an
-    out-of-alphabet symbol yields NULL exactly like the Column form)."""
+    (split → filter-empty → literal-map lookup). ONE reference to the
+    (expensive, un-CSE'd) merge chain: split evaluates it once, and the
+    empty document's [''] filters away instead of a when() guard that
+    would re-evaluate the chain. try_element_at: a symbol outside the
+    256-char alphabet (non-ASCII flows through gpt2_encoded unmapped)
+    yields a NULL id instead of an ANSI MAP_KEY_DOES_NOT_EXIST job
+    abort."""
     enc = gpt2_encoded_sql(inp, merges)
     m = gpt2_vocab_map_sql(merges)
     return (
@@ -3341,34 +3298,21 @@ def gpt2_token_ids_sql(inp: str, merges: list[tuple[str, str]]) -> str:
     )
 
 
-def gpt2_encoded(
-    c: Column | str, merges: list[tuple[str, str]]
-) -> Column:
-    """Byte-level BPE encode as a zero-shuffle Column chain: pretoken
-    array → GPT-2 byte alphabet (F.translate for the three ASCII
-    whitespace bytes; printable ASCII is identity by construction) →
-    the compiled merge chain per pretoken. ASCII-text scope — any
-    other byte needs UTF-8 decomposition, which is the batch path's
-    job (gpt2_encode_batch, same results where scopes overlap,
-    tested). Returns the document's space-joined symbol string
-    (symbols never contain a literal space — the alphabet maps it
-    away — so the join is unambiguous). A column NAME takes the
-    one-parse SQL template (identical tree; see the builders above);
-    Column inputs keep the builder form."""
-    if isinstance(c, str) and sql_name_ok(c):
-        return F.expr(gpt2_encoded_sql(f"`{c}`", merges))
-    if isinstance(c, str):
-        c = F.col(c)  # dotted/backticked name: Column path (ADVICE r14)
-    pretoks = gpt2_pretokenize(c)
-    mapped = F.transform(
-        pretoks, lambda t: F.translate(t, " \t\n", "ĠĉĊ")
-    )
-    enc = F.transform(mapped, lambda w: bpe_encoded_word(w, merges))
-    joined = F.array_join(enc, "")
-    return F.trim(F.regexp_replace(joined, " +", " "))
+def gpt2_encoded(c: str, merges: list[tuple[str, str]]) -> Column:
+    """Byte-level BPE encode of text column ``c`` as a zero-shuffle
+    expression: pretoken array → GPT-2 byte alphabet (translate for
+    the three ASCII whitespace bytes; printable ASCII is identity by
+    construction) → the compiled merge chain per pretoken. ASCII-text
+    scope — any other byte needs UTF-8 decomposition, which is the
+    batch path's job (gpt2_encode_batch, same results where scopes
+    overlap, tested). Returns the document's space-joined symbol
+    string (symbols never contain a literal space — the alphabet maps
+    it away — so the join is unambiguous). A dotted ``c`` names a
+    struct field, as under ``F.col``."""
+    return F.expr(gpt2_encoded_sql(sql_ident(c), merges))
 
 
-def gpt2_token_count(c: Column | str, merges: list[tuple[str, str]]) -> Column:
+def gpt2_token_count(c: str, merges: list[tuple[str, str]]) -> Column:
     """Per-document byte-level BPE token count off gpt2_encoded's
     symbol string (0 for empty docs)."""
     s = gpt2_encoded(c, merges)
@@ -3460,9 +3404,7 @@ def token_ids_dedup(
     )
 
 
-def gpt2_token_ids(
-    c: Column | str, merges: list[tuple[str, str]]
-) -> Column:
+def gpt2_token_ids(c: str, merges: list[tuple[str, str]]) -> Column:
     """INTEGER token ids for a document — gpt2_encoded's symbol
     string looked up through the gpt2_vocab id table as one literal
     map (256+|merges| entries ride the plan; the executor-shipped
@@ -3478,32 +3420,8 @@ def gpt2_token_ids(
     t_bpe_ids publishes) and route non-ASCII corpora through
     gpt2_encode_ids_batch, the lossless full-UTF-8 path.
 
-    A column NAME takes the one-parse SQL template (identical tree;
-    see the builders below gpt2_pretokenize); Column inputs keep the
-    builder form.
-    """
-    if isinstance(c, str) and sql_name_ok(c):
-        return F.expr(gpt2_token_ids_sql(f"`{c}`", merges))
-    if isinstance(c, str):
-        c = F.col(c)  # dotted/backticked name: Column path (ADVICE r14)
-    vocab = gpt2_vocab(merges)
-    syms = list(vocab)
-    id_map = F.map_from_arrays(
-        lit_string_array(syms), lit_int_array([vocab[s] for s in syms])
-    )
-    # ONE reference to the (expensive, un-CSE'd) merge-chain column:
-    # split evaluates it once; the empty document's [''] filters away
-    # instead of a when() guard that would re-evaluate the chain.
-    # try_element_at: a symbol outside the 256-char alphabet (this
-    # Column path's documented ASCII scope — non-ASCII flows through
-    # gpt2_encoded unmapped) yields a NULL id instead of an ANSI
-    # MAP_KEY_DOES_NOT_EXIST job abort; the batch path
-    # (gpt2_encode_ids_batch) is the lossless full-UTF-8 route.
-    enc = gpt2_encoded(c, merges)
-    return F.transform(
-        F.filter(F.split(enc, " "), lambda s: s != ""),
-        lambda s: F.try_element_at(id_map, s).cast("int"),
-    )
+    A dotted ``c`` names a struct field, as under ``F.col``."""
+    return F.expr(gpt2_token_ids_sql(sql_ident(c), merges))
 
 
 def gpt2_decode_ascii(
@@ -4614,7 +4532,7 @@ def bpe_train(
     driver_vocab_max: int = 4_000_000,
 ):
     """Distributed BPE TRAINING — the tokenizer-learning half next to
-    the encode paths (bpe_encoded_word / gpt2_encode_batch consume
+    the encode paths (bpe_encoded_word_sql / gpt2_encode_batch consume
     what this produces). Classic Sennrich iteration, shaped for
     scale: the corpus is touched EXACTLY ONCE (one token explode +
     count aggregation — the only corpus-sized exchange); every
@@ -4677,7 +4595,7 @@ def bpe_train(
 
     Returns (merges, vocab_df): merges as (left, right, pair_count)
     in rank order — feed ``[(a, b) for a, b, _ in merges]`` straight
-    into bpe_encoded_word/bpe_token_count — and the final symbolized
+    into bpe_encoded_word_sql/bpe_token_count — and the final symbolized
     vocabulary (word, sym, n) for audit. ``stats`` (optional dict)
     receives {'rounds': N, 'batch_sizes': [...], 'mode': ...} for
     round-count receipts (driver mode: rounds == 0 and

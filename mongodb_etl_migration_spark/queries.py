@@ -10683,7 +10683,7 @@ def t_unicode_nfc(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _bpe_sql_encode(var: str) -> str:
-    """DuckDB mirror of text.bpe_encoded_word: the same merge table
+    """DuckDB mirror of text.bpe_encoded_word_sql: the same merge table
     compiled to the same nested-replace chain (rank order, exhaustive
     per rank via fixed passes)."""
     e = f"concat(' ', regexp_replace({var}, '(.)', '\\1 ', 'g'))"
@@ -11438,7 +11438,7 @@ def t_bpe_train(spark: SparkSession, sf_dir: str) -> DataFrame:
     unrolls all 8 rounds in SQL (scalar subqueries carry each
     winner into the next round's replaces), so a hash match proves
     the full iterative training trajectory, not just the last
-    state. The learned table feeds bpe_encoded_word/bpe_token_count
+    state. The learned table feeds bpe_encoded_word_sql/bpe_token_count
     directly. mode='distributed' pins THIS query to the vocabulary-
     resident round machinery (the default auto mode would collect
     the dimension-sized vocab and train driver-side — that path has
@@ -12114,7 +12114,7 @@ def t_fineweb_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
             "source",
             "lang_pred",
             "margin",
-            T.bpe_token_count("text", toks=F.col("_toks")).alias(
+            T.bpe_token_count("text", toks="_toks").alias(
                 "bpe_tokens"
             ),
         )

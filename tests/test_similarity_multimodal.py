@@ -190,10 +190,7 @@ def test_int8_quantize_roundtrip_cosine_close(spark, sf_dir):
     stats = joined.select(
         "vec_id",
         "qmax",
-        (
-            SIM.dot(F.col("v"), F.col("vd"))
-            / (SIM.norm(F.col("v")) * SIM.norm(F.col("vd")))
-        ).alias("cos"),
+        (SIM.dot("v", "vd") / (SIM.norm("v") * SIM.norm("vd"))).alias("cos"),
     ).collect()
     assert all(r.qmax <= 127 for r in stats)
     assert all(r.cos > 0.99 for r in stats), min(r.cos for r in stats)

@@ -468,7 +468,7 @@ def test_streaming_curation_gates_match_batch(spark, sf_dir, tmp_path):
                 "source",
                 "lang_pred",
                 "margin",
-                T.bpe_token_count("text", toks=F.col("_toks")).alias("n_bpe"),
+                T.bpe_token_count("text", toks="_toks").alias("n_bpe"),
             )
         )
 

@@ -1954,12 +1954,12 @@ def test_bpe_flat_chain_equals_reference_adversarial():
 def test_bpe_compiled_path_rejects_self_pair_and_duplicate():
     import pytest
 
-    from mongodb_etl_migration_spark.operators.text import bpe_encoded_word
+    from mongodb_etl_migration_spark.operators.text import bpe_encoded_word_sql
 
     with pytest.raises(ValueError, match="self-pair"):
-        bpe_encoded_word(F.lit("aaa"), [("a", "a")])
+        bpe_encoded_word_sql("'aaa'", [("a", "a")])
     with pytest.raises(ValueError, match="duplicate"):
-        bpe_encoded_word(F.lit("ab"), [("a", "b"), ("a", "b")])
+        bpe_encoded_word_sql("'ab'", [("a", "b"), ("a", "b")])
 
 
 def test_classifier_margin_null_text_scores_bias(spark):
