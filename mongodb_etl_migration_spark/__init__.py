@@ -22,7 +22,7 @@ Layout:
     catalog.py    testdata table catalog
     functions/    scalar Column builders + key-generation + crypto UDFs
     operators/    dedup, similarity, text, denorm, hierarchy, validation
-    plans/        declarative entity-spec compiler + DAG driver
+    plans/        declarative entity-spec compiler (incl. §2.9 fan-out)
     sources/      readers/writers (parquet-first, connector-shaped API)
     streaming/    incremental mode (Structured Streaming foreachBatch)
 """

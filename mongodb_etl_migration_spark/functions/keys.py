@@ -154,6 +154,52 @@ def timeuuid_deterministic_arrow(
 
 
 # ------------------------------------------------------------------- K3
+def _number_with_offsets(
+    df: DataFrame,
+    part_col: str,
+    order_by: list[Column | str],
+    id_col: str,
+    start: int,
+) -> DataFrame:
+    """Dense ids ``start..start+n-1`` in (``part_col``, ``order_by``)
+    order, where ``df`` is already partitioned so that each ``part_col``
+    value sits in one task: ``row_number`` within each ``part_col``
+    group, plus the number of rows in all lower groups — a cumulative
+    sum over the tiny per-group count aggregate, broadcast-joined back.
+    Shared by :func:`assign_sequential_ids` (groups = range partitions)
+    and ``hierarchy.resolve_folder_tree`` (groups = tree depths).
+
+    The numbered frame is read twice (counts and ids), so it is pinned
+    by a LAZY ``localCheckpoint``: both reads consume the one
+    checkpointed RDD — built once, with whatever range bounds its
+    exchange sampled — and whichever job runs first materializes its
+    blocks. Nothing returns to the driver; empty input yields an empty
+    aggregate and so an empty output."""
+    w = Window.partitionBy(part_col).orderBy(*order_by)
+    numbered = df.withColumn("__rn", F.row_number().over(w)).localCheckpoint(
+        eager=False
+    )
+    w_cum = (
+        Window.partitionBy(F.lit(0))
+        .orderBy(part_col)
+        .rowsBetween(Window.unboundedPreceding, -1)
+    )
+    offsets = (
+        numbered.groupBy(part_col)
+        .agg(F.count("*").alias("__cnt"))
+        .withColumn("__off", F.coalesce(F.sum("__cnt").over(w_cum), F.lit(0)))
+        .select(part_col, "__off")
+    )
+    return (
+        numbered.join(F.broadcast(offsets), part_col)
+        .withColumn(
+            id_col,
+            (F.col("__rn") + F.col("__off") + F.lit(start - 1)).cast("bigint"),
+        )
+        .drop("__rn", "__off")
+    )
+
+
 def assign_sequential_ids(
     df: DataFrame,
     order_by: list[Column | str],
@@ -170,30 +216,28 @@ def assign_sequential_ids(
 
     1. range-partition by the ordering key (parallel sort),
     2. number rows within each partition (no extra shuffle),
-    3. add per-partition offsets computed from partition counts
-       (a tiny driver-side collect of #partitions integers, broadcast
-       back via join on partition id).
+    3. add per-partition offsets: a cumulative sum over the per-
+       partition counts (#partitions rows), broadcast back via join on
+       partition id — all in-plan, nothing returns to the driver.
 
     Wall-clock is one range shuffle + one window within partitions —
     the same cost profile as a distributed sort.
 
-    ``numbered`` is localCheckpoint'ed before the counts collect:
     repartitionByRange samples its range bounds with a nondeterministic
-    seed, so WITHOUT pinning, the counts job and the final id-emission
-    job could place boundary rows in different __pid partitions —
-    silently duplicating or dropping ids. The checkpoint materializes
-    one partition assignment that both jobs read (it also means the
-    data is written once to executor-local storage — the price of a
-    consistent global numbering, same as any distributed sort that
-    must be read twice).
+    seed, so two independent evaluations could place boundary rows in
+    different partitions — silently duplicating or dropping ids. The
+    numbering is therefore read through one lazy ``localCheckpoint``
+    (see ``_number_with_offsets``): the counts and the id emission read
+    the same checkpointed RDD, whose range partitioner was built once,
+    so they agree on every row's partition.
 
     ``num_partitions`` sizes the range shuffle; it defaults to
     ``spark.sql.shuffle.partitions``. Callers numbering a KNOWN
     dimension-sized set (e.g. a folder tree) should pass a small
-    value — every range partition is a task in three jobs here
-    (checkpoint, counts, emission), so 32 partitions of 100 rows is
-    pure scheduling overhead, while at fact-table scale the default
-    keeps the sort parallel.
+    value — every range partition is a task in each job that reads the
+    numbering, so 32 partitions of 100 rows is pure scheduling
+    overhead, while at fact-table scale the default keeps the sort
+    parallel.
     """
     n_part = num_partitions or int(
         df.sparkSession.conf.get("spark.sql.shuffle.partitions", "32")
@@ -201,30 +245,8 @@ def assign_sequential_ids(
     ranged = df.repartitionByRange(int(n_part), *order_by).withColumn(
         "__pid", F.spark_partition_id()
     )
-    w = Window.partitionBy("__pid").orderBy(*order_by)
-    numbered = ranged.withColumn("__rn", F.row_number().over(w)).localCheckpoint(
-        eager=True
-    )
-    counts = (
-        numbered.groupBy("__pid").agg(F.count("*").alias("__cnt")).collect()
-    )
-    offsets = {}
-    acc = start - 1
-    for row in sorted(counts, key=lambda r: r["__pid"]):
-        offsets[row["__pid"]] = acc
-        acc += row["__cnt"]
-    spark = df.sparkSession
-    # explicit schema: an EMPTY input yields zero offsets, and
-    # createDataFrame cannot infer a schema from an empty list (the
-    # pipeline must produce an empty output, not crash)
-    off_df = spark.createDataFrame(
-        [(int(pid), int(off)) for pid, off in offsets.items()],
-        "__pid INT, __off BIGINT",
-    )
-    return (
-        numbered.join(F.broadcast(off_df), "__pid")
-        .withColumn(id_col, (F.col("__rn") + F.col("__off")).cast("bigint"))
-        .drop("__pid", "__rn", "__off")
+    return _number_with_offsets(ranged, "__pid", order_by, id_col, start).drop(
+        "__pid"
     )
 
 

@@ -34,9 +34,6 @@ class RunMetrics:
     started_at: float = field(default_factory=time.time)
     entities: list[EntityMetric] = field(default_factory=list)
     _pending: list[tuple[str, Observation, float]] = field(default_factory=list)
-    # monotone counter source for unique Observation names (cleared
-    # _pending lists must not recycle names within one SparkSession)
-    _pending_seq: list[str] = field(default_factory=list)
 
     def record(self, entity: str, rows: int, seconds: float) -> None:
         self.entities.append(EntityMetric(entity, rows, seconds))
@@ -62,7 +59,6 @@ class RunMetrics:
             f"metrics_{entity}_{next(_OBS_COUNTER)}"
         )
         self._pending.append((entity, obs, time.time()))
-        self._pending_seq.append(entity)
         return df.observe(obs, F.count(F.lit(1)).alias("rows"))
 
     def harvest(self) -> None:

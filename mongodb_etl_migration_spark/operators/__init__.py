@@ -1,7 +1,9 @@
 """Operator library.
 
 ``denorm``     — top-1-per-group, denormalizing joins, pair generation,
-                 many-to-many explode, multi-output fanout (SURVEY §2.5/§2.9)
+                 many-to-many explode, merge/upsert/CDC (SURVEY §2.5);
+                 multi-output fan-out is ``plans.compiler
+                 .compile_entity_outputs`` (§2.9)
 ``hierarchy``  — iterative materialized-path resolution (J9)
 ``validation`` — anti-join orphan checks, count reconciliation (§5)
 ``dedup``      — exact / MinHash-LSH / SimHash / n-gram-Jaccard /

@@ -1,4 +1,4 @@
-"""Denormalization operators — SURVEY.md §2.5 J4–J8, §2.9.
+"""Denormalization operators — SURVEY.md §2.5 J4–J8.
 
 The reference implements these as driver-side dict probes over rows it
 reads back from its own sinks (etl/orchestrator.py:1106-1471). Here
@@ -157,40 +157,6 @@ def m2m_explode(
     return exploded.join(F.broadcast(left_ids), left_on, "inner").join(
         F.broadcast(right_ids), right_on, "inner"
     )
-
-
-def fanout(base: DataFrame, outputs: dict[str, Sequence[Column]]):
-    """§2.9 multi-output: one scan feeding N projections —
-    etl/orchestrator.py:326-453 (rooms → room_details + organizations +
-    rooms_by_mongo in a single pass).
-
-    Materializes the base plan once and returns {name: projected_df};
-    the caller triggers N actions against the one materialized
-    lineage. This is the cache+multi-action idiom replacing the
-    reference's per-batch Python fan-out loops.
-
-    Materialization is a LAZY localCheckpoint, not DataFrame.persist()
-    — the same structural fix hierarchy.resolve_paths proved: a
-    CacheManager entry is keyed by logical plan and outlives every
-    reference (a long-lived session calling fanout in a loop would
-    accumulate one entry per distinct input, with no way to enforce
-    the old 'caller must unpersist' docstring contract), while
-    local-checkpoint blocks belong to the RDD and are freed by the
-    ContextCleaner as soon as the caller drops the returned frames.
-    Lazy because projection is deterministic: whichever output's
-    action runs first materializes the blocks, the rest reuse them.
-
-    Fault-tolerance tradeoff (explicit, same as hierarchy.py):
-    localCheckpoint truncates lineage, so losing an executor that
-    holds checkpoint blocks between the first and Nth output action
-    fails the remaining actions instead of recomputing — the failed
-    WRITE retries from the caller (fan-out inputs are deterministic
-    scans, so a rerun is identical). Jobs that cannot re-run the
-    fan-out on executor loss should write the base to a table first
-    (reliable checkpoint) and fan out from that.
-    """
-    base = base.localCheckpoint(eager=False)
-    return {name: base.select(*cols) for name, cols in outputs.items()}
 
 
 def merge_update(

@@ -21,6 +21,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
+from mongodb_etl_migration_spark.functions.keys import _number_with_offsets
 from mongodb_etl_migration_spark.functions.scalars import parent_path, path_depth
 
 
@@ -42,10 +43,9 @@ def resolve_folder_tree(
     2. dense ids by (depth, path) WITHOUT a global sort OR sampling:
        row_number partitioned BY DEPTH (parallel across levels, and a
        single level of any real folder tree fits one task) plus a
-       cumulative per-depth offset from a #depths-row aggregate —
-       deterministic by construction, so unlike range-partitioned
-       numbering it needs no checkpoint pinning and adds no eager
-       driver jobs;
+       cumulative per-depth offset from a #depths-row aggregate (the
+       offsets helper keys.assign_sequential_ids also uses, grouped by
+       depth instead of by range partition) — no eager driver jobs;
     3. one broadcast self-join on parent_path (the folder set is
        dimension-sized even at 100 TB of documents; if a tree ever
        outgrew broadcast, drop the hint and the same join shuffles).
@@ -58,19 +58,15 @@ def resolve_folder_tree(
     over a few hundred rows, pure overhead (same guidance as
     functions/keys.assign_sequential_ids).
 
-    base feeds three subtrees (offset agg, parent map, main), so it is
-    materialized ONCE via localCheckpoint rather than
-    DataFrame.persist(): a CacheManager entry is keyed by logical plan
-    and outlives every reference (a long-lived session accumulates one
-    per distinct input — the round-3 heap creep), while local-
-    checkpoint blocks belong to the RDD and are freed by the
-    ContextCleaner as soon as the caller drops the result frame.
-    LAZY (eager=False): unlike keys.assign_sequential_ids — whose
-    range partitioning samples bounds nondeterministically and must be
-    pinned by an eager job before anything reads it twice — every step
-    here (hash repartition, per-depth row_number) is deterministic, so
-    whichever consumer runs first can materialize the blocks and the
-    rest reuse them; no extra build-time job.
+    The numbered base feeds three subtrees (offset agg, parent map,
+    main), so it is materialized ONCE via a lazy localCheckpoint rather
+    than DataFrame.persist(): a CacheManager entry is keyed by logical
+    plan and outlives every reference (a long-lived session
+    accumulates one per distinct input — the round-3 heap creep),
+    while local-checkpoint blocks belong to the RDD and are freed by
+    the ContextCleaner as soon as the caller drops the result frame.
+    Whichever consumer runs first materializes the blocks and the rest
+    reuse them; no extra build-time job.
     """
     n_part = num_partitions or int(
         folders.sparkSession.conf.get("spark.sql.shuffle.partitions", "32")
@@ -111,31 +107,7 @@ def resolve_folder_tree(
             (F.row_number().over(w_one) + F.lit(id_start - 1)).cast("bigint"),
         ).localCheckpoint(eager=False)
     else:
-        w_depth = Window.partitionBy("depth").orderBy("path")
-        base = base.withColumn("__rn", F.row_number().over(w_depth)).localCheckpoint(
-            eager=False
-        )
-        # cumulative rows in shallower depths — a window over the tiny
-        # per-depth count aggregate (#depths rows), not over the data
-        w_cum = (
-            Window.partitionBy(F.lit(0))
-            .orderBy("depth")
-            .rowsBetween(Window.unboundedPreceding, -1)
-        )
-        offsets = (
-            base.groupBy("depth")
-            .agg(F.count("*").alias("__cnt"))
-            .withColumn("__off", F.coalesce(F.sum("__cnt").over(w_cum), F.lit(0)))
-            .select("depth", "__off")
-        )
-        base = (
-            base.join(F.broadcast(offsets), "depth")
-            .withColumn(
-                "folder_id",
-                (F.col("__rn") + F.col("__off") + F.lit(id_start - 1)).cast("bigint"),
-            )
-            .drop("__rn", "__off")
-        )
+        base = _number_with_offsets(base, "depth", ["path"], "folder_id", id_start)
     parents = base.select(
         F.col("path").alias("parent_path"),
         F.col("folder_id").alias("parent_id"),

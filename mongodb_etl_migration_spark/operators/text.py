@@ -1117,8 +1117,8 @@ def epoch_shuffle(
     exchange — the hash key is uniform by construction, so ranges
     balance regardless of input skew) and per-partition numbering
     with broadcast offsets via keys.assign_sequential_ids — never a
-    global window. Driver state is one row-count per range partition,
-    bounded by ``num_partitions``.
+    global window. The offsets are an in-plan cumulative sum over one
+    row-count per range partition, bounded by ``num_partitions``.
 
     Output: input columns + ``pos_col`` (0-based dense epoch
     position). Ties beyond the 128-bit hash are broken by the key

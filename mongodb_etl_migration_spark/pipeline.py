@@ -17,12 +17,14 @@ rooms_by_user window.
 
 from __future__ import annotations
 
+from collections.abc import Callable
 from datetime import datetime
 
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from mongodb_etl_migration_spark.functions import scalars as S
+from mongodb_etl_migration_spark.functions.crypto import make_url_decrypt_rewrite
 from mongodb_etl_migration_spark.functions.keys import assign_sequential_ids
 from mongodb_etl_migration_spark.operators import denorm as DN
 from mongodb_etl_migration_spark.operators.hierarchy import (
@@ -107,7 +109,6 @@ def municipality_spec() -> EntitySpec:
             "province_id": lambda df: F.col("province_id"),
         },
         key=KeySpec(kind="sequential", order_by=("mongo_id",), out="id"),
-        depends_on=("province",),
     )
 
 
@@ -133,7 +134,6 @@ def parroquia_spec() -> EntitySpec:
             "municipality_id": lambda df: F.col("municipality_id"),
         },
         key=KeySpec(kind="sequential", order_by=("mongo_id",), out="id"),
-        depends_on=("province", "municipality"),
     )
 
 
@@ -202,7 +202,6 @@ def user_spec(run_ts: datetime) -> EntitySpec:
             "created_at": lambda df: F.coalesce(F.col("createdAt"), F.lit(run_ts)),
         },
         key=KeySpec(kind="sequential", order_by=("mongo_id",), out="id"),
-        depends_on=("role", "province", "municipality"),
         # dual destination (orchestrator.py:455-507): the Cassandra
         # users projection shares ids with PG by construction (K4)
         side_outputs={
@@ -286,9 +285,7 @@ def rooms_spec(run_ts: datetime) -> EntitySpec:
 
 # ------------------------------------------------------------ pipeline
 def messages_spec(
-    run_ts: datetime,
-    fileurl_key: str = FILEURL_KEY,
-    fileurl_iv: str = FILEURL_IV,
+    run_ts: datetime, decrypt_rewrite: Callable[[Column | str], Column]
 ) -> EntitySpec:
     """Cassandra messages_by_room + room_by_message —
     field_mapper.py:119-149, filters from mongo_extractor.py:56-72 ∪
@@ -302,15 +299,9 @@ def messages_spec(
     must be emitted decrypted. An absent/empty fileURL skips the whole
     block (row kept, file_url/mime_type stay NULL).
 
-    ``fileurl_key``/``fileurl_iv`` default to the fixture constants but
-    are parameters, matching the reference's settings-driven keys
-    (etl/config/settings.py:85-90) — a production run passes its real
-    key instead of silently emitting ciphertext."""
-    from mongodb_etl_migration_spark.functions.crypto import (
-        make_url_decrypt_rewrite,
-    )
-
-    decrypt_rewrite = make_url_decrypt_rewrite(fileurl_key, fileurl_iv)
+    ``decrypt_rewrite`` is the run's one
+    ``crypto.make_url_decrypt_rewrite`` builder, shared with the docs
+    stage (see :func:`run_reference_pipeline`)."""
     has_url = F.col("fileURL").isNotNull() & (F.col("fileURL") != "")
     return EntitySpec(
         name="messages",
@@ -384,7 +375,6 @@ def messages_spec(
             order_by=("created_at",),
             out="message_id",
         ),
-        depends_on=("rooms", "user"),
         side_outputs={
             "room_by_message": (
                 None,
@@ -420,7 +410,6 @@ def members_spec(run_ts: datetime) -> EntitySpec:
             "mongo_id": lambda df: F.col("_id"),
             "joined_at": lambda df: F.coalesce(F.col("joinedAt"), F.lit(run_ts)),
         },
-        depends_on=("rooms", "user"),
         side_outputs={
             "room_membership_lookup": (
                 None,
@@ -475,7 +464,6 @@ def channel_spec(run_ts: datetime) -> EntitySpec:
             "created_at": lambda df: F.coalesce(F.col("createdAt"), F.lit(run_ts)),
         },
         key=KeySpec(kind="sequential", order_by=("mongo_id",), out="id"),
-        depends_on=("user",),
     )
 
 
@@ -516,21 +504,32 @@ def live_spec(run_ts: datetime) -> EntitySpec:
             ),
         },
         key=KeySpec(kind="sequential", order_by=("mongo_id",), out="id"),
-        depends_on=("channel",),
     )
 
 
 def run_reference_pipeline(
-    sources: dict[str, DataFrame], run_ts: datetime
+    sources: dict[str, DataFrame],
+    run_ts: datetime,
+    fileurl_key: str = FILEURL_KEY,
+    fileurl_iv: str = FILEURL_IV,
 ) -> dict[str, DataFrame]:
-    """Execute the full migration DAG; returns every output table.
+    """Execute the full migration; returns every output table.
 
     ``run_ts`` replaces the reference's ``datetime.now()`` defaults so
-    runs are replayable (SURVEY §7.4.7).
+    runs are replayable (SURVEY §7.4.7). ``fileurl_key``/``fileurl_iv``
+    are the Salsa20 settings for encrypted file URLs
+    (etl/config/settings.py:85-90); they default to the fixture
+    constants, and a production run passes its real key. ONE decrypt
+    builder serves both the messages and the docs stage.
+
+    Entity order (O5) is the statement order below: every stage is a
+    lazy frame, so an entity simply comes after the id-maps it joins.
     """
     out: dict[str, DataFrame] = {}
+    # F26: fileURL may arrive Salsa20-encrypted in messages and docs
+    decrypt_rewrite = make_url_decrypt_rewrite(fileurl_key, fileurl_iv)
 
-    # dimensions first (O5 topological order)
+    # dimensions first
     role = compile_entity(role_spec(), sources["roles"])
     province = compile_entity(province_spec(), sources["provinces"])
     out["role"] = role
@@ -579,7 +578,7 @@ def run_reference_pipeline(
 
     # messages → messages_by_room + room_by_message
     msg_outs = compile_entity_outputs(
-        messages_spec(run_ts), sources["messages"], id_maps
+        messages_spec(run_ts, decrypt_rewrite), sources["messages"], id_maps
     )
     messages_by_room = msg_outs["messages_by_room"]
     out["messages_by_room"] = messages_by_room
@@ -754,13 +753,6 @@ def run_reference_pipeline(
         F.lit(None).cast("string").alias("file_url"),
     )
     n_folders = tree.count()
-    # F26: fileURL may arrive Salsa20-encrypted — same shared
-    # decrypt-then-rewrite helper as messages (one drift-proof impl)
-    from mongodb_etl_migration_spark.functions.crypto import (
-        make_url_decrypt_rewrite,
-    )
-
-    decrypt_rewrite = make_url_decrypt_rewrite(FILEURL_KEY, FILEURL_IV)
     raw_url = F.coalesce(F.col("fileUrl"), F.col("fileURL"))
     # NULL-safe non-folder test: the reference's `doc.type != 'FOLDER'`
     # is True for a missing type (doc treated as a file), but the

@@ -1,4 +1,4 @@
-"""Declarative entity plans: spec → lazy DataFrame, plus DAG driver."""
+"""Declarative entity plans: spec → lazy DataFrame."""
 
 from mongodb_etl_migration_spark.plans.spec import (  # noqa: F401
     EntitySpec,
@@ -6,4 +6,3 @@ from mongodb_etl_migration_spark.plans.spec import (  # noqa: F401
     KeySpec,
 )
 from mongodb_etl_migration_spark.plans.compiler import compile_entity  # noqa: F401
-from mongodb_etl_migration_spark.plans.dag import run_dag  # noqa: F401

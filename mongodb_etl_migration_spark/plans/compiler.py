@@ -88,19 +88,26 @@ def compile_entity_outputs(
     id_maps: dict[str, DataFrame] | None = None,
 ) -> dict[str, DataFrame]:
     """Compile the entity AND its §2.9 side-outputs: the main frame is
-    persisted once (the cache+multi-action idiom) and each side output
-    is a cheap filter+projection over it — one scan feeding N sinks
-    (etl/orchestrator.py:326-453).
+    materialized once and each side output is a cheap filter+projection
+    over it — one scan feeding N sinks (etl/orchestrator.py:326-453).
 
-    Cache lifecycle: the CALLER owns it — after running its actions
-    over the returned frames, it should ``outs[spec.destination]
-    .unpersist()`` (CacheManager entries are plan-keyed and never
-    freed by GC; a long-lived session that compiles the same entity
-    repeatedly otherwise accumulates dead caches)."""
+    Materialization is a LAZY localCheckpoint, not a DataFrame cache:
+    a CacheManager entry is keyed by logical plan and outlives every
+    reference, while local-checkpoint blocks belong to the RDD and are
+    freed by the ContextCleaner once the caller drops the returned
+    frames — nothing to unpersist. Whichever output's action runs first
+    materializes the blocks; the rest reuse them.
+
+    Fault-tolerance tradeoff: localCheckpoint truncates lineage, so
+    losing an executor that holds checkpoint blocks between the first
+    and Nth output action fails the remaining actions instead of
+    recomputing them — the failed write is retried by re-running the
+    pipeline (its outputs are pure functions of the sources).
+    """
     main = compile_entity(spec, source_df, id_maps)
     if not spec.side_outputs:
         return {spec.destination: main}
-    main = main.persist()
+    main = main.localCheckpoint(eager=False)
     outs = {spec.destination: main}
     for name, (pred, projection) in spec.side_outputs.items():
         df = main.filter(pred(main)) if pred is not None else main

@@ -73,8 +73,6 @@ class EntitySpec:
     projection: dict[str, Callable[[DataFrame], Column]] = field(default_factory=dict)
     fk_joins: tuple[FKJoin, ...] = ()
     key: KeySpec | None = None
-    # entities this one depends on (drives topological order, O5).
-    depends_on: tuple[str, ...] = ()
     # §2.9 multi-output fan-out: extra destinations derived from the
     # COMPILED entity frame (post-projection, post-key). Each entry is
     # (optional row filter, projection dict); rooms → organizations /

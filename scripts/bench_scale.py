@@ -899,10 +899,10 @@ def main() -> None:
         sfm["docs"] = n_docs
 
         # Epoch shuffle at scale: the permutation is one hash-ordered
-        # range exchange over the packed sequences plus a bounded
-        # offsets collect (one row per range partition) — shuffle
-        # linear in sequences. assign_sequential_ids materializes via
-        # localCheckpoint at CALL time, so measure around the builder.
+        # range exchange over the packed sequences plus in-plan
+        # offsets (one count per range partition) — shuffle linear in
+        # sequences. Building the frame already runs the range-bound
+        # sampling job, so measure around the builder.
         def timed_shuffle():
             w0, r0 = ui.shuffle_totals()
             t0 = time.time()

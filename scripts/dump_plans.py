@@ -726,15 +726,43 @@ NOTES = {
 
 def messages_pipeline_section(spark) -> str:
     """Receipt for the messages entity plan: exactly ONE Salsa20
-    decrypt stage (round-2 defect: pushdown substitution doubled it)."""
+    decrypt stage (round-2 defect: pushdown substitution doubled it).
+    Read from the compiled entity: the pipeline's ``messages_by_room``
+    is a fan-out output over a lazy localCheckpoint, whose plan is a
+    checkpoint scan."""
     from datetime import datetime
 
-    from mongodb_etl_migration_spark.fixtures import all_sources
-    from mongodb_etl_migration_spark.pipeline import run_reference_pipeline
+    from pyspark.sql import functions as F
 
-    out = run_reference_pipeline(all_sources(spark), datetime(2024, 1, 1))
+    from mongodb_etl_migration_spark.fixtures import all_sources
+    from mongodb_etl_migration_spark.functions.crypto import (
+        make_url_decrypt_rewrite,
+    )
+    from mongodb_etl_migration_spark.pipeline import (
+        FILEURL_IV,
+        FILEURL_KEY,
+        messages_spec,
+        run_reference_pipeline,
+    )
+    from mongodb_etl_migration_spark.plans.compiler import compile_entity
+
+    run_ts = datetime(2024, 1, 1)
+    src = all_sources(spark)
+    out = run_reference_pipeline(src, run_ts)
+    id_maps = {
+        "rooms_by_mongo": out["rooms_by_mongo"].select(
+            F.col("mongo_id").alias("natural_key"), F.col("room_id").alias("id")
+        ),
+        "user_by_mongo": out["user"].select(
+            F.col("mongo_id").alias("natural_key"), F.col("id")
+        ),
+    }
+    spec = messages_spec(run_ts, make_url_decrypt_rewrite(FILEURL_KEY, FILEURL_IV))
     plan = (
-        out["messages_by_room"]._jdf.queryExecution().executedPlan().toString()
+        compile_entity(spec, src["messages"], id_maps)
+        ._jdf.queryExecution()
+        .executedPlan()
+        .toString()
     )
     n_dec = plan.count("_decrypt_fb")
     n_arrow = plan.count("ArrowEvalPython")
@@ -748,7 +776,8 @@ def messages_pipeline_section(spark) -> str:
         "The hottest Python work on the 100 TB path: the Salsa20 URL "
         f"decrypt must appear EXACTLY once. Measured: {n_dec} "
         f"_decrypt_fb stage(s), {n_arrow} ArrowEvalPython total "
-        "(decrypt + uuid5 + timeuuid keys).\n\n"
+        "(the decrypt alone; the uuid5/timeuuid keys are Column "
+        "expressions).\n\n"
         f"```\n{arrow_lines}\n```\n"
     )
 

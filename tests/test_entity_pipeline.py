@@ -14,12 +14,20 @@ from datetime import datetime
 import pytest
 from pyspark.sql import functions as F
 
-from mongodb_etl_migration_spark.fixtures import BANNED_TYPES, all_sources
+from mongodb_etl_migration_spark.fixtures import BANNED_TYPES, all_sources, users_df
+from mongodb_etl_migration_spark.functions.crypto import make_url_decrypt_rewrite
 from mongodb_etl_migration_spark.operators.validation import (
     orphan_check,
     set_membership_violations,
 )
-from mongodb_etl_migration_spark.pipeline import run_reference_pipeline
+from mongodb_etl_migration_spark.pipeline import (
+    FILEURL_IV,
+    FILEURL_KEY,
+    messages_spec,
+    run_reference_pipeline,
+    user_spec,
+)
+from mongodb_etl_migration_spark.plans.compiler import compile_entity
 
 RUN_TS = datetime(2021, 1, 1, 0, 0, 0)
 
@@ -413,16 +421,24 @@ def test_messages_plan_single_decrypt_stage(outputs):
     substitution doubled the ArrowEvalPython stage — the hottest
     Python work on the 100 TB messages path).
 
-    Compiled fresh here (not via the module fixture): once another
-    test materializes the fixture's persisted frames, their plans
-    render as InMemoryTableScan wrapping the original tree and the
-    string-level stage count double-counts. Cleared cache + fresh
-    compile gives the plan a cold 100 TB run would execute."""
-    src, _ = outputs
-    src["messages"].sparkSession.catalog.clearCache()
-    out = run_reference_pipeline(src, RUN_TS)
+    Checked on the compiled entity, not on ``messages_by_room``: the
+    pipeline's fan-out outputs read a lazy localCheckpoint, so their
+    plans are checkpoint scans that no longer show the decrypt."""
+    src, out = outputs
+    id_maps = {
+        "rooms_by_mongo": out["rooms_by_mongo"].select(
+            F.col("mongo_id").alias("natural_key"), F.col("room_id").alias("id")
+        ),
+        "user_by_mongo": out["user"].select(
+            F.col("mongo_id").alias("natural_key"), F.col("id")
+        ),
+    }
+    spec = messages_spec(RUN_TS, make_url_decrypt_rewrite(FILEURL_KEY, FILEURL_IV))
     plan = (
-        out["messages_by_room"]._jdf.queryExecution().executedPlan().toString()
+        compile_entity(spec, src["messages"], id_maps)
+        ._jdf.queryExecution()
+        .executedPlan()
+        .toString()
     )
     assert plan.count("_decrypt_fb") == 1
     # total Python stages: ONLY the decrypt remains — the uuid5/timeuuid
@@ -430,3 +446,24 @@ def test_messages_plan_single_decrypt_stage(outputs):
     # so a regression re-adding a Python hop fails here
     assert plan.count("ArrowEvalPython") == 1
     assert "BatchEvalPython" not in plan
+
+
+def test_compile_entity_missing_id_map_raises(spark):
+    with pytest.raises(KeyError, match="province"):
+        compile_entity(user_spec(RUN_TS), users_df(spark), {})
+
+
+def test_pipeline_leaves_no_cache_entries(spark):
+    """Two full runs, every output written, outputs dropped: the
+    session's CacheManager is empty — fan-out materialization is a
+    lazy localCheckpoint owned by the RDD, with nothing to unpersist."""
+    cm = spark._jsparkSession.sharedState().cacheManager()
+    # other tests in the session may have cached frames; clear them so
+    # the assertion sees only what the pipeline leaves behind
+    spark.catalog.clearCache()
+    for _ in range(2):
+        out = run_reference_pipeline(all_sources(spark), RUN_TS)
+        for df in out.values():
+            df.write.format("noop").mode("overwrite").save()
+        del out
+    assert cm.isEmpty(), "run_reference_pipeline leaked CacheManager entries"

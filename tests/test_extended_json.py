@@ -8,6 +8,7 @@ from __future__ import annotations
 import json
 from datetime import datetime, timezone
 
+import pytest
 from pyspark.sql import functions as F
 
 from mongodb_etl_migration_spark.sources.readers import (
@@ -137,6 +138,44 @@ def test_sequential_ids_empty_input(spark):
     out = assign_sequential_ids(empty, ["k"], "id")
     assert out.count() == 0
     assert "id" in out.columns
+
+
+@pytest.mark.parametrize("aqe", ["true", "false"])
+@pytest.mark.parametrize("num_partitions", [1, 7, 64])
+def test_sequential_ids_lazy_numbering_known_answer(spark, aqe, num_partitions):
+    """Lazy in-plan offsets: ids are exactly start..start+n-1 and
+    monotone in key order on skewed, tie-heavy keys, and two reads of
+    one output frame (a self-join) agree on every row's id — the
+    range bounds are sampled once, inside the one checkpointed RDD."""
+    from mongodb_etl_migration_spark.functions.keys import (
+        assign_sequential_ids,
+    )
+
+    # 20k rows, 97 distinct keys; half the rows share key 0
+    df = spark.range(20000).select(
+        F.when(F.col("id") % 2 == 0, F.lit(0))
+        .otherwise(F.col("id") * 7919 % 97)
+        .alias("k"),
+        F.col("id").alias("row"),
+    )
+    old = spark.conf.get("spark.sql.adaptive.enabled")
+    spark.conf.set("spark.sql.adaptive.enabled", aqe)
+    try:
+        out = assign_sequential_ids(
+            df, ["k"], "id", start=5, num_partitions=num_partitions
+        )
+        rows = sorted(out.select("k", "id").collect(), key=lambda r: r.id)
+        assert [r.id for r in rows] == list(range(5, 5 + 20000))
+        assert all(a.k <= b.k for a, b in zip(rows, rows[1:]))
+        disagree = (
+            out.select("row", F.col("id").alias("id1"))
+            .join(out.select("row", F.col("id").alias("id2")), "row")
+            .filter(F.col("id1") != F.col("id2"))
+            .count()
+        )
+        assert disagree == 0
+    finally:
+        spark.conf.set("spark.sql.adaptive.enabled", old)
 
 
 def test_folder_tree_with_explicit_root_row(spark):

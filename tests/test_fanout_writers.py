@@ -3,9 +3,9 @@
 The reference feeds one transformed batch into up to 5 side-output
 tables per pass (etl/orchestrator.py:326-453) and writes Cassandra
 tables with (partition key, clustering order) layout
-(backups/create_scylla_database.cql:21-46). Here: one persisted plan →
-N projections → N parquet sinks; clustered writes sort within hash
-partitions.
+(backups/create_scylla_database.cql:21-46). Here: one lazily
+checkpointed entity plan → N projections → N parquet sinks; clustered
+writes sort within hash partitions.
 """
 
 from __future__ import annotations
@@ -15,7 +15,8 @@ import glob
 import duckdb
 from pyspark.sql import functions as F
 
-from mongodb_etl_migration_spark.operators.denorm import fanout
+from mongodb_etl_migration_spark.plans.compiler import compile_entity_outputs
+from mongodb_etl_migration_spark.plans.spec import EntitySpec
 from mongodb_etl_migration_spark.sources.writers import (
     align_to_schema,
     write_clustered,
@@ -23,52 +24,70 @@ from mongodb_etl_migration_spark.sources.writers import (
 )
 
 
+def _cols(*names):
+    """Identity projection dict for an EntitySpec."""
+    return {n: (lambda df, n=n: F.col(n)) for n in names}
+
+
 def test_fanout_projections_and_writes(spark, sf_dir, tmp_path):
     base = (
         spark.read.parquet(f"{sf_dir}/customer.parquet")
         .withColumn("_is_org", F.col("c_acctbal") > 5000)
     )
-    outs = fanout(
-        base,
-        {
-            "details": [F.col("c_custkey"), F.col("c_name"), F.col("c_mktsegment")],
-            "organizations": [F.col("c_custkey"), F.col("_is_org")],
-            "by_segment": [F.col("c_mktsegment"), F.col("c_custkey")],
+    spec = EntitySpec(
+        name="customer",
+        source="customer",
+        destination="details",
+        projection=_cols("c_custkey", "c_name", "c_mktsegment", "_is_org"),
+        side_outputs={
+            "organizations": (
+                lambda df: F.col("_is_org"),
+                _cols("c_custkey", "_is_org"),
+            ),
+            "by_segment": (None, _cols("c_mktsegment", "c_custkey")),
         },
     )
+    outs = compile_entity_outputs(spec, base)
     assert set(outs) == {"details", "organizations", "by_segment"}
     total = base.count()
+    n_orgs = base.filter(F.col("c_acctbal") > 5000).count()
     for name, df in outs.items():
         write_table(df, str(tmp_path / name))
     for name in outs:
         back = spark.read.parquet(str(tmp_path / name))
-        assert back.count() == total, name
-    assert outs["organizations"].filter("_is_org").count() == base.filter(
-        F.col("c_acctbal") > 5000
-    ).count()
+        assert back.count() == (n_orgs if name == "organizations" else total), name
+    assert outs["organizations"].filter("_is_org").count() == n_orgs
 
 
 def test_fanout_leaves_no_cache_entries(spark, sf_dir):
-    """Structural lifecycle fix: repeated fanout calls in one session
-    must not grow the CacheManager (the old persist() contract relied
-    on the caller unpersisting; localCheckpoint blocks are owned by
-    the RDD and freed by the ContextCleaner instead)."""
+    """Structural lifecycle fix: repeated fan-outs in one session must
+    not grow the CacheManager (the old persist() contract relied on
+    the caller unpersisting; localCheckpoint blocks are owned by the
+    RDD and freed by the ContextCleaner instead)."""
     cm = spark._jsparkSession.sharedState().cacheManager()
     # other tests in the session-scoped fixture may have cached frames;
     # clearing is safe (cached plans just recompute) and gives the
     # no-growth assertion a clean zero
     spark.catalog.clearCache()
     assert cm.isEmpty()
+    spec = EntitySpec(
+        name="region",
+        source="region",
+        destination="region",
+        projection=_cols("r_regionkey", "r_name", "k"),
+        side_outputs={
+            # a filter that keeps every row: the counts below stay equal
+            "a": (lambda df: F.col("r_regionkey") >= 0, _cols("r_regionkey", "k")),
+            "b": (None, _cols("r_name")),
+        },
+    )
     for i in range(3):
         base = spark.read.parquet(f"{sf_dir}/region.parquet").withColumn(
             "k", F.col("r_regionkey") + i
         )
-        outs = fanout(
-            base,
-            {"a": [F.col("r_regionkey"), F.col("k")], "b": [F.col("r_name")]},
-        )
+        outs = compile_entity_outputs(spec, base)
         assert outs["a"].count() == outs["b"].count() == base.count()
-    assert cm.isEmpty(), "fanout leaked CacheManager entries"
+    assert cm.isEmpty(), "fan-out leaked CacheManager entries"
 
 
 def test_write_clustered_layout(spark, sf_dir, tmp_path):
