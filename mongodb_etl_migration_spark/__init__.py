@@ -13,7 +13,7 @@ re-expressed Spark-first:
   become Column-expression builders (``functions/``);
 - its hand-rolled dict caches (``etl/utils/id_mapper.py``) become
   broadcast hash joins; its post-migration read-back phase becomes pure
-  derivations over persisted DataFrames (``operators/denorm.py``);
+  derivations over lazy DataFrames (``operators/denorm.py``);
 - beyond parity, large-scale training-data operators (dedup, similarity
   search, text analysis, multimodal plumbing) live in ``operators/``.
 

@@ -3,8 +3,10 @@
 Each function maps to an operator in SURVEY.md §2.3/§2.4 and cites the
 reference implementation it re-expresses. ~90% of the reference's
 row-level lambdas compile to built-in JVM-side Column expressions
-(whole-stage codegen, no Python in the hot path); only UUID5, TimeUUID
-and Salsa20 need (vectorized pandas) UDFs.
+(whole-stage codegen, no Python in the hot path) — UUID5 and TimeUUID
+included; only Salsa20 needs a (vectorized pandas) UDF. The
+``*_arrow`` UUID twins are the original pandas UDFs, kept as test
+references.
 """
 
 from mongodb_etl_migration_spark.functions.scalars import (  # noqa: F401

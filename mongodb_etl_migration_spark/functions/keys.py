@@ -154,52 +154,6 @@ def timeuuid_deterministic_arrow(
 
 
 # ------------------------------------------------------------------- K3
-def _number_with_offsets(
-    df: DataFrame,
-    part_col: str,
-    order_by: list[Column | str],
-    id_col: str,
-    start: int,
-) -> DataFrame:
-    """Dense ids ``start..start+n-1`` in (``part_col``, ``order_by``)
-    order, where ``df`` is already partitioned so that each ``part_col``
-    value sits in one task: ``row_number`` within each ``part_col``
-    group, plus the number of rows in all lower groups — a cumulative
-    sum over the tiny per-group count aggregate, broadcast-joined back.
-    Shared by :func:`assign_sequential_ids` (groups = range partitions)
-    and ``hierarchy.resolve_folder_tree`` (groups = tree depths).
-
-    The numbered frame is read twice (counts and ids), so it is pinned
-    by a LAZY ``localCheckpoint``: both reads consume the one
-    checkpointed RDD — built once, with whatever range bounds its
-    exchange sampled — and whichever job runs first materializes its
-    blocks. Nothing returns to the driver; empty input yields an empty
-    aggregate and so an empty output."""
-    w = Window.partitionBy(part_col).orderBy(*order_by)
-    numbered = df.withColumn("__rn", F.row_number().over(w)).localCheckpoint(
-        eager=False
-    )
-    w_cum = (
-        Window.partitionBy(F.lit(0))
-        .orderBy(part_col)
-        .rowsBetween(Window.unboundedPreceding, -1)
-    )
-    offsets = (
-        numbered.groupBy(part_col)
-        .agg(F.count("*").alias("__cnt"))
-        .withColumn("__off", F.coalesce(F.sum("__cnt").over(w_cum), F.lit(0)))
-        .select(part_col, "__off")
-    )
-    return (
-        numbered.join(F.broadcast(offsets), part_col)
-        .withColumn(
-            id_col,
-            (F.col("__rn") + F.col("__off") + F.lit(start - 1)).cast("bigint"),
-        )
-        .drop("__rn", "__off")
-    )
-
-
 def assign_sequential_ids(
     df: DataFrame,
     order_by: list[Column | str],
@@ -218,7 +172,8 @@ def assign_sequential_ids(
     2. number rows within each partition (no extra shuffle),
     3. add per-partition offsets: a cumulative sum over the per-
        partition counts (#partitions rows), broadcast back via join on
-       partition id — all in-plan, nothing returns to the driver.
+       partition id — all in-plan, nothing returns to the driver;
+       empty input yields an empty aggregate and so an empty output.
 
     Wall-clock is one range shuffle + one window within partitions —
     the same cost profile as a distributed sort.
@@ -226,38 +181,45 @@ def assign_sequential_ids(
     repartitionByRange samples its range bounds with a nondeterministic
     seed, so two independent evaluations could place boundary rows in
     different partitions — silently duplicating or dropping ids. The
-    numbering is therefore read through one lazy ``localCheckpoint``
-    (see ``_number_with_offsets``): the counts and the id emission read
-    the same checkpointed RDD, whose range partitioner was built once,
-    so they agree on every row's partition.
+    numbered frame is read twice (counts and ids), so it is pinned by
+    a LAZY ``localCheckpoint``: both reads consume the one checkpointed
+    RDD, whose range partitioner was built once, so they agree on
+    every row's partition; whichever job runs first materializes its
+    blocks.
 
     ``num_partitions`` sizes the range shuffle; it defaults to
     ``spark.sql.shuffle.partitions``. Callers numbering a KNOWN
-    dimension-sized set (e.g. a folder tree) should pass a small
-    value — every range partition is a task in each job that reads the
-    numbering, so 32 partitions of 100 rows is pure scheduling
-    overhead, while at fact-table scale the default keeps the sort
-    parallel.
+    dimension-sized set should pass a small value — every range
+    partition is a task in each job that reads the numbering, so 32
+    partitions of 100 rows is pure scheduling overhead, while at
+    fact-table scale the default keeps the sort parallel.
     """
     n_part = num_partitions or int(
         df.sparkSession.conf.get("spark.sql.shuffle.partitions", "32")
     )
-    ranged = df.repartitionByRange(int(n_part), *order_by).withColumn(
-        "__pid", F.spark_partition_id()
+    w = Window.partitionBy("__pid").orderBy(*order_by)
+    numbered = (
+        df.repartitionByRange(int(n_part), *order_by)
+        .withColumn("__pid", F.spark_partition_id())
+        .withColumn("__rn", F.row_number().over(w))
+        .localCheckpoint(eager=False)
     )
-    return _number_with_offsets(ranged, "__pid", order_by, id_col, start).drop(
-        "__pid"
+    w_cum = (
+        Window.partitionBy(F.lit(0))
+        .orderBy("__pid")
+        .rowsBetween(Window.unboundedPreceding, -1)
     )
-
-
-def first_wins_dedup(df: DataFrame, key: str, order_by: list[Column | str]) -> DataFrame:
-    """First-wins id-cache semantics (A7) made deterministic —
-    etl/utils/cassandra_id_mapper.py:61-69,89-113 assign on first sight
-    in arrival order; here "first" is defined by an explicit ordering
-    (SURVEY.md §7.4.3)."""
-    w = Window.partitionBy(key).orderBy(*order_by)
+    offsets = (
+        numbered.groupBy("__pid")
+        .agg(F.count("*").alias("__cnt"))
+        .withColumn("__off", F.coalesce(F.sum("__cnt").over(w_cum), F.lit(0)))
+        .select("__pid", "__off")
+    )
     return (
-        df.withColumn("__rn", F.row_number().over(w))
-        .filter(F.col("__rn") == 1)
-        .drop("__rn")
+        numbered.join(F.broadcast(offsets), "__pid")
+        .withColumn(
+            id_col,
+            (F.col("__rn") + F.col("__off") + F.lit(start - 1)).cast("bigint"),
+        )
+        .drop("__rn", "__off", "__pid")
     )

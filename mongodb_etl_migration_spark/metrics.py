@@ -40,9 +40,8 @@ class RunMetrics:
 
     def observed(self, entity: str, df: DataFrame) -> DataFrame:
         """Attach a row-count observation that RIDES the caller's own
-        action (the write) — zero extra scans. This replaces the old
-        ``timed()``'s ``df.count()``, which was a second full pass per
-        entity unless the caller had cached (a 2× cost on the whole
+        action (the write) — zero extra scans; a separate ``count()``
+        would be a second full pass per entity (a 2× cost on the whole
         pipeline at scale).
 
         Call :meth:`harvest` right AFTER each entity's action (or
@@ -58,24 +57,15 @@ class RunMetrics:
         obs = Observation(
             f"metrics_{entity}_{next(_OBS_COUNTER)}"
         )
-        self._pending.append((entity, obs, time.time()))
+        self._pending.append((entity, obs, time.perf_counter()))
         return df.observe(obs, F.count(F.lit(1)).alias("rows"))
 
     def harvest(self) -> None:
         """Record every pending observation. Blocks until the observed
         DataFrames' actions have run (Observation.get waits)."""
         for entity, obs, t0 in self._pending:
-            self.record(entity, int(obs.get["rows"]), time.time() - t0)
+            self.record(entity, int(obs.get["rows"]), time.perf_counter() - t0)
         self._pending.clear()
-
-    def timed(self, entity: str, df: DataFrame) -> int:
-        """Count one output, recording rows + wall time. NOTE: this
-        runs a dedicated count() action — for production writes prefer
-        ``observed()`` + ``harvest()``, which piggyback on the write."""
-        t0 = time.time()
-        n = df.count()
-        self.record(entity, n, time.time() - t0)
-        return n
 
     @property
     def total_rows(self) -> int:

@@ -21,7 +21,11 @@ def top1_per_group(
     order_by: Sequence[Column],
 ) -> DataFrame:
     """J5/O2: last-message-per-room — etl/orchestrator.py:1266-1276
-    (per-room ``ORDER BY message_id DESC LIMIT 1``).
+    (per-room ``ORDER BY message_id DESC LIMIT 1``). The engine's one
+    top-1 body: A7 first-wins dedup (cassandra_id_mapper.py:61-69,
+    with "first" defined by an explicit ordering, SURVEY §7.4.3), CDC
+    change compaction (:func:`apply_cdc`) and the crawl-layer URL
+    dedup all call it.
 
     Window + row_number: one hash shuffle on the group key, no join.
     Pass fully-deterministic ``order_by`` (include a unique tiebreaker)
@@ -35,26 +39,6 @@ def top1_per_group(
         .filter(F.col("__rn") == 1)
         .drop("__rn")
     )
-
-
-def denormalize(
-    fact: DataFrame,
-    dims: Sequence[tuple[DataFrame, Sequence[str] | Column, str]],
-) -> DataFrame:
-    """J6: rooms_by_user-style wide-row build —
-    etl/orchestrator.py:1235-1407 (participants ⟕ rooms ⟕ last-message
-    ⟕ sender), which the reference does with three pre-fetched dict
-    caches. Each ``dims`` entry is (dim_df, join_on, how).
-
-    Dimension sides are explicitly broadcast — the Spark analogue of the
-    reference's cache preload, but executed as hash joins inside
-    whole-stage codegen. For dimension tables too big to broadcast the
-    caller passes the df pre-bucketed and Catalyst/AQE picks SMJ.
-    """
-    out = fact
-    for dim, on, how in dims:
-        out = out.join(F.broadcast(dim), on, how)
-    return out
 
 
 def pair_generation(
@@ -146,9 +130,11 @@ def m2m_explode(
     (user.profession[]/entities[] → explode → resolve both sides'
     surrogate ids; misses dropped ⇒ inner joins).
 
-    ``left_ids``/``right_ids`` are (natural_key → surrogate id) maps;
-    both are broadcast (dimension-sized), so the only shuffle is the
-    explode's narrow dependency — none.
+    ``left_ids``/``right_ids`` are (natural_key → surrogate id) maps
+    with columns ``left_on``/``right_on`` plus the id; both are
+    broadcast (dimension-sized), so the bridge never shuffles. A NULL
+    or empty array emits no rows (explode, not explode_outer), so no
+    NULL guard is needed on ``array_col``.
     """
     exploded = src.select(
         F.col(src_key).alias(left_on),
@@ -201,7 +187,7 @@ def upsert(
     affect row a second time" for duplicate conflict keys in one
     statement, and this join-based form would instead silently fan
     matched target rows out (row-count corruption). Pre-aggregate
-    (e.g. ``first_wins_dedup``) when the update stream can repeat
+    (e.g. :func:`top1_per_group`) when the update stream can repeat
     keys.
 
     Plan shape: one equi-join on the key for the update side and one
@@ -265,12 +251,7 @@ def apply_cdc(
     nondeterministic, so prefer a (ts, offset) struct when timestamps
     can collide.
     """
-    w = Window.partitionBy(*keys).orderBy(F.col(seq_col).desc())
-    latest = (
-        changes.withColumn("__rn", F.row_number().over(w))
-        .filter(F.col("__rn") == 1)
-        .drop("__rn")
-    )
+    latest = top1_per_group(changes, keys, [F.col(seq_col).desc()])
     upserts = latest.filter(F.col(op_col) != "D").select(*keys, *set_cols)
     deletes = latest.filter(F.col(op_col) == "D").select(*keys)
     merged = upsert(target, upserts, keys, set_cols)

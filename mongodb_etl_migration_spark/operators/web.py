@@ -21,6 +21,8 @@ import pandas as pd
 from pyspark.sql import Column
 from pyspark.sql import functions as F
 
+from mongodb_etl_migration_spark.operators.denorm import top1_per_group
+
 # One capture group per component, anchored; query/fragment optional.
 _SCHEME_RE = "^([a-zA-Z][a-zA-Z0-9+.-]*)://"
 _HOST_RE = "^[a-zA-Z][a-zA-Z0-9+.-]*://([^/?#]+)"
@@ -574,8 +576,6 @@ def url_dedup_first_wins(df, url_col: str, order_col: str):
     duplicate group moves one row per map partition, not the group.
     The canonical key is built in two projections (parts, then
     assembly) so each URL regex evaluates exactly once per row."""
-    from pyspark.sql import Window
-
     parts = with_url_parts(df, url_col)
     canon = parts.withColumn(
         "__canon",
@@ -586,12 +586,7 @@ def url_dedup_first_wins(df, url_col: str, order_col: str):
             F.col("__url_q"),
         ),
     ).drop("__url_scheme", "__url_host", "__url_path", "__url_q")
-    w = Window.partitionBy("__canon").orderBy(F.asc(order_col))
-    return (
-        canon.withColumn("__rn", F.row_number().over(w))
-        .filter(F.col("__rn") == 1)
-        .drop("__rn")
-    )
+    return top1_per_group(canon, ["__canon"], [F.asc(order_col)])
 
 
 def html_links(c: Column | str) -> Column:

@@ -64,8 +64,6 @@ def url_of(c: str) -> Column:
 # --------------------------------------------------------------- specs
 def role_spec() -> EntitySpec:
     return EntitySpec(
-        name="role",
-        source="roles",
         destination="role",
         projection={
             "mongo_id": lambda df: F.col("_id"),
@@ -79,8 +77,6 @@ def role_spec() -> EntitySpec:
 
 def province_spec() -> EntitySpec:
     return EntitySpec(
-        name="province",
-        source="provinces",
         destination="province",
         projection={
             "mongo_id": lambda df: F.col("_id"),
@@ -98,8 +94,6 @@ def municipality_spec() -> EntitySpec:
     """PG `municipality` — data_transformer.py:680-698 (J1:
     municipality→province FK resolved via the id-map)."""
     return EntitySpec(
-        name="municipality",
-        source="municipalities",
         destination="municipality",
         derivations={"province_ref": lambda df: ref_id("province")},
         fk_joins=(FKJoin(dim="province", on="province_ref", out="province_id"),),
@@ -116,8 +110,6 @@ def parroquia_spec() -> EntitySpec:
     """PG `parroquia` — data_transformer.py:700-728 (J1: parroquia →
     province AND municipality FKs)."""
     return EntitySpec(
-        name="parroquia",
-        source="parroquias",
         destination="parroquia",
         derivations={
             "province_ref": lambda df: ref_id("province"),
@@ -146,8 +138,6 @@ def user_spec(run_ts: datetime) -> EntitySpec:
         return F.coalesce(F.col("displayName"), F.col("name"))
 
     return EntitySpec(
-        name="user",
-        source="users",
         destination="user",
         filters=(
             # P6: only USER_ROLE/AGENTE_ROLE migrate (orchestrator.py:547-566)
@@ -226,8 +216,6 @@ def rooms_spec(run_ts: datetime) -> EntitySpec:
     is_group = lambda df: F.coalesce(F.col("isGroup"), F.lit(False))  # noqa: E731
 
     return EntitySpec(
-        name="rooms",
-        source="rooms",
         destination="room_details",
         projection={
             "mongo_id": lambda df: F.col("_id"),
@@ -304,8 +292,6 @@ def messages_spec(
     stage (see :func:`run_reference_pipeline`)."""
     has_url = F.col("fileURL").isNotNull() & (F.col("fileURL") != "")
     return EntitySpec(
-        name="messages",
-        source="messages",
         destination="messages_by_room",
         filters=(
             lambda df: (
@@ -392,8 +378,6 @@ def members_spec(run_ts: datetime) -> EntitySpec:
     """participants_by_room + room_membership_lookup —
     field_mapper.py:155-166 (F20 role uppercase, default MEMBER)."""
     return EntitySpec(
-        name="roommembers",
-        source="roommembers",
         destination="participants_by_room",
         derivations={
             "room_ref": lambda df: ref_id("room"),
@@ -426,8 +410,6 @@ def members_spec(run_ts: datetime) -> EntitySpec:
 
 def professions_spec() -> EntitySpec:
     return EntitySpec(
-        name="profession",
-        source="professions",
         destination="profession",
         projection={
             "mongo_id": lambda df: F.col("_id"),
@@ -442,8 +424,6 @@ def channel_spec(run_ts: datetime) -> EntitySpec:
     """PG channel — field_mapper.py:172-187 (F11-ish url coalesce, F12
     array length, J1 createdBy FK)."""
     return EntitySpec(
-        name="channel",
-        source="channels",
         destination="channel",
         derivations={"created_by_ref": lambda df: ref_id("createdBy")},
         fk_joins=(
@@ -471,8 +451,6 @@ def live_spec(run_ts: datetime) -> EntitySpec:
     """PG live — field_mapper.py:218-241 (F10 derivations, F11 5-way
     photo coalesce + F5 rewrite, soft delete)."""
     return EntitySpec(
-        name="live",
-        source="lives",
         destination="live",
         derivations={"channel_ref": lambda df: ref_id("channel")},
         fk_joins=(FKJoin(dim="channel_by_mongo", on="channel_ref", out="channel_id"),),
@@ -685,44 +663,27 @@ def run_reference_pipeline(
         ["last_message_at"],
     )
 
-    # professions dimension + user_professions M2M (J4)
+    # professions dimension + user_professions M2M (J4: misses on
+    # either side dropped)
     profession = compile_entity(professions_spec(), sources["professions"])
     out["profession"] = profession
-    exploded = (
-        sources["users"]
-        .filter(F.col("profession").isNotNull())
-        .select(
-            F.col("_id").alias("user_mongo_id"),
-            F.explode(F.col("profession")).alias("prof_mongo_id"),
-        )
-    )
-    out["user_professions"] = (
-        exploded.join(
-            F.broadcast(
-                user.select(
-                    F.col("mongo_id").alias("user_mongo_id"),
-                    F.col("id").alias("user_id"),
-                )
-            ),
-            "user_mongo_id",
-            "inner",  # J4: misses dropped
-        )
-        .join(
-            F.broadcast(
-                profession.select(
-                    F.col("mongo_id").alias("prof_mongo_id"),
-                    F.col("id").alias("profession_id"),
-                )
-            ),
-            "prof_mongo_id",
-            "inner",
-        )
-        .select(
-            "user_id",
-            "profession_id",
-            # F18 composite lineage key
-            S.composite_key("user_mongo_id", "prof_mongo_id").alias("mongo_id"),
-        )
+    out["user_professions"] = DN.m2m_explode(
+        sources["users"],
+        "_id",
+        "profession",
+        user.select(
+            F.col("mongo_id").alias("user_mongo_id"), F.col("id").alias("user_id")
+        ),
+        profession.select(
+            F.col("mongo_id").alias("prof_mongo_id"), F.col("id").alias("profession_id")
+        ),
+        "user_mongo_id",
+        "prof_mongo_id",
+    ).select(
+        "user_id",
+        "profession_id",
+        # F18 composite lineage key
+        S.composite_key("user_mongo_id", "prof_mongo_id").alias("mongo_id"),
     )
 
     # channel (F11-ish url coalesce, F12 array length, J1 createdBy FK)

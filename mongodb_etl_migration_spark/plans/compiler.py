@@ -61,11 +61,9 @@ def compile_entity(
         )
 
     key = spec.key
-    if key is not None and key.kind != "none":
+    if key is not None:
         if key.kind == "sequential":
-            df = assign_sequential_ids(
-                df, list(key.order_by) or [key.source_col], key.out, key.start
-            )
+            df = assign_sequential_ids(df, list(key.order_by), key.out)
         elif key.kind == "uuid5":
             df = df.withColumn(key.out, uuid5_oid(F.col(key.source_col)))
         elif key.kind == "timeuuid":

@@ -40,19 +40,18 @@ class FKJoin:
 class KeySpec:
     """Surrogate-key strategy for an entity (SURVEY §2.4)."""
 
-    kind: str  # 'sequential' | 'uuid5' | 'timeuuid' | 'none'
+    kind: str  # 'sequential' | 'uuid5' | 'timeuuid'
     source_col: str = "mongo_id"
+    # sequential: the id order (required); timeuuid: (ts_col,)
     order_by: tuple[str, ...] = ()
     out: str = "id"
-    start: int = 1
 
 
 @dataclass
 class EntitySpec:
-    """One source entity → one destination table."""
+    """One source entity → one destination table (the caller passes
+    the source frame to the compiler)."""
 
-    name: str
-    source: str  # catalog table / path
     destination: str
     # Predicates applied BEFORE projection (P4-P7 hoisted for pushdown,
     # SURVEY §7.4.4). Callables get the source DataFrame → Column.

@@ -736,13 +736,11 @@ def j6_denormalized_view(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("o_orderdate").alias("last_orderdate"),
         F.col("o_totalprice").alias("last_totalprice"),
     )
-    return DN.denormalize(
-        cat.customer,
-        [
-            (cat.nation.select(F.col("n_nationkey").alias("c_nationkey"),
-                               F.col("n_name").alias("nation")),
-             ["c_nationkey"], "left"),
-        ],
+    nation = cat.nation.select(
+        F.col("n_nationkey").alias("c_nationkey"), F.col("n_name").alias("nation")
+    )
+    return cat.customer.join(
+        F.broadcast(nation), ["c_nationkey"], "left"
     ).join(
         last, F.col("o_custkey") == F.col("c_custkey"), "left"
     ).select(
@@ -793,9 +791,9 @@ def j7_pair_generation(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
 )
 def j9_hierarchy_resolution(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """J9: iterative materialized-path resolution (driver loop over
-    depth levels; no recursive CTE in Spark) —
-    orchestrator.py:743-1000. Folder tree synthesized from
+    """J9: materialized-path resolution — orchestrator.py:743-1000
+    walks the tree level by level; here dense ids by (depth, path)
+    plus one parent self-join, no loop. Folder tree synthesized from
     documents(source, lang)."""
     d = Catalog(spark, sf_dir).documents
     lvl1 = d.select(F.concat(F.lit("/"), F.col("source")).alias("path"))
@@ -803,10 +801,7 @@ def j9_hierarchy_resolution(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.concat(F.lit("/"), F.col("source"), F.lit("/"), F.col("lang")).alias("path")
     )
     folders = lvl1.unionByName(lvl2).distinct()
-    # two-level tree of ~hundreds of paths: 1 partition — at 32 the
-    # three consumers of the materialized base each schedule 32 tasks
-    # of pure overhead (window parallelism is depth-bounded anyway)
-    return H.resolve_folder_tree(folders, "path", num_partitions=1).select(
+    return H.resolve_folder_tree(folders, "path").select(
         "path", "depth", "folder_id", "parent_id"
     )
 
@@ -1270,7 +1265,7 @@ def a7_first_wins_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     """A7: first-wins dedup with explicit deterministic ordering —
     cassandra_id_mapper.py:61-69 (SURVEY §7.4.3)."""
     e = Catalog(spark, sf_dir).events
-    return K.first_wins_dedup(e, "user_id", [F.col("ts"), F.col("event_id")]).select(
+    return DN.top1_per_group(e, ["user_id"], [F.col("ts"), F.col("event_id")]).select(
         "user_id", F.col("event_id").alias("first_event"), F.col("ts").alias("first_ts")
     )
 
@@ -3608,9 +3603,7 @@ def j9b_file_resolution(spark: SparkSession, sf_dir: str) -> DataFrame:
     lvl2 = d.select(
         F.concat(F.lit("/"), F.col("source"), F.lit("/"), F.col("lang")).alias("path")
     )
-    folder_ids = H.resolve_folder_tree(
-        lvl1.unionByName(lvl2).distinct(), "path", num_partitions=1
-    )
+    folder_ids = H.resolve_folder_tree(lvl1.unionByName(lvl2).distinct(), "path")
     files = d.select(
         "doc_id",
         F.when(

@@ -181,12 +181,11 @@ NOTES = {
         "full-table shuffle."
     ),
     "j9_hierarchy_resolution": (
-        "Hierarchy as ONE declarative plan: depth-partitioned "
-        "row_number (parallel across levels) + cumulative level "
-        "offsets from a #depths-row aggregate + one broadcast "
-        "self-join on parent_path — no driver loop, no global sort, "
-        "no per-level checkpoints; plan depth independent of tree "
-        "depth."
+        "Hierarchy as ONE declarative plan: a single-task dense "
+        "row_number by (depth, path) over the dimension-sized folder "
+        "set, checkpointed lazily, + one broadcast self-join on "
+        "parent_path — no driver loop, no per-level checkpoints; "
+        "plan depth independent of tree depth."
     ),
     "k2_timeuuid": (
         "UUID invariant check: ONE ArrowEvalPython stage (the "

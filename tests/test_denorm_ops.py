@@ -1,5 +1,5 @@
-"""Unit tests for denorm operators: exact upsert semantics (S8) and
-pair_generation's order_by (J7)."""
+"""Unit tests for denorm operators: exact upsert semantics (S8),
+pair_generation's order_by (J7) and the m2m_explode bridge (J4)."""
 
 from pyspark.sql import functions as F
 
@@ -35,6 +35,32 @@ def test_merge_update_keeps_target_on_null_update(spark):
     updates = spark.createDataFrame([(1, None)], "k int, bal double")
     out = DN.merge_update(target, updates, ["k"], ["bal"]).collect()
     assert out[0].bal == 10.0
+
+
+def test_m2m_explode_drops_nulls_empties_and_misses(spark):
+    """J4 bridge: one row per (resolved left, resolved right) element.
+    A NULL array, an empty array, a NULL element and a miss on either
+    id map all emit nothing."""
+    src = spark.createDataFrame(
+        [
+            ("u1", ["p1", "p2", "pX"]),  # pX: miss on the right
+            ("u2", None),                # NULL array
+            ("u3", []),                  # empty array
+            ("u4", ["p1"]),              # u4: miss on the left
+            ("u5", ["p2", None]),        # NULL element
+        ],
+        "_id string, profession array<string>",
+    )
+    users = spark.createDataFrame(
+        [("u1", 1), ("u2", 2), ("u3", 3), ("u5", 5)], "u string, user_id int"
+    )
+    profs = spark.createDataFrame(
+        [("p1", 10), ("p2", 20)], "p string, profession_id int"
+    )
+    rows = DN.m2m_explode(src, "_id", "profession", users, profs, "u", "p").collect()
+    got = {(r.u, r.p, r.user_id, r.profession_id) for r in rows}
+    assert len(rows) == 3
+    assert got == {("u1", "p1", 1, 10), ("u1", "p2", 1, 20), ("u5", "p2", 5, 20)}
 
 
 def test_pair_generation_honors_order_by(spark):
@@ -113,13 +139,13 @@ def test_observed_metrics_per_entity_timing(spark, tmp_path):
     from mongodb_etl_migration_spark.metrics import RunMetrics
 
     m = RunMetrics()
-    t0 = time.time()
+    t0 = time.perf_counter()
     a = spark.range(10).toDF("x")
     m.observed("a", a).write.mode("overwrite").parquet(str(tmp_path / "a"))
     m.harvest()
     # measured upper bound, not a wall-clock constant: a cold session's
     # first parquet write can take seconds of JIT on its own
-    a_elapsed = time.time() - t0
+    a_elapsed = time.perf_counter() - t0
     time.sleep(1.0)
     b = spark.range(20).toDF("x")
     m.observed("b", b).write.mode("overwrite").parquet(str(tmp_path / "b"))

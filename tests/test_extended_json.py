@@ -196,3 +196,33 @@ def test_folder_tree_with_explicit_root_row(spark):
     # ids dense and collision-free
     ids = sorted(r.folder_id for r in rows.values())
     assert ids == [1, 2, 3]
+
+
+def test_folder_tree_known_answer_over_several_partitions(spark):
+    """Known answer on an input spread over several partitions, with
+    duplicate paths, an orphan whose parent path is missing and a '/'
+    row: ids are dense by (depth, path), the orphan parents to 0."""
+    from mongodb_etl_migration_spark.operators.hierarchy import (
+        resolve_folder_tree,
+    )
+
+    paths = [
+        "/a/x/deep", "/b", "/a/x", "/", "/missing/orphan", "/a/y",
+        "/a", "/b/z", "/a/x", "/a", "/b/z",
+    ]
+    folders = spark.createDataFrame([(p,) for p in paths], "path string")
+    folders = folders.repartition(4)
+    assert folders.rdd.getNumPartitions() == 4
+    rows = resolve_folder_tree(folders).collect()
+    assert len(rows) == 8  # one row per distinct path
+    got = {(r.path, r.depth, r.folder_id, r.parent_id) for r in rows}
+    assert got == {
+        ("/", 0, 1, 0),
+        ("/a", 1, 2, 1),
+        ("/b", 1, 3, 1),
+        ("/a/x", 2, 4, 2),
+        ("/a/y", 2, 5, 2),
+        ("/b/z", 2, 6, 3),
+        ("/missing/orphan", 2, 7, 0),
+        ("/a/x/deep", 3, 8, 4),
+    }

@@ -35,8 +35,6 @@ def test_fanout_projections_and_writes(spark, sf_dir, tmp_path):
         .withColumn("_is_org", F.col("c_acctbal") > 5000)
     )
     spec = EntitySpec(
-        name="customer",
-        source="customer",
         destination="details",
         projection=_cols("c_custkey", "c_name", "c_mktsegment", "_is_org"),
         side_outputs={
@@ -71,8 +69,6 @@ def test_fanout_leaves_no_cache_entries(spark, sf_dir):
     spark.catalog.clearCache()
     assert cm.isEmpty()
     spec = EntitySpec(
-        name="region",
-        source="region",
         destination="region",
         projection=_cols("r_regionkey", "r_name", "k"),
         side_outputs={
@@ -140,7 +136,9 @@ def test_run_metrics_json(spark, sf_dir, tmp_path):
 
     m = RunMetrics()
     df = spark.read.parquet(f"{sf_dir}/region.parquet")
-    n = m.timed("region", df)
+    m.observed("region", df).write.format("noop").mode("overwrite").save()
+    m.harvest()
+    n = m.entities[0].rows
     assert n == df.count()
     out = tmp_path / "metrics.json"
     m.save(str(out))

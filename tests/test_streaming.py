@@ -232,7 +232,7 @@ def test_incremental_entity_plan(spark, tmp_path):
 def test_transform_with_state_dedup_equals_batch(spark, sf_dir, tmp_path):
     """Streaming first-wins dedup (Spark 4 transformWithStateInPandas,
     RocksDB state) over one micro-batch equals the batch twin
-    keys.first_wins_dedup — same key, same order columns.
+    denorm.top1_per_group — same key, same order columns.
 
     transformWithState's Python driver worker needs google.protobuf at
     runtime; skip where it isn't installed (the processor logic itself
@@ -240,7 +240,7 @@ def test_transform_with_state_dedup_equals_batch(spark, sf_dir, tmp_path):
     import pytest
 
     pytest.importorskip("google.protobuf")
-    from mongodb_etl_migration_spark.functions import keys as K
+    from mongodb_etl_migration_spark.operators.denorm import top1_per_group
     from mongodb_etl_migration_spark.streaming.stateful import (
         dedup_stream_stateful,
     )
@@ -282,8 +282,8 @@ def test_transform_with_state_dedup_equals_batch(spark, sf_dir, tmp_path):
             spark.conf.set(prov_key, old)
 
     got = spark.read.parquet(sink)
-    want = K.first_wins_dedup(
-        spark.read.parquet(src_dir), "user_id", [F.col("ts"), F.col("event_id")]
+    want = top1_per_group(
+        spark.read.parquet(src_dir), ["user_id"], [F.col("ts"), F.col("event_id")]
     )
     assert got.count() == want.count() > 0
     assert got.select(*sorted(got.columns)).exceptAll(
