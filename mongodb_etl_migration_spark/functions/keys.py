@@ -182,10 +182,22 @@ def assign_sequential_ids(
     seed, so two independent evaluations could place boundary rows in
     different partitions — silently duplicating or dropping ids. The
     numbered frame is read twice (counts and ids), so it is pinned by
-    a LAZY ``localCheckpoint``: both reads consume the one checkpointed
-    RDD, whose range partitioner was built once, so they agree on
-    every row's partition; whichever job runs first materializes its
+    a ``localCheckpoint(eager=False)``: both reads consume the one
+    checkpointed RDD, whose range partitioner was built once, so they
+    agree on every row's partition.
+
+    The input is pinned the same way before the range shuffle. The
+    partitioner's sample job reads every input row, and so does the
+    shuffle map; without the pin each would evaluate the input (a
+    source decode, its filters and joins) on its own. With it the
+    sample job materializes the input once and the map reads those
     blocks.
+
+    "Lazy" here means no action is called, not that nothing runs: under
+    AQE, building either pin plans its frame and runs every shuffle
+    and broadcast stage below it (for ``numbered``: the sample and the
+    range shuffle) before this function returns. The offsets aggregate
+    and the ids run with the consumer's action.
 
     ``num_partitions`` sizes the range shuffle; it defaults to
     ``spark.sql.shuffle.partitions``. Callers numbering a KNOWN
@@ -199,7 +211,8 @@ def assign_sequential_ids(
     )
     w = Window.partitionBy("__pid").orderBy(*order_by)
     numbered = (
-        df.repartitionByRange(int(n_part), *order_by)
+        df.localCheckpoint(eager=False)
+        .repartitionByRange(int(n_part), *order_by)
         .withColumn("__pid", F.spark_partition_id())
         .withColumn("__rn", F.row_number().over(w))
         .localCheckpoint(eager=False)

@@ -30,7 +30,7 @@ def resolve_folder_tree(folders: DataFrame, path_col: str = "path") -> DataFrame
     Output: path, depth, folder_id, parent_id (0 for roots/orphans —
     the reference's default-to-root rule, orchestrator.py:893-933).
 
-    Plan shape — fully declarative, no driver jobs:
+    Plan shape — fully declarative, no action:
 
     1. distinct paths + depth/parent_path derivation, in ONE task: a
        folder tree is dimension-sized (hundreds of rows even at 100 TB
@@ -42,12 +42,15 @@ def resolve_folder_tree(folders: DataFrame, path_col: str = "path") -> DataFrame
        broadcast, drop the hint and the same join shuffles).
 
     The numbered base feeds two subtrees (parent map, main), so it is
-    materialized ONCE via a lazy localCheckpoint rather than
+    materialized ONCE via ``localCheckpoint(eager=False)`` rather than
     DataFrame.persist(): a CacheManager entry is keyed by logical plan
     and outlives every reference, while local-checkpoint blocks belong
     to the RDD and are freed by the ContextCleaner as soon as the
-    caller drops the result frame. Whichever consumer runs first
-    materializes the blocks and the other reuses them.
+    caller drops the result frame. The pin calls no action, yet under
+    AQE building it runs the stages below it (the scan and the
+    single-partition exchange) before this function returns; the
+    numbering stage runs with the first consumer's action, which
+    stores the blocks, and the other consumer reuses them.
     """
     base = (
         folders.select(F.col(path_col).alias("path"))

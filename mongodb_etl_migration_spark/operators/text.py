@@ -18,6 +18,8 @@ import pandas as pd
 from pyspark.sql import Column
 from pyspark.sql import functions as F
 
+from mongodb_etl_migration_spark.threads import DriverThreads
+
 TOKEN_RE = "[a-z0-9]+"
 
 # Tiny deterministic marker lists for the n-gram/stopword language
@@ -127,39 +129,6 @@ def cpu_fan_out(df, fan_out: bool | None = None):
     if fan_out is None:
         fan_out = 0 < len(df.inputFiles()) < parallelism
     return df.repartition(parallelism) if fan_out else df
-
-
-def count_async(df):
-    """``df.count()`` on a driver-side thread — guide §2.6: actions are
-    only sequential because the driver calls them sequentially, and a
-    build-time metadata count is independent of the heavier build jobs
-    that follow it (the BM25 tf materialization), so submitting it
-    from a thread lets the scheduler overlap the two jobs.
-
-    Returns a 0-arg callable that joins the thread and returns the
-    count (re-raising any failure). ``InheritableThread`` is the
-    documented way to run driver threads so JVM thread-locals (job
-    group/description) are inherited and cleaned up."""
-    from pyspark import InheritableThread
-
-    out: dict[str, object] = {}
-
-    def run() -> None:
-        try:
-            out["n"] = df.count()
-        except BaseException as exc:  # joined + re-raised below
-            out["err"] = exc
-
-    t = InheritableThread(target=run, session=df.sparkSession)
-    t.start()
-
-    def join() -> int:
-        t.join()
-        if "err" in out:
-            raise out["err"]  # type: ignore[misc]
-        return int(out["n"])  # type: ignore[arg-type]
-
-    return join
 
 
 def token_count(c: Column | str, toks: Column | None = None) -> Column:
@@ -1819,10 +1788,6 @@ def bm25_topk(
     """
     _bm25_validate(k1_milli, b_milli)
     spark = df.sparkSession
-    # N is a count over the SOURCE frame, submitted async (guide
-    # §2.6) so the count job and the tf materialization below overlap
-    # instead of running back-to-back.
-    n_docs_join = count_async(df)
     # NO fan-out here (r15): unlike the gopher/minhash scorers, the
     # tokenize+explode leg is one cheap regexp pass per input byte,
     # and a pinned equal-load A/B (same session, fan-out monkeypatched
@@ -1836,33 +1801,27 @@ def bm25_topk(
     toks = df.select(
         F.col(id_col), F.explode(tokens(text_col)).alias("term")
     )
-    # tf is the single corpus-sized product; THREE consumers read it
-    # (dl, df, and the T-total collect at build time), so materialize
-    # it once — without the checkpoint the token explode + (doc, term)
-    # exchange would run again for each consumer (the bitext/probe
-    # duplicated-subtree lesson, flagged by the r10 review). dl
-    # derives FROM tf (sum of tf per doc == token count), not from a
-    # second pass over toks.
-    tf = (
-        toks.groupBy(id_col, "term")
-        .agg(F.count("*").alias("tf"))
-        .localCheckpoint(eager=False)
-    )
-    dl = tf.groupBy(id_col).agg(F.sum("tf").alias("dl"))
-    dfreq = tf.groupBy("term").agg(F.count("*").alias("df"))
-    try:
+    # N is a count over the SOURCE frame on a driver thread (guide
+    # §2.6), so the count job and the tf materialization below overlap
+    # instead of running back-to-back.
+    with DriverThreads(spark) as threads:
+        count = threads.start(df.count)
+        # tf is the single corpus-sized product; THREE consumers read
+        # it (dl, df, and the T-total collect at build time), so
+        # materialize it once — without the checkpoint the token
+        # explode + (doc, term) exchange would run again for each
+        # consumer (the bitext/probe duplicated-subtree lesson, flagged
+        # by the r10 review). dl derives FROM tf (sum of tf per doc ==
+        # token count), not from a second pass over toks.
+        tf = (
+            toks.groupBy(id_col, "term")
+            .agg(F.count("*").alias("tf"))
+            .localCheckpoint(eager=False)
+        )
+        dl = tf.groupBy(id_col).agg(F.sum("tf").alias("dl"))
+        dfreq = tf.groupBy("term").agg(F.count("*").alias("df"))
         total = int(dl.agg(F.sum("dl")).collect()[0][0] or 0)
-    except BaseException:
-        # never leak the count thread (non-daemon: an unjoined
-        # InheritableThread blocks interpreter shutdown and keeps
-        # its Spark job running) — join it, swallow its secondary
-        # error, re-raise the primary (ADVICE r14)
-        try:
-            n_docs_join()
-        except Exception:
-            pass
-        raise
-    n_docs = n_docs_join()
+    n_docs = count()
     qdf = spark.createDataFrame(
         [(qid, t) for qid, terms in queries for t in terms],
         "query_id string, term string",
@@ -2144,18 +2103,12 @@ def bm25_index(
         tf = bm25_tf(df, id_col, text_col)
     tf = tf.localCheckpoint(eager=False)
     postings = postings_from_tf(tf, id_col, n_buckets)
-    # count submitted async so it overlaps the tf materialization the
-    # T aggregate triggers (guide §2.6; same pattern as bm25_topk)
-    n_docs_join = count_async(df)
-    try:
+    # the count overlaps the tf materialization the T aggregate
+    # triggers (guide §2.6; same pattern as bm25_topk)
+    with DriverThreads(spark) as threads:
+        count = threads.start(df.count)
         total = int(tf.agg(F.sum("tf")).collect()[0][0] or 0)
-    except BaseException:
-        try:  # never leak the count thread (see bm25_topk)
-            n_docs_join()
-        except Exception:
-            pass
-        raise
-    n_docs = n_docs_join()
+    n_docs = count()
     # n_buckets rides IN the stats row: the probe's partition pruning
     # is only correct against the bucket count the postings were
     # written with, so the index self-describes it rather than

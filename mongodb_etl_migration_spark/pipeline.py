@@ -20,7 +20,7 @@ from __future__ import annotations
 from collections.abc import Callable
 from datetime import datetime
 
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from mongodb_etl_migration_spark.functions import scalars as S
@@ -36,6 +36,7 @@ from mongodb_etl_migration_spark.plans.compiler import (
     compile_entity_outputs,
 )
 from mongodb_etl_migration_spark.plans.spec import EntitySpec, FKJoin, KeySpec
+from mongodb_etl_migration_spark.threads import DriverThreads
 
 # union of the scan-level filter (mongo_extractor.py:56-72) and the
 # validator list (validators.py:18, adds STICKER) — SURVEY P5 notes the
@@ -485,6 +486,63 @@ def live_spec(run_ts: datetime) -> EntitySpec:
     )
 
 
+def _id_map(df: DataFrame, key: str = "mongo_id", id_col: str = "id") -> DataFrame:
+    """An entity's (natural_key, id) map for :class:`FKJoin`."""
+    return df.select(F.col(key).alias("natural_key"), F.col(id_col).alias("id"))
+
+
+def _docs(docs: DataFrame, decrypt_rewrite) -> DataFrame:
+    """J9: the folder tree, then the files numbered after its folders.
+
+    One task, planned in this order. A loaded mongodump frame leaks
+    pushed filters into its next query that pushes none (the xfail
+    test in tests/test_mongodump_source.py): the files branch inherits
+    the folders query's ``type = 'FOLDER'``, so today's output depends
+    on this order."""
+    folders = docs.filter(F.col("type") == "FOLDER").select(
+        F.col("_id").alias("mongo_id"),
+        S.full_path(
+            F.col("onFolder"), F.coalesce(F.col("title"), F.col("name"))
+        ).alias("path"),
+    )
+    tree = resolve_folder_tree(folders.select("path"), "path")
+    folder_docs = folders.join(F.broadcast(tree), "path", "inner").select(
+        "mongo_id",
+        F.col("path"),
+        F.col("folder_id").alias("id"),
+        "parent_id",
+        F.lit("FOLDER").alias("type"),
+        F.lit(None).cast("string").alias("file_url"),
+    )
+    n_folders = tree.count()
+    raw_url = F.coalesce(F.col("fileUrl"), F.col("fileURL"))
+    # NULL-safe non-folder test: the reference's `doc.type != 'FOLDER'`
+    # is True for a missing type (doc treated as a file), but the
+    # tri-valued Column comparison would silently DROP those docs
+    files = docs.filter(
+        F.col("type").isNull() | (F.col("type") != "FOLDER")
+    ).select(
+        F.col("_id").alias("mongo_id"),
+        F.col("onFolder").alias("on_folder"),
+        "type",
+        decrypt_rewrite(raw_url).alias("file_url"),
+    )
+    files_resolved = resolve_files_to_folders(
+        files, tree.select("path", "folder_id"), "on_folder"
+    )
+    file_docs = assign_sequential_ids(
+        files_resolved, ["mongo_id"], "id", start=n_folders + 1
+    ).select(
+        "mongo_id",
+        F.col("on_folder").alias("path"),
+        "id",
+        "parent_id",
+        "type",
+        "file_url",
+    )
+    return folder_docs.unionByName(file_docs)
+
+
 def run_reference_pipeline(
     sources: dict[str, DataFrame],
     run_ts: datetime,
@@ -500,74 +558,125 @@ def run_reference_pipeline(
     constants, and a production run passes its real key. ONE decrypt
     builder serves both the messages and the docs stage.
 
-    Entity order (O5) is the statement order below: every stage is a
-    lazy frame, so an entity simply comes after the id-maps it joins.
+    Entity order (O5) is the reference's dependency DAG, not a chain:
+    each entity builds on its own driver thread (:mod:`threads`) and
+    waits only for the tasks whose id-maps it joins, so independent
+    chains overlap. Building is not free: every pin (a sequential id,
+    a fan-out, the folder tree) runs the shuffle and broadcast stages
+    below it when it is built. The frames derived from the entities
+    (p2p, rooms_by_user, the lookup merge, user_professions,
+    docs_roles) launch no job and are plain statements once every
+    task has returned. Each source's build-time queries belong to one
+    task, so they are planned in the same order on every run (see
+    :func:`_docs` for why that order matters).
     """
     out: dict[str, DataFrame] = {}
     # F26: fileURL may arrive Salsa20-encrypted in messages and docs
     decrypt_rewrite = make_url_decrypt_rewrite(fileurl_key, fileurl_iv)
+    active_docs = sources["docs"].filter(F.coalesce(F.col("isActive"), F.lit(True)))
 
-    # dimensions first
-    role = compile_entity(role_spec(), sources["roles"])
-    province = compile_entity(province_spec(), sources["provinces"])
-    out["role"] = role
-    out["province"] = province
+    with DriverThreads(SparkSession.active()) as threads:
+        # dimensions first; geo: municipality (→province) then parroquia
+        # (→province+municipality) — data_transformer.py:680-728
+        role_task = threads.start(compile_entity, role_spec(), sources["roles"])
+        province_task = threads.start(
+            compile_entity, province_spec(), sources["provinces"]
+        )
+        municipality_task = threads.start(
+            lambda: compile_entity(
+                municipality_spec(),
+                sources["municipalities"],
+                {"province": _id_map(province_task())},
+            )
+        )
+        parroquia_task = threads.start(
+            lambda: compile_entity(
+                parroquia_spec(),
+                sources["parroquias"],
+                {
+                    "province": _id_map(province_task()),
+                    "municipality": _id_map(municipality_task()),
+                },
+            )
+        )
+        user_task = threads.start(
+            lambda: compile_entity_outputs(
+                user_spec(run_ts),
+                sources["users"],
+                {
+                    "province": _id_map(province_task()),
+                    "municipality": _id_map(municipality_task()),
+                    # J3: role joined by normalized NAME, not mongo_id
+                    "role_by_name": _id_map(role_task(), key="name"),
+                },
+            )
+        )
+        # rooms → room_details + organizations + rooms_by_mongo (§2.9)
+        rooms_task = threads.start(
+            compile_entity_outputs, rooms_spec(run_ts), sources["rooms"]
+        )
+        profession_task = threads.start(
+            compile_entity, professions_spec(), sources["professions"]
+        )
 
-    id_maps = {
-        "province": province.select(
-            F.col("mongo_id").alias("natural_key"), F.col("id")
-        ),
-        # J3: role joined by normalized NAME, not mongo_id
-        "role_by_name": role.select(F.col("name").alias("natural_key"), F.col("id")),
-    }
+        # id maps of the fact entities (K5 as broadcast joins)
+        def user_and_rooms() -> dict[str, DataFrame]:
+            return {
+                "rooms_by_mongo": _id_map(
+                    rooms_task()["rooms_by_mongo"], id_col="room_id"
+                ),
+                "user_by_mongo": _id_map(user_task()["user"]),
+            }
 
-    # geo dimensions: municipality (→province) then parroquia
-    # (→province+municipality) — data_transformer.py:680-728
-    municipality = compile_entity(
-        municipality_spec(), sources["municipalities"], id_maps
-    )
-    out["municipality"] = municipality
-    id_maps["municipality"] = municipality.select(
-        F.col("mongo_id").alias("natural_key"), F.col("id")
-    )
-    out["parroquia"] = compile_entity(
-        parroquia_spec(), sources["parroquias"], id_maps
-    )
+        messages_task = threads.start(
+            lambda: compile_entity_outputs(
+                messages_spec(run_ts, decrypt_rewrite),
+                sources["messages"],
+                user_and_rooms(),
+            )
+        )
+        members_task = threads.start(
+            lambda: compile_entity_outputs(
+                members_spec(run_ts), sources["roommembers"], user_and_rooms()
+            )
+        )
+        # channel (F11-ish url coalesce, F12 array length, J1 createdBy
+        # FK), then live (F10 derivations, F11 5-way photo coalesce)
+        channel_task = threads.start(
+            lambda: compile_entity(
+                channel_spec(run_ts), sources["channels"], user_and_rooms()
+            )
+        )
+        live_task = threads.start(
+            lambda: compile_entity(
+                live_spec(run_ts),
+                sources["lives"],
+                {"channel_by_mongo": _id_map(channel_task())},
+            )
+        )
+        # docs (J9 hierarchy; J12 docs_roles below)
+        docs_task = threads.start(_docs, active_docs, decrypt_rewrite)
 
-    user_outs = compile_entity_outputs(user_spec(run_ts), sources["users"], id_maps)
-    user = user_outs["user"]
-    out["user"] = user
+    # every task has returned (or the block re-raised its first failure)
+    out["role"] = role_task()
+    out["province"] = province_task()
+    out["municipality"] = municipality_task()
+    out["parroquia"] = parroquia_task()
+    user_outs = user_task()
+    user = out["user"] = user_outs["user"]
     # Cassandra users: same ids (K4 solved by construction), '+'-phone
     out["users_cassandra"] = user_outs["users_cassandra"]
-
-    # rooms → room_details + organizations + rooms_by_mongo (§2.9 fanout)
-    room_outs = compile_entity_outputs(rooms_spec(run_ts), sources["rooms"])
+    room_outs = rooms_task()
     out["room_details"] = room_outs["room_details"].drop("_is_organization")
     out["organizations"] = room_outs["organizations"]
     out["rooms_by_mongo"] = room_outs["rooms_by_mongo"]
-
-    # id maps accumulated along the DAG (K5 as broadcast joins)
-    id_maps["rooms_by_mongo"] = out["rooms_by_mongo"].select(
-        F.col("mongo_id").alias("natural_key"), F.col("room_id").alias("id")
-    )
-    id_maps["user_by_mongo"] = user.select(
-        F.col("mongo_id").alias("natural_key"), F.col("id")
-    )
-
     # messages → messages_by_room + room_by_message
-    msg_outs = compile_entity_outputs(
-        messages_spec(run_ts, decrypt_rewrite), sources["messages"], id_maps
-    )
-    messages_by_room = msg_outs["messages_by_room"]
-    out["messages_by_room"] = messages_by_room
+    msg_outs = messages_task()
+    messages_by_room = out["messages_by_room"] = msg_outs["messages_by_room"]
     out["room_by_message"] = msg_outs["room_by_message"]
-
     # members → participants_by_room + room_membership_lookup
-    member_outs = compile_entity_outputs(
-        members_spec(run_ts), sources["roommembers"], id_maps
-    )
-    members = member_outs["participants_by_room"]
-    out["participants_by_room"] = members
+    member_outs = members_task()
+    members = out["participants_by_room"] = member_outs["participants_by_room"]
     out["room_membership_lookup"] = member_outs["room_membership_lookup"]
 
     # p2p pairs (J7): both orderings of the two members of p2p rooms
@@ -665,8 +774,7 @@ def run_reference_pipeline(
 
     # professions dimension + user_professions M2M (J4: misses on
     # either side dropped)
-    profession = compile_entity(professions_spec(), sources["professions"])
-    out["profession"] = profession
+    profession = out["profession"] = profession_task()
     out["user_professions"] = DN.m2m_explode(
         sources["users"],
         "_id",
@@ -686,64 +794,13 @@ def run_reference_pipeline(
         S.composite_key("user_mongo_id", "prof_mongo_id").alias("mongo_id"),
     )
 
-    # channel (F11-ish url coalesce, F12 array length, J1 createdBy FK)
-    channel = compile_entity(channel_spec(run_ts), sources["channels"], id_maps)
-    out["channel"] = channel
-
-    # live (F10 derivations, F11 5-way photo coalesce + F5 rewrite)
-    id_maps["channel_by_mongo"] = channel.select(
-        F.col("mongo_id").alias("natural_key"), F.col("id")
-    )
-    out["live"] = compile_entity(live_spec(run_ts), sources["lives"], id_maps)
-
-    # docs (J9 hierarchy + J12 docs_roles side-output)
-    docs = sources["docs"].filter(F.coalesce(F.col("isActive"), F.lit(True)))
-    folders = docs.filter(F.col("type") == "FOLDER").select(
-        F.col("_id").alias("mongo_id"),
-        S.full_path(
-            F.col("onFolder"), F.coalesce(F.col("title"), F.col("name"))
-        ).alias("path"),
-    )
-    tree = resolve_folder_tree(folders.select("path"), "path")
-    folder_docs = folders.join(F.broadcast(tree), "path", "inner").select(
-        "mongo_id",
-        F.col("path"),
-        F.col("folder_id").alias("id"),
-        "parent_id",
-        F.lit("FOLDER").alias("type"),
-        F.lit(None).cast("string").alias("file_url"),
-    )
-    n_folders = tree.count()
-    raw_url = F.coalesce(F.col("fileUrl"), F.col("fileURL"))
-    # NULL-safe non-folder test: the reference's `doc.type != 'FOLDER'`
-    # is True for a missing type (doc treated as a file), but the
-    # tri-valued Column comparison would silently DROP those docs
-    files = docs.filter(
-        F.col("type").isNull() | (F.col("type") != "FOLDER")
-    ).select(
-        F.col("_id").alias("mongo_id"),
-        F.col("onFolder").alias("on_folder"),
-        "type",
-        decrypt_rewrite(raw_url).alias("file_url"),
-    )
-    files_resolved = resolve_files_to_folders(
-        files, tree.select("path", "folder_id"), "on_folder"
-    )
-    file_docs = assign_sequential_ids(
-        files_resolved, ["mongo_id"], "id", start=n_folders + 1
-    ).select(
-        "mongo_id",
-        F.col("on_folder").alias("path"),
-        "id",
-        "parent_id",
-        "type",
-        "file_url",
-    )
-    out["docs"] = folder_docs.unionByName(file_docs)
+    out["channel"] = channel_task()
+    out["live"] = live_task()
+    out["docs"] = docs_task()
 
     # J12: docs with specialRole → (docs_id, role_id) relation rows
     out["docs_roles"] = (
-        docs.withColumn("role_ref", ref_id("specialRole"))
+        active_docs.withColumn("role_ref", ref_id("specialRole"))
         .filter(F.col("role_ref").isNotNull())
         .join(
             F.broadcast(
@@ -758,7 +815,7 @@ def run_reference_pipeline(
         )
         .join(
             F.broadcast(
-                role.select(
+                out["role"].select(
                     F.col("mongo_id").alias("role_ref"),
                     F.col("id").alias("role_id"),
                 )

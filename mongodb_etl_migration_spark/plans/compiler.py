@@ -89,12 +89,16 @@ def compile_entity_outputs(
     materialized once and each side output is a cheap filter+projection
     over it — one scan feeding N sinks (etl/orchestrator.py:326-453).
 
-    Materialization is a LAZY localCheckpoint, not a DataFrame cache:
-    a CacheManager entry is keyed by logical plan and outlives every
-    reference, while local-checkpoint blocks belong to the RDD and are
-    freed by the ContextCleaner once the caller drops the returned
-    frames — nothing to unpersist. Whichever output's action runs first
-    materializes the blocks; the rest reuse them.
+    Materialization is a ``localCheckpoint(eager=False)``, not a
+    DataFrame cache: a CacheManager entry is keyed by logical plan and
+    outlives every reference, while local-checkpoint blocks belong to
+    the RDD and are freed by the ContextCleaner once the caller drops
+    the returned frames — nothing to unpersist. The pin calls no
+    action, but building it is not free: under AQE it plans the main
+    frame and runs every shuffle and broadcast stage below it (the FK
+    broadcasts, a sequential key's range shuffle) before this function
+    returns. The final stage runs with the first output's action, which
+    stores the blocks; the rest reuse them.
 
     Fault-tolerance tradeoff: localCheckpoint truncates lineage, so
     losing an executor that holds checkpoint blocks between the first

@@ -178,6 +178,30 @@ def test_sequential_ids_lazy_numbering_known_answer(spark, aqe, num_partitions):
         spark.conf.set("spark.sql.adaptive.enabled", old)
 
 
+def test_sequential_ids_evaluate_input_once(spark):
+    """The range partitioner's sample job and the shuffle map both read
+    every input row; the input pin makes them share one evaluation, so
+    a counting UDF over the input sees each row once, not twice."""
+    from mongodb_etl_migration_spark.functions.keys import (
+        assign_sequential_ids,
+    )
+
+    n = 5000
+    seen = spark.sparkContext.accumulator(0)
+
+    def count_row(k):
+        seen.add(1)
+        return k
+
+    counted = F.udf(count_row, "long")
+    df = spark.range(n).select(
+        counted(F.col("id") * 7919 % 1009).alias("k"), F.col("id").alias("row")
+    )
+    out = assign_sequential_ids(df, ["k"], "id", num_partitions=7)
+    out.write.format("noop").mode("overwrite").save()
+    assert seen.value == n
+
+
 def test_folder_tree_with_explicit_root_row(spark):
     """A '/' row (depth 0) must be emitted with its id, and its
     children must parent to IT, not to the default root 0."""

@@ -8,6 +8,7 @@ from __future__ import annotations
 
 from datetime import datetime
 
+import pytest
 from pyspark.sql import DataFrame
 
 from mongodb_etl_migration_spark.fixtures import all_sources
@@ -38,22 +39,69 @@ def _rows(df: DataFrame) -> set:
     return {tuple(map(repr, r)) for r in df.collect()}
 
 
-def test_pipeline_identical_via_mongodump_backups(spark, tmp_path):
+OUTPUTS = (
+    "channel", "docs", "docs_roles", "live", "messages_by_room",
+    "municipality", "organizations", "p2p_room_by_users", "parroquia",
+    "participants_by_room", "profession", "province", "role",
+    "room_by_message", "room_details", "room_membership_lookup",
+    "room_membership_lookup_updated", "rooms_by_mongo", "rooms_by_user",
+    "user", "user_professions", "users_cassandra",
+)
+# Through the mongodump source the files branch of docs inherits the
+# folders query's pushed `type = 'FOLDER'` (the filter-leak defect
+# pinned by test_mongodump_source's xfail), so docs keeps only its
+# folders and docs_roles, which joins files, comes out empty.
+PUSHED_FILTER_LEAK = pytest.mark.xfail(
+    strict=True,
+    reason="known defect: pushed filters of the folders query leak into "
+    "the files query of the same loaded docs frame",
+)
+
+
+@pytest.fixture(scope="module")
+def both_runs(spark, tmp_path_factory):
+    tmp = tmp_path_factory.mktemp("backups")
     direct = all_sources(spark)
     register_mongodump(spark)
     via_bson = {
-        name: _roundtrip(spark, df, tmp_path / f"{name}.bson")
+        name: _roundtrip(spark, df, tmp / f"{name}.bson")
         for name, df in direct.items()
     }
-    # the sources themselves round-trip exactly
-    for name in direct:
-        assert _rows(direct[name]) == _rows(via_bson[name]), name
-
+    # read the sources back before the pipeline plans filtered queries
+    # on them: afterwards an unfiltered read would hit the leak too
+    sources_differ = [
+        name for name in direct if _rows(direct[name]) != _rows(via_bson[name])
+    ]
     run_ts = datetime(2024, 1, 1)
-    out_direct = run_reference_pipeline(direct, run_ts)
-    out_bson = run_reference_pipeline(via_bson, run_ts)
-    for table in ("rooms_by_user", "user", "role", "messages_by_room"):
-        assert _rows(out_direct[table]) == _rows(out_bson[table]), table
+    return (
+        sources_differ,
+        run_reference_pipeline(direct, run_ts),
+        run_reference_pipeline(via_bson, run_ts),
+    )
+
+
+def test_sources_roundtrip_through_backups(both_runs):
+    sources_differ, _, _ = both_runs
+    assert sources_differ == []
+
+
+def test_pipeline_returns_every_output(both_runs):
+    _, out_direct, out_bson = both_runs
+    assert sorted(out_direct) == sorted(out_bson) == list(OUTPUTS)
+
+
+@pytest.mark.parametrize(
+    "table",
+    [
+        pytest.param(t, marks=PUSHED_FILTER_LEAK)
+        if t in ("docs", "docs_roles")
+        else t
+        for t in OUTPUTS
+    ],
+)
+def test_pipeline_identical_via_mongodump_backups(both_runs, table):
+    _, out_direct, out_bson = both_runs
+    assert _rows(out_direct[table]) == _rows(out_bson[table])
 
 
 def test_streaming_backups_through_incremental_entity(spark, tmp_path):

@@ -107,6 +107,18 @@ def test_source_filter_pushdown_semantics(spark, shard_dir):
     assert max(r.record_idx for r in rows) > len(rows) / 2
 
 
+@pytest.mark.xfail(
+    strict=True,
+    reason="known defect shared with the mongodump source: a query that "
+    "pushes no filter reuses the reader of the last query on the same "
+    "loaded frame, so that query's pushed filters leak into it",
+)
+def test_source_pushed_filters_do_not_leak_into_later_queries(spark, shard_dir):
+    df = _read(spark, shard_dir)
+    assert df.filter("warc_type = 'warcinfo'").count() == 2
+    assert df.count() == 12
+
+
 def test_source_failfast_on_corrupt_member(spark, tmp_path):
     recs = _mixed_records(4, "c")
     gz = bytearray(W.build_warc_gz(recs))
