@@ -1,27 +1,43 @@
 #!/usr/bin/env python
-"""Engine benchmark: headline queries at $SPARK_GRAFT_SF_DIR (default
-/root/testdata/sf0.1) on local[$SPARK_GRAFT_CPUS].
+"""Engine benchmark and the repository's one timing loop.
+
+    python bench.py              # the HEADLINE set
+    python bench.py NAME ...     # exactly the named catalog queries
+
+Queries run at $SPARK_GRAFT_SF_DIR (default: the sf0.1 testdata) on
+local[$SPARK_GRAFT_CPUS]. Named mode differs from the default only in
+the query list: same timing policy, load gates, UI deltas, JSON line
+and sidecar. An unknown name fails before the load gate and before
+Spark starts.
 
 Prints ONE compact JSON line (the FINAL stdout line, short enough for
 the driver's tail capture):
   {"metric": "...", "value": N, "unit": "sec", "queries": {...},
    "sf": ..., "shuffle_bytes": {...}}
-Diagnostic receipts (scan_tasks, gc_ms, cpu_ms, peak heap,
-data_fingerprint, load_avg, timing policy) are written to
+Diagnostic receipts (cold_s, jobs, scan_tasks, gc_ms, cpu_ms, peak
+heap, data_fingerprint, load_avg, timing policy) are written to
 ``BENCH_detail.json`` next to this file.
+
+Timing policy: per query one cold run (JIT, file listing; reported
+only as ``cold_s``), then WARM_RUNS warm runs through the noop sink —
+the MIN is the query's time (single-JVM local-mode timings carry
+GC/load noise). Shuffle bytes, job count, GC and executor CPU are
+deltas over the first warm run, read from the Spark UI REST API
+(``UiMetrics``) — shuffle volume is the number to watch when judging
+whether a plan would survive 100 TB.
+
+One timer: ``timed(fn, ui)`` calls ``fn`` once and stops the clock
+when it returns, BEFORE any shuffle poll (the stabilized poll sleeps
+until two UI reads agree). This loop and scripts/bench_scale.py (the
+10x tier) both time through it.
 
 The headline set exercises every cost class: columnar agg (a1), join
 pipeline + window (j6), shuffle-heavy LSH dedup (d2), vector math
 (sim_topk_bruteforce), per-doc text scoring (t_text_stats), window agg
 over events (e_windowed_counts), hierarchy loop (j9), sha1 key
 derivation (k1_uuid5 — pure codegen since r14; formerly the pandas-UDF
-representative), and the heaviest pure-codegen text path — the full Gopher
-repetition family's 9 sorted-gram folds (t_gopher_repetition). Each query runs three times: one cold (JIT, file listing),
-then two warm — the MIN of the warm pair is recorded (single-JVM
-local-mode timings carry GC/load noise; min-of-2 is the steady-state
-the driver compares against BASELINE at the same sf). Shuffle volume per query
-comes from the Spark UI REST API (cumulative stage deltas) — the
-number to watch when judging whether a plan would survive 100 TB.
+representative), and the heaviest pure-codegen text path — the full
+Gopher repetition family's 9 sorted-gram folds (t_gopher_repetition).
 
 Known testdata artifact (do NOT chase as a regression): every
 /root/testdata parquet file is written as ONE row group, so scans are
@@ -49,6 +65,7 @@ from __future__ import annotations
 
 import json
 import os
+import re
 import sys
 import time
 import urllib.request
@@ -58,6 +75,9 @@ sys.path.insert(0, str(Path(__file__).resolve().parent))
 
 from mongodb_etl_migration_spark import get_spark  # noqa: E402
 from mongodb_etl_migration_spark.queries import QUERIES  # noqa: E402
+
+# warm runs per query; the MIN is the query's time
+WARM_RUNS = 3
 
 HEADLINE = [
     "a1_pricing_summary",
@@ -174,6 +194,18 @@ class UiMetrics:
         except Exception:
             return -1
 
+    def jobs_submitted(self) -> int:
+        """Jobs submitted so far: the highest job id + 1. The UI keeps
+        only the newest ``spark.ui.retainedJobs`` jobs, so a length of
+        the listing would saturate; the highest id does not."""
+        if not self.base:
+            return 0
+        try:
+            jobs = self._get("/jobs")
+            return 1 + max((j.get("jobId", -1) for j in jobs), default=-1)
+        except Exception:
+            return 0
+
     def scan_tasks_since(self, stage_id: int) -> int:
         """Task count of the widest input-reading stage after
         ``stage_id`` — how parallel the parquet scan actually was
@@ -245,12 +277,41 @@ def data_fingerprint(sf_dir: str) -> dict[str, dict]:
     return out
 
 
-def run_once(name: str, spark, sf_dir: str) -> float:
-    t0 = time.time()
-    df = QUERIES[name](spark, sf_dir)
-    # noop sink: full execution, no driver-side materialization cost.
+def sf_of(sf_dir: str) -> float:
+    """The scale factor a data dir names: its last path component must
+    be exactly ``sf<number>`` (``.../sf0.1`` -> 0.1); any other dir
+    reports -1.0."""
+    m = re.fullmatch(r"sf(\d*\.?\d+)", Path(sf_dir).name)
+    return float(m.group(1)) if m else -1.0
+
+
+def noop(df) -> None:
+    """Full execution through the noop sink: no driver-side
+    materialization cost."""
     df.write.format("noop").mode("overwrite").save()
-    return time.time() - t0
+
+
+def run_query(name: str, spark, sf_dir: str) -> None:
+    noop(QUERIES[name](spark, sf_dir))
+
+
+def timed(fn, ui: UiMetrics | None = None) -> tuple[dict, object]:
+    """Call ``fn()`` once on the one clock every timing path shares.
+
+    Returns ``({"sec": wall seconds[, "shuffle_bytes": n]}, fn's
+    result)``. The clock stops when ``fn`` returns, before any shuffle
+    poll: ``UiMetrics.shuffle_totals`` sleeps until two reads agree
+    (up to ~3 s) and must never count as query time. With ``ui``,
+    ``shuffle_bytes`` is the write + read bytes of the stages that
+    completed around the call."""
+    before = ui.shuffle_totals() if ui else None
+    t0 = time.perf_counter()
+    out = fn()
+    stats: dict = {"sec": round(time.perf_counter() - t0, 3)}
+    if ui:
+        after = ui.shuffle_totals()
+        stats["shuffle_bytes"] = sum(after) - sum(before)
+    return stats, out
 
 
 def wait_for_idle(threshold: float = 2.0, max_wait_s: int = 180) -> dict:
@@ -356,60 +417,61 @@ class _LoadSampler:
         self.max_load = max(self.max_load, os.getloadavg()[0])
 
 
-def timed_run(
-    name: str, spark, sf_dir: str
-) -> tuple[float, float, float, float]:
-    """(sec, load_pre, load_post, load_max_during) — load_max is the
+def timed_run(name: str, spark, sf_dir: str) -> list:
+    """[load_pre, load_post, load_max_during, sec] — load_max is the
     sampler's in-flight maximum and is what clean-run checks use."""
     pre = os.getloadavg()[0]
     with _LoadSampler() as ls:
-        sec = run_once(name, spark, sf_dir)
+        sec = timed(lambda: run_query(name, spark, sf_dir))[0]["sec"]
     post = os.getloadavg()[0]
-    return sec, round(pre, 2), round(post, 2), round(ls.max_load, 2)
+    return [round(pre, 2), round(post, 2), round(ls.max_load, 2), sec]
 
 
-def main() -> None:
+def main(argv: list[str] | None = None) -> None:
+    names = list(dict.fromkeys(sys.argv[1:] if argv is None else argv))
+    unknown = [n for n in names if n not in QUERIES]
+    if unknown:
+        sys.exit(f"bench.py: unknown query: {', '.join(unknown)}")
+    names = names or HEADLINE
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    sf = float(sf_dir.rstrip("/").rsplit("sf", 1)[-1]) if "sf" in sf_dir else -1.0
     load_gate = wait_for_idle()
     spark = get_spark(app_name="bench", extra_conf={"spark.ui.enabled": "true"})
     spark.sparkContext.setLogLevel("ERROR")
     ui = UiMetrics(spark)
 
     timings: dict[str, float] = {}
+    cold_s: dict[str, float] = {}
     shuffles: dict[str, int] = {}
+    jobs: dict[str, int] = {}
     scan_tasks: dict[str, int] = {}
     gc_ms: dict[str, int] = {}
     cpu_ms: dict[str, int] = {}
     run_loads: dict[str, list] = {}
     decay = _DecayWait()
-    for name in HEADLINE:
-        run_once(name, spark, sf_dir)  # cold (JIT, file listing)
-        w0, r0 = ui.shuffle_totals()
+    for name in names:
+        # cold (JIT, file listing)
+        cold_s[name] = timed(lambda: run_query(name, spark, sf_dir))[0]["sec"]
+        s0 = ui.shuffle_totals()
         sid0 = ui.max_stage_id()
         g0, c0 = ui.gc_cpu_totals()
+        j0 = ui.jobs_submitted()
         decay.wait()  # shed the cold run's (and predecessors') load
-        warm1, p1, q1, m1 = timed_run(name, spark, sf_dir)
-        w1, r1 = ui.shuffle_totals()
+        run_loads[name] = [timed_run(name, spark, sf_dir)]
+        s1 = ui.shuffle_totals()
         g1, c1 = ui.gc_cpu_totals()
-        shuffles[name] = (w1 - w0) + (r1 - r0)
+        shuffles[name] = sum(s1) - sum(s0)
+        jobs[name] = ui.jobs_submitted() - j0
         scan_tasks[name] = ui.scan_tasks_since(sid0)
         gc_ms[name] = g1 - g0
         cpu_ms[name] = c1 - c0
-        decay.wait()
-        warm2, p2, q2, m2 = timed_run(name, spark, sf_dir)
-        decay.wait()
-        warm3, p3, q3, m3 = timed_run(name, spark, sf_dir)
-        run_loads[name] = [
-            [p1, q1, m1, round(warm1, 3)],
-            [p2, q2, m2, round(warm2, 3)],
-            [p3, q3, m3, round(warm3, 3)],
-        ]
-        timings[name] = round(min(warm1, warm2, warm3), 3)
+        for _ in range(WARM_RUNS - 1):
+            decay.wait()
+            run_loads[name].append(timed_run(name, spark, sf_dir))
+        timings[name] = min(run[3] for run in run_loads[name])
 
     # Retry passes: a query none of whose warm runs was clean (quiet
     # start AND no foreign spike in flight) re-times after a decay
-    # cool-down, up to 3 whole-headline passes; the minimum over ALL
+    # cool-down, up to 3 whole-list passes; the minimum over ALL
     # runs is reported.
     def has_clean_run(name: str) -> bool:
         return any(
@@ -420,15 +482,15 @@ def main() -> None:
     retried: list[str] = []
     retry_passes = 0
     for _ in range(3):
-        dirty = [n for n in HEADLINE if not has_clean_run(n)]
+        dirty = [n for n in names if not has_clean_run(n)]
         if not dirty:
             break
         retry_passes += 1
         for name in dirty:
             decay.wait()
-            sec, pre, post, mx = timed_run(name, spark, sf_dir)
-            run_loads[name].append([pre, post, mx, round(sec, 3)])
-            timings[name] = round(min(timings[name], sec), 3)
+            run = timed_run(name, spark, sf_dir)
+            run_loads[name].append(run)
+            timings[name] = min(timings[name], run[3])
             if name not in retried:
                 retried.append(name)
         if decay.left <= 0:
@@ -448,7 +510,10 @@ def main() -> None:
         "cpus": cpus,
         "scan_tasks": scan_tasks,
         # per-query receipts for attributing time deltas:
-        # gc_ms/cpu_ms are deltas over the FIRST warm run
+        # cold_s is the cold run's wall; jobs/gc_ms/cpu_ms are
+        # deltas over the FIRST warm run
+        "cold_s": cold_s,
+        "jobs": jobs,
         "gc_ms": gc_ms,
         "cpu_ms": cpu_ms,
         "peak_jvm_heap_bytes": ui.peak_heap(),
@@ -471,16 +536,16 @@ def main() -> None:
         "decay_wait_spent_s": round(decay.spent, 1),
         "retried_after_cooldown": retried,
         "retry_passes": retry_passes,
-        "all_runs_clean": all(has_clean_run(n) for n in HEADLINE),
+        "all_runs_clean": all(has_clean_run(n) for n in names),
         # timing policy, so round-over-round deltas are
-        # attributable: per query 1 untimed cold run (JIT,
-        # file listing, broadcast warmup) then MIN of 3 warm
+        # attributable: per query 1 cold run (JIT, file listing,
+        # broadcast warmup) then MIN of WARM_RUNS warm
         # (local-mode box noise swung ±50% round-over-round),
         # each preceded by a budgeted decay-wait to a quiet
-        # (< CLEAN_PRE) start, plus up to 3 whole-headline
+        # (< CLEAN_PRE) start, plus up to 3 whole-list
         # retry passes for queries with no clean run
         "warmup_runs": 1,
-        "timed_runs": 3,
+        "timed_runs": WARM_RUNS,
         "aggregation": "min",
     }
     try:
@@ -493,8 +558,8 @@ def main() -> None:
     # and bitext in r10) are excluded from the round-1-comparable
     # subtotal — round-over-round deltas should read value, baseline
     # ratios baseline_comparable_total.
-    legacy = [n for n in HEADLINE if n not in NON_BASELINE]
-    comparable = round(sum(timings.get(n, 0.0) for n in legacy), 3)
+    legacy = [n for n in HEADLINE if n in timings and n not in NON_BASELINE]
+    comparable = round(sum(timings[n] for n in legacy), 3)
     print(
         json.dumps(
             {
@@ -502,7 +567,7 @@ def main() -> None:
                 "value": total,
                 "unit": "sec",
                 "queries": timings,
-                "sf": sf,
+                "sf": sf_of(sf_dir),
                 "shuffle_bytes": shuffles,
                 "baseline_comparable_total": comparable,
                 "baseline_comparable_queries": len(legacy),

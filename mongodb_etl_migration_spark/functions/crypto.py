@@ -249,18 +249,6 @@ def aes_cbc_encrypt_col(data: Column, key_hex: str, iv_hex: str) -> Column:
     return _strip_iv_col(full)
 
 
-def aes_cbc_decrypt_col(cipher_b64: Column, key_hex: str, iv_hex: str) -> Column:
-    """Decrypt reference-format base64 ciphertext (no embedded IV) —
-    encryption.py:228-271. Returns string (NULL on failure via try)."""
-    with_iv = F.concat(F.unhex(F.lit(iv_hex)), F.unbase64(cipher_b64))
-    return F.try_aes_decrypt(
-        with_iv,
-        F.unhex(F.lit(key_hex)),
-        F.lit("CBC"),
-        F.lit("PKCS"),
-    ).cast("string")
-
-
 def _strip_iv_col(full: Column) -> Column:
     """Drop the 16-byte IV prefix Spark prepends to CBC output."""
     return F.substring(full, 17, 2147483647)

@@ -792,18 +792,6 @@ def simhash_signature(
     )
 
 
-def hamming_distance(a: Column, b: Column) -> Column:
-    """Hamming distance between equal-length 0/1 signature strings,
-    computed columnar via position fold (no UDF)."""
-    idx = F.sequence(F.lit(1), F.length(a))
-    return F.aggregate(
-        idx,
-        F.lit(0),
-        lambda acc, i: acc
-        + F.when(a.substr(i, F.lit(1)) != b.substr(i, F.lit(1)), 1).otherwise(0),
-    )
-
-
 # ----------------------------------------------------- n-gram Jaccard
 def ngram_jaccard(
     shingle_df: DataFrame, pairs: DataFrame, id_col: str

@@ -336,13 +336,6 @@ def lang_grams_of(s: Column) -> Column:
     return F.concat(tris, unis)
 
 
-def lang_ngrams(c: Column | str) -> Column:
-    """Convenience one-expression form of lang_norm → lang_grams_of.
-    ONLY for literal/short columns — hot paths must stage the norm
-    through a projection first (lang_norm docstring)."""
-    return lang_grams_of(lang_norm(c))
-
-
 def lang_id_ngram(
     df,
     id_col: str,

@@ -281,20 +281,6 @@ def _viterbi_pieces(word: Column, state: Column) -> Column:
     return F.when(feasible, walked["ps"])
 
 
-def unigram_pieces(
-    word: Column | str, costs: list[tuple[str, int]], max_piece_len: int
-) -> Column:
-    """Best segmentation of a single-word column as array<string>
-    (NULL = not coverable). The cost table folds into the plan as a
-    literal map — zero shuffle, zero UDF."""
-    w = F.col(word) if isinstance(word, str) else word
-    cm = _cost_map(costs)
-    # one projection materializes the DP struct; the caller-visible
-    # expression only extracts from it
-    st = _viterbi_state(w, cm, max_piece_len)
-    return _viterbi_pieces(w, st)
-
-
 def unigram_token_ids(
     text: Column | str,
     vocab: list[tuple[str, int, int]],

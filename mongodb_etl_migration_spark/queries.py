@@ -8517,14 +8517,14 @@ def w_crawl_curation(spark: SparkSession, sf_dir: str) -> DataFrame:
     """END-TO-END crawl curation over the file-based WARC source —
     the composition a Common-Crawl-style pipeline actually runs:
     format("warc") over on-disk .warc/.warc.gz shards, the standard
-    predicate (response records, HTTP 200) PUSHED INTO the Python
-    source so non-matching records die before the Python→JVM
-    transfer, HTML→text extraction, token counting, and a
-    deterministic ≤10-docs-per-host cap (stratified_take). The
-    oracle predicts every surviving row analytically from the shard
-    fixture, so a hash match proves the whole chain — gzip members,
-    WARC framing, HTTP unwrap, pushdown, extraction, capping — ran
-    end to end. Only shuffle: the per-host cap's single exchange
+    predicate (response records, HTTP 200) applied by Spark's own
+    Filter over the scanned rows (the source accepts no pushed
+    filters: they would leak across scans of one loaded frame),
+    HTML→text extraction, token counting, and a deterministic
+    ≤10-docs-per-host cap (stratified_take). The oracle predicts
+    every surviving row analytically from the shard fixture, so a
+    hash match proves the whole chain — gzip members, WARC framing,
+    HTTP unwrap, filtering, extraction, capping — ran end to end. Only shuffle: the per-host cap's single exchange
     (map-side WindowGroupLimit)."""
     from mongodb_etl_migration_spark.operators import sampling as SM
     from mongodb_etl_migration_spark.sources.warc_source import register_warc

@@ -69,16 +69,6 @@ def read_json_documents(
     return reader.json(path)
 
 
-def ids_in_scan(df: DataFrame, id_col: str, ids: Sequence[str]) -> DataFrame:
-    """S3: point/IN scan. Small lists inline into the scan filter
-    (pushed down); big lists become a broadcast semi-join."""
-    if len(ids) <= 1000:
-        return df.filter(F.col(id_col).isin(list(ids)))
-    spark = df.sparkSession
-    ids_df = spark.createDataFrame([(i,) for i in ids], [id_col])
-    return df.join(F.broadcast(ids_df), id_col, "left_semi")
-
-
 # ---------------------------------------------------------------------
 # Mongo extended-JSON normalization (S5 ingest shape)
 # ---------------------------------------------------------------------

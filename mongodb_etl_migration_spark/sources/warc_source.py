@@ -23,10 +23,13 @@ Content-Length-framed with no sync markers and gzip members can only
 be found by scanning, so a mid-file split cannot locate a record
 boundary; crawl corpora are naturally many ~1 GB shards, which is the
 parallelism unit (same rationale as mongodump_source for .bson).
-Filter pushdown (warc_type = 'response' is THE standard crawl
-predicate — request/metadata records are typically 2/3 of a shard)
-drops records before the Python→JVM row transfer, the scan's dominant
-cost. Options: ``path``, ``mode`` (FAILFAST default | PERMISSIVE —
+The reader accepts no pushed filters: Spark 4.1 caches one reader per
+loaded frame, so a pushed filter would leak into every other scan of
+that frame (a later unfiltered query, or the other side of a union).
+Predicates such as warc_type = 'response' run in Spark's own Filter
+over the scanned rows.
+
+Options: ``path``, ``mode`` (FAILFAST default | PERMISSIVE —
 keep each file's valid prefix past a corrupt record/gzip member and
 emit a ``_corrupt_record`` marker row for dead-letter routing),
 ``with_bytes`` (true appends a ``body_bytes`` binary column carrying
@@ -57,11 +60,6 @@ from pyspark.sql.types import (
     StructType,
 )
 
-from mongodb_etl_migration_spark.sources.mongodump_source import (
-    _eval_filter,
-    _filter_column,
-    _filter_supported,
-)
 from mongodb_etl_migration_spark.sources.warc import (
     iter_warc_stream,
     parse_http_response,
@@ -114,22 +112,6 @@ class WarcReader(DataSourceReader):
             raise ValueError(
                 f"mode must be FAILFAST|PERMISSIVE, got {self._mode}"
             )
-        self._filters: list = []
-
-    def pushFilters(self, filters):
-        """Accept the same exactly-evaluable filter family as
-        mongodump_source (equality/In/comparisons/null checks/string
-        prefix-suffix-contains and Not over those) on any output
-        column. All columns exist on the row dict at evaluation time,
-        so acceptance is exact; the win is dropping non-matching
-        records BEFORE the Python→JVM transfer."""
-        names = {f.name for f in self._schema.fields}
-        for f in filters:
-            col = _filter_column(f)  # Not-aware
-            if _filter_supported(f) and col is not None and col[0] in names:
-                self._filters.append(f)
-            else:
-                yield f
 
     def partitions(self):
         return [_WarcFilePartition(p) for p in self._files]
@@ -168,14 +150,7 @@ class WarcReader(DataSourceReader):
                         row["_corrupt_record"] = (
                             f"{partition.path}: {err} after {n_ok} records"
                         )
-                        # the marker passes the same filter gate as any
-                        # row — accepted filters are not re-checked by
-                        # Spark and must not leak an all-NULL marker
-                        if all(
-                            _eval_filter(f, row) is True
-                            for f in self._filters
-                        ):
-                            yield tuple(row[n] for n in names)
+                        yield tuple(row[n] for n in names)
                     break
                 try:
                     status, ctype, body = parse_http_response(rec["payload"])
@@ -199,8 +174,7 @@ class WarcReader(DataSourceReader):
                     "_corrupt_record": None,
                 }
                 n_ok += 1
-                if all(_eval_filter(f, row) is True for f in self._filters):
-                    yield tuple(row[n] for n in names)
+                yield tuple(row[n] for n in names)
         finally:
             stream.close()
 
@@ -376,8 +350,5 @@ class WarcWriter(DataSourceWriter):
 
 
 def register_warc(spark) -> None:
-    """Register the source on a session (idempotent) and enable
-    Python-data-source filter pushdown (off by default in Spark 4.1;
-    runtime-settable)."""
-    spark.conf.set("spark.sql.python.filterPushdown.enabled", "true")
+    """Register the source on a session (idempotent)."""
     spark.dataSource.register(WarcDataSource)

@@ -27,7 +27,6 @@ from __future__ import annotations
 
 import json
 import sys
-import time
 from pathlib import Path
 
 REPO = Path(__file__).resolve().parent.parent
@@ -35,7 +34,7 @@ sys.path.insert(0, str(REPO))
 
 from pyspark.sql import functions as F  # noqa: E402
 
-from bench import UiMetrics  # noqa: E402
+from bench import UiMetrics, noop, timed  # noqa: E402
 from mongodb_etl_migration_spark import get_spark  # noqa: E402
 from mongodb_etl_migration_spark.operators import dedup as D  # noqa: E402
 from mongodb_etl_migration_spark.operators import similarity as SIM  # noqa: E402
@@ -168,16 +167,11 @@ def build_embeddings(spark, replicas: int, out_dir: str) -> None:
     e.write.mode("overwrite").parquet(f"{out_dir}/embeddings")
 
 
-def timed(ui: UiMetrics, df) -> dict:
+def warm(ui: UiMetrics, df) -> dict:
     """One cold + one timed warm run through the noop sink, with the
     warm run's shuffle-byte delta (the number that must scale right)."""
-    df.write.format("noop").mode("overwrite").save()
-    w0, r0 = ui.shuffle_totals()
-    t0 = time.time()
-    df.write.format("noop").mode("overwrite").save()
-    sec = round(time.time() - t0, 3)
-    w1, r1 = ui.shuffle_totals()
-    return {"sec": sec, "shuffle_bytes": (w1 - w0) + (r1 - r0)}
+    noop(df)
+    return timed(lambda: noop(df), ui)[0]
 
 
 def summarize(results: dict) -> dict:
@@ -641,7 +635,7 @@ def main() -> None:
     def timed_sessionize(out_dir: str) -> dict:
         ev = spark.read.parquet(f"{out_dir}/events")
         sess = sessionize_batch(ev, gap_minutes=30)
-        sm = timed(ui, sess)
+        sm = warm(ui, sess)
         sm["sessions"] = sess.count()
         return sm
 
@@ -663,21 +657,21 @@ def main() -> None:
             pairs = D.minhash_dedup_pairs(
                 docs, "doc_id", "text", fan_out=False
             )
-            d2 = timed(ui, pairs)
+            d2 = warm(ui, pairs)
             d2["pairs_found"] = pairs.count()
             lidh = T.lang_id_hashed(docs, "doc_id", "text")
-            lhm = timed(ui, lidh)
+            lhm = warm(ui, lidh)
             lhm["docs"] = lidh.count()
             spans = T.duplicated_spans(docs, "doc_id", "text", k=8)
-            ds = timed(ui, spans)
+            ds = warm(ui, spans)
             ds["spans"] = spans.count()
             spx = T.duplicated_spans_exact(
                 docs, "doc_id", "text", min_bytes=50
             )
-            dsx = timed(ui, spx)
+            dsx = warm(ui, spx)
             dsx["spans"] = spx.count()
             gr = T.with_gopher_repetition(docs, "text", fan_out=False)
-            gm = timed(ui, gr)
+            gm = warm(ui, gr)
             gm["passed"] = gr.filter(F.col("gopher_rep_pass")).count()
             results[name] = {
                 "docs": n_docs,
@@ -698,11 +692,11 @@ def main() -> None:
         pairs = D.minhash_dedup_pairs(
             docs, "doc_id", "text", fan_out=False
         )
-        d2 = timed(ui, pairs)
+        d2 = warm(ui, pairs)
         d2["pairs_found"] = pairs.count()
 
         reps = D.dedup_representatives(docs, pairs, "doc_id")
-        d7 = timed(ui, reps)
+        d7 = warm(ui, reps)
         d7["survivors"] = reps.count()
 
         planes = [
@@ -713,13 +707,13 @@ def main() -> None:
         ]
         qvec = emb.filter(F.col("vec_id") == 0).head()["embedding"]
         topk = SIM.ann_topk_lsh(emb, qvec, planes, k=10)
-        lsh = timed(ui, topk)
+        lsh = warm(ui, topk)
 
         # SemDeDup at scale: the jittered replicas are planted
         # near-dups (cosine ~1 with their base vector, same LSH
         # bucket); shuffle is the bucket self-join — linear in corpus.
         sem = SIM.semantic_dedup_keep(emb, planes, threshold=0.999)
-        sd = timed(ui, sem)
+        sd = warm(ui, sem)
         sd["survivors"] = sem.count()
 
         # Bloom decontamination at scale: eval set FIXED (base-replica
@@ -733,7 +727,7 @@ def main() -> None:
         )
         train = docs.join(evals.select("doc_id"), "doc_id", "left_anti")
         cont = T.decontaminate_bloom(train, evals, "doc_id", "text", n=3)
-        bl = timed(ui, cont)
+        bl = warm(ui, cont)
         bl["contaminated"] = cont.count()
 
         # Inverted index at scale: shuffle is the distinct (doc, term)
@@ -741,19 +735,19 @@ def main() -> None:
         # vocabulary with the corpus); bounded postings keep stopword
         # aggregation state fixed regardless of df.
         inv = T.inverted_index(docs, "doc_id", "text", min_df=2, max_postings=20)
-        ii = timed(ui, inv)
+        ii = warm(ui, inv)
         ii["terms"] = inv.count()
 
         # Rare-bigram scoring at scale: shuffle is the exploded bigram
         # set (window count + per-doc rollup) — linear in corpus.
-        rbt = timed(ui, T.rare_bigram_stats(docs, "doc_id", "text", min_count=10))
+        rbt = warm(ui, T.rare_bigram_stats(docs, "doc_id", "text", min_count=10))
 
         # ExactSubstr duplicated spans at scale: shuffle is the
         # exploded k-gram fingerprint set — linear in corpus (replicas
         # share no k-grams); spans found track the PLANTED duplicate
         # rate (each planted dup doubles its doc's windows corpus-wide).
         spans = T.duplicated_spans(docs, "doc_id", "text", k=8)
-        ds = timed(ui, spans)
+        ds = warm(ui, spans)
         ds["spans"] = spans.count()
 
         # Byte-threshold twin (Lee et al.'s 50-byte line) on the SAME
@@ -763,7 +757,7 @@ def main() -> None:
         # exact_substr_spans dispatcher docstring cites (same cost
         # class at k=8 ≈ 50 bytes; see summary.exactsubstr_crossover).
         spx = T.duplicated_spans_exact(docs, "doc_id", "text", min_bytes=50)
-        dsx = timed(ui, spx)
+        dsx = warm(ui, spx)
         dsx["spans"] = spx.count()
 
         # Gopher §A1.1 full repetition scoring at scale: zero-shuffle
@@ -772,7 +766,7 @@ def main() -> None:
         # files, so the heuristic would be off anyway; pinning removes
         # the environment dependence the r9 advice flagged).
         gr = T.with_gopher_repetition(docs, "text", fan_out=False)
-        gm = timed(ui, gr)
+        gm = warm(ui, gr)
         gm["passed"] = gr.filter(F.col("gopher_rep_pass")).count()
 
         # Linear classifier at scale: the vocabulary grows WITH the
@@ -787,7 +781,7 @@ def main() -> None:
             for r in range(cfg["replicas"])
         }
         cls = T.classifier_margin(docs, "doc_id", "text", weights=vocab)
-        cm = timed(ui, cls)
+        cm = warm(ui, cls)
         cm["vocab_terms"] = len(vocab)
         cm["kept"] = cls.filter(F.col("keep")).count()
 
@@ -797,9 +791,7 @@ def main() -> None:
         # case) with a 1-row argmax collect per round — shuffle is
         # the word-count exchange + rounds x vocab-sized aggregates,
         # never corpus x rounds.
-        def timed_train():
-            w0, r0 = ui.shuffle_totals()
-            t0 = time.time()
+        def train():
             # mode='distributed': this tier measures the vocabulary-
             # resident round machinery's shuffle scaling (auto would
             # collect the vocab and train driver-side — that path's
@@ -807,21 +799,10 @@ def main() -> None:
             mg, vocab = T.bpe_train(
                 docs, "text", n_merges=4, mode="distributed"
             )
-            nv = vocab.count()
-            # Snap wall BEFORE the stabilizing shuffle poll (it can
-            # sleep up to ~3 s) — matches timed_shuffle/bitext/probe.
-            sec = round(time.time() - t0, 3)
-            return {
-                "sec": sec,
-                "shuffle_bytes": sum(
-                    a - b
-                    for a, b in zip(ui.shuffle_totals(), (w0, r0))
-                ),
-                "merges": len(mg),
-                "vocab": nv,
-            }
+            return len(mg), vocab.count()
 
-        bt = timed_train()
+        bt, (merges, n_vocab) = timed(train, ui)
+        bt.update(merges=merges, vocab=n_vocab)
 
         # PQ at scale: codebooks are plan literals and the encode is
         # narrow — shuffle must be ZERO at any corpus size; ADC top-k
@@ -830,7 +811,7 @@ def main() -> None:
         emb16 = emb.select(
             "vec_id", F.slice("embedding", 1, 16).alias("embedding")
         )
-        pqm = timed(ui, SIM.pq_encode(emb16, cbq))
+        pqm = warm(ui, SIM.pq_encode(emb16, cbq))
         pqm["vectors"] = emb16.count()
 
         # Language-ID classifier at scale: the gram explode is narrow
@@ -839,7 +820,7 @@ def main() -> None:
         # carries one (doc, k sums) row per doc per map task —
         # shuffle linear in docs.
         lid = T.lang_id_ngram(docs, "doc_id", "text")
-        lm = timed(ui, lid)
+        lm = warm(ui, lid)
         lm["docs"] = lid.count()
 
         # Hash-bucketed variant: the broadcast relation is FIXED at
@@ -847,7 +828,7 @@ def main() -> None:
         # single-exchange plan, so shuffle must track lang_id_ngram's
         # (linear in docs).
         lidh = T.lang_id_hashed(docs, "doc_id", "text")
-        lhm = timed(ui, lidh)
+        lhm = warm(ui, lidh)
         lhm["docs"] = lidh.count()
 
         # Sequence packing at scale: the ONLY exchange is the bucket
@@ -864,7 +845,7 @@ def main() -> None:
             tok_ids, "doc_id", "tid", seq_len=256, eos_id=0,
             n_buckets=32 * cfg["replicas"],
         )
-        pk = timed(ui, packed)
+        pk = warm(ui, packed)
         pk["sequences"] = packed.count()
 
         # Best-fit packing at scale: same single bucket exchange as
@@ -876,7 +857,7 @@ def main() -> None:
             tok_ids, "doc_id", "tid", seq_len=256, eos_id=0,
             n_buckets=32 * cfg["replicas"],
         )
-        bf = timed(ui, bfp)
+        bf = warm(ui, bfp)
         bf["bins"] = bfp.count()
 
         # Token-space SFT masks at scale: pure projection (constant
@@ -895,7 +876,7 @@ def main() -> None:
             "doc_id",
             CHs.sft_tokens("turns", _DM, "chatml").alias("s"),
         )
-        sfm = timed(ui, sft)
+        sfm = warm(ui, sft)
         sfm["docs"] = n_docs
 
         # Epoch shuffle at scale: the permutation is one hash-ordered
@@ -903,22 +884,13 @@ def main() -> None:
         # offsets (one count per range partition) — shuffle linear in
         # sequences. Building the frame already runs the range-bound
         # sampling job, so measure around the builder.
-        def timed_shuffle():
-            w0, r0 = ui.shuffle_totals()
-            t0 = time.time()
-            shuf = T.epoch_shuffle(
+        es, n_seq = timed(
+            lambda: T.epoch_shuffle(
                 packed, ["bucket", "seq_idx"], seed=42
-            )
-            n = shuf.count()
-            sec = round(time.time() - t0, 3)
-            w1, r1 = ui.shuffle_totals()
-            return {
-                "sec": sec,
-                "shuffle_bytes": (w1 - w0) + (r1 - r0),
-                "sequences": n,
-            }
-
-        es = timed_shuffle()
+            ).count(),
+            ui,
+        )
+        es["sequences"] = n_seq
 
         # Z-order layout at scale: the Morton encode is a narrow
         # projection (zero shuffle on its own); zorder_layout adds one
@@ -933,7 +905,7 @@ def main() -> None:
         )
         laid = LO.zorder_layout(dims, ["d1", "d2"], bits=10, n_files=64)
         zstats = LO.layout_pruning_stats(laid, ["d1", "d2"])
-        zm = timed(ui, zstats)
+        zm = warm(ui, zstats)
         zm["files"] = zstats.count()
 
         # Paragraph dedup at scale: every doc carries one corpus-wide
@@ -959,7 +931,7 @@ def main() -> None:
             ).alias("text"),
         )
         pd_out = T.dedup_paragraphs(pdocs, "doc_id", "text")
-        pdm = timed(ui, pd_out)
+        pdm = warm(ui, pd_out)
         pdm["docs_kept"] = pd_out.count()
 
         # Graph loops at scale: a deterministic synthetic digraph with
@@ -981,17 +953,9 @@ def main() -> None:
         # shuffle happens during CONSTRUCTION — measure around the
         # builder call, not a post-hoc write
         def timed_build(fn):
-            w0, r0 = ui.shuffle_totals()
-            t0 = time.time()
-            out = fn()
-            n = out.count()
-            sec = round(time.time() - t0, 3)
-            w1, r1 = ui.shuffle_totals()
-            return {
-                "sec": sec,
-                "shuffle_bytes": (w1 - w0) + (r1 - r0),
-                "nodes": n,
-            }
+            stats, n = timed(lambda: fn().count(), ui)
+            stats["nodes"] = n
+            return stats
 
         gp = timed_build(
             lambda: GR.pagerank_integer(g_edges, "src", "dst", iterations=3)
@@ -1009,17 +973,15 @@ def main() -> None:
         def timed_bitext():
             srcs = emb.filter(F.col("vec_id") % 2 == 0)
             tgts = emb.filter(F.col("vec_id") % 2 == 1)
-            w0, r0 = ui.shuffle_totals()
-            t0 = time.time()
-            bx_out = SIM.bitext_margin_pairs(srcs, tgts, planes, k=4)
-            n = bx_out.count()
-            # wall-clock snapped HERE, around construction+count only:
-            # the candidate recount below is a diagnostic second pass
-            # (it rebuilds the bucket join) and must not inflate sec —
-            # nor must the stabilized shuffle poll (reads sleep until
-            # two agree)
-            sec = round(time.time() - t0, 3)
-            w1, r1 = ui.shuffle_totals()
+            # timed around construction+count only: the candidate
+            # recount below is a diagnostic second pass (it rebuilds
+            # the bucket join) and must not inflate sec
+            stats, n = timed(
+                lambda: SIM.bitext_margin_pairs(
+                    srcs, tgts, planes, k=4
+                ).count(),
+                ui,
+            )
             # the ALGORITHMIC linearity quantity is the candidate-set
             # size (what the windows/joins actually move): the raw
             # byte ratio between tiers carries a compression/chunk-
@@ -1028,9 +990,7 @@ def main() -> None:
             # tier's wider id spread sits at ~21 B/pair (the r9
             # byte-floor lesson, opposite direction)
             cands_df = SIM._bitext_candidates(srcs, tgts, planes)
-            w2, r2 = ui.shuffle_totals()
-            cands = cands_df.count()
-            w3, r3 = ui.shuffle_totals()
+            cand_join, cands = timed(cands_df.count, ui)
             # PER-EXCHANGE ATTRIBUTION (r12 verdict item 3 — all
             # diagnostic second passes, excluded from sec). Measured
             # decomposition of the 37.6x raw-byte growth at x10:
@@ -1055,20 +1015,13 @@ def main() -> None:
             from pyspark.sql import Window as _W
 
             def _win_bytes(key: str, order: list) -> int:
-                time.sleep(0.3)
-                a0, b0 = ui.shuffle_totals()
-                (
-                    cands_df.withColumn(
-                        "rn",
-                        F.row_number().over(
-                            _W.partitionBy(key).orderBy(*order)
-                        ),
-                    )
-                    .filter(F.col("rn") <= 4)
-                    .count()
-                )
-                a1, b1 = ui.shuffle_totals()
-                return (a1 - a0) + (b1 - b0)
+                ranked = cands_df.withColumn(
+                    "rn",
+                    F.row_number().over(
+                        _W.partitionBy(key).orderBy(*order)
+                    ),
+                ).filter(F.col("rn") <= 4)
+                return timed(ranked.count, ui)[0]["shuffle_bytes"]
 
             win_src = _win_bytes(
                 "src_id", [F.desc("cos_e4"), F.asc("tgt_id")]
@@ -1077,11 +1030,10 @@ def main() -> None:
                 "tgt_id", [F.desc("cos_e4"), F.asc("src_id")]
             )
             return {
-                "sec": sec,
-                "shuffle_bytes": (w1 - w0) + (r1 - r0),
+                **stats,
                 "pairs": n,
                 "candidates": cands,
-                "cand_join_bytes": (w3 - w2) + (r3 - r2),
+                "cand_join_bytes": cand_join["shuffle_bytes"],
                 "win_src_bytes": win_src,
                 "win_tgt_bytes": win_tgt,
                 "win_src_bytes_per_cand": round(win_src / 2 / max(1, cands), 2),
@@ -1101,7 +1053,7 @@ def main() -> None:
             [("q1", ["sparkr0", "streamr0"]), ("q2", ["joinr0", "hashr0"])],
             k=10,
         )
-        bm = timed(ui, bm_out)
+        bm = warm(ui, bm_out)
         bm["rows"] = bm_out.count()
         # the algorithmic traffic quantity: BM25's corpus-sized work
         # is the distinct (doc, term) stream (tf) — the same set the
@@ -1128,10 +1080,8 @@ def main() -> None:
         idx_path = f"{out_dir}/bm25_index"
         T.write_bm25_index(docs, idx_path)
 
-        def timed_probe():
-            w0, r0 = ui.shuffle_totals()
-            t0 = time.time()
-            p_out = T.bm25_probe_indexed(
+        bmp, n_rows = timed(
+            lambda: T.bm25_probe_indexed(
                 spark,
                 idx_path,
                 [
@@ -1139,17 +1089,10 @@ def main() -> None:
                     ("q2", ["joinr0", "hashr0"]),
                 ],
                 k=10,
-            )
-            n = p_out.count()
-            sec = round(time.time() - t0, 3)
-            w1, r1 = ui.shuffle_totals()
-            return {
-                "sec": sec,
-                "shuffle_bytes": (w1 - w0) + (r1 - r0),
-                "rows": n,
-            }
-
-        bmp = timed_probe()
+            ).count(),
+            ui,
+        )
+        bmp["rows"] = n_rows
 
         results[name] = {
             "docs": n_docs,
@@ -1392,23 +1335,19 @@ def media_main() -> None:
 
     def timed_unigram(docs) -> dict:
         """unigram_train returns a list (the vocab), not a DataFrame:
-        measure around the CALL, the bpe_train timed_train rule.
+        measure around the CALL, the bpe_train rule.
         mode='arrow' — the production E-step path; fixed model params
         (vocab_size/seed_size) while the corpus grows, the
         fixed-lid-model rule."""
-        w0, r0 = ui.shuffle_totals()
-        t0 = time.time()
-        vocab = U.unigram_train(
-            docs, "text", vocab_size=24, seed_size=60, rounds=2,
-            mode="arrow",
+        stats, vocab = timed(
+            lambda: U.unigram_train(
+                docs, "text", vocab_size=24, seed_size=60, rounds=2,
+                mode="arrow",
+            ),
+            ui,
         )
-        sec = round(time.time() - t0, 3)
-        w1, r1 = ui.shuffle_totals()
-        return {
-            "sec": sec,
-            "shuffle_bytes": (w1 - w0) + (r1 - r0),
-            "pieces": len(vocab),
-        }
+        stats["pieces"] = len(vocab)
+        return stats
 
     for name, reps in (
         ("media_base", 1), ("media_x10", 10), ("media_x100", 100)
@@ -1418,13 +1357,13 @@ def media_main() -> None:
         build_video_frames(spark, reps, 10, out_dir)
         mm = spark.read.parquet(f"{out_dir}/images")
         pairs = M.image_neardup_pairs(M.image_dhash(mm))
-        im = timed(ui, pairs)
+        im = warm(ui, pairs)
         im["pairs_found"] = pairs.count()
         frames = spark.read.parquet(f"{out_dir}/video_frames")
         vp = M.video_neardup_pairs(
             frames, min_shared=2, max_hash_videos=VID_CAP
         )
-        vc = timed(ui, vp)
+        vc = warm(ui, vp)
         vc["pairs_found"] = vp.count()
         entry = {
             "images": mm.count(),
@@ -1437,14 +1376,14 @@ def media_main() -> None:
         }
         if name == "media_x10":
             vpu = M.video_neardup_pairs(frames, min_shared=2)
-            vu = timed(ui, vpu)
+            vu = warm(ui, vpu)
             vu["pairs_found"] = vpu.count()
             entry["m_video_neardup_uncapped"] = vu
             d4_dir = f"/tmp/bench_scale_media_x10_dup4x"
             build_images(spark, reps, 40, d4_dir)
             mm4 = spark.read.parquet(f"{d4_dir}/images")
             p4 = M.image_neardup_pairs(M.image_dhash(mm4))
-            im4 = timed(ui, p4)
+            im4 = warm(ui, p4)
             im4["pairs_found"] = p4.count()
             media["media_x10_dup4x"] = {
                 "images": mm4.count(),

@@ -34,3 +34,20 @@ def test_every_query_has_an_oracle_or_is_documented():
     reviewed choice rather than a forgotten registration."""
     missing = sorted(set(QUERIES) - set(ORACLES))
     assert missing == [], f"queries without DuckDB oracles: {missing}"
+
+
+def test_documented_script_paths_exist():
+    """Every ``scripts/<name>.py`` the user-facing docs name must
+    exist: a deleted script must take its doc references with it."""
+    docs = ["README.md", "COVERAGE.md", ".claude/skills/verify/SKILL.md"]
+    missing = sorted(
+        {
+            (doc, path)
+            for doc in docs
+            for path in re.findall(
+                r"scripts/\w+\.py", (REPO / doc).read_text()
+            )
+            if not (REPO / path).is_file()
+        }
+    )
+    assert missing == [], f"docs name scripts that do not exist: {missing}"

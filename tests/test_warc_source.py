@@ -1,4 +1,4 @@
-"""format("warc") file-based source: gzip members, pushdown, corruption."""
+"""format("warc") file-based source: gzip members, filters, corruption."""
 
 from __future__ import annotations
 
@@ -107,16 +107,20 @@ def test_source_filter_pushdown_semantics(spark, shard_dir):
     assert max(r.record_idx for r in rows) > len(rows) / 2
 
 
-@pytest.mark.xfail(
-    strict=True,
-    reason="known defect shared with the mongodump source: a query that "
-    "pushes no filter reuses the reader of the last query on the same "
-    "loaded frame, so that query's pushed filters leak into it",
-)
 def test_source_pushed_filters_do_not_leak_into_later_queries(spark, shard_dir):
     df = _read(spark, shard_dir)
     assert df.filter("warc_type = 'warcinfo'").count() == 2
     assert df.count() == 12
+
+
+def test_source_filters_do_not_leak_between_scans_of_one_plan(spark, shard_dir):
+    """Both branches of one plan scan the same loaded frame; Spark
+    keeps one reader per frame, so a filter either branch pushed into
+    the reader would apply to the other branch too."""
+    df = _read(spark, shard_dir)
+    info = df.filter("warc_type = 'warcinfo'")
+    rest = df.filter("warc_type != 'warcinfo'")
+    assert info.unionByName(rest).count() == df.count() == 12
 
 
 def test_source_failfast_on_corrupt_member(spark, tmp_path):
