@@ -4,9 +4,7 @@ Each function maps to an operator in SURVEY.md §2.3/§2.4 and cites the
 reference implementation it re-expresses. ~90% of the reference's
 row-level lambdas compile to built-in JVM-side Column expressions
 (whole-stage codegen, no Python in the hot path) — UUID5 and TimeUUID
-included; only Salsa20 needs a (vectorized pandas) UDF. The
-``*_arrow`` UUID twins are the original pandas UDFs, kept as test
-references.
+included; only Salsa20 needs a (vectorized pandas) UDF.
 """
 
 from mongodb_etl_migration_spark.functions.scalars import (  # noqa: F401
@@ -30,7 +28,5 @@ from mongodb_etl_migration_spark.functions.scalars import (  # noqa: F401
 from mongodb_etl_migration_spark.functions.keys import (  # noqa: F401
     assign_sequential_ids,
     timeuuid_deterministic,
-    timeuuid_deterministic_arrow,
     uuid5_oid,
-    uuid5_oid_arrow,
 )

@@ -8,14 +8,8 @@ any re-run) agree by construction — no cross-DB sync step (K4) needed.
 
 from __future__ import annotations
 
-import hashlib
-import uuid
-
-import pandas as pd
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
-from pyspark.sql.functions import pandas_udf
-from pyspark.sql.types import StringType
 
 
 # Shared hex formatting for the JVM-side UUID builders: Spark's hex()
@@ -42,10 +36,8 @@ def uuid5_oid(mongo_id: Column | str) -> Column:
     returns exactly that digest as 40 lowercase hex chars, and the
     layout is hex slicing plus two nibble patches (version '5' at
     digest byte 6's high nibble, variant 10xx at byte 8's top bits).
-    Replaces the former pandas UDF (kept as ``uuid5_oid_arrow`` for
-    the equivalence test): no JVM→Python hop, no Arrow transpose —
-    guide §4.1 "always prefer built-ins". NULL in ⇒ NULL out (concat
-    propagates the NULL sha1).
+    No JVM→Python hop, no Arrow transpose — guide §4.1 "always prefer
+    built-ins". NULL in ⇒ NULL out (concat propagates the NULL sha1).
     """
     c = F.col(mongo_id) if isinstance(mongo_id, str) else mongo_id
     h = F.sha1(F.concat(F.unhex(F.lit(_NS_OID_HEX)), F.encode(c, "UTF-8")))
@@ -64,15 +56,6 @@ def uuid5_oid(mongo_id: Column | str) -> Column:
     )
 
 
-@pandas_udf(StringType())
-def uuid5_oid_arrow(mongo_id: pd.Series) -> pd.Series:
-    """Arrow-batched reference twin of :func:`uuid5_oid` (the original
-    implementation) — suite-pinned byte-equal to the Column form."""
-    return mongo_id.map(
-        lambda s: str(uuid.uuid5(uuid.NAMESPACE_OID, s)) if s is not None else None
-    )
-
-
 # ------------------------------------------------------------------- K2
 def timeuuid_deterministic(
     mongo_id: Column | str, ts_millis: Column | str
@@ -88,16 +71,15 @@ def timeuuid_deterministic(
     Pure Column expression (JVM codegen) since round 14: the time
     fields are long bit-arithmetic over ``100-ns intervals since
     1582-10-15`` and the sha1-derived bits are hex slices of Spark's
-    sha1() — no Python boundary (guide §4.1). The former pandas UDF
-    survives as ``timeuuid_deterministic_arrow`` for the equivalence
-    test. NULL mongo_id or NULL ts ⇒ NULL uuid, as before.
+    sha1() — no Python boundary (guide §4.1). NULL mongo_id or NULL
+    ts ⇒ NULL uuid.
     """
     mid = F.col(mongo_id) if isinstance(mongo_id, str) else mongo_id
     ms = F.col(ts_millis) if isinstance(ts_millis, str) else ts_millis
     # NaN guard (ADVICE r14): a double NaN would cast('long') to 0
-    # under non-ANSI Spark (a uuid at the 1582 epoch) while the Arrow
-    # twin returns NULL via pd.isna — align on NULL. Integral inputs
-    # pass through the double cast losslessly for the check only.
+    # under non-ANSI Spark (a uuid at the 1582 epoch); a NaN time is
+    # no time, so the key is NULL. Integral inputs pass through the
+    # double cast losslessly for the check only.
     ms = F.when(~F.isnan(ms.cast("double")), ms)
     # 100-ns intervals since 1582-10-15 (RFC 4122 epoch offset).
     ts = ms.cast("long") * F.lit(10000) + F.lit(0x01B21DD213814000)
@@ -119,37 +101,6 @@ def timeuuid_deterministic(
         _hex_field(time_hi_version, 4), F.lit("-"),
         _hex_field(clock_hi, 2), F.substring(h, 3, 2), F.lit("-"),
         F.substring(h, 5, 12),
-    )
-
-
-@pandas_udf(StringType())
-def timeuuid_deterministic_arrow(
-    mongo_id: pd.Series, ts_millis: pd.Series
-) -> pd.Series:
-    """Arrow-batched reference twin of :func:`timeuuid_deterministic`
-    (the original implementation) — suite-pinned byte-equal to the
-    Column form."""
-
-    def one(mid: str | None, ms: float | None) -> str | None:
-        if mid is None or ms is None or pd.isna(ms):
-            return None
-        # 100-ns intervals since 1582-10-15 (RFC 4122 epoch offset).
-        timestamp = int(ms) * 10000 + 0x01B21DD213814000
-        time_low = timestamp & 0xFFFFFFFF
-        time_mid = (timestamp >> 32) & 0xFFFF
-        time_hi_version = ((timestamp >> 48) & 0x0FFF) | (1 << 12)
-        h = hashlib.sha1(mid.encode("utf-8")).digest()
-        clock_seq = ((h[0] & 0x3F) | 0x80) << 8 | h[1]
-        node = int.from_bytes(h[2:8], "big")
-        return str(
-            uuid.UUID(
-                fields=(time_low, time_mid, time_hi_version,
-                        clock_seq >> 8, clock_seq & 0xFF, node)
-            )
-        )
-
-    return pd.Series(
-        [one(m, t) for m, t in zip(mongo_id, ts_millis)], dtype="object"
     )
 
 
@@ -178,9 +129,12 @@ def assign_sequential_ids(
     Wall-clock is one range shuffle + one window within partitions —
     the same cost profile as a distributed sort.
 
-    repartitionByRange samples its range bounds with a nondeterministic
-    seed, so two independent evaluations could place boundary rows in
-    different partitions — silently duplicating or dropping ids. The
+    repartitionByRange samples its range bounds with a seed taken from
+    the sampled RDD's id (``RangePartitioner.sketch`` seeds partition
+    ``idx``'s reservoir sample with ``byteswap32(idx ^ (rdd.id << 16))``).
+    Every evaluation of the plan builds a new RDD with a new id, so two
+    independent evaluations can draw different bounds and place boundary
+    rows in different partitions — silently duplicating or dropping ids. The
     numbered frame is read twice (counts and ids), so it is pinned by
     a ``localCheckpoint(eager=False)``: both reads consume the one
     checkpointed RDD, whose range partitioner was built once, so they

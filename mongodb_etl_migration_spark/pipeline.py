@@ -25,7 +25,11 @@ from pyspark.sql import functions as F
 
 from mongodb_etl_migration_spark.functions import scalars as S
 from mongodb_etl_migration_spark.functions.crypto import make_url_decrypt_rewrite
-from mongodb_etl_migration_spark.functions.keys import assign_sequential_ids
+from mongodb_etl_migration_spark.functions.keys import (
+    assign_sequential_ids,
+    timeuuid_deterministic,
+    uuid5_oid,
+)
 from mongodb_etl_migration_spark.operators import denorm as DN
 from mongodb_etl_migration_spark.operators.hierarchy import (
     resolve_files_to_folders,
@@ -35,7 +39,7 @@ from mongodb_etl_migration_spark.plans.compiler import (
     compile_entity,
     compile_entity_outputs,
 )
-from mongodb_etl_migration_spark.plans.spec import EntitySpec, FKJoin, KeySpec
+from mongodb_etl_migration_spark.plans.spec import EntitySpec, FKJoin
 from mongodb_etl_migration_spark.threads import DriverThreads
 
 # union of the scan-level filter (mongo_extractor.py:56-72) and the
@@ -67,12 +71,12 @@ def role_spec() -> EntitySpec:
     return EntitySpec(
         destination="role",
         projection={
-            "mongo_id": lambda df: F.col("_id"),
-            "name": lambda df: F.col("name"),
-            "type": lambda df: F.coalesce(F.col("type"), F.lit("app")),
-            "is_default": lambda df: F.coalesce(F.col("default"), F.lit(False)),
+            "mongo_id": F.col("_id"),
+            "name": F.col("name"),
+            "type": F.coalesce(F.col("type"), F.lit("app")),
+            "is_default": F.coalesce(F.col("default"), F.lit(False)),
         },
-        key=KeySpec(kind="sequential", order_by=("mongo_id",), out="id"),
+        sequential_id=True,
     )
 
 
@@ -80,14 +84,14 @@ def province_spec() -> EntitySpec:
     return EntitySpec(
         destination="province",
         projection={
-            "mongo_id": lambda df: F.col("_id"),
-            "name": lambda df: F.col("name"),
-            "key": lambda df: F.col("key"),
-            "key_int": lambda df: S.keyint_default("keyInt"),
-            "latitude": lambda df: F.col("latitude").cast("decimal(10,8)"),
-            "longitude": lambda df: F.col("longitude").cast("decimal(11,8)"),
+            "mongo_id": F.col("_id"),
+            "name": F.col("name"),
+            "key": F.col("key"),
+            "key_int": S.keyint_default("keyInt"),
+            "latitude": F.col("latitude").cast("decimal(10,8)"),
+            "longitude": F.col("longitude").cast("decimal(11,8)"),
         },
-        key=KeySpec(kind="sequential", order_by=("mongo_id",), out="id"),
+        sequential_id=True,
     )
 
 
@@ -96,14 +100,14 @@ def municipality_spec() -> EntitySpec:
     municipality→province FK resolved via the id-map)."""
     return EntitySpec(
         destination="municipality",
-        derivations={"province_ref": lambda df: ref_id("province")},
+        derivations={"province_ref": ref_id("province")},
         fk_joins=(FKJoin(dim="province", on="province_ref", out="province_id"),),
         projection={
-            "mongo_id": lambda df: F.col("_id"),
-            "name": lambda df: F.col("name"),
-            "province_id": lambda df: F.col("province_id"),
+            "mongo_id": F.col("_id"),
+            "name": F.col("name"),
+            "province_id": F.col("province_id"),
         },
-        key=KeySpec(kind="sequential", order_by=("mongo_id",), out="id"),
+        sequential_id=True,
     )
 
 
@@ -113,41 +117,39 @@ def parroquia_spec() -> EntitySpec:
     return EntitySpec(
         destination="parroquia",
         derivations={
-            "province_ref": lambda df: ref_id("province"),
-            "municipality_ref": lambda df: ref_id("municipality"),
+            "province_ref": ref_id("province"),
+            "municipality_ref": ref_id("municipality"),
         },
         fk_joins=(
             FKJoin(dim="province", on="province_ref", out="province_id"),
             FKJoin(dim="municipality", on="municipality_ref", out="municipality_id"),
         ),
         projection={
-            "mongo_id": lambda df: F.col("_id"),
-            "name": lambda df: F.col("name"),
-            "province_id": lambda df: F.col("province_id"),
-            "municipality_id": lambda df: F.col("municipality_id"),
+            "mongo_id": F.col("_id"),
+            "name": F.col("name"),
+            "province_id": F.col("province_id"),
+            "municipality_id": F.col("municipality_id"),
         },
-        key=KeySpec(kind="sequential", order_by=("mongo_id",), out="id"),
+        sequential_id=True,
     )
 
 
 def user_spec(run_ts: datetime) -> EntitySpec:
     """PG `user` destination — field_mapper.py:22-88 +
     data_transformer.py:210-321 (normalizers, F28 redaction, J1/J3)."""
-    deleted = lambda df: ~F.coalesce(F.col("isActive"), F.lit(True))  # noqa: E731
-
-    def name_col(df: DataFrame) -> Column:
-        return F.coalesce(F.col("displayName"), F.col("name"))
+    deleted = ~F.coalesce(F.col("isActive"), F.lit(True))
+    name_col = F.coalesce(F.col("displayName"), F.col("name"))
 
     return EntitySpec(
         destination="user",
         filters=(
             # P6: only USER_ROLE/AGENTE_ROLE migrate (orchestrator.py:547-566)
-            lambda df: F.col("role").isin("USER_ROLE", "AGENTE_ROLE"),
+            F.col("role").isin("USER_ROLE", "AGENTE_ROLE"),
         ),
         derivations={
-            "province_ref": lambda df: ref_id("province"),
-            "municipality_ref": lambda df: ref_id("municipality"),
-            "role_name_key": lambda df: S.role_name_normalize(F.col("userType")),
+            "province_ref": ref_id("province"),
+            "municipality_ref": ref_id("municipality"),
+            "role_name_key": S.role_name_normalize(F.col("userType")),
         },
         fk_joins=(
             FKJoin(dim="province", on="province_ref", out="province_id"),
@@ -155,55 +157,47 @@ def user_spec(run_ts: datetime) -> EntitySpec:
             FKJoin(dim="role_by_name", on="role_name_key", out="role_id"),
         ),
         projection={
-            "mongo_id": lambda df: F.col("_id"),
-            "uuid": lambda df: F.col("uuid"),
-            "name": lambda df: F.when(deleted(df), F.lit("Deleted User")).otherwise(
-                name_col(df)
-            ),
-            "full_name": lambda df: F.col("fullName"),
-            "email": lambda df: F.when(deleted(df), F.lit("")).otherwise(
-                S.email_normalize("email")
-            ),
-            "phone": lambda df: F.when(deleted(df), F.lit("")).otherwise(
+            "mongo_id": F.col("_id"),
+            "uuid": F.col("uuid"),
+            "name": F.when(deleted, F.lit("Deleted User")).otherwise(name_col),
+            "full_name": F.col("fullName"),
+            "email": F.when(deleted, F.lit("")).otherwise(S.email_normalize("email")),
+            "phone": F.when(deleted, F.lit("")).otherwise(
                 S.phone_digits(F.coalesce(F.col("phoneNumber"), F.col("phone")))
             ),
-            "dni": lambda df: F.when(deleted(df), F.lit("")).otherwise(
+            "dni": F.when(deleted, F.lit("")).otherwise(
                 S.dni_format(F.coalesce(F.col("cedula"), F.col("dni")))
             ),
-            "birthdate": lambda df: F.coalesce(
-                F.col("birthDate"), F.col("birthdate")
-            ),
-            "gender": lambda df: S.gender_normalize("gender"),
-            "avatar": lambda df: S.bucket_url_rewrite(
+            "birthdate": F.coalesce(F.col("birthDate"), F.col("birthdate")),
+            "gender": S.gender_normalize("gender"),
+            "avatar": S.bucket_url_rewrite(
                 F.coalesce(F.col("photoURL"), F.col("avatar"))
             ),
-            "profile_status": lambda df: F.lit("COMPLETED"),
-            "socialmedia_x": lambda df: F.col("socialMedia")["x"],
-            "socialmedia_instagram": lambda df: F.col("socialMedia")["instagram"],
-            "socialmedia_telegram": lambda df: F.col("socialMedia")["telegram"],
-            "province_id": lambda df: F.col("province_id"),
-            "municipality_id": lambda df: F.col("municipality_id"),
-            "role_id": lambda df: F.col("role_id"),
+            "profile_status": F.lit("COMPLETED"),
+            "socialmedia_x": F.col("socialMedia")["x"],
+            "socialmedia_instagram": F.col("socialMedia")["instagram"],
+            "socialmedia_telegram": F.col("socialMedia")["telegram"],
+            "province_id": F.col("province_id"),
+            "municipality_id": F.col("municipality_id"),
+            "role_id": F.col("role_id"),
             # F28 redaction side-columns
-            "deleted_name": lambda df: F.when(deleted(df), name_col(df)),
-            "deleted_email": lambda df: F.when(
-                deleted(df), S.email_normalize("email")
-            ),
-            "deleted_at": lambda df: F.when(deleted(df), F.lit(run_ts)),
-            "created_at": lambda df: F.coalesce(F.col("createdAt"), F.lit(run_ts)),
+            "deleted_name": F.when(deleted, name_col),
+            "deleted_email": F.when(deleted, S.email_normalize("email")),
+            "deleted_at": F.when(deleted, F.lit(run_ts)),
+            "created_at": F.coalesce(F.col("createdAt"), F.lit(run_ts)),
         },
-        key=KeySpec(kind="sequential", order_by=("mongo_id",), out="id"),
+        sequential_id=True,
         # dual destination (orchestrator.py:455-507): the Cassandra
         # users projection shares ids with PG by construction (K4)
         side_outputs={
             "users_cassandra": (
                 None,
                 {
-                    "user_id": lambda df: F.col("id"),
-                    "mongo_id": lambda df: F.col("mongo_id"),
-                    "name": lambda df: F.col("name"),
-                    "phone": lambda df: S.phone_e164ish(F.col("phone")),
-                    "role_id": lambda df: F.col("role_id"),
+                    "user_id": F.col("id"),
+                    "mongo_id": F.col("mongo_id"),
+                    "name": F.col("name"),
+                    "phone": S.phone_e164ish(F.col("phone")),
+                    "role_id": F.col("role_id"),
                 },
             )
         },
@@ -214,58 +208,52 @@ def rooms_spec(run_ts: datetime) -> EntitySpec:
     """Cassandra room_details + organizations + rooms_by_mongo fanout
     (field_mapper.py:94-113, orchestrator.py:326-373) — one compiled
     frame, three destinations (§2.9)."""
-    is_group = lambda df: F.coalesce(F.col("isGroup"), F.lit(False))  # noqa: E731
+    is_group = F.coalesce(F.col("isGroup"), F.lit(False))
 
     return EntitySpec(
         destination="room_details",
         projection={
-            "mongo_id": lambda df: F.col("_id"),
-            "room_name": lambda df: F.coalesce(
+            "mongo_id": F.col("_id"),
+            "room_name": F.coalesce(
                 F.nullif(F.col("name"), F.lit("")),
                 F.concat(F.lit("Room "), F.col("_id")),
             ),
-            "room_type": lambda df: S.room_type("isBroadcast", "isGroup"),
+            "room_type": S.room_type("isBroadcast", "isGroup"),
             # F9 permission derivation
-            "send_message": lambda df: F.when(
-                is_group(df),
+            "send_message": F.when(
+                is_group,
                 F.coalesce(
                     F.col("permissions")["canSendMessage"],
                     F.col("canWrite"),
                     F.lit(True),
                 ),
             ).otherwise(F.lit(True)),
-            "add_member": lambda df: F.when(is_group(df), F.lit(True)).otherwise(
-                F.lit(False)
-            ),
+            "add_member": F.when(is_group, F.lit(True)).otherwise(F.lit(False)),
             # data_transformer.py:537-556: groups keep the edit=False
             # default; the NON-group branch (p2p — and the reference
             # routes broadcast there too) sets edit_group=True. The
             # validated p2p triple is (send=T, add=F, edit=T).
-            "edit_group": lambda df: F.when(is_group(df), F.lit(False)).otherwise(
-                F.lit(True)
-            ),
-            "join_all_user": lambda df: F.coalesce(F.col("isPublic"), F.lit(False)),
-            "_is_organization": lambda df: F.coalesce(
-                F.col("isAdmin"), F.lit(False)
-            ),
-            "created_at": lambda df: F.coalesce(F.col("createdAt"), F.lit(run_ts)),
+            "edit_group": F.when(is_group, F.lit(False)).otherwise(F.lit(True)),
+            "join_all_user": F.coalesce(F.col("isPublic"), F.lit(False)),
+            "_is_organization": F.coalesce(F.col("isAdmin"), F.lit(False)),
+            "created_at": F.coalesce(F.col("createdAt"), F.lit(run_ts)),
         },
-        key=KeySpec(kind="uuid5", source_col="mongo_id", out="room_id"),
+        keys={"room_id": uuid5_oid("mongo_id")},
         side_outputs={
             "organizations": (
-                lambda df: F.col("_is_organization"),
+                F.col("_is_organization"),
                 {
-                    "room_id": lambda df: F.col("room_id"),
-                    "mongo_id": lambda df: F.col("mongo_id"),
-                    "room_name": lambda df: F.col("room_name"),
-                    "created_at": lambda df: F.col("created_at"),
+                    "room_id": F.col("room_id"),
+                    "mongo_id": F.col("mongo_id"),
+                    "room_name": F.col("room_name"),
+                    "created_at": F.col("created_at"),
                 },
             ),
             "rooms_by_mongo": (
                 None,
                 {
-                    "mongo_id": lambda df: F.col("mongo_id"),
-                    "room_id": lambda df: F.col("room_id"),
+                    "mongo_id": F.col("mongo_id"),
+                    "room_id": F.col("room_id"),
                 },
             ),
         },
@@ -292,42 +280,39 @@ def messages_spec(
     ``crypto.make_url_decrypt_rewrite`` builder, shared with the docs
     stage (see :func:`run_reference_pipeline`)."""
     has_url = F.col("fileURL").isNotNull() & (F.col("fileURL") != "")
+    # cast via instant: TIMESTAMP_NTZ has no direct double cast
+    created_ms = (
+        F.col("created_at").cast("timestamp").cast("double") * 1000
+    ).cast("bigint")
     return EntitySpec(
         destination="messages_by_room",
         filters=(
-            lambda df: (
-                # $nin matches documents where the field is ABSENT
-                # (mongo_extractor.py:63-64): NULL msgType passes.
-                (
-                    F.col("msgType").isNull()
-                    | ~F.col("msgType").isin(*BANNED_MSG_TYPES)
-                )
-                & (
-                    F.col("msgLife").isNull()
-                    | (F.col("msgLife") != F.lit("TOUCH_SHOW_DELETE"))
-                )
-                # tri-valued: missing isActive counts as active (§7.4.6)
-                & F.coalesce(F.col("isActive"), F.lit(True))
-                & ~F.coalesce(F.col("isDeleted"), F.lit(False))
-            ),
+            # $nin matches documents where the field is ABSENT
+            # (mongo_extractor.py:63-64): NULL msgType passes.
+            (F.col("msgType").isNull() | ~F.col("msgType").isin(*BANNED_MSG_TYPES))
+            & (
+                F.col("msgLife").isNull()
+                | (F.col("msgLife") != F.lit("TOUCH_SHOW_DELETE"))
+            )
+            # tri-valued: missing isActive counts as active (§7.4.6)
+            & F.coalesce(F.col("isActive"), F.lit(True))
+            & ~F.coalesce(F.col("isDeleted"), F.lit(False)),
         ),
         derivations={
-            "sender_ref": lambda df: ref_id("sender"),
+            "sender_ref": ref_id("sender"),
             # F26: decrypt (fallback to raw when not decryptable, i.e.
             # already-plaintext), then F5 bucket rewrite — the order the
             # reference uses; the .pdf gate below sees THIS value.
-            "file_url_rw": lambda df: decrypt_rewrite("fileURL"),
+            "file_url_rw": decrypt_rewrite("fileURL"),
         },
         post_filters=(
             # F21/P7: DOCUMENTO attachments must be .pdf — tested on the
             # decrypted, rewritten URL (data_transformer.py:433-443).
             # Empty/absent fileURL skips the gate entirely.
-            lambda df: (
-                ~has_url
-                | F.col("fileType").isNull()
-                | (F.col("fileType") != "DOCUMENTO")
-                | F.col("file_url_rw").endswith(".pdf")
-            ),
+            ~has_url
+            | F.col("fileType").isNull()
+            | (F.col("fileType") != "DOCUMENTO")
+            | F.col("file_url_rw").endswith(".pdf"),
         ),
         fk_joins=(
             # unresolved room refs are skipped (id_mapper miss ⇒ inner)
@@ -335,40 +320,35 @@ def messages_spec(
             FKJoin(dim="user_by_mongo", on="sender_ref", out="sender_id"),
         ),
         projection={
-            "room_id": lambda df: F.col("room_id"),
-            "mongo_id": lambda df: F.col("_id"),
-            "sender_id": lambda df: F.col("sender_id"),
-            "content": lambda df: S.content_truncate(
+            "room_id": F.col("room_id"),
+            "mongo_id": F.col("_id"),
+            "sender_id": F.col("sender_id"),
+            "content": S.content_truncate(
                 F.coalesce(F.col("message"), F.col("content"), F.lit(""))
             ),
             # mime/file_url only materialize when a fileURL was present
             # (reference leaves them unset otherwise).
-            "mime_type": lambda df: F.when(
+            "mime_type": F.when(
                 has_url, S.mime_from_filetype("fileType", "file_url_rw")
             ),
-            "file_url": lambda df: F.when(has_url, F.col("file_url_rw")),
+            "file_url": F.when(has_url, F.col("file_url_rw")),
             # destination columns are snake_case (schema_manager adds
             # messages_by_room.file_name/file_size, SURVEY S12)
-            "file_name": lambda df: F.col("fileName"),
-            "file_size": lambda df: F.col("fileSize"),
+            "file_name": F.col("fileName"),
+            "file_size": F.col("fileSize"),
             # missing createdAt falls back to the injected run_ts (the
             # reference's datetime.now() default, replayable §7.4.7) —
             # a NULL here would null the timeuuid PRIMARY KEY
-            "created_at": lambda df: F.coalesce(F.col("createdAt"), F.lit(run_ts)),
+            "created_at": F.coalesce(F.col("createdAt"), F.lit(run_ts)),
         },
-        key=KeySpec(
-            kind="timeuuid",
-            source_col="mongo_id",
-            order_by=("created_at",),
-            out="message_id",
-        ),
+        keys={"message_id": timeuuid_deterministic("mongo_id", created_ms)},
         side_outputs={
             "room_by_message": (
                 None,
                 {
-                    "message_id": lambda df: F.col("message_id"),
-                    "room_id": lambda df: F.col("room_id"),
-                    "mongo_id": lambda df: F.col("mongo_id"),
+                    "message_id": F.col("message_id"),
+                    "room_id": F.col("room_id"),
+                    "mongo_id": F.col("mongo_id"),
                 },
             )
         },
@@ -381,28 +361,28 @@ def members_spec(run_ts: datetime) -> EntitySpec:
     return EntitySpec(
         destination="participants_by_room",
         derivations={
-            "room_ref": lambda df: ref_id("room"),
-            "user_ref": lambda df: ref_id("user"),
+            "room_ref": ref_id("room"),
+            "user_ref": ref_id("user"),
         },
         fk_joins=(
             FKJoin(dim="rooms_by_mongo", on="room_ref", out="room_id", how="inner"),
             FKJoin(dim="user_by_mongo", on="user_ref", out="user_id", how="inner"),
         ),
         projection={
-            "room_id": lambda df: F.col("room_id"),
-            "user_id": lambda df: F.col("user_id"),
-            "role": lambda df: S.upper_role(F.col("role")),
-            "mongo_id": lambda df: F.col("_id"),
-            "joined_at": lambda df: F.coalesce(F.col("joinedAt"), F.lit(run_ts)),
+            "room_id": F.col("room_id"),
+            "user_id": F.col("user_id"),
+            "role": S.upper_role(F.col("role")),
+            "mongo_id": F.col("_id"),
+            "joined_at": F.coalesce(F.col("joinedAt"), F.lit(run_ts)),
         },
         side_outputs={
             "room_membership_lookup": (
                 None,
                 {
-                    "user_id": lambda df: F.col("user_id"),
-                    "room_id": lambda df: F.col("room_id"),
-                    "role": lambda df: F.col("role"),
-                    "last_message_at": lambda df: F.lit(None).cast("timestamp"),
+                    "user_id": F.col("user_id"),
+                    "room_id": F.col("room_id"),
+                    "role": F.col("role"),
+                    "last_message_at": F.lit(None).cast("timestamp"),
                 },
             )
         },
@@ -413,11 +393,11 @@ def professions_spec() -> EntitySpec:
     return EntitySpec(
         destination="profession",
         projection={
-            "mongo_id": lambda df: F.col("_id"),
-            "name": lambda df: F.col("name"),
-            "name_es": lambda df: F.col("name_es"),
+            "mongo_id": F.col("_id"),
+            "name": F.col("name"),
+            "name_es": F.col("name_es"),
         },
-        key=KeySpec(kind="sequential", order_by=("mongo_id",), out="id"),
+        sequential_id=True,
     )
 
 
@@ -426,25 +406,24 @@ def channel_spec(run_ts: datetime) -> EntitySpec:
     array length, J1 createdBy FK)."""
     return EntitySpec(
         destination="channel",
-        derivations={"created_by_ref": lambda df: ref_id("createdBy")},
+        derivations={"created_by_ref": ref_id("createdBy")},
         fk_joins=(
             FKJoin(dim="user_by_mongo", on="created_by_ref", out="created_by"),
         ),
         projection={
-            "mongo_id": lambda df: F.col("_id"),
-            "name": lambda df: F.col("name"),
-            "description": lambda df: F.col("description"),
-            "is_active": lambda df: F.coalesce(
-                F.col("isActive"), F.col("visible"), F.lit(True)
+            "mongo_id": F.col("_id"),
+            "name": F.col("name"),
+            "description": F.col("description"),
+            "is_active": F.coalesce(F.col("isActive"), F.col("visible"), F.lit(True)),
+            "picture": S.bucket_url_rewrite(url_of("picture")),
+            "cover": S.bucket_url_rewrite(url_of("cover")),
+            "lives_count": F.when(F.col("lives").isNull(), F.lit(0)).otherwise(
+                F.size(F.col("lives"))
             ),
-            "picture": lambda df: S.bucket_url_rewrite(url_of("picture")),
-            "cover": lambda df: S.bucket_url_rewrite(url_of("cover")),
-            "lives_count": lambda df: F.when(F.col("lives").isNull(), F.lit(0))
-            .otherwise(F.size(F.col("lives"))),
-            "created_by": lambda df: F.col("created_by"),
-            "created_at": lambda df: F.coalesce(F.col("createdAt"), F.lit(run_ts)),
+            "created_by": F.col("created_by"),
+            "created_at": F.coalesce(F.col("createdAt"), F.lit(run_ts)),
         },
-        key=KeySpec(kind="sequential", order_by=("mongo_id",), out="id"),
+        sequential_id=True,
     )
 
 
@@ -453,13 +432,13 @@ def live_spec(run_ts: datetime) -> EntitySpec:
     photo coalesce + F5 rewrite, soft delete)."""
     return EntitySpec(
         destination="live",
-        derivations={"channel_ref": lambda df: ref_id("channel")},
+        derivations={"channel_ref": ref_id("channel")},
         fk_joins=(FKJoin(dim="channel_by_mongo", on="channel_ref", out="channel_id"),),
         projection={
-            "mongo_id": lambda df: F.col("_id"),
-            "title": lambda df: F.coalesce(F.col("title"), F.col("name")),
-            "description": lambda df: F.col("description"),
-            "photo_url": lambda df: S.bucket_url_rewrite(
+            "mongo_id": F.col("_id"),
+            "title": F.coalesce(F.col("title"), F.col("name")),
+            "description": F.col("description"),
+            "photo_url": S.bucket_url_rewrite(
                 F.coalesce(
                     url_of("photoURL"),
                     url_of("coverImage"),
@@ -468,21 +447,21 @@ def live_spec(run_ts: datetime) -> EntitySpec:
                     url_of("image"),
                 )
             ),
-            "status": lambda df: F.when(
+            "status": F.when(
                 F.coalesce(F.col("isFinished"), F.lit(False)), "FINISHED"
             ).otherwise("LIVE"),
-            "live_type": lambda df: F.lit("YOUTUBE"),
-            "category": lambda df: F.when(
+            "live_type": F.lit("YOUTUBE"),
+            "category": F.when(
                 F.coalesce(F.col("isFeatured"), F.lit(False)), "FEATURED"
             ).otherwise("MORE_TO_SEE"),
-            "viewers": lambda df: F.lit(0),
-            "live_url": lambda df: F.coalesce(F.col("liveUrl"), F.col("url")),
-            "channel_id": lambda df: F.col("channel_id"),
-            "deleted_at": lambda df: F.when(
+            "viewers": F.lit(0),
+            "live_url": F.coalesce(F.col("liveUrl"), F.col("url")),
+            "channel_id": F.col("channel_id"),
+            "deleted_at": F.when(
                 ~F.coalesce(F.col("isActive"), F.lit(True)), F.lit(run_ts)
             ),
         },
-        key=KeySpec(kind="sequential", order_by=("mongo_id",), out="id"),
+        sequential_id=True,
     )
 
 

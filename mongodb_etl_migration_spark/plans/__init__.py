@@ -3,6 +3,5 @@
 from mongodb_etl_migration_spark.plans.spec import (  # noqa: F401
     EntitySpec,
     FKJoin,
-    KeySpec,
 )
 from mongodb_etl_migration_spark.plans.compiler import compile_entity  # noqa: F401

@@ -9,8 +9,9 @@ Stage order matters for Catalyst:
    etl/utils/id_mapper.py:22-92);
 3. projection to destination columns (FieldMapper,
    etl/transformers/field_mapper.py:550-578);
-4. surrogate keys last (deterministic; never a join dependency —
-   SURVEY §4 "candidate-but-rejected").
+4. surrogate keys last, over the projected columns (deterministic;
+   never a join dependency — SURVEY §4 "candidate-but-rejected"): the
+   spec's key Columns in order, or sequential ids by ``mongo_id``.
 """
 
 from __future__ import annotations
@@ -18,11 +19,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from mongodb_etl_migration_spark.functions.keys import (
-    assign_sequential_ids,
-    timeuuid_deterministic,
-    uuid5_oid,
-)
+from mongodb_etl_migration_spark.functions.keys import assign_sequential_ids
 from mongodb_etl_migration_spark.plans.spec import EntitySpec
 
 
@@ -39,13 +36,13 @@ def compile_entity(
     """
     df = source_df
     for pred in spec.filters:
-        df = df.filter(pred(df))
+        df = df.filter(pred)
 
-    for name, builder in spec.derivations.items():
-        df = df.withColumn(name, builder(df))
+    for name, col in spec.derivations.items():
+        df = df.withColumn(name, col)
 
     for pred in spec.post_filters:
-        df = df.filter(pred(df))
+        df = df.filter(pred)
 
     for fk in spec.fk_joins:
         if id_maps is None or fk.dim not in id_maps:
@@ -55,28 +52,12 @@ def compile_entity(
         )
         df = df.join(F.broadcast(dim), fk.on, fk.how)
 
-    if spec.projection:
-        df = df.select(
-            *[builder(df).alias(dest) for dest, builder in spec.projection.items()]
-        )
+    df = df.select(*[col.alias(dest) for dest, col in spec.projection.items()])
 
-    key = spec.key
-    if key is not None:
-        if key.kind == "sequential":
-            df = assign_sequential_ids(df, list(key.order_by), key.out)
-        elif key.kind == "uuid5":
-            df = df.withColumn(key.out, uuid5_oid(F.col(key.source_col)))
-        elif key.kind == "timeuuid":
-            ts_col, src = key.order_by[0], key.source_col
-            # cast via instant: TIMESTAMP_NTZ has no direct double cast
-            ms = (
-                F.col(ts_col).cast("timestamp").cast("double") * 1000
-            ).cast("bigint")
-            df = df.withColumn(
-                key.out, timeuuid_deterministic(F.col(src), ms)
-            )
-        else:
-            raise ValueError(f"unknown key kind {key.kind!r}")
+    for name, col in spec.keys.items():
+        df = df.withColumn(name, col)
+    if spec.sequential_id:
+        df = assign_sequential_ids(df, ["mongo_id"], "id")
     return df
 
 
@@ -112,8 +93,6 @@ def compile_entity_outputs(
     main = main.localCheckpoint(eager=False)
     outs = {spec.destination: main}
     for name, (pred, projection) in spec.side_outputs.items():
-        df = main.filter(pred(main)) if pred is not None else main
-        outs[name] = df.select(
-            *[builder(df).alias(dest) for dest, builder in projection.items()]
-        )
+        df = main.filter(pred) if pred is not None else main
+        outs[name] = df.select(*[col.alias(dest) for dest, col in projection.items()])
     return outs

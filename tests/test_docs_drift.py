@@ -9,6 +9,7 @@ commit as the query.
 
 from __future__ import annotations
 
+import ast
 import pathlib
 import re
 
@@ -51,3 +52,36 @@ def test_documented_script_paths_exist():
         }
     )
     assert missing == [], f"docs name scripts that do not exist: {missing}"
+
+
+def _top_level_names(path: pathlib.Path) -> set[str]:
+    """Names a module defines at top level: defs, classes, assignments."""
+    names = set()
+    for node in ast.parse(path.read_text()).body:
+        if isinstance(node, (ast.FunctionDef, ast.AsyncFunctionDef, ast.ClassDef)):
+            names.add(node.name)
+        elif isinstance(node, (ast.Assign, ast.AnnAssign)):
+            targets = node.targets if isinstance(node, ast.Assign) else [node.target]
+            names |= {
+                n.id for t in targets for n in ast.walk(t) if isinstance(n, ast.Name)
+            }
+    return names
+
+
+def test_documented_package_names_exist():
+    """Every backticked ``module.name`` the user-facing docs give for a
+    package module must be defined at that module's top level: a
+    renamed or deleted function must take its doc references with it.
+    ``module.py`` file names are not names."""
+    defined = {
+        p.stem: _top_level_names(p)
+        for p in (REPO / "mongodb_etl_migration_spark").rglob("*.py")
+        if p.name != "__init__.py"
+    }
+    missing = {
+        (doc, f"{mod}.{name}")
+        for doc in ["README.md", "COVERAGE.md"]
+        for mod, name in re.findall(r"`(\w+)\.(\w+)", (REPO / doc).read_text())
+        if mod in defined and name != "py" and name not in defined[mod]
+    }
+    assert missing == set(), f"docs name package members that do not exist: {missing}"

@@ -26,7 +26,7 @@ from mongodb_etl_migration_spark.sources.writers import (
 
 def _cols(*names):
     """Identity projection dict for an EntitySpec."""
-    return {n: (lambda df, n=n: F.col(n)) for n in names}
+    return {n: F.col(n) for n in names}
 
 
 def test_fanout_projections_and_writes(spark, sf_dir, tmp_path):
@@ -39,7 +39,7 @@ def test_fanout_projections_and_writes(spark, sf_dir, tmp_path):
         projection=_cols("c_custkey", "c_name", "c_mktsegment", "_is_org"),
         side_outputs={
             "organizations": (
-                lambda df: F.col("_is_org"),
+                F.col("_is_org"),
                 _cols("c_custkey", "_is_org"),
             ),
             "by_segment": (None, _cols("c_mktsegment", "c_custkey")),
@@ -73,7 +73,7 @@ def test_fanout_leaves_no_cache_entries(spark, sf_dir):
         projection=_cols("r_regionkey", "r_name", "k"),
         side_outputs={
             # a filter that keeps every row: the counts below stay equal
-            "a": (lambda df: F.col("r_regionkey") >= 0, _cols("r_regionkey", "k")),
+            "a": (F.col("r_regionkey") >= 0, _cols("r_regionkey", "k")),
             "b": (None, _cols("r_name")),
         },
     )

@@ -5,6 +5,8 @@ per encryption.py:326-353).
 
 from __future__ import annotations
 
+import hashlib
+import math
 import uuid as _uuid
 
 from pyspark.sql import functions as F
@@ -57,16 +59,33 @@ def test_uuid5_udf_matches_python(spark):
         assert got[s] == str(_uuid.uuid5(_uuid.NAMESPACE_OID, s))
 
 
-def test_uuid_column_forms_match_arrow_twins(spark):
-    """The r14 JVM-codegen rewrites of uuid5_oid / timeuuid_deterministic
-    must stay byte-equal to the original Arrow-batched implementations
-    (kept as *_arrow twins) on every edge shape: NULLs, empty string,
-    multi-byte unicode, long strings, epoch/negative timestamps."""
-    from mongodb_etl_migration_spark.functions.keys import (
-        timeuuid_deterministic_arrow,
-        uuid5_oid_arrow,
+def _timeuuid_reference(mid: str | None, ms: float | None) -> str | None:
+    """Plain-Python timeuuid_deterministic: the v1 layout over the
+    given milliseconds with sha1(mid)'s clock-seq/node bits; NULL or
+    NaN input gives NULL."""
+    if mid is None or ms is None or math.isnan(ms):
+        return None
+    # 100-ns intervals since 1582-10-15 (RFC 4122 epoch offset).
+    timestamp = int(ms) * 10000 + 0x01B21DD213814000
+    time_low = timestamp & 0xFFFFFFFF
+    time_mid = (timestamp >> 32) & 0xFFFF
+    time_hi_version = ((timestamp >> 48) & 0x0FFF) | (1 << 12)
+    h = hashlib.sha1(mid.encode("utf-8")).digest()
+    clock_seq = ((h[0] & 0x3F) | 0x80) << 8 | h[1]
+    node = int.from_bytes(h[2:8], "big")
+    return str(
+        _uuid.UUID(
+            fields=(time_low, time_mid, time_hi_version,
+                    clock_seq >> 8, clock_seq & 0xFF, node)
+        )
     )
 
+
+def test_uuid_column_forms_known_answers(spark):
+    """The JVM-codegen uuid5_oid / timeuuid_deterministic equal their
+    plain-Python definitions on every edge shape: NULLs, empty string,
+    multi-byte unicode, long strings, tab/newline, epoch/negative/NULL
+    timestamps and NaN double timestamps."""
     ids = [
         "",
         "ñandú ✓ unicode",
@@ -77,11 +96,10 @@ def test_uuid_column_forms_match_arrow_twins(spark):
         None,
     ] + [f"{i:024x}" for i in range(20)]
     df = spark.createDataFrame([(s,) for s in ids], "mongo_id string")
-    for r in df.select(
-        uuid5_oid(F.col("mongo_id")).alias("col_form"),
-        uuid5_oid_arrow(F.col("mongo_id")).alias("arrow_form"),
-    ).collect():
-        assert r["col_form"] == r["arrow_form"]
+    for r in df.select("mongo_id", uuid5_oid(F.col("mongo_id")).alias("u")).collect():
+        s = r["mongo_id"]
+        want = None if s is None else str(_uuid.uuid5(_uuid.NAMESPACE_OID, s))
+        assert r["u"] == want, s
 
     tu_rows = [
         ("edge", 0),
@@ -90,34 +108,24 @@ def test_uuid_column_forms_match_arrow_twins(spark):
         (None, 123),
         ("nullms", None),
     ] + [(f"{i:024x}", 1_600_000_000_000 + i * 997) for i in range(20)]
-    df2 = spark.createDataFrame(tu_rows, "mongo_id string, ms long")
-    for r in df2.select(
-        timeuuid_deterministic(F.col("mongo_id"), F.col("ms")).alias("col_form"),
-        timeuuid_deterministic_arrow(F.col("mongo_id"), F.col("ms")).alias(
-            "arrow_form"
-        ),
-    ).collect():
-        assert r["col_form"] == r["arrow_form"]
-
-    # double ts_millis with NaN (ADVICE r14): the twin returns NULL via
-    # pd.isna; the Column form must too (cast('long') would give 0)
+    # double ts_millis with NaN (ADVICE r14): cast('long') would give
+    # 0, a uuid at the 1582 epoch; the key must be NULL instead
     nan_rows = [
         ("nan", float("nan")),
         ("ok", 1_600_000_000_000.0),
         ("zero", 0.0),
         (None, float("nan")),
     ]
-    df3 = spark.createDataFrame(nan_rows, "mongo_id string, ms double")
-    for r in df3.select(
-        F.col("mongo_id"),
-        timeuuid_deterministic(F.col("mongo_id"), F.col("ms")).alias(
-            "col_form"
-        ),
-        timeuuid_deterministic_arrow(F.col("mongo_id"), F.col("ms")).alias(
-            "arrow_form"
-        ),
-    ).collect():
-        assert r["col_form"] == r["arrow_form"], r["mongo_id"]
+    for rows, ddl in ((tu_rows, "ms long"), (nan_rows, "ms double")):
+        df2 = spark.createDataFrame(rows, f"mongo_id string, {ddl}")
+        got = df2.select(
+            "mongo_id",
+            "ms",
+            timeuuid_deterministic(F.col("mongo_id"), F.col("ms")).alias("tu"),
+        ).collect()
+        assert len(got) == len(rows)
+        for r in got:
+            assert r["tu"] == _timeuuid_reference(r["mongo_id"], r["ms"]), r
 
 
 def test_timeuuid_properties(spark):

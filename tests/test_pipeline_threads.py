@@ -66,10 +66,25 @@ def test_no_build_thread_outlives_the_build(grouped_run):
 
 
 def test_two_concurrent_builds_write_identical_tables(spark, grouped_run):
+    """A second build, and builds under other partition counts and
+    without adaptive execution, write the same 22 tables: no id or row
+    depends on how the session splits or re-plans the work."""
     out1, _, _ = grouped_run
-    out2 = run_reference_pipeline(all_sources(spark), RUN_TS)
     assert len(out1) == 22
-    assert _digest(out1) == _digest(out2)
+    want = _digest(out1)
+    assert _digest(run_reference_pipeline(all_sources(spark), RUN_TS)) == want
+    for key, value in (
+        ("spark.sql.shuffle.partitions", "1"),
+        ("spark.sql.shuffle.partitions", "7"),
+        ("spark.sql.adaptive.enabled", "false"),
+    ):
+        old = spark.conf.get(key)
+        spark.conf.set(key, value)
+        try:
+            got = _digest(run_reference_pipeline(all_sources(spark), RUN_TS))
+        finally:
+            spark.conf.set(key, old)
+        assert got == want, f"{key}={value}"
 
 
 class _Boom(Exception):
