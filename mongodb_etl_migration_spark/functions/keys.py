@@ -110,7 +110,6 @@ def assign_sequential_ids(
     order_by: list[Column | str],
     id_col: str = "id",
     start: int = 1,
-    num_partitions: int | None = None,
 ) -> DataFrame:
     """Contiguous sequential int ids, deterministic given sort order —
     etl/utils/cassandra_id_mapper.py:212-230,257-267 (global counter
@@ -153,16 +152,11 @@ def assign_sequential_ids(
     range shuffle) before this function returns. The offsets aggregate
     and the ids run with the consumer's action.
 
-    ``num_partitions`` sizes the range shuffle; it defaults to
-    ``spark.sql.shuffle.partitions``. Callers numbering a KNOWN
-    dimension-sized set should pass a small value — every range
-    partition is a task in each job that reads the numbering, so 32
-    partitions of 100 rows is pure scheduling overhead, while at
-    fact-table scale the default keeps the sort parallel.
+    The range shuffle is ``spark.sql.shuffle.partitions`` wide: every
+    range partition is a task in each job that reads the numbering,
+    and at fact-table scale that width keeps the sort parallel.
     """
-    n_part = num_partitions or int(
-        df.sparkSession.conf.get("spark.sql.shuffle.partitions", "32")
-    )
+    n_part = int(df.sparkSession.conf.get("spark.sql.shuffle.partitions", "32"))
     w = Window.partitionBy("__pid").orderBy(*order_by)
     numbered = (
         df.localCheckpoint(eager=False)

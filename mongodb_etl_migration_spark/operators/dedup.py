@@ -481,7 +481,6 @@ def connected_components(
     id_a: str = "id_a",
     id_b: str = "id_b",
     max_iterations: int = 50,
-    algorithm: str = "star",
     with_rounds: bool = False,
 ) -> DataFrame:
     """Connected components over the near-dup pair graph → one
@@ -489,85 +488,29 @@ def connected_components(
     the step after LSH that production dedup needs: pairs say "these
     two match"; clusters say "keep ONE of these five".
 
-    Two algorithms, identical output:
-
-    - ``"star"`` (default): alternating large-star/small-star
-      (Kiveris et al., "Connected Components in MapReduce and
-      Beyond", SoCC'14) — O(log n) rounds even on chain/skew-shaped
-      clusters, the realistic worst case at 100 TB (transitive
-      near-dup chains). Each round restructures the edge set toward
-      stars centered on the component minimum.
-    - ``"hash_min"``: label propagation — O(component diameter)
-      rounds, slightly cheaper per round; fine when clusters are
-      known to be tiny cliques (diameter ≤ 2-3).
-
-    Both localCheckpoint per round: iterative plans otherwise double
-    in depth each round and re-execute from the source.
+    Alternating large-star/small-star (Kiveris et al., "Connected
+    Components in MapReduce and Beyond", SoCC'14): O(log n) rounds
+    even on chain/skew-shaped clusters, the realistic worst case at
+    100 TB (transitive near-dup chains), where label propagation
+    needs O(component diameter) rounds. Each round restructures the
+    edge set toward stars centered on the component minimum and
+    localCheckpoints it: iterative plans otherwise double in depth
+    each round and re-execute from the source.
 
     Output: (id, component) for every id in ``pairs``; with
     ``with_rounds`` returns (labels_df, rounds_used).
     """
-    # Materialize the (id_a, id_b) projection ONCE before either
-    # algorithm derives its node set and edge set from it: both
-    # derivations are separate actions, and an un-materialized pairs
-    # frame re-executes its whole upstream plan (for the media
-    # near-dup chains that plan is the decode + banded self-join —
-    # measured as the duplicated MapInPandas subtree in the r14
-    # before-plans) once per derivation. Lazy checkpoint: the first
-    # action computes it, every later action reads the persisted RDD.
+    # Materialize the (id_a, id_b) projection ONCE before the node set
+    # and the edge set are derived from it: both derivations are
+    # separate actions, and an un-materialized pairs frame re-executes
+    # its whole upstream plan (for the media near-dup chains that plan
+    # is the decode + banded self-join — measured as the duplicated
+    # MapInPandas subtree in the r14 before-plans) once per
+    # derivation. Lazy checkpoint: the first action computes it, every
+    # later action reads the persisted RDD.
     pairs = pairs.select(id_a, id_b).localCheckpoint(eager=False)
-    if algorithm == "hash_min":
-        labels, rounds = _cc_hash_min(pairs, id_a, id_b, max_iterations)
-    elif algorithm == "star":
-        labels, rounds = _cc_star(pairs, id_a, id_b, max_iterations)
-    else:
-        raise ValueError(f"unknown algorithm {algorithm!r}")
+    labels, rounds = _cc_star(pairs, id_a, id_b, max_iterations)
     return (labels, rounds) if with_rounds else labels
-
-
-def _cc_hash_min(
-    pairs: DataFrame, id_a: str, id_b: str, max_iterations: int
-) -> tuple[DataFrame, int]:
-    edges = (
-        pairs.select(F.col(id_a).alias("src"), F.col(id_b).alias("dst"))
-        .unionByName(
-            pairs.select(F.col(id_b).alias("src"), F.col(id_a).alias("dst"))
-        )
-        .distinct()
-        .persist()
-    )
-    labels = (
-        edges.select(F.col("src").alias("id"))
-        .distinct()
-        .withColumn("label", F.col("id"))
-        .localCheckpoint(eager=False)
-    )
-    rounds = 0
-    for _ in range(max_iterations):
-        rounds += 1
-        msgs = (
-            edges.join(labels, edges["src"] == labels["id"])
-            .select(F.col("dst").alias("id"), F.col("label"))
-        )
-        # lazy checkpoint: the `changed` count below is the round's
-        # one materializing job (the _cc_star trick)
-        new_labels = (
-            labels.unionByName(msgs)
-            .groupBy("id")
-            .agg(F.min("label").alias("label"))
-            .localCheckpoint(eager=False)
-        )
-        changed = (
-            new_labels.alias("n")
-            .join(labels.alias("o"), "id")
-            .filter(F.col("n.label") != F.col("o.label"))
-            .count()
-        )
-        labels = new_labels
-        if changed == 0:
-            break
-    edges.unpersist()
-    return labels.select(F.col("id"), F.col("label").alias("component")), rounds
 
 
 def _cc_star(
@@ -580,8 +523,7 @@ def _cc_star(
 
     Self-pairs (u == v) carry no connectivity and are dropped from the
     edge set, but their ids still get a singleton (id, id) label row
-    at the end — same contract as hash_min: every id in ``pairs``
-    appears in the output."""
+    at the end: every id in ``pairs`` appears in the output."""
     # ids is consumed exactly once (the singleton anti-join at the
     # end) and reads the already-checkpointed pairs — no checkpoint
     # of its own, its job folds into the final labels action.

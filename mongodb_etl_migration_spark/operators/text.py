@@ -1056,7 +1056,6 @@ def epoch_shuffle(
     key_cols: list[str],
     seed: int,
     pos_col: str = "epoch_pos",
-    num_partitions: int | None = None,
 ):
     """Deterministic training-epoch shuffle — the seeded reproducible
     global permutation a training loader consumes after
@@ -1080,7 +1079,8 @@ def epoch_shuffle(
     balance regardless of input skew) and per-partition numbering
     with broadcast offsets via keys.assign_sequential_ids — never a
     global window. The offsets are an in-plan cumulative sum over one
-    row-count per range partition, bounded by ``num_partitions``.
+    row-count per range partition, ``spark.sql.shuffle.partitions``
+    of them.
 
     Output: input columns + ``pos_col`` (0-based dense epoch
     position). Ties beyond the 128-bit hash are broken by the key
@@ -1127,7 +1127,6 @@ def epoch_shuffle(
         id_col=pos_col,
         order_by=["__shuffle_key", *key_cols],
         start=0,
-        num_partitions=num_partitions,
     )
     return numbered.drop("__shuffle_key")
 

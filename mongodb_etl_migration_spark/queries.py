@@ -5063,8 +5063,8 @@ def _d6_oracle() -> str:
 
 @query("d6_dedup_clusters", _d6_oracle())
 def d6_dedup_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """D6: near-dup CLUSTERS from the d2 candidate pairs — hash-min
-    label propagation (operators/dedup.connected_components) vs the
+    """D6: near-dup CLUSTERS from the d2 candidate pairs — large-star/
+    small-star (operators/dedup.connected_components) vs the
     oracle's recursive-CTE transitive closure. Every paired doc gets
     component = min reachable doc_id."""
     pairs = D.minhash_dedup_pairs(

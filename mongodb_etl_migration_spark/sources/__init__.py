@@ -1,9 +1,5 @@
 """Readers and writers (parquet-first; connector-shaped interfaces)."""
 
-from mongodb_etl_migration_spark.sources.readers import (  # noqa: F401
-    read_entity,
-    read_json_documents,
-)
 from mongodb_etl_migration_spark.sources.writers import (  # noqa: F401
     write_clustered,
     write_table,

@@ -29,35 +29,36 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.types import StringType, StructField, StructType
 
-CORRUPT_COL = "_corrupt_record"
+from mongodb_etl_migration_spark.sources.files import CORRUPT_COL
 
 
-def read_jsonl(
-    spark: SparkSession,
-    path: str,
-    schema: StructType,
-    corrupt_col: str = CORRUPT_COL,
-) -> DataFrame:
+def _with_corrupt_col(schema: StructType) -> StructType:
+    """``schema`` plus the PERMISSIVE corrupt-record column (a copy:
+    the caller's StructType is not mutated)."""
+    if CORRUPT_COL in schema.fieldNames():
+        raise ValueError(f"schema already contains {CORRUPT_COL!r}")
+    return StructType(
+        list(schema.fields) + [StructField(CORRUPT_COL, StringType())]
+    )
+
+
+def read_jsonl(spark: SparkSession, path: str, schema: StructType) -> DataFrame:
     """Read JSONL (.jsonl / .jsonl.gz) at ``path`` with an explicit
-    schema plus a PERMISSIVE corrupt-record column. Lines that are
-    valid JSON but MISSING a field parse with that field NULL (the
+    schema plus a PERMISSIVE ``_corrupt_record`` column. Lines that
+    are valid JSON but MISSING a field parse with that field NULL (the
     schema-evolution convention); lines that are not valid JSON come
-    back as (all parsed columns NULL, raw line in ``corrupt_col``).
+    back as (all parsed columns NULL, raw line in ``_corrupt_record``).
 
     Spark guard to know about: a query whose pruned column set is
     ONLY the corrupt column is disallowed on raw JSON
     (QUERY_ONLY_CORRUPT_RECORD_COLUMN) — select at least one data
     column alongside it (or cache first) when counting corrupt
     lines."""
-    if any(f.name == corrupt_col for f in schema.fields):
-        raise ValueError(f"schema already contains {corrupt_col!r}")
-    full = StructType(
-        list(schema.fields) + [StructField(corrupt_col, StringType())]
-    )
+    full = _with_corrupt_col(schema)
     return (
         spark.read.schema(full)
         .option("mode", "PERMISSIVE")
-        .option("columnNameOfCorruptRecord", corrupt_col)
+        .option("columnNameOfCorruptRecord", CORRUPT_COL)
         .json(path)
     )
 
@@ -66,7 +67,6 @@ def read_jsonl_stream(
     spark: SparkSession,
     path: str,
     schema: StructType,
-    corrupt_col: str = CORRUPT_COL,
     max_files_per_trigger: int | None = None,
 ) -> DataFrame:
     """Streaming twin of ``read_jsonl`` — a directory TAIL over
@@ -76,15 +76,11 @@ def read_jsonl_stream(
     corrupt capture as the batch reader, so batch backfill and the
     tail produce identical rows per file. ``max_files_per_trigger``
     bounds per-microbatch work (source-side backpressure)."""
-    if any(f.name == corrupt_col for f in schema.fields):
-        raise ValueError(f"schema already contains {corrupt_col!r}")
-    full = StructType(
-        list(schema.fields) + [StructField(corrupt_col, StringType())]
-    )
+    full = _with_corrupt_col(schema)
     reader = (
         spark.readStream.schema(full)
         .option("mode", "PERMISSIVE")
-        .option("columnNameOfCorruptRecord", corrupt_col)
+        .option("columnNameOfCorruptRecord", CORRUPT_COL)
     )
     if max_files_per_trigger is not None:
         reader = reader.option("maxFilesPerTrigger", int(max_files_per_trigger))

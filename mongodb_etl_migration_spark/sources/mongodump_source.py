@@ -17,13 +17,12 @@ timestamp, decimal128 → raw hex), so downstream entity specs see one
 shape regardless of whether data arrived via parquet, extended JSON,
 or raw BSON.
 
-Scale notes: one InputPartition per .bson file — BSON documents are
-length-prefixed with no sync markers, so a mid-file split cannot find
-a document boundary without scanning from the start; mongodump output
-is naturally many per-collection files, which is the parallelism unit
-(matches how Spark treats gzipped JSON). Schema inference samples the
-first ``inferDocs`` documents of the lexically-first file (explicit
-``.schema(...)`` skips the sampling read — the right call at 100 TB).
+Scale notes: one InputPartition per .bson file (files.py: BSON has no
+sync markers); mongodump output is naturally many per-collection
+files, which is the parallelism unit (matches how Spark treats gzipped
+JSON). Schema inference samples the first ``inferDocs`` documents of
+the lexically-first file (explicit ``.schema(...)`` skips the sampling
+read — the right call at 100 TB).
 The per-row Python decode cost is the honest price of the format; the
 intended pattern is one ingest pass that lands parquet, not repeated
 analytics over raw BSON.
@@ -31,18 +30,9 @@ analytics over raw BSON.
 
 from __future__ import annotations
 
-import glob
-import os
 from datetime import datetime
 
-from pyspark.sql.datasource import (
-    DataSource,
-    DataSourceReader,
-    DataSourceWriter,
-    InputPartition,
-    SimpleDataSourceStreamReader,
-    WriterCommitMessage,
-)
+from pyspark.sql.datasource import DataSource
 from pyspark.sql.types import (
     ArrayType,
     BinaryType,
@@ -63,16 +53,14 @@ from mongodb_etl_migration_spark.sources.bson_codec import (
     encode_document,
     iter_documents,
 )
-
-
-def _resolve_files(path: str) -> list[str]:
-    if os.path.isdir(path):
-        files = sorted(glob.glob(os.path.join(path, "*.bson")))
-    else:
-        files = sorted(glob.glob(path))
-    if not files:
-        raise FileNotFoundError(f"no .bson files under {path!r}")
-    return files
+from mongodb_etl_migration_spark.sources.files import (
+    CORRUPT_COL,
+    DirectoryTailReader,
+    FilePartition,
+    FileReader,
+    PartFileWriter,
+    resolve_files,
+)
 
 
 def _infer_type(v) -> DataType:
@@ -262,18 +250,11 @@ def _eval_filter(f, doc: dict):
     return None
 
 
-class _FilePartition(InputPartition):
-    def __init__(self, path: str):
-        self.path = path
+class MongodumpReader(FileReader):
+    patterns = ("*.bson",)
 
-
-class MongodumpReader(DataSourceReader):
     def __init__(self, schema: StructType, options: dict):
-        self._schema = schema
-        self._files = _resolve_files(options["path"])
-        self._mode = options.get("mode", "FAILFAST").upper()
-        if self._mode not in ("FAILFAST", "PERMISSIVE"):
-            raise ValueError(f"mode must be FAILFAST|PERMISSIVE, got {self._mode}")
+        super().__init__(schema, options)
         self._filters: list = []
 
     def pushFilters(self, filters):
@@ -292,24 +273,21 @@ class MongodumpReader(DataSourceReader):
             else:
                 yield f
 
-    def partitions(self):
-        return [_FilePartition(p) for p in self._files]
-
-    def read(self, partition: _FilePartition):
+    def read(self, partition: FilePartition):
         """FAILFAST (default): a malformed document fails the task —
         right for audited ingest. PERMISSIVE: decoding stops at the
         first malformed byte of THE FILE (BSON has no sync markers to
         resynchronize on, so everything after a corrupt length prefix
         is unreadable); the valid prefix is kept and, when the schema
         carries a ``_corrupt_record string`` field (same contract as
-        readers.read_json_documents), one extra row records the file
+        jsonl.read_jsonl), one extra row records the file
         and undecodable byte count for dead-letter routing — a corrupt
         tail costs its file's remainder, never the 100 TB job."""
         with open(partition.path, "rb") as f:
             buf = f.read()
         fields = self._schema.fields
         corrupt_idx = next(
-            (i for i, f in enumerate(fields) if f.name == "_corrupt_record"),
+            (i for i, f in enumerate(fields) if f.name == CORRUPT_COL),
             None,
         )
         # field-skip pruning: decode only projected + filtered fields
@@ -362,93 +340,6 @@ class MongodumpReader(DataSourceReader):
             )
 
 
-class MongodumpStreamReader(SimpleDataSourceStreamReader):
-    """Tail a mongodump directory as a stream: every NEW .bson file
-    becomes part of the next microbatch. The offset is
-    ``{"seen": [basenames]}`` — the exact files already emitted; a
-    batch is the listing MINUS the seen set, so a late-arriving file
-    that sorts before already-emitted names (dump-10 after dump-2) is
-    still picked up exactly once, and ``readBetweenOffsets`` replays
-    any batch as end.seen − start.seen (files are immutable once
-    written — mongodump writes then moves on). The seen list grows
-    with the number of drops — bounded for the backup-drop pattern;
-    compact externally if a directory accretes forever. The pattern:
-    periodic backup drops land in the directory, the stream ingests
-    each drop once — the reference's restore-then-re-extract loop as
-    an incremental pipeline (pair with
-    streaming/incremental.run_incremental for the entity plans
-    downstream)."""
-
-    def __init__(self, schema: StructType, options: dict):
-        self._schema = schema
-        self._path = options["path"]
-        self._mode = options.get("mode", "FAILFAST").upper()
-
-    def _files(self) -> list[str]:
-        try:
-            return _resolve_files(self._path)
-        except FileNotFoundError:
-            return []  # empty dir: stream starts before first drop
-
-    def initialOffset(self) -> dict:
-        return {"seen": []}
-
-    @staticmethod
-    def _legacy_aware_seen(offset: dict, files: list[str]) -> set:
-        """Offset compatibility: current offsets are {"seen": [names]};
-        the earlier {"files": n} count-based form (pre-fix for
-        non-monotonic drop names) converts as the first n sorted
-        basenames of the current listing, so a checkpoint written by
-        the old code restarts cleanly instead of KeyError-wedging the
-        stream."""
-        import os
-
-        if "seen" in offset:
-            return set(offset["seen"])
-        n = int(offset.get("files", 0))
-        return {os.path.basename(p) for p in files[:n]}
-
-    def read(self, start: dict):
-        import os
-
-        files = self._files()
-        seen = self._legacy_aware_seen(start, files)
-        new = [p for p in files if os.path.basename(p) not in seen]
-        end = {"seen": sorted(seen | {os.path.basename(p) for p in new})}
-        # materialized THEN wrapped in iter(): the simple-reader API
-        # prefetches and PICKLES the batch on the driver (per-drop
-        # batches are one backup file — bounded; use the full
-        # streamReader API if a single drop outgrows driver memory),
-        # and its empty-poll validation calls next() on the result —
-        # a bare list TypeErrors the query on a no-new-files poll
-        return iter(list(self._rows(new))), end
-
-    def readBetweenOffsets(self, start: dict, end: dict):
-        import os
-
-        files_all = self._files()
-        batch = self._legacy_aware_seen(end, files_all) - self._legacy_aware_seen(
-            start, files_all
-        )
-        files = [p for p in files_all if os.path.basename(p) in batch]
-        # iterator, not list: this return IS the task's row iterator
-        # (replay path and uncached empty batches hit it directly)
-        return iter(list(self._rows(files)))
-
-    def _rows(self, files: list[str]):
-        if not files:
-            # constructing MongodumpReader resolves the path eagerly
-            # and raises on a not-yet-populated directory — an empty
-            # poll must stay an empty batch (stream starts before the
-            # first backup drop)
-            return
-        reader = MongodumpReader(
-            self._schema, {"path": self._path, "mode": self._mode}
-        )
-        for path in files:
-            yield from reader.read(_FilePartition(path))
-
-
 class MongodumpDataSource(DataSource):
     """See module docstring. Options: ``path`` (file, glob, or
     directory of .bson), ``inferDocs`` (sample size, default 100)."""
@@ -458,7 +349,7 @@ class MongodumpDataSource(DataSource):
         return "mongodump"
 
     def schema(self) -> StructType:
-        files = _resolve_files(self.options["path"])
+        files = resolve_files(self.options["path"], MongodumpReader.patterns)
         limit = int(self.options.get("inferDocs", "100"))
         with open(files[0], "rb") as f:
             buf = f.read()
@@ -477,93 +368,26 @@ class MongodumpDataSource(DataSource):
     def writer(self, schema: StructType, overwrite: bool):
         return MongodumpWriter(schema, self.options, overwrite)
 
-    def simpleStreamReader(self, schema: StructType) -> MongodumpStreamReader:
-        """Streaming tail of the dump directory (pass an explicit
-        ``.schema(...)`` — inference on an initially-empty directory
-        has nothing to sample)."""
-        return MongodumpStreamReader(schema, self.options)
+    def simpleStreamReader(self, schema: StructType) -> DirectoryTailReader:
+        """Streaming tail of the dump directory: periodic backup drops
+        land there and each is ingested once, the reference's
+        restore-then-re-extract loop as an incremental pipeline (pass
+        an explicit ``.schema(...)``: inference on an initially-empty
+        directory has nothing to sample)."""
+        return DirectoryTailReader(MongodumpReader, schema, self.options)
 
 
-class _WroteFile(WriterCommitMessage):
-    def __init__(self, path: str, rows: int):
-        self.path = path
-        self.rows = rows
+class MongodumpWriter(PartFileWriter):
+    """Export a DataFrame as a mongodump-shaped backup: one .bson part
+    file per task through the rename-in-commit protocol. Values encode
+    through the codec's conventions, so read-back through
+    format("mongodump") round-trips (timestamps to millisecond
+    precision, BSON's datetime unit)."""
 
+    suffix = ".bson"
 
-def commit_part_renames(
-    messages, path: str, suffix: str, overwrite: bool
-) -> None:
-    """Shared rename-commit protocol for file-per-task writers
-    (mongodump .bson, warc .warc.gz): temp files become
-    ``part-NNNNN-<job>{suffix}`` only here, so partial/aborted tasks
-    never leave a readable part behind. The job-unique suffix keeps
-    append mode from renaming onto an existing file (os.rename
-    clobbers silently on POSIX). Overwrite mode also sweeps crashed
-    PRIOR jobs' ``._tmp-*`` leftovers (their abort() never ran) —
-    excluding this job's own pending messages."""
-    import os
-    import uuid
-
-    live = [m for m in messages if m is not None]
-    if overwrite:
-        for old in glob.glob(os.path.join(path, f"part-*{suffix}")):
-            os.remove(old)
-        keep = {m.path for m in live}
-        for tmp in glob.glob(os.path.join(path, "._tmp-*")):
-            if tmp not in keep:
-                os.remove(tmp)
-    job = uuid.uuid4().hex[:8]
-    for i, m in enumerate(live):
-        if m.rows == 0:
-            os.remove(m.path)
-            continue
-        os.rename(
-            m.path, os.path.join(path, f"part-{i:05d}-{job}{suffix}")
-        )
-
-
-def abort_part_cleanup(messages) -> None:
-    import os
-
-    for m in messages:
-        if m is not None and os.path.exists(m.path):
-            os.remove(m.path)
-
-
-class MongodumpWriter(DataSourceWriter):
-    """Export a DataFrame as a mongodump-shaped backup: one .bson
-    part file per task, written to a temp name and renamed into place
-    only in commit() — partial/aborted tasks never leave a readable
-    .bson behind (the rename is the commit protocol, same idea as
-    Hadoop output committers). Values encode through the codec's
-    conventions, so read-back through format("mongodump") round-trips
-    (timestamps to millisecond precision — BSON's datetime unit)."""
-
-    def __init__(self, schema: StructType, options: dict, overwrite: bool):
-        self._path = options["path"]
-        self._overwrite = overwrite
-
-    def write(self, iterator) -> _WroteFile:
-        import os
-        import uuid
-
-        from pyspark import TaskContext
-
-        os.makedirs(self._path, exist_ok=True)
-        pid = TaskContext.get().partitionId()
-        tmp = os.path.join(self._path, f"._tmp-{uuid.uuid4().hex}")
-        n = 0
-        with open(tmp, "wb") as f:
-            for row in iterator:
-                f.write(encode_document(row.asDict(recursive=True)))
-                n += 1
-        return _WroteFile(tmp, n)
-
-    def commit(self, messages) -> None:
-        commit_part_renames(messages, self._path, ".bson", self._overwrite)
-
-    def abort(self, messages) -> None:
-        abort_part_cleanup(messages)
+    def encode(self, row) -> bytes:
+        return encode_document(row.asDict(recursive=True))
 
 
 def register_mongodump(spark) -> None:

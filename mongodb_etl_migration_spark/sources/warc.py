@@ -20,6 +20,7 @@ curate pipeline is whatever the downstream curation operators need.
 
 from __future__ import annotations
 
+import io
 from collections.abc import Iterator
 
 import pandas as pd
@@ -36,7 +37,8 @@ _CRLF = b"\r\n"
 
 def build_warc(records: list[dict]) -> bytes:
     """Serialize records into a WARC/1.0 byte stream (the fixture/
-    write side; also documents the exact shape parse_warc accepts).
+    write side; also documents the exact shape iter_warc_stream
+    accepts).
     Each record dict: warc_type, target_uri, date, and either
     ``payload`` (raw bytes) or ``http`` = (status, content_type,
     body_bytes) which is wrapped as an HTTP/1.1 response. An ABSENT
@@ -67,63 +69,20 @@ def build_warc(records: list[dict]) -> bytes:
     return bytes(out)
 
 
-def parse_warc(raw: bytes) -> list[dict]:
-    """Parse a WARC/1.0 or 1.1 stream into record dicts: warc_type,
-    target_uri, date, payload (bytes). Raises ValueError on anything
-    that doesn't follow the framing (bad version line, missing
-    Content-Length, truncated payload) — framing errors must surface,
-    not yield silently truncated corpora."""
-    records: list[dict] = []
-    pos = 0
-    n = len(raw)
-    while pos < n:
-        while pos < n and raw[pos:pos + 2] == _CRLF:
-            pos += 2
-        if pos >= n:
-            break
-        eol = raw.find(_CRLF, pos)
-        if eol < 0 or not raw[pos:eol].startswith(b"WARC/1."):
-            raise ValueError("bad WARC version line")
-        pos = eol + 2
-        headers: dict[str, str] = {}
-        while True:
-            eol = raw.find(_CRLF, pos)
-            if eol < 0:
-                raise ValueError("unterminated WARC header block")
-            line = raw[pos:eol]
-            pos = eol + 2
-            if not line:
-                break
-            k, _, v = line.partition(b":")
-            headers[k.strip().lower().decode()] = v.strip().decode()
-        try:
-            length = int(headers["content-length"])
-        except (KeyError, ValueError) as e:
-            raise ValueError("missing/invalid Content-Length") from e
-        if pos + length > n:
-            raise ValueError("truncated WARC payload")
-        records.append(
-            {
-                "warc_type": headers.get("warc-type", ""),
-                "target_uri": headers.get("warc-target-uri", ""),
-                "date": headers.get("warc-date", ""),
-                "payload": raw[pos:pos + length],
-            }
-        )
-        pos += length
-    return records
-
-
 def iter_warc_stream(f) -> Iterator[dict]:
-    """Incremental record iterator over a binary stream — same framing
-    and error contract as parse_warc (bad version line, missing
-    Content-Length, truncated payload all raise ValueError), but never
-    holds more than ONE record in memory: the property that lets the
-    file-based ``format("warc")`` reader (warc_source.py) ingest a
-    1 GB crawl shard without materializing it as a single row. Works
-    on a plain file object or a gzip.GzipFile over per-record gzip
-    members (gzip reads concatenated members transparently — the
-    Common Crawl .warc.gz layout)."""
+    """The WARC/1.0 or 1.1 parser: record dicts (warc_type,
+    target_uri, date, payload bytes) off a binary stream. Anything
+    that does not follow the framing raises ValueError (bad version
+    line, a header line not ended by CRLF, missing Content-Length,
+    truncated payload): framing errors must surface, not yield
+    silently truncated or wrong values. Never holds more than ONE
+    record in memory: the property that lets the file-based
+    ``format("warc")`` reader (warc_source.py) ingest a 1 GB crawl
+    shard without materializing it as a single row; ``explode_warc``
+    wraps its in-row bytes in io.BytesIO. Works on a plain file
+    object or a gzip.GzipFile over per-record gzip members (gzip
+    reads concatenated members transparently — the Common Crawl
+    .warc.gz layout)."""
     while True:
         line = f.readline()
         if not line:
@@ -194,6 +153,15 @@ def parse_http_response(payload: bytes) -> tuple[int, str, bytes]:
     return status, ctype, payload[sep + 4:]
 
 
+def unwrap_http(payload: bytes) -> tuple[int | None, str | None, bytes]:
+    """(status, content-type, body) of an HTTP response payload; any
+    other payload is (None, None, the raw payload)."""
+    try:
+        return parse_http_response(payload)
+    except ValueError:
+        return None, None, payload
+
+
 WARC_SCHEMA = StructType(
     [
         StructField("doc_id", LongType()),
@@ -218,22 +186,16 @@ def explode_warc(df: DataFrame, id_col: str = "doc_id", payload_col: str = "payl
         for pdf in batches:
             out = {k: [] for k in WARC_SCHEMA.fieldNames()}
             for doc_id, payload in zip(pdf[id_col], pdf[payload_col]):
-                for i, rec in enumerate(parse_warc(bytes(payload))):
+                records = iter_warc_stream(io.BytesIO(bytes(payload)))
+                for i, rec in enumerate(records):
+                    status, ctype, body = unwrap_http(rec["payload"])
                     out["doc_id"].append(doc_id)
                     out["record_idx"].append(i)
                     out["warc_type"].append(rec["warc_type"])
                     out["target_uri"].append(rec["target_uri"])
-                    try:
-                        status, ctype, body = parse_http_response(rec["payload"])
-                        out["http_status"].append(status)
-                        out["content_type"].append(ctype)
-                        out["body"].append(body.decode("utf-8", "replace"))
-                    except ValueError:
-                        out["http_status"].append(None)
-                        out["content_type"].append(None)
-                        out["body"].append(
-                            rec["payload"].decode("utf-8", "replace")
-                        )
+                    out["http_status"].append(status)
+                    out["content_type"].append(ctype)
+                    out["body"].append(body.decode("utf-8", "replace"))
             yield pd.DataFrame(out)
 
     return df.mapInPandas(gen, WARC_SCHEMA)

@@ -18,11 +18,10 @@ pipeline's only shuffle is whatever the downstream curation needs.
 the Common Crawl per-record-gzip-member layout (and whole-file gzip)
 transparently.
 
-Scale notes: one InputPartition per file — WARC records are
+Scale notes: one InputPartition per file (files.py: WARC records are
 Content-Length-framed with no sync markers and gzip members can only
-be found by scanning, so a mid-file split cannot locate a record
-boundary; crawl corpora are naturally many ~1 GB shards, which is the
-parallelism unit (same rationale as mongodump_source for .bson).
+be found by scanning); crawl corpora are naturally many ~1 GB shards,
+which is the parallelism unit.
 The reader accepts no pushed filters: Spark 4.1 caches one reader per
 loaded frame, so a pushed filter would leak into every other scan of
 that frame (a later unfiltered query, or the other side of a union).
@@ -40,18 +39,9 @@ ship every payload twice).
 
 from __future__ import annotations
 
-import glob
-import os
 import zlib
 
-from pyspark.sql.datasource import (
-    DataSource,
-    DataSourceReader,
-    DataSourceWriter,
-    InputPartition,
-    SimpleDataSourceStreamReader,
-    WriterCommitMessage,
-)
+from pyspark.sql.datasource import DataSource
 from pyspark.sql.types import (
     BinaryType,
     LongType,
@@ -60,9 +50,17 @@ from pyspark.sql.types import (
     StructType,
 )
 
+from mongodb_etl_migration_spark.sources.files import (
+    CORRUPT_COL,
+    DirectoryTailReader,
+    FilePartition,
+    FileReader,
+    PartFileWriter,
+)
 from mongodb_etl_migration_spark.sources.warc import (
+    build_warc_gz,
     iter_warc_stream,
-    parse_http_response,
+    unwrap_http,
 )
 
 WARC_SOURCE_FIELDS = [
@@ -77,19 +75,6 @@ WARC_SOURCE_FIELDS = [
 ]
 
 
-def _resolve_warc_files(path: str) -> list[str]:
-    if os.path.isdir(path):
-        files = sorted(
-            glob.glob(os.path.join(path, "*.warc"))
-            + glob.glob(os.path.join(path, "*.warc.gz"))
-        )
-    else:
-        files = sorted(glob.glob(path))
-    if not files:
-        raise FileNotFoundError(f"no .warc[.gz] files under {path!r}")
-    return files
-
-
 def _open_stream(path: str):
     if path.endswith(".gz"):
         import gzip
@@ -98,25 +83,10 @@ def _open_stream(path: str):
     return open(path, "rb")
 
 
-class _WarcFilePartition(InputPartition):
-    def __init__(self, path: str):
-        self.path = path
+class WarcReader(FileReader):
+    patterns = ("*.warc", "*.warc.gz")
 
-
-class WarcReader(DataSourceReader):
-    def __init__(self, schema: StructType, options: dict):
-        self._schema = schema
-        self._files = _resolve_warc_files(options["path"])
-        self._mode = options.get("mode", "FAILFAST").upper()
-        if self._mode not in ("FAILFAST", "PERMISSIVE"):
-            raise ValueError(
-                f"mode must be FAILFAST|PERMISSIVE, got {self._mode}"
-            )
-
-    def partitions(self):
-        return [_WarcFilePartition(p) for p in self._files]
-
-    def read(self, partition: _WarcFilePartition):
+    def read(self, partition: FilePartition):
         """One record at a time off the (possibly gzip) stream; HTTP
         unwrap per response payload (non-HTTP payloads keep NULL
         status and carry their bytes utf-8-replace-decoded as body —
@@ -144,23 +114,15 @@ class WarcReader(DataSourceReader):
                             f"{partition.path}: {err} (mode=PERMISSIVE "
                             "keeps the valid prefix)"
                         ) from err
-                    if "_corrupt_record" in names:
+                    if CORRUPT_COL in names:
                         row = dict.fromkeys(names)
                         row["path"] = partition.path
-                        row["_corrupt_record"] = (
+                        row[CORRUPT_COL] = (
                             f"{partition.path}: {err} after {n_ok} records"
                         )
                         yield tuple(row[n] for n in names)
                     break
-                try:
-                    status, ctype, body = parse_http_response(rec["payload"])
-                    http_status: int | None = status
-                    content_type: str | None = ctype
-                    raw = body
-                except ValueError:
-                    http_status = None
-                    content_type = None
-                    raw = rec["payload"]
+                http_status, content_type, raw = unwrap_http(rec["payload"])
                 row = {
                     "path": partition.path,
                     "record_idx": n_ok,
@@ -171,72 +133,12 @@ class WarcReader(DataSourceReader):
                     "content_type": content_type,
                     "body": raw.decode("utf-8", "replace"),
                     "body_bytes": raw,
-                    "_corrupt_record": None,
+                    CORRUPT_COL: None,
                 }
                 n_ok += 1
                 yield tuple(row[n] for n in names)
         finally:
             stream.close()
-
-
-class WarcStreamReader(SimpleDataSourceStreamReader):
-    """Tail a crawl directory as a stream: every NEW .warc/.warc.gz
-    shard becomes part of the next microbatch — the crawler-drops-
-    shards → curation-ingests-each-once pattern. Offset bookkeeping is
-    the mongodump stream's proven shape: ``{"seen": [basenames]}``, a
-    batch is listing MINUS seen, so late-arriving shards that sort
-    before already-emitted names are still picked up exactly once and
-    ``readBetweenOffsets`` replays any batch as end.seen − start.seen
-    (shards are immutable once written). The seen list grows with the
-    number of drops — bounded for the crawl-drop pattern."""
-
-    def __init__(self, schema: StructType, options: dict):
-        self._schema = schema
-        self._path = options["path"]
-        self._mode = options.get("mode", "FAILFAST").upper()
-
-    def _files(self) -> list[str]:
-        try:
-            return _resolve_warc_files(self._path)
-        except FileNotFoundError:
-            return []  # empty dir: stream starts before the first drop
-
-    def initialOffset(self) -> dict:
-        return {"seen": []}
-
-    def read(self, start: dict):
-        files = self._files()
-        seen = set(start.get("seen", []))
-        new = [p for p in files if os.path.basename(p) not in seen]
-        end = {"seen": sorted(seen | {os.path.basename(p) for p in new})}
-        # materialized THEN wrapped in iter(): the simple-reader API
-        # prefetches and pickles the batch on the driver (per-drop
-        # batches are a few shards — bounded; a firehose needs the
-        # full streamReader API), and its empty-poll validation calls
-        # next() on the result — a bare list TypeErrors the query
-        return iter(list(self._rows(new))), end
-
-    def readBetweenOffsets(self, start: dict, end: dict):
-        batch = set(end.get("seen", [])) - set(start.get("seen", []))
-        files = [
-            p for p in self._files() if os.path.basename(p) in batch
-        ]
-        # iterator, not list: this return IS the task's row iterator
-        # (replay path and uncached empty batches hit it directly)
-        return iter(list(self._rows(files)))
-
-    def _rows(self, files: list[str]):
-        if not files:
-            # constructing WarcReader resolves the path eagerly and
-            # raises on a not-yet-populated directory — an empty poll
-            # must stay an empty batch (stream starts before the
-            # first crawler drop)
-            return
-        reader = WarcReader(
-            self._schema, {"path": self._path, "mode": self._mode}
-        )
-        for path in files:
-            yield from reader.read(_WarcFilePartition(path))
 
 
 class WarcDataSource(DataSource):
@@ -253,28 +155,22 @@ class WarcDataSource(DataSource):
         if self.options.get("with_bytes", "false").lower() == "true":
             fields.append(StructField("body_bytes", BinaryType()))
         if self.options.get("mode", "FAILFAST").upper() == "PERMISSIVE":
-            fields.append(StructField("_corrupt_record", StringType()))
+            fields.append(StructField(CORRUPT_COL, StringType()))
         return StructType(fields)
 
     def reader(self, schema: StructType) -> WarcReader:
         return WarcReader(schema, self.options)
 
-    def simpleStreamReader(self, schema: StructType) -> WarcStreamReader:
+    def simpleStreamReader(self, schema: StructType) -> DirectoryTailReader:
         """Streaming tail of a crawl directory (readStream.format
         ("warc")): each dropped shard ingested exactly once."""
-        return WarcStreamReader(schema, self.options)
+        return DirectoryTailReader(WarcReader, schema, self.options)
 
     def writer(self, schema: StructType, overwrite: bool):
         return WarcWriter(schema, self.options, overwrite)
 
 
-class _WroteShard(WriterCommitMessage):
-    def __init__(self, path: str, rows: int):
-        self.path = path
-        self.rows = rows
-
-
-class WarcWriter(DataSourceWriter):
+class WarcWriter(PartFileWriter):
     """Export a curated corpus as ``.warc.gz`` shards — the read/
     stream/write triangle closed (a curation pipeline that ingests
     Common-Crawl shards hands its survivors downstream in the same
@@ -282,71 +178,42 @@ class WarcWriter(DataSourceWriter):
     record by record to a temp file (O(1) memory — the write-side
     twin of iter_warc_stream's one-record-in-memory rule; a 1 GB
     partition must never buffer whole) and renamed into place only in
-    commit() via the shared rename protocol (mongodump_source.
-    commit_part_renames) — partial or aborted tasks never leave a
-    readable shard behind. Rows follow the reader's schema contract:
-    ``warc_type``/``target_uri``/``date`` headers (empty/NULL values
-    pass through — no fabricated metadata), and rows with a non-NULL
-    ``http_status`` are wrapped as HTTP/1.1 responses (content_type +
-    payload); rows with NULL status carry the payload raw. Payload
-    source: a non-NULL ``body_bytes`` binary column wins (byte-exact —
-    pair with the reader's ``with_bytes`` option and read→write→read
-    is identity for ANY payload, binary included); otherwise the
-    ``body`` string is UTF-8 encoded — that path's round-trip identity
-    holds only for valid-UTF-8 text bodies, since the reader's
-    utf-8/replace decode is lossy on binary."""
+    commit() (files.PartFileWriter) — partial or aborted tasks never
+    leave a readable shard behind. Rows follow the reader's schema
+    contract: ``warc_type``/``target_uri``/``date`` headers (empty/NULL
+    values pass through — no fabricated metadata), and rows with a
+    non-NULL ``http_status`` are wrapped as HTTP/1.1 responses
+    (content_type + payload); rows with NULL status carry the payload
+    raw. Payload source: a non-NULL ``body_bytes`` binary column wins
+    (byte-exact — pair with the reader's ``with_bytes`` option and
+    read→write→read is identity for ANY payload, binary included);
+    otherwise the ``body`` string is UTF-8 encoded — that path's
+    round-trip identity holds only for valid-UTF-8 text bodies, since
+    the reader's utf-8/replace decode is lossy on binary."""
 
-    def __init__(self, schema: StructType, options: dict, overwrite: bool):
-        self._path = options["path"]
-        self._overwrite = overwrite
+    suffix = ".warc.gz"
 
-    def write(self, iterator) -> _WroteShard:
-        import gzip
-        import uuid
-
-        from mongodb_etl_migration_spark.sources.warc import build_warc
-
-        os.makedirs(self._path, exist_ok=True)
-        tmp = os.path.join(self._path, f"._tmp-{uuid.uuid4().hex}")
-        n = 0
-        with open(tmp, "wb") as f:
-            for row in iterator:
-                d = row.asDict()
-                rec = {
-                    "warc_type": d.get("warc_type") or "",
-                    "target_uri": d.get("target_uri") or "",
-                    # '' omits the WARC-Date header (see build_warc)
-                    "date": d.get("date") or "",
-                }
-                if d.get("body_bytes") is not None:
-                    body = bytes(d["body_bytes"])
-                else:
-                    body = (d.get("body") or "").encode()
-                if d.get("http_status") is not None:
-                    rec["http"] = (
-                        int(d["http_status"]),
-                        d.get("content_type") or "",
-                        body,
-                    )
-                else:
-                    rec["payload"] = body
-                f.write(gzip.compress(build_warc([rec]), mtime=0))
-                n += 1
-        return _WroteShard(tmp, n)
-
-    def commit(self, messages) -> None:
-        from mongodb_etl_migration_spark.sources.mongodump_source import (
-            commit_part_renames,
-        )
-
-        commit_part_renames(messages, self._path, ".warc.gz", self._overwrite)
-
-    def abort(self, messages) -> None:
-        from mongodb_etl_migration_spark.sources.mongodump_source import (
-            abort_part_cleanup,
-        )
-
-        abort_part_cleanup(messages)
+    def encode(self, row) -> bytes:
+        d = row.asDict()
+        rec = {
+            "warc_type": d.get("warc_type") or "",
+            "target_uri": d.get("target_uri") or "",
+            # '' omits the WARC-Date header (see build_warc)
+            "date": d.get("date") or "",
+        }
+        if d.get("body_bytes") is not None:
+            body = bytes(d["body_bytes"])
+        else:
+            body = (d.get("body") or "").encode()
+        if d.get("http_status") is not None:
+            rec["http"] = (
+                int(d["http_status"]),
+                d.get("content_type") or "",
+                body,
+            )
+        else:
+            rec["payload"] = body
+        return build_warc_gz([rec])
 
 
 def register_warc(spark) -> None:

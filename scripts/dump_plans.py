@@ -8,6 +8,7 @@ Usage: python scripts/dump_plans.py [sf_dir]
 from __future__ import annotations
 
 import io
+import re
 import sys
 from contextlib import redirect_stdout
 from pathlib import Path
@@ -418,11 +419,13 @@ NOTES = {
         "higher-order functions — zero shuffle on the corpus side."
     ),
     "w_crawl_curation": (
-        "End-to-end crawl curation: NO Filter node above `BatchScan "
-        "warc` — the response/200 predicate was accepted by the "
-        "Python source's pushFilters and is enforced before the "
-        "Python→JVM transfer. The per-host cap's exchange is the "
-        "plan's ONLY shuffle, trimmed map-side by WindowGroupLimit."
+        "End-to-end crawl curation: the response/200 predicate is "
+        "Spark's own Filter directly above `BatchScan warc`, in the "
+        "scan stage (no PushedFilters: the `warc` source accepts "
+        "none, since Spark 4.1 keeps one reader per loaded frame and "
+        "a pushed filter would leak into every other scan of it). "
+        "The per-host cap's exchange is the plan's ONLY shuffle, "
+        "trimmed map-side by WindowGroupLimit."
     ),
     "w_warc_source": (
         "File-based crawl ingest: records explode INSIDE the scan "
@@ -723,6 +726,13 @@ NOTES = {
 }
 
 
+def _no_expr_ids(line: str) -> str:
+    """``fileURL#66`` → ``fileURL#``: exprIds number every attribute
+    the process has allocated so far, so they change whenever any
+    earlier plan does; the receipt must change only with its own."""
+    return re.sub(r"#\d+", "#", line)
+
+
 def messages_pipeline_section(spark) -> str:
     """Receipt for the messages entity plan: exactly ONE Salsa20
     decrypt stage (round-2 defect: pushdown substitution doubled it).
@@ -766,7 +776,7 @@ def messages_pipeline_section(spark) -> str:
     n_dec = plan.count("_decrypt_fb")
     n_arrow = plan.count("ArrowEvalPython")
     arrow_lines = "\n".join(
-        ln.strip()[:160]
+        _no_expr_ids(ln.strip())[:160]
         for ln in plan.splitlines()
         if "ArrowEvalPython" in ln
     )
@@ -799,7 +809,7 @@ def main() -> None:
         # keep the operator tree + scan details, trim the node glossary
         tree = plan.split("\n\n(1)")[0].strip()
         scan_bits = [
-            ln.strip()
+            _no_expr_ids(ln.strip())
             for ln in plan.splitlines()
             if "PushedFilters" in ln
             or "ReadSchema" in ln
@@ -828,6 +838,8 @@ def scale_receipt_section() -> str:
     d = json.loads(path.read_text())
     rows = []
     for cfg, r in d["configs"].items():
+        if "d2_minhash_pairs" not in r:
+            continue  # the media configs time other operators
         d2 = r["d2_minhash_pairs"]
         sd = r.get("sim_semdedup", {})
         bl = r.get("t_decontaminate_bloom", {})

@@ -88,13 +88,13 @@ def test_pair_generation_honors_order_by(spark):
 
 def test_star_cc_keeps_self_pair_ids(spark):
     """A self-pair (5,5) carries no edges but its id must still label
-    itself — same contract as hash_min."""
+    itself, as in the union-find reference."""
     from mongodb_etl_migration_spark.operators.dedup import connected_components
+    from tests.test_skew_properties import _cc_reference
 
     pairs = spark.createDataFrame([(1, 2), (5, 5)], "id_a long, id_b long")
-    star = {r.id: r.component for r in connected_components(pairs, algorithm="star").collect()}
-    hm = {r.id: r.component for r in connected_components(pairs, algorithm="hash_min").collect()}
-    assert star == hm == {1: 1, 2: 1, 5: 5}
+    star = {r.id: r.component for r in connected_components(pairs).collect()}
+    assert star == _cc_reference([(1, 2), (5, 5)])[0] == {1: 1, 2: 1, 5: 5}
 
 
 def test_zorder_empty_and_allnull_inputs(spark, tmp_path):

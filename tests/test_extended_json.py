@@ -11,10 +11,7 @@ from datetime import datetime, timezone
 import pytest
 from pyspark.sql import functions as F
 
-from mongodb_etl_migration_spark.sources.readers import (
-    normalize_extended_json,
-    read_json_documents,
-)
+from mongodb_etl_migration_spark.sources.readers import normalize_extended_json
 
 
 def test_extended_json_normalization(spark, tmp_path):
@@ -51,7 +48,7 @@ def test_extended_json_normalization(spark, tmp_path):
     p = tmp_path / "docs.jsonl"
     p.write_text("\n".join(json.dumps(d) for d in docs))
 
-    raw = read_json_documents(spark, str(p))
+    raw = spark.read.json(str(p))
     out = normalize_extended_json(raw)
 
     t = dict(out.dtypes)
@@ -111,9 +108,7 @@ def test_null_nested_struct_stays_null(spark):
 def test_corrupt_record_column_detects_malformed_lines(spark, tmp_path):
     from pyspark.sql import types as T
 
-    from mongodb_etl_migration_spark.sources.readers import (
-        read_json_documents,
-    )
+    from mongodb_etl_migration_spark.sources.jsonl import read_jsonl
 
     p = tmp_path / "docs.json"
     p.write_text('{"a": 1}\n{"a": 2, "broken\n{"a": 3}\n')
@@ -121,7 +116,7 @@ def test_corrupt_record_column_detects_malformed_lines(spark, tmp_path):
     # Spark disallows queries whose pruned schema is ONLY the corrupt
     # column; cache first (the documented pattern) so the full rows
     # materialize once
-    df = read_json_documents(spark, str(p), schema).cache()
+    df = read_jsonl(spark, str(p), schema).cache()
     try:
         assert df.filter(F.col("_corrupt_record").isNotNull()).count() == 1
         assert df.filter(F.col("_corrupt_record").isNull()).count() == 2
@@ -159,11 +154,11 @@ def test_sequential_ids_lazy_numbering_known_answer(spark, aqe, num_partitions):
         F.col("id").alias("row"),
     )
     old = spark.conf.get("spark.sql.adaptive.enabled")
+    old_parts = spark.conf.get("spark.sql.shuffle.partitions")
     spark.conf.set("spark.sql.adaptive.enabled", aqe)
+    spark.conf.set("spark.sql.shuffle.partitions", str(num_partitions))
     try:
-        out = assign_sequential_ids(
-            df, ["k"], "id", start=5, num_partitions=num_partitions
-        )
+        out = assign_sequential_ids(df, ["k"], "id", start=5)
         rows = sorted(out.select("k", "id").collect(), key=lambda r: r.id)
         assert [r.id for r in rows] == list(range(5, 5 + 20000))
         assert all(a.k <= b.k for a, b in zip(rows, rows[1:]))
@@ -176,6 +171,7 @@ def test_sequential_ids_lazy_numbering_known_answer(spark, aqe, num_partitions):
         assert disagree == 0
     finally:
         spark.conf.set("spark.sql.adaptive.enabled", old)
+        spark.conf.set("spark.sql.shuffle.partitions", old_parts)
 
 
 def test_sequential_ids_evaluate_input_once(spark):
@@ -197,8 +193,13 @@ def test_sequential_ids_evaluate_input_once(spark):
     df = spark.range(n).select(
         counted(F.col("id") * 7919 % 1009).alias("k"), F.col("id").alias("row")
     )
-    out = assign_sequential_ids(df, ["k"], "id", num_partitions=7)
-    out.write.format("noop").mode("overwrite").save()
+    old = spark.conf.get("spark.sql.shuffle.partitions")
+    spark.conf.set("spark.sql.shuffle.partitions", "7")
+    try:
+        out = assign_sequential_ids(df, ["k"], "id")
+        out.write.format("noop").mode("overwrite").save()
+    finally:
+        spark.conf.set("spark.sql.shuffle.partitions", old)
     assert seen.value == n
 
 

@@ -2,10 +2,14 @@
 migration DAG produces IDENTICAL output whether its sources arrive as
 in-memory fixtures or as BSON backup files scanned by
 ``format("mongodump")`` — the reference's actual input path
-(backups/appcampana_db/*.bson), end to end."""
+(backups/appcampana_db/*.bson), end to end. A metamorphic slice also
+splits every collection into 2 and 4 part files with the documents
+shuffled: how a dump is laid out on disk must not change the
+migration."""
 
 from __future__ import annotations
 
+import random
 from datetime import datetime
 
 import pytest
@@ -19,14 +23,13 @@ from mongodb_etl_migration_spark.sources.mongodump_source import (
 )
 
 
-def _to_bson_file(df: DataFrame, path) -> None:
+def _to_bson_file(rows, path) -> None:
     with open(path, "wb") as f:
-        for row in df.collect():
+        for row in rows:
             f.write(encode_document(row.asDict(recursive=True)))
 
 
-def _roundtrip(spark, df: DataFrame, path) -> DataFrame:
-    _to_bson_file(df, path)
+def _load(spark, df: DataFrame, path) -> DataFrame:
     return (
         spark.read.format("mongodump")
         .schema(df.schema)
@@ -35,10 +38,27 @@ def _roundtrip(spark, df: DataFrame, path) -> DataFrame:
     )
 
 
+def _roundtrip(spark, df: DataFrame, path) -> DataFrame:
+    _to_bson_file(df.collect(), path)
+    return _load(spark, df, path)
+
+
+def _roundtrip_parts(spark, df: DataFrame, directory, parts: int, seed: int) -> DataFrame:
+    """``df`` as a directory of ``parts`` .bson files, its documents
+    in a seeded shuffled order dealt round-robin across the files."""
+    rows = df.collect()
+    random.Random(seed).shuffle(rows)
+    directory.mkdir()
+    for i in range(parts):
+        _to_bson_file(rows[i::parts], directory / f"{i}.bson")
+    return _load(spark, df, directory)
+
+
 def _rows(df: DataFrame) -> set:
     return {tuple(map(repr, r)) for r in df.collect()}
 
 
+SPLITS = (2, 4)  # part files per collection in the metamorphic slice
 OUTPUTS = (
     "channel", "docs", "docs_roles", "live", "messages_by_room",
     "municipality", "organizations", "p2p_room_by_users", "parroquia",
@@ -67,27 +87,42 @@ def both_runs(spark, tmp_path_factory):
         name: _roundtrip(spark, df, tmp / f"{name}.bson")
         for name, df in direct.items()
     }
+    via_parts = {
+        parts: {
+            name: _roundtrip_parts(spark, df, tmp / f"{name}-{parts}", parts, seed=parts)
+            for name, df in direct.items()
+        }
+        for parts in SPLITS
+    }
     # read the sources back before the pipeline plans filtered queries
     # on them: afterwards an unfiltered read would hit the leak too
     sources_differ = [
-        name for name in direct if _rows(direct[name]) != _rows(via_bson[name])
+        (name, layout)
+        for layout, frames in [("file", via_bson), *via_parts.items()]
+        for name in direct
+        if _rows(direct[name]) != _rows(frames[name])
     ]
     run_ts = datetime(2024, 1, 1)
     return (
         sources_differ,
         run_reference_pipeline(direct, run_ts),
         run_reference_pipeline(via_bson, run_ts),
+        {
+            parts: run_reference_pipeline(frames, run_ts)
+            for parts, frames in via_parts.items()
+        },
     )
 
 
 def test_sources_roundtrip_through_backups(both_runs):
-    sources_differ, _, _ = both_runs
+    sources_differ, _, _, _ = both_runs
     assert sources_differ == []
 
 
 def test_pipeline_returns_every_output(both_runs):
-    _, out_direct, out_bson = both_runs
+    _, out_direct, out_bson, out_parts = both_runs
     assert sorted(out_direct) == sorted(out_bson) == list(OUTPUTS)
+    assert all(sorted(out) == list(OUTPUTS) for out in out_parts.values())
 
 
 @pytest.mark.parametrize(
@@ -100,8 +135,20 @@ def test_pipeline_returns_every_output(both_runs):
     ],
 )
 def test_pipeline_identical_via_mongodump_backups(both_runs, table):
-    _, out_direct, out_bson = both_runs
+    _, out_direct, out_bson, _ = both_runs
     assert _rows(out_direct[table]) == _rows(out_bson[table])
+
+
+@pytest.mark.parametrize("parts", SPLITS)
+def test_pipeline_invariant_to_part_files_and_document_order(both_runs, parts):
+    """All 22 outputs of a dump split into part files with shuffled
+    documents equal the single-file run's, docs and docs_roles
+    included: both layouts go through the same loaded-frame leak."""
+    _, _, out_bson, out_parts = both_runs
+    differ = [
+        t for t in OUTPUTS if _rows(out_parts[parts][t]) != _rows(out_bson[t])
+    ]
+    assert differ == []
 
 
 def test_streaming_backups_through_incremental_entity(spark, tmp_path):
@@ -131,7 +178,7 @@ def test_streaming_backups_through_incremental_entity(spark, tmp_path):
         )
 
     def drop_and_run(rows, fname):
-        _to_bson_file(rows, drops / fname)
+        _to_bson_file(rows.collect(), drops / fname)
         stream = (
             spark.readStream.format("mongodump")
             .schema(roles.schema)

@@ -267,10 +267,40 @@ def test_connected_components_chain_and_representatives(spark):
     assert kept == [1, 7, 99]
 
 
-def test_star_cc_matches_hash_min_and_converges_faster_on_chains(spark):
-    """Large-star/small-star must produce the same closure as hash-min
-    label propagation and converge in O(log n) rounds on a chain —
-    the realistic transitive-near-dup worst case (hash-min needs
+def _cc_reference(pairs: list[tuple[int, int]]) -> tuple[dict, int]:
+    """Plain-Python connected components: (id -> min member id by
+    union-find, the number of synchronous label-propagation rounds the
+    same graph needs, counting the final no-change round)."""
+    parent: dict = {}
+
+    def find(x):
+        while parent.setdefault(x, x) != x:
+            parent[x] = parent[parent[x]]
+            x = parent[x]
+        return x
+
+    nbrs: dict = {}
+    for a, b in pairs:
+        ra, rb = find(a), find(b)
+        parent[max(ra, rb)] = min(ra, rb)
+        nbrs.setdefault(a, set()).add(b)
+        nbrs.setdefault(b, set()).add(a)
+    labels = {x: find(x) for x in parent}
+    prop, rounds = {x: x for x in nbrs}, 0
+    while True:
+        rounds += 1
+        new = {x: min([prop[x]] + [prop[y] for y in nbrs[x]]) for x in prop}
+        if new == prop:
+            break
+        prop = new
+    assert prop == labels
+    return labels, rounds
+
+
+def test_star_cc_matches_union_find_and_converges_faster_on_chains(spark):
+    """Large-star/small-star must produce the union-find closure and
+    converge in O(log n) rounds on a chain — the realistic
+    transitive-near-dup worst case (label propagation needs
     O(diameter) rounds there)."""
     from mongodb_etl_migration_spark.operators.dedup import connected_components
 
@@ -281,17 +311,12 @@ def test_star_cc_matches_hash_min_and_converges_faster_on_chains(spark):
     tri = [(100, 101), (101, 102), (100, 102)]
     pairs = spark.createDataFrame(chain + tri, "id_a long, id_b long")
 
-    star_labels, star_rounds = connected_components(
-        pairs, algorithm="star", with_rounds=True
-    )
-    hm_labels, hm_rounds = connected_components(
-        pairs, algorithm="hash_min", with_rounds=True
-    )
+    star_labels, star_rounds = connected_components(pairs, with_rounds=True)
+    ref, prop_rounds = _cc_reference(chain + tri)
     star = {r["id"]: r["component"] for r in star_labels.collect()}
-    hm = {r["id"]: r["component"] for r in hm_labels.collect()}
-    assert star == hm
+    assert star == ref
     assert star == {**{i: 1 for i in range(1, 17)}, 100: 100, 101: 100, 102: 100}
-    assert star_rounds < hm_rounds, (star_rounds, hm_rounds)
+    assert star_rounds < prop_rounds, (star_rounds, prop_rounds)
     assert star_rounds <= 6  # O(log 16), not O(16)
 
 

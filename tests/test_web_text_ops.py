@@ -3054,10 +3054,16 @@ def test_epoch_shuffle_deterministic_permutation(spark):
         "bucket long, seq_idx long, token_ids string",
     )
 
+    def shuffled(frame, keys, seed, parts):
+        old = spark.conf.get("spark.sql.shuffle.partitions")
+        spark.conf.set("spark.sql.shuffle.partitions", str(parts))
+        try:
+            return T.epoch_shuffle(frame, keys, seed=seed).collect()
+        finally:
+            spark.conf.set("spark.sql.shuffle.partitions", old)
+
     def order(seed, parts):
-        rows = T.epoch_shuffle(
-            df, ["bucket", "seq_idx"], seed=seed, num_partitions=parts
-        ).collect()
+        rows = shuffled(df, ["bucket", "seq_idx"], seed, parts)
         assert sorted(r.epoch_pos for r in rows) == list(range(n))
         assert {(r.bucket, r.seq_idx, r.token_ids) for r in rows} == {
             (i % 8, i // 8, f"payload-{i}") for i in range(n)
@@ -3109,9 +3115,7 @@ def test_epoch_shuffle_deterministic_permutation(spark):
     )
     orders = set()
     for seed in range(16):
-        rows = T.epoch_shuffle(
-            amb, ["k1", "k2"], seed=seed, num_partitions=2
-        ).collect()
+        rows = shuffled(amb, ["k1", "k2"], seed, 2)
         pos = {r.token_ids: r.epoch_pos for r in rows}
         assert sorted(pos.values()) == [0, 1, 2, 3]
         orders.add(pos["r1"] < pos["r2"])
