@@ -24,7 +24,7 @@ Layout:
     operators/    dedup, similarity, text, denorm, hierarchy, validation
     plans/        declarative entity-spec compiler (incl. §2.9 fan-out)
     sources/      readers/writers (parquet-first, connector-shaped API)
-    streaming/    incremental mode (Structured Streaming foreachBatch)
+    streaming/    watermarked windows, sessionization, stream-stream join
 """
 
 from mongodb_etl_migration_spark.session import get_spark

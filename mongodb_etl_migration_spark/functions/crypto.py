@@ -140,20 +140,12 @@ def make_salsa20_encrypt_udf(key: str, iv: str):
 
 
 def make_salsa20_decrypt_udf(key: str, iv: str):
-    """Vectorized Salsa20 decrypt column — F22 (encryption.py:20-91)."""
-    kb, nb = prepare_salsa_key(key), prepare_salsa_iv(iv)
+    """Vectorized Salsa20 decrypt column — F22 (encryption.py:20-91),
+    per value :func:`salsa20_decrypt_str`."""
 
     @pandas_udf(StringType())
     def _decrypt(col: pd.Series) -> pd.Series:
-        def one(v: str | None) -> str | None:
-            if v is None or v == "":
-                return "" if v == "" else None
-            try:
-                return salsa20_xor(kb, nb, base64.b64decode(v)).decode("utf-8")
-            except Exception:
-                return None
-
-        return col.map(one)
+        return col.map(lambda v: salsa20_decrypt_str(key, iv, v))
 
     return _decrypt
 
@@ -170,20 +162,12 @@ def make_salsa20_decrypt_fallback_udf(key: str, iv: str):
     a single projection alias carries it and downstream consumers
     reference the attribute, never a second UDF call.
     """
-    kb, nb = prepare_salsa_key(key), prepare_salsa_iv(iv)
 
     @pandas_udf(StringType())
     def _decrypt_fb(col: pd.Series) -> pd.Series:
         def one(v: str | None) -> str | None:
-            if v is None or v == "":
-                return v
-            try:
-                plain = salsa20_xor(kb, nb, base64.b64decode(v)).decode(
-                    "utf-8"
-                )
-            except Exception:
-                return v
-            return plain if plain != "" else v
+            plain = salsa20_decrypt_str(key, iv, v)
+            return plain if plain else v
 
         return col.map(one)
 

@@ -187,13 +187,6 @@ def stable_round(c: Column | str, digits: int) -> Column:
     return F.floor(col * F.lit(s) + F.lit(0.5)) / F.lit(s) + F.lit(0.0)
 
 
-def stable_round_sql(expr: str, digits: int) -> str:
-    """The DuckDB twin of :func:`stable_round` — inline in oracle SQL
-    so both engines run the identical formula."""
-    s = 10 ** digits
-    return f"floor(({expr}) * {s} + 0.5) / {s} + 0.0"
-
-
 # ------------------------------------------------------------- P2 helper
 def coalesce_nonempty(*cols: Column | str) -> Column:
     """First non-NULL, non-empty value — the field-name-drift coalescer

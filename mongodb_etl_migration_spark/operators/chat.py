@@ -346,8 +346,7 @@ def sft_tokens(
     codegen CSE), then ONE aggregate fold accumulates ids and spans.
     Pure projection: zero shuffle, zero UDF, any corpus size. ASCII
     scope (gpt2_token_ids' documented boundary — OOV symbols yield
-    NULL ids, counted by the caller); full-UTF-8 corpora take
-    :func:`sft_tokens_batch`, identical on the shared scope (tested).
+    NULL ids, counted by the caller).
 
     NULL role/content encode as '' (mirroring render_chat); a NULL
     role is never masked (same rule as loss_mask_spans).
@@ -441,88 +440,6 @@ def sft_tokens(
     return F.expr(
         f"aggregate({enc_sql}, {zero_sql}, "
         f"(__acc, __cx) -> {step_sql}, __fa -> {finish_sql})"
-    )
-
-
-def sft_tokens_batch(
-    df: DataFrame,
-    turns_col: str,
-    merges: list[tuple[str, str]],
-    template: ChatTemplate | str = "tagged",
-    id_col: str = "doc_id",
-    special_ids: dict[str, int] | None = None,
-) -> DataFrame:
-    """Arrow-batched twin of :func:`sft_tokens` for full-UTF-8
-    corpora and real ~50k-merge vocabularies: the reference scanner +
-    greedy loop (text.gpt2_apply_reference) run per segment in a
-    mapInPandas stage, the vocab shipping once per executor inside
-    the serialized function (the gpt2_encode_ids_batch discipline).
-    Byte-level BPE's base alphabet covers every byte, so this path is
-    LOSSLESS on any input — no OOV. Output: (id_col, n_tokens bigint,
-    token_ids string — space-joined, mask_spans string —
-    'turn:start:end' comma-joined; scalar so the driver hash gate can
-    canonicalize). Identical to sft_tokens on its ASCII scope
-    (property-tested)."""
-    from .text import gpt2_apply_reference, gpt2_vocab
-
-    tpl = resolve_template(template)
-    vocab = gpt2_vocab(merges)
-    # rank precomputed ONCE: rebuilding a 50k-entry dict per segment
-    # dominated the first real-vocab receipt run (BENCH_sft_vocab)
-    rank = {pair: i for i, pair in enumerate(merges)}
-
-    def seg_ids(s: str) -> list[int]:
-        return [vocab[sym] for sym in gpt2_apply_reference(s, merges, rank)]
-
-    bos = _encode_constant(tpl.bos, merges, special_ids)
-    sfx = _encode_constant(tpl.suffix, merges, special_ids)
-    eos = _encode_constant(tpl.eos, merges, special_ids)
-    pre = _encode_constant(tpl.pre_role, merges, special_ids)
-    post = _encode_constant(tpl.post_role, merges, special_ids)
-    id_type = df.schema[id_col].dataType.simpleString()
-
-    def run(batches):
-        import pandas as pd
-
-        for pdf in batches:
-            out_n, out_ids, out_spans = [], [], []
-            for turns in pdf[turns_col]:
-                ids = list(bos)
-                spans: list[tuple[int, int, int]] = []
-                for x in turns if turns is not None else []:
-                    role = x["role"] or ""
-                    content = x["content"] or ""
-                    hdr = (
-                        pre + seg_ids(role) + post
-                        if special_ids
-                        else seg_ids(tpl.pre_role + role + tpl.post_role)
-                    )
-                    cnt = seg_ids(content)
-                    start = len(ids) + len(hdr)
-                    ids += hdr + cnt + sfx
-                    if x["role"] == "assistant":
-                        spans.append(
-                            (x["turn_idx"], start, start + len(cnt))
-                        )
-                ids += eos
-                out_n.append(len(ids))
-                out_ids.append(" ".join(map(str, ids)))
-                out_spans.append(
-                    ",".join(f"{t}:{s}:{e}" for t, s, e in spans)
-                )
-            yield pd.DataFrame(
-                {
-                    id_col: pdf[id_col],
-                    "n_tokens": out_n,
-                    "token_ids": out_ids,
-                    "mask_spans": out_spans,
-                }
-            )
-
-    return df.mapInPandas(
-        run,
-        f"{id_col} {id_type}, n_tokens bigint, "
-        "token_ids string, mask_spans string",
     )
 
 
@@ -758,41 +675,6 @@ def conversation_dedup(
     return keyed.groupBy("conv_key").agg(
         F.min(id_col).cast("bigint").alias("kept_id"),
         F.count("*").cast("bigint").alias("n_dups"),
-    )
-
-
-def write_conv_key_index(
-    conv: DataFrame,
-    path: str,
-    turns_col: str = "turns",
-    id_col: str = "doc_id",
-    mode: str = "overwrite",
-) -> None:
-    """Persist the conversation-dedup index — conversation_dedup's
-    (conv_key, kept_id, n_dups) rows — for CONTINUOUS INGESTION: SFT
-    dumps are append-only, so key the historical corpus once, then
-    each arriving batch probes/merges the index instead of re-keying
-    every conversation ever seen (the write_minhash_index /
-    gram_count_index discipline applied to the chat family). The
-    aggregate is additive: maintain with conv_dedup_merge."""
-    conversation_dedup(conv, turns_col, id_col).write.mode(mode).parquet(
-        path
-    )
-
-
-def conv_dedup_merge(index: DataFrame, batch_agg: DataFrame) -> DataFrame:
-    """Index MAINTENANCE: fold a batch's conversation_dedup rows into
-    the held index — min(kept_id) keeps first-wins across history and
-    batch, counts add. union + one re-aggregate, the gram_count_index
-    additive-maintenance rule; equals conversation_dedup over the
-    full union row-for-row (tested)."""
-    return (
-        index.unionByName(batch_agg)
-        .groupBy("conv_key")
-        .agg(
-            F.min("kept_id").cast("bigint").alias("kept_id"),
-            F.sum("n_dups").cast("bigint").alias("n_dups"),
-        )
     )
 
 

@@ -202,79 +202,6 @@ def lsh_bands(
     ).select(id_col, "b.band", "b.band_key")
 
 
-def lsh_hit_probability(s: float, bands: int, rows: int) -> float:
-    """The LSH S-curve: probability that two sets of Jaccard
-    similarity ``s`` share at least one band under (bands, rows)
-    banding — 1 - (1 - s^rows)^bands (Leskovec/Rajaraman/Ullman,
-    Mining of Massive Datasets §3.4.2)."""
-    return 1.0 - (1.0 - s**rows) ** bands
-
-
-def lsh_tune(
-    threshold: float,
-    num_hashes: int,
-    fp_weight: float = 0.5,
-    fn_weight: float = 0.5,
-    _steps: int = 200,
-) -> tuple[int, int]:
-    """Choose (bands, rows_per_band) for a target Jaccard
-    ``threshold`` — the standard S-curve optimization every MinHash
-    deployment runs before picking banding (same objective as
-    datasketch's optimal-param search, implemented from the MMDS
-    math): over all (b, r) with b·r ≤ num_hashes, minimize the
-    weighted sum of the false-positive mass ∫₀^t P_hit(s) ds (pairs
-    BELOW threshold that still collide → wasted verification work)
-    and the false-negative mass ∫_t^1 (1 - P_hit(s)) ds (true
-    near-dups the blocker misses). The FULL lattice is searched —
-    every (b, r) with b·r ≤ num_hashes, not just r = num_hashes//b,
-    since under-using the hash budget is sometimes optimal (fewer
-    rows per band ⇒ earlier S-curve rise). Trapezoid integration at
-    ``_steps`` points; deterministic tie-break (first minimum in
-    (bands asc, rows asc) enumeration order).
-
-    At 100 TB the trade-off is asymmetric and the weights are the
-    knob: false positives cost shuffle + verification compute, false
-    negatives cost corpus quality. Returns (bands, rows_per_band)
-    with bands·rows ≤ num_hashes."""
-    if not (0.0 < threshold < 1.0):
-        raise ValueError("threshold must be in (0, 1)")
-    if num_hashes < 1:
-        raise ValueError("num_hashes must be >= 1")
-
-    def integral(fn, lo: float, hi: float) -> float:
-        if hi <= lo:
-            return 0.0
-        h = (hi - lo) / _steps
-        total = 0.5 * (fn(lo) + fn(hi))
-        for i in range(1, _steps):
-            total += fn(lo + i * h)
-        return total * h
-
-    best: tuple[float, int, int] | None = None
-    for b in range(1, num_hashes + 1):
-        for r in range(1, num_hashes // b + 1):
-            fp = integral(
-                lambda s: lsh_hit_probability(s, b, r), 0.0, threshold
-            )
-            fn = integral(
-                lambda s: 1.0 - lsh_hit_probability(s, b, r),
-                threshold,
-                1.0,
-            )
-            err = fp_weight * fp + fn_weight * fn
-            if best is None or err < best[0] - 1e-12:
-                best = (err, b, r)
-    assert best is not None
-    return best[1], best[2]
-
-
-def lsh_threshold(bands: int, rows: int) -> float:
-    """The banding's approximate similarity threshold (1/b)^(1/r) —
-    where the S-curve crosses ~0.5 (MMDS §3.4.3); the inverse
-    sanity-check for lsh_tune's output."""
-    return (1.0 / bands) ** (1.0 / rows)
-
-
 def minhash_jaccard_estimate(
     sig_df: DataFrame,
     pairs: DataFrame,
@@ -396,32 +323,6 @@ def minhash_dedup_pairs(
 
 
 
-def write_minhash_index(
-    df: DataFrame,
-    id_col: str,
-    text_col: str,
-    path: str,
-    k: int = 3,
-    num_hashes: int = 16,
-    bands: int = 4,
-    mode: str = "overwrite",
-) -> None:
-    """Persist the LSH band index (band, band_key, id) for INCREMENTAL
-    near-dup detection: hash the historical corpus once, then each
-    ingest batch probes the index instead of re-hashing 100 TB
-    (continuous-ingestion twin of minhash_dedup_pairs, same signature
-    family/banding so batch and incremental candidates agree).
-    Hive-partitioned by band: a FULL probe touches every band
-    directory (each new doc emits all bands), but the layout lets a
-    band-sharded probe schedule per-band joins independently and
-    lets single-band maintenance (re-banding, compaction) prune to
-    one directory."""
-    df = df.filter(F.size(tokens(F.col(text_col))) >= k)
-    sig = minhash_signatures_narrow(df, id_col, text_col, k, num_hashes)
-    band = lsh_bands(sig, id_col, num_hashes, bands)
-    band.write.mode(mode).partitionBy("band").parquet(path)
-
-
 def neardup_probe(
     new_df: DataFrame,
     index_band: DataFrame,
@@ -453,26 +354,6 @@ def neardup_probe(
         .select("id_new", "id_indexed")
         .distinct()
     )
-
-
-def neardup_against_index(
-    new_df: DataFrame,
-    index_path: str,
-    id_col: str,
-    text_col: str,
-    k: int = 3,
-    num_hashes: int = 16,
-    bands: int = 4,
-) -> DataFrame:
-    """:func:`neardup_probe` against the PERSISTED index written by
-    :func:`write_minhash_index`. The probe reads all band directories
-    (every new doc emits every band id); the partitioned layout's win
-    is per-band scheduling and maintenance, not scan pruning."""
-    idx = new_df.sparkSession.read.parquet(index_path)
-    return neardup_probe(
-        new_df, idx, id_col, text_col, k, num_hashes, bands
-    )
-
 
 
 # ------------------------------------------------- Dedup clusters

@@ -10,10 +10,8 @@ technique behind Delta/Iceberg OPTIMIZE ZORDER BY; Morton 1966).
 
 Everything here is integer-exact bit arithmetic (shiftleft/OR over
 BIGINT), so the DuckDB oracle reproduces Z-values bit-for-bit and the
-layout receipt (per-file min/max bounds) is deterministic. This is
-the single Morton implementation: sources/writers.zorder_key wraps
-``zvalue`` with float min/max scaling, and the write-side sink is
-sources/writers.write_zordered (range shuffle + in-partition sort).
+layout receipt (per-file min/max bounds) is deterministic. ``zvalue``
+is the single Morton implementation.
 """
 
 from __future__ import annotations
@@ -77,8 +75,7 @@ def zorder_layout(
     what repartitionByRange(zval) + sortWithinPartitions(zval)
     produces at write time (the range partitioner samples boundaries;
     this computes them exactly). Returned instead of written so
-    layouts are queryable/oracle-able; the write-side twin is
-    ``zorder_write``.
+    layouts are queryable/oracle-able.
 
     Two passes by design, t_quality_cutoff's shape: the exact
     boundary percentiles collapse to ONE driver-side row of
@@ -90,14 +87,11 @@ def zorder_layout(
 
     Boundary comparisons run in DOUBLE (percentile interpolates), so
     Z-codes must stay within double's 2^53 exact-integer range —
-    len(cols)*bits is capped at 53 here (zvalue alone allows 63; the
-    write-side twin write_zordered range-partitions on the exact
-    BIGINT and has no such cap)."""
+    len(cols)*bits is capped at 53 here (zvalue alone allows 63)."""
     if len(cols) * bits > 53:
         raise ValueError(
             f"{len(cols)} cols x {bits} bits exceeds double's exact "
-            "integer range; equal-depth boundaries compare in DOUBLE "
-            "(use write_zordered for wider codes)"
+            "integer range; equal-depth boundaries compare in DOUBLE"
         )
     z = df.withColumn(out_col, zvalue(cols, bits))
     if n_files < 2:

@@ -267,17 +267,6 @@ def sample_ranges(track: dict) -> list[tuple[int, int]]:
     return out
 
 
-def extract_sample(raw: bytes, track: dict, idx: int) -> bytes:
-    """Raw bytes of sample ``idx`` (0-based) — real extraction from
-    mdat; decoding those bytes is the stage that genuinely needs a
-    codec library and stays out of scope."""
-    ranges = sample_ranges(track)
-    off, size = ranges[idx]
-    if off + size > len(raw):
-        raise ValueError("sample range outside file")
-    return raw[off:off + size]
-
-
 def build_mp4(
     samples: list[bytes],
     width: int = 64,

@@ -16,7 +16,7 @@ approximation, numpy DCT/IDCT; 4:4:4/4:2:2/4:4:0/4:2:0 sampling,
 grayscale, any dims, restart markers — arithmetic/lossless/12-bit
 rejected loudly) and WAV (PCM16) are decoded FOR REAL with stdlib
 struct/zlib/wave + numpy — ``decode_images`` / ``decode_audio`` /
-``resize_images`` / ``sample_frames`` parse actual bytes and return
+``sample_frames`` parse actual bytes and return
 actual dimensions/samples/frames. ISO BMFF (MP4) gets a REAL
 container layer (operators/mp4: box walk, track metadata,
 stsc/stco/stsz sample-byte extraction from mdat); only the DECODE of
@@ -40,7 +40,6 @@ import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.types import (
-    BinaryType,
     DoubleType,
     LongType,
     StringType,
@@ -801,69 +800,6 @@ def decode_audio(multimodal: DataFrame) -> DataFrame:
     return multimodal.mapInPandas(gen, AUDIO_SCHEMA)
 
 
-RESIZED_SCHEMA = StructType(
-    [
-        StructField("doc_id", LongType()),
-        StructField("width", LongType()),
-        StructField("height", LongType()),
-        StructField("payload", BinaryType()),
-    ]
-)
-
-
-def resize_images(
-    multimodal: DataFrame, target_w: int = 224, target_h: int = 224
-) -> DataFrame:
-    """Resize via mapInPandas. BMP, PNG, QOI and baseline-JPEG
-    payloads are resized FOR REAL: parse_image → nearest-neighbor
-    resample (numpy index grids — the same algorithm PIL's NEAREST
-    uses) → re-encoded in the SOURCE container (BMP→BMP, PNG→PNG,
-    QOI→QOI, JPEG→JPEG when the target dims are block-aligned, else
-    lossless BMP rather than a padded re-encode). Animated GIF is
-    deliberately excluded (single-image resize would silently discard
-    frames — resample per-frame via parse_gif instead); it and
-    out-of-scope formats fall back to the deterministic truncate/pad
-    stub so byte-level goldens hold. Spark-side contract (schema,
-    Arrow batching, partition preservation) is identical for both
-    paths."""
-
-    def one(raw: bytes) -> bytes:
-        try:
-            if raw[:4] == b"GIF8":
-                raise ValueError("animated GIF: per-frame resize only")
-            w, h, px = parse_image(raw)
-            ys = (np.arange(target_h) * h) // target_h
-            xs = (np.arange(target_w) * w) // target_w
-            resampled = px[ys][:, xs]
-            if raw[:8] == _PNG_SIG:
-                return encode_png(resampled)
-            if raw[:4] == b"qoif":
-                return encode_qoi(resampled)
-            if (
-                raw[:2] == b"\xff\xd8"
-                and target_h % 8 == 0
-                and target_w % 8 == 0
-            ):
-                return encode_jpeg(resampled)
-            return encode_bmp(resampled)
-        except ValueError:
-            n = target_w * target_h // 64  # stub byte budget
-            return raw[:n].ljust(n, b"\x00")
-
-    def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            yield pd.DataFrame(
-                {
-                    "doc_id": pdf["doc_id"],
-                    "width": target_w,
-                    "height": target_h,
-                    "payload": pdf["payload"].map(lambda b: one(bytes(b))),
-                }
-            )
-
-    return multimodal.mapInPandas(gen, RESIZED_SCHEMA)
-
-
 FRAME_SCHEMA = StructType(
     [
         StructField("doc_id", LongType()),
@@ -927,9 +863,9 @@ def sample_frames(multimodal: DataFrame, every_n: int = 8) -> DataFrame:
                             if t["handler"] == "vide"
                         )
                         ranges = _mp4.sample_ranges(video)
-                        # the extract_sample bounds rule, applied up
-                        # front: a truncated mdat / corrupt stco must
-                        # not silently digest short byte slices
+                        # bounds checked up front: a truncated mdat /
+                        # corrupt stco must not silently digest short
+                        # byte slices
                         if any(off + sz > len(raw) for off, sz in ranges):
                             raise ValueError("sample range outside file")
                     except (ValueError, StopIteration):
@@ -1456,7 +1392,7 @@ def parse_jpeg(raw: bytes) -> tuple[int, int, np.ndarray]:
     try:
         return _parse_jpeg_inner(raw)
     except (IndexError, KeyError, struct.error) as e:
-        # the ValueError contract decode_images/resize_images rely on:
+        # the ValueError contract decode_images relies on:
         # a truncated or table-less stream must yield the honest-NULL
         # fallback, never crash the Spark task with a raw IndexError
         raise ValueError(f"malformed JPEG: {e!r}") from e
@@ -2458,20 +2394,18 @@ def write_dhash_index(
     mode: str = "overwrite",
 ) -> None:
     """Persist the banded dHash index for INCREMENTAL image near-dup
-    detection (the write_minhash_index twin): hash the historical
-    image corpus once; each ingest batch probes the index instead of
-    re-decoding history. Layout: (band, band_key, id, dhash)
+    detection: hash the historical image corpus once; each ingest
+    batch probes the index instead of re-decoding history. Layout: (band, band_key, id, dhash)
     Hive-partitioned by band. A 1-row ``_stats`` frame (bands,
     n_images) persists alongside (underscore dir — invisible to the
     partitioned read) so probes derive the banding from the index's
-    OWN metadata, never a repeated literal (the bm25_probe_indexed /
-    append_ivf_index rule).
+    OWN metadata, never a repeated literal (the bm25_probe_indexed
+    rule).
 
-    ``mode="append"`` is the ADDITIVE maintenance path (the
-    append_ivf_index shape): the batch's band rows are appended into
-    the existing band directories (batch-sized write, history
-    untouched) after validating ``bands`` against the index's own
-    stats row — an append with a different banding would silently
+    ``mode="append"`` is the ADDITIVE maintenance path: the batch's
+    band rows are appended into the existing band directories
+    (batch-sized write, history untouched) after validating ``bands``
+    against the index's own stats row — an append with a different banding would silently
     corrupt the self-describing contract probes rely on, so a
     mismatch refuses loudly. The stats row is then DERIVED from the
     written band files (row count / bands — a parquet footer-metadata
@@ -3196,26 +3130,6 @@ def video_neardup_against_index(
         .agg(F.count("*").cast("bigint").alias("n_shared"))
         .filter(F.col("n_shared") >= min_shared)
     )
-
-
-def audio_neardup_clusters(
-    fp: DataFrame,
-    id_col: str = "doc_id",
-    key_col: str = "fkey",
-    min_shared: int = 2,
-    max_key_audios: int | None = None,
-) -> DataFrame:
-    """Audio near-dup CLUSTERS: confirmed pairs
-    (:func:`audio_neardup_pairs`) → large-star/small-star connected
-    components (dedup.py — the shared cluster machinery every
-    modality's chain ends in). Output: (id, component = min member
-    id) for every paired audio."""
-    from .dedup import connected_components
-
-    pairs = audio_neardup_pairs(
-        fp, id_col, key_col, min_shared, max_key_audios
-    )
-    return connected_components(pairs)
 
 
 def _fkey_bucket(key: Column, buckets: int) -> Column:

@@ -148,38 +148,6 @@ def kmv_sketch(
     )
 
 
-def kmv_merge(
-    sketches: DataFrame, group_cols: list[str], k: int = 64
-) -> DataFrame:
-    """Merge per-shard KMV sketches into one per group — the property
-    that makes KMV the scale answer (sketch each shard independently,
-    merge the tiny summaries; no re-scan): union the hash sets,
-    dedupe, keep the k smallest, re-estimate. A merged sketch is
-    IDENTICAL to sketching the concatenated input (tested), because
-    bottom-k of a union is bottom-k of the unioned bottom-ks.
-    Input rows: (group_cols..., kmv array<long>); same output schema
-    as kmv_sketch."""
-    if k < 2:
-        raise ValueError("k must be >= 2")
-    merged = (
-        sketches.select(*group_cols, F.explode("kmv").alias("__h"))
-        .distinct()
-        .groupBy(*group_cols)
-        .agg(F.slice(F.sort_array(F.collect_list("__h")), 1, k).alias("kmv"))
-    )
-    n_seen = F.size("kmv").cast("bigint")
-    kth = F.element_at("kmv", k)
-    est = F.when(n_seen < k, n_seen.cast("double")).otherwise(
-        F.lit(float(k - 1)) * F.lit(float(2**60)) / kth.cast("double")
-    )
-    return merged.select(
-        *group_cols,
-        "kmv",
-        n_seen.alias("n_seen"),
-        est.alias("distinct_est"),
-    )
-
-
 def kmv_set_ops(
     a: DataFrame, b: DataFrame, group_cols: list[str], k: int = 64
 ) -> DataFrame:
@@ -301,30 +269,6 @@ def cm_sketch(
     )
 
 
-def cm_estimate(
-    sketch_rows: list[tuple[int, int, int]],
-    values: list[str],
-    depth: int = 4,
-    width: int = 64,
-    salt: str = "cm",
-) -> dict[str, int]:
-    """Driver-side point queries against a collected Count-Min sketch
-    (depth·width longs — KBs): estimate(value) = min over rows of its
-    counter. Same salted-hash derivation as cm_sketch."""
-    import hashlib
-
-    table = {(r, i): c for r, i, c in sketch_rows}
-
-    def h(value: str, r: int) -> int:
-        hx = hashlib.md5(f"{salt}#{r}#{value}".encode()).hexdigest()[:15]
-        return int(hx, 16) % width
-
-    return {
-        v: min(table.get((r, h(v, r)), 0) for r in range(depth))
-        for v in values
-    }
-
-
 # HLL constants: m = 64 registers (6 bucket bits), rho over a 40-bit
 # window, harmonic sum scaled by 2^40 so it is an exact BIGINT.
 HLL_M = 64
@@ -433,64 +377,3 @@ def hll_sketch(
     )
 
 
-def hll_merge(
-    sketches: DataFrame, group_cols: list[str]
-) -> DataFrame:
-    """Merge per-shard HLL sketches (rows with the ``registers``
-    digest from hll_sketch) into one per group: register-wise MAX —
-    the property that makes HLL the 100 TB cardinality answer.
-    Merging is exact: max of maxes is the max, so a merged sketch is
-    bit-identical to sketching the concatenated input (tested).
-    Same output schema as hll_sketch."""
-    # least() clamps legacy digests that carried the uncapped rho=41
-    # (pre-fix sketches) so the `1 << (40 - m)` term never shifts by a
-    # negative amount — see the cap note in hll_sketch.
-    exploded = sketches.select(
-        *group_cols,
-        F.posexplode(
-            F.transform(
-                F.split("registers", "-"),
-                lambda s: F.least(s.cast("int"), F.lit(HLL_RHO_BITS)),
-            )
-        ).alias("__bkt", "__m"),
-    )
-    dense = (
-        exploded.groupBy(*group_cols, "__bkt")
-        .agg(F.max("__m").alias("__m"))
-        .groupBy(*group_cols)
-        .agg(
-            F.map_from_arrays(
-                F.collect_list("__bkt"), F.collect_list("__m")
-            ).alias("__regs"),
-            F.sum(F.when(F.col("__m") == 0, 1).otherwise(0)).alias("__nz"),
-            F.sum(
-                F.expr(f"CAST(1 AS BIGINT) << ({HLL_RHO_BITS} - __m)")
-            ).alias("__z"),
-        )
-    )
-    v = F.col("__nz").cast("bigint")
-    z = F.col("__z").cast("bigint")
-    raw = F.lit(HLL_A) / z.cast("double")
-    lc = _hll_linear_table()
-    lc_expr = F.lit(None).cast("double")
-    for vv in sorted(lc, reverse=True):
-        lc_expr = F.when(v == vv, F.lit(lc[vv])).otherwise(lc_expr)
-    est = F.when((raw <= F.lit(2.5 * HLL_M)) & (v > 0), lc_expr).otherwise(
-        raw
-    )
-    digest = F.array_join(
-        F.transform(
-            F.sequence(F.lit(0), F.lit(HLL_M - 1)),
-            lambda i: F.coalesce(
-                F.element_at(F.col("__regs"), i), F.lit(0)
-            ).cast("string"),
-        ),
-        "-",
-    )
-    return dense.select(
-        *group_cols,
-        digest.alias("registers"),
-        v.alias("n_zero"),
-        z.alias("z_scaled"),
-        est.alias("distinct_est"),
-    )

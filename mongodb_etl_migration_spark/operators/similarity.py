@@ -312,132 +312,6 @@ def semantic_dedup_keep(
     return bucketed.join(dropped, id_col, "left_anti")
 
 
-def write_ivf_index(
-    emb: DataFrame,
-    path: str,
-    planes: Sequence[Sequence[float]],
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-) -> None:
-    """Materialize the IVF-style index: embeddings written partitioned
-    BY LSH bucket (directory per bucket). A probe filters on the bucket
-    column → PartitionFilters prune to 1/2^|planes| of the files before
-    any IO — the inverted-file idea expressed with Spark-native
-    physical partitioning.
-
-    Alongside the postings, a 1-row stats frame persists at
-    ``path/_stats`` (underscore-prefixed: invisible to the partitioned
-    read) carrying n_vectors and THE PLANES THEMSELVES — maintenance
-    and probes derive the quantizer from the index's own stats, never
-    a repeated literal (the bm25_probe_indexed rule: a plane mismatch
-    would assign new vectors to directories inconsistent with the
-    existing layout and silently corrupt pruning)."""
-    emb.withColumn("bucket", hyperplane_bucket(vec_col, planes)).write.mode(
-        "overwrite"
-    ).partitionBy("bucket").parquet(path)
-    import json as _json
-
-    n = emb.count()
-    emb.sparkSession.createDataFrame(
-        [(int(n), _json.dumps([[float(x) for x in p] for p in planes]))],
-        "n_vectors bigint, planes_json string",
-    ).write.mode("overwrite").parquet(f"{path}/_stats")
-
-
-def read_ivf_stats(spark, path: str) -> tuple[int, list[list[float]]]:
-    """(n_vectors, planes) from the index's own stats row — one
-    bounded 1-row collect (the documented bounded-collect pattern)."""
-    import json as _json
-
-    row = spark.read.parquet(f"{path}/_stats").collect()[0]
-    return int(row["n_vectors"]), _json.loads(row["planes_json"])
-
-
-def append_ivf_index(
-    batch: DataFrame,
-    path: str,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-) -> None:
-    """ADDITIVE IVF maintenance — the postings_from_tf rule applied to
-    ANN: assign a new vector batch to the PERSISTED index's own planes
-    (read from ``path/_stats``, never re-passed by the caller), append
-    its postings into the existing bucket directories, and fold the
-    1-row stats additively. Cost is batch-sized: the assignment is a
-    projection over the batch, the write appends only the batch's
-    files (ZERO shuffle, no touch of historical postings), and the
-    stats update is a 1-row rewrite — continuous embedding ingest
-    never rebuilds or rereads the 100 TB index. Probe parity with a
-    from-scratch rebuild over the union is pinned by test
-    (bucket = pure function of (vector, planes), so append and
-    rebuild agree bit for bit). Append-only single-writer, like the
-    bm25 maintenance path.
-
-    ``n_vectors`` is DERIVED from the written postings after the
-    append (a parquet footer-metadata count) rather than folded from
-    a second execution of the batch plan — a nondeterministic source
-    could otherwise record a count different from what was written,
-    and a crash between the postings write and the stats rewrite
-    would understate n_vectors forever. Deriving self-heals: the next
-    append recomputes the truth from the postings themselves."""
-    import json as _json
-
-    spark = batch.sparkSession
-    _, planes = read_ivf_stats(spark, path)
-    batch.withColumn(
-        "bucket", hyperplane_bucket(vec_col, planes)
-    ).write.mode("append").partitionBy("bucket").parquet(path)
-    n_total = spark.read.parquet(path).count()
-    spark.createDataFrame(
-        [(int(n_total), _json.dumps(planes))],
-        "n_vectors bigint, planes_json string",
-    ).write.mode("overwrite").parquet(f"{path}/_stats")
-
-
-def ivf_probe_indexed(
-    spark,
-    path: str,
-    query_vec: Sequence[float],
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    k: int = 10,
-) -> DataFrame:
-    """:func:`ivf_probe_topk` with the planes taken from the index's
-    OWN stats (the bm25_probe_indexed shape) — the probe a maintained
-    index serves, immune to caller-side plane drift."""
-    _, planes = read_ivf_stats(spark, path)
-    return ivf_probe_topk(
-        spark, path, query_vec, planes, id_col, vec_col, k
-    )
-
-
-def ivf_probe_topk(
-    spark,
-    path: str,
-    query_vec: Sequence[float],
-    planes: Sequence[Sequence[float]],
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    k: int = 10,
-) -> DataFrame:
-    """Top-k over the materialized IVF index: scans ONLY the query's
-    bucket directory (partition pruning), then exact cosine + top-k."""
-    qbits = "".join(
-        "1" if sum(float(a) * float(b) for a, b in zip(query_vec, p)) >= 0 else "0"
-        for p in planes
-    )
-    return (
-        spark.read.parquet(path)
-        .filter(F.col("bucket") == qbits)
-        .select(
-            F.col(id_col),
-            _cos_to_query(vec_col, query_vec).alias("cos_sim"),
-        )
-        .orderBy(F.desc("cos_sim"), F.col(id_col))
-        .limit(k)
-    )
-
-
 def l2_normalize(vec: str) -> Column:
     """Unit-norm embedding (the preprocessing step before cosine ANN —
     normalized vectors turn cosine into dot product).

@@ -886,61 +886,6 @@ def bfd_bins_fold(items_sorted: Column, seq_len: int) -> Column:
     return F.aggregate(items_sorted, zero, step, lambda acc: acc["bins"])
 
 
-def pack_buckets_tune(
-    df,
-    ids_col: str | None = None,
-    seq_len: int = 1024,
-    target_items_per_bucket: int = 128,
-) -> int:
-    """Size ``n_buckets`` for the best-fit packers from corpus token
-    stats (the lsh_tune discipline applied to packing): the BFD fold
-    is O(items × bins) per bucket, so wall scales with the SQUARE of
-    items-per-bucket while the exchange cost is flat in n_buckets —
-    the right knob setting is therefore "as many buckets as keeps
-    each bucket near ``target_items_per_bucket`` items", not a
-    hand-set constant that silently degrades when the corpus grows
-    (BENCH_pack.json's bucket_sweep receipts the wall-vs-bucket
-    curve: 524 s at 4 buckets falls to ~3 s at 64 on the sf0.1
-    fixture while bins grow only ~1.5% — 128 items/bucket sits at
-    the knee where halving further buys little wall and costs pad).
-
-    ``ids_col`` given → items are the ≤seq_len document chunks
-    :func:`pack_sequences_bestfit` packs (one 1-row bounded aggregate
-    over the chunk counts); ``ids_col`` None → one item per row
-    (whole conversations, ``chat.pack_sft_bestfit``; a metadata-only
-    count). Packing INVARIANTS (every token packed exactly once,
-    bins ≤ seq_len, drop 0) hold for ANY n_buckets — bucket count is
-    purely a latency/parallelism knob — so tuning never changes
-    what the trainer sees per bin beyond grouping."""
-    if seq_len < 1 or target_items_per_bucket < 1:
-        raise ValueError(
-            "seq_len and target_items_per_bucket must be >= 1"
-        )
-    if ids_col is None:
-        items = df.count()
-    else:
-        items = int(
-            df.agg(
-                F.sum(
-                    F.ceil(
-                        (
-                            F.size(
-                                F.coalesce(
-                                    F.col(ids_col).cast("array<int>"),
-                                    F.array().cast("array<int>"),
-                                )
-                            )
-                            + 1
-                        )
-                        / F.lit(seq_len)
-                    )
-                ).cast("bigint")
-            ).collect()[0][0]
-            or 0
-        )  # bounded: 1-row aggregate
-    return max(1, -(-items // target_items_per_bucket))
-
-
 def pack_sequences_bestfit(
     df,
     id_col: str,
@@ -2053,8 +1998,7 @@ def bm25_index(
     :func:`write_bm25_index` persists and :func:`bm25_probe` joins —
     so repeated retrieval workloads (eval-set decontamination runs,
     corpus audits) stop re-exploding 100 TB of text per query batch.
-    The write_minhash_index / gram_count_index discipline applied to
-    retrieval.
+    The gram_count_index discipline applied to retrieval.
 
     postings: one row per (doc, term) carrying EVERYTHING the scorer
     needs — (id, term, tf, dl, df, tbucket). dl and df are
@@ -2215,27 +2159,6 @@ def bigrams_array(c: Column | str, toks: Column | None = None) -> Column:
         F.slice(toks, 2, n1),
         lambda a, b: F.concat_ws(" ", a, b),
     )
-
-
-def ngrams_array(
-    c: Column | str, n: int, toks: Column | None = None
-) -> Column:
-    """Adjacent-token n-grams as 'a b c' strings for any n >= 1 —
-    transform over an index sequence with a slice+join body (narrow,
-    no UDF). Pass a MATERIALIZED ``toks`` column in hot paths: the
-    guard and the lambda both reference it, and lambda bodies sit
-    outside codegen CSE ([[spark-column-cse]] discipline).
-
-    Fewer than n tokens -> empty array (the ``when`` guard exists
-    because sequence(1, 0) would step DOWNWARD, not return empty)."""
-    toks = tokens(c) if toks is None else toks
-    return F.when(
-        F.size(toks) >= n,
-        F.transform(
-            F.sequence(F.lit(1), F.size(toks) - (n - 1)),
-            lambda i: F.array_join(F.slice(toks, i, n), " "),
-        ),
-    ).otherwise(F.array().cast("array<string>"))
 
 
 def gram_run_stats(sorted_grams: Column) -> Column:
@@ -2552,9 +2475,8 @@ def gram_count_index(df, id_col: str, text_col: str, k: int = 8):
     """Corpus k-gram fingerprint COUNTS — (``_whash``, ``idx_cnt``) —
     the persistent index behind incremental ExactSubstr: fingerprint
     the historical corpus ONCE, then each ingest batch probes the
-    counts instead of re-hashing 100 TB (the substring-dedup twin of
-    write_minhash_index). One exchange (the fingerprint groupBy);
-    persist with ``write_table``/parquet and maintain by unioning
+    counts instead of re-hashing 100 TB. One exchange (the fingerprint
+    groupBy); persist as parquet and maintain by unioning
     batch counts in (counts are additive): ``index ∪ batch-counts``
     re-summed per hash equals a from-scratch index over the union
     corpus row-for-row, and probes against the maintained index
@@ -2926,16 +2848,14 @@ def _validate_flat_merges(merges: list[tuple[str, str]]) -> None:
     [aa,a,aa] vs [aa,aa,a] — same multiset, but a later sequence-
     sensitive merge can then diverge), and a duplicate pair makes
     rank itself ambiguous. Real tables CAN contain self-pairs
-    (run-heavy vocabularies) — those must take the list-based
-    ``bpe_encode_batch`` path, so reject loudly here instead of
+    (run-heavy vocabularies), so reject loudly here instead of
     silently mis-tokenizing."""
     seen = set()
     for a, b in merges:
         if a == b:
             raise ValueError(
                 f"self-pair merge ({a!r},{b!r}): the compiled merge-chain "
-                "path cannot reproduce greedy run pairing — use "
-                "bpe_encode_batch for this table"
+                "path cannot reproduce greedy run pairing"
             )
         if (a, b) in seen:
             raise ValueError(f"duplicate merge ({a!r},{b!r})")
@@ -2955,9 +2875,7 @@ def bpe_encoded_word_sql(
     EXACTLY the greedy lowest-rank loop (rank-order argument +
     adversarial fuzz over random tables); other tables are rejected
     by ``_validate_flat_merges``. Zero shuffle, zero UDF, whole-stage
-    codegen — the fast path for merge tables that fit an expression
-    (~tens). The general ~50k-merge path is ``bpe_encode_batch``
-    (pandas UDF); the two agree exactly (property-tested)."""
+    codegen — for merge tables that fit an expression (~tens)."""
     merges = BPE_MERGES if merges is None else merges
     _validate_flat_merges(merges)
     s = f"concat(' ', regexp_replace({inp}, '(.)', '$1 '))"
@@ -2997,47 +2915,6 @@ def bpe_token_count(
     return F.expr(
         f"aggregate({enc}, cast(0 as bigint), (__acc, __s) -> __acc + "
         f"cast(length(__s) - length(replace(__s, ' ', '')) - 1 as bigint))"
-    )
-
-
-def bpe_encode_batch(df, id_col: str, text_col: str, merges: list[tuple[str, str]] | None = None):
-    """General-vocabulary BPE encode: Arrow-batched pandas UDF running
-    the same greedy algorithm as bpe_apply_reference — the path for
-    real ~50k-merge tables, where compiling merges into an expression
-    is infeasible. The merge table ships once per executor inside the
-    serialized function (broadcast-variable shape); rows stream
-    through Arrow batches, so memory is batch-bounded. Output:
-    (id_col, bpe_tokens bigint, encoded string — space-joined symbols
-    of the whole document). Agrees exactly with the compiled merge
-    chain (tested)."""
-    from pyspark.sql.functions import pandas_udf
-
-    merges = BPE_MERGES if merges is None else merges
-    token_re = TOKEN_RE
-    rank = {pair: i for i, pair in enumerate(merges)}
-
-    @pandas_udf("string")
-    def enc(texts: pd.Series) -> pd.Series:
-        import re
-
-        rx = re.compile(token_re)
-        encs = []
-        for t in texts:
-            words = rx.findall((t or "").lower())
-            pieces: list[str] = []
-            for w in words:
-                pieces.extend(bpe_apply_reference(w, merges, rank))
-            encs.append(" ".join(pieces))
-        return pd.Series(encs)
-
-    out = df.select(F.col(id_col), enc(F.col(text_col)).alias("encoded"))
-    return out.select(
-        id_col,
-        F.when(F.col("encoded") == "", F.lit(0))
-        .otherwise(F.size(F.split("encoded", " ")))
-        .cast("bigint")
-        .alias("bpe_tokens"),
-        "encoded",
     )
 
 
@@ -3157,10 +3034,11 @@ def gpt2_apply_reference(
 ) -> list[str]:
     """Reference byte-level BPE encode: pretokenize, map each
     pretoken's UTF-8 bytes through the GPT-2 alphabet, run the greedy
-    merge loop per pretoken. Driver-side ground truth; the plan-side
-    twins are gpt2_encode_batch (pandas UDF) and the compiled merge
-    chain in gpt2_encoded. Pass a precomputed ``rank`` when encoding
-    many texts against a large vocabulary (see bpe_apply_reference)."""
+    merge loop per pretoken. Driver-side ground truth for the
+    compiled merge chain in gpt2_encoded; gpt2_encode_ids_batch runs
+    it per row for large vocabularies. Pass a precomputed ``rank``
+    when encoding many texts against a large vocabulary (see
+    bpe_apply_reference)."""
     b2u = gpt2_bytes_to_unicode()
     if rank is None:
         rank = {pair: i for i, pair in enumerate(merges)}
@@ -3248,11 +3126,10 @@ def gpt2_encoded(c: str, merges: list[tuple[str, str]]) -> Column:
     expression: pretoken array → GPT-2 byte alphabet (translate for
     the three ASCII whitespace bytes; printable ASCII is identity by
     construction) → the compiled merge chain per pretoken. ASCII-text
-    scope — any other byte needs UTF-8 decomposition, which is the
-    batch path's job (gpt2_encode_batch, same results where scopes
-    overlap, tested). Returns the document's space-joined symbol
-    string (symbols never contain a literal space — the alphabet maps
-    it away — so the join is unambiguous). A dotted ``c`` names a
+    scope — any other byte needs UTF-8 decomposition, which is
+    gpt2_encode_ids_batch's job. Returns the document's space-joined
+    symbol string (symbols never contain a literal space — the
+    alphabet maps it away — so the join is unambiguous). A dotted ``c`` names a
     struct field, as under ``F.col``."""
     return F.expr(gpt2_encoded_sql(sql_ident(c), merges))
 
@@ -3430,40 +3307,6 @@ def gpt2_encode_ids_batch(
         .cast("bigint")
         .alias("n_tokens"),
         "token_ids",
-    )
-
-
-def gpt2_encode_batch(
-    df, id_col: str, text_col: str, merges: list[tuple[str, str]]
-):
-    """General-vocabulary byte-level BPE: Arrow-batched pandas UDF
-    running the reference scanner + greedy loop — the path for real
-    published ~50k-merge tables (GPT-2 merges.txt via parse_merges)
-    and for non-ASCII text (full UTF-8 byte fallback through the
-    GPT-2 alphabet). The merge table ships once per executor inside
-    the serialized function; rows stream through Arrow batches.
-    Output: (id_col, bpe_tokens bigint, encoded string)."""
-    from pyspark.sql.functions import pandas_udf
-
-    rank = {pair: i for i, pair in enumerate(merges)}
-
-    @pandas_udf("string")
-    def enc(texts: pd.Series) -> pd.Series:
-        return pd.Series(
-            [
-                " ".join(gpt2_apply_reference(t or "", merges, rank))
-                for t in texts
-            ]
-        )
-
-    out = df.select(F.col(id_col), enc(F.col(text_col)).alias("encoded"))
-    return out.select(
-        id_col,
-        F.when(F.col("encoded") == "", F.lit(0))
-        .otherwise(F.size(F.split("encoded", " ")))
-        .cast("bigint")
-        .alias("bpe_tokens"),
-        "encoded",
     )
 
 
@@ -3697,8 +3540,8 @@ GOPHER_DUP_NGRAM_LIMITS = {5: 0.15, 6: 0.14, 7: 0.13, 8: 0.12, 9: 0.11, 10: 0.10
 
 def _gram_fold_sql(n: int) -> str:
     """ONE-expr SQL mirror of
-    ``gram_run_stats(array_sort(ngrams_array(_, n, __grt)))`` —
-    semantics pinned by test_gram_fold_sql_matches_column_form.
+    ``gram_run_stats`` over the sorted adjacent n-grams of ``__grt``
+    — semantics pinned by test_gram_fold_sql_matches_column_form.
     The Column-API form costs ~800 py4j round-trips per n (the
     HOF lambda builders chat with the JVM per node) — ~1.6 s of
     pure driver build time for the nine folds per query
@@ -3747,7 +3590,7 @@ _GOPHER_FOLD_TYPE = (
 
 def _gopher_fold_ref_row(toks) -> dict:
     """Exact per-row Python mirror of the nine SQL gram folds
-    (``gram_run_stats(array_sort(ngrams_array(_, n)))``): top =
+    (``gram_run_stats`` over the sorted adjacent n-grams): top =
     max count·len over distinct n-grams, dup = Σ (count−1)·len —
     both are order-free aggregates, so a Counter reproduces the
     sorted-run fold bit-for-bit (lengths are code points on both
@@ -4042,46 +3885,6 @@ def with_gopher_repetition(
     return s3.select("*", gate.alias("gopher_rep_pass"))
 
 
-def bpe_train_reference(
-    word_counts: dict[str, int], n_merges: int, min_count: int = 2
-) -> list[tuple[str, str, int]]:
-    """Plain-Python reference BPE TRAINER (Sennrich et al. 2016): per
-    round, count adjacent symbol pairs over the weighted vocabulary
-    (overlapping run pairs count, the standard zip-adjacent rule),
-    merge the most frequent everywhere (ties: lexicographically
-    smallest pair), stop when the best count drops below
-    ``min_count``. Returns (left, right, pair_count) in rank order —
-    the ground truth bpe_train is tested against."""
-    vocab = {
-        " " + " ".join(w) + " ": int(c) for w, c in word_counts.items() if w
-    }
-    merges: list[tuple[str, str, int]] = []
-    for _ in range(n_merges):
-        counts: dict[tuple[str, str], int] = {}
-        for sym, c in vocab.items():
-            parts = sym.split()
-            for a, b in zip(parts, parts[1:]):
-                counts[(a, b)] = counts.get((a, b), 0) + c
-        if not counts:
-            break
-        best = min(counts.items(), key=lambda kv: (-kv[1], kv[0]))
-        (a, b), n = best
-        if n < min_count:
-            break
-        merges.append((a, b, n))
-        pat, rep = f" {a} {b} ", f" {a}{b} "
-        vocab = {
-            _replace_passes(sym, pat, rep): c for sym, c in vocab.items()
-        }
-    return merges
-
-
-def _replace_passes(s: str, pat: str, rep: str) -> str:
-    for _ in range(_BPE_PASSES):
-        s = s.replace(pat, rep)
-    return s
-
-
 def _select_compatible_batch(
     cands: list[tuple[str, str, int]],
     maxtri: dict[tuple[str, str], int],
@@ -4091,9 +3894,7 @@ def _select_compatible_batch(
 ) -> list[tuple[str, str, int]]:
     """Longest PREFIX of the stale-count candidate ranking that
     provably equals the sequential (one-recount-per-merge) schedule —
-    the driver-side heart of batched BPE training, shared verbatim by
-    ``bpe_train`` and ``bpe_train_batched_reference`` so the measured
-    round count of the Python twin IS the Spark trainer's.
+    the driver-side heart of batched BPE training in ``bpe_train``.
 
     ``cands`` is sorted by (count desc, left, right) — the argmax
     total order — so candidate 1 is exactly what sequential merges
@@ -4165,7 +3966,7 @@ def _select_compatible_batch(
                 # application an earlier pair could consume tokens
                 # this merge creates in the same round (['b','c','x']
                 # with batch [(bc,x),(b,c)] -> ['bcx'] combined vs
-                # ['bc','x'] chained), breaking _apply_merge_batch's
+                # ['bc','x'] chained), breaking the combined scan's
                 # fresh-outputs precondition — end the batch here.
                 # Such a candidate is always collide-flagged (its
                 # output pre-exists in the vocabulary), but collide
@@ -4231,134 +4032,6 @@ def _apply_pair_passes(
     return parts
 
 
-def _apply_merge_batch(
-    parts: list[str],
-    batch: list[tuple[str, str]] | dict[tuple[str, str], str],
-) -> list[str]:
-    """Apply a compatible merge batch in ONE combined multi-pass scan
-    — provably equal to the rank-order per-pair replace chain the
-    Spark path runs (and _apply_pair_passes implements), because
-    _select_compatible_batch guarantees accepted pairs never contend
-    for a token occurrence: cross-side symbol sharing is only
-    accepted when the linking triple count is ZERO (no occurrence
-    where the two pairs touch), same-side sharing cannot overlap by
-    construction, and outputs are fresh strings no other batch pair
-    references — so every position's merge fate is pair-independent
-    and one left-to-right scan settles them all. The per-pair
-    string-replace skip rule (a replacement consumes its trailing
-    delimiter, so the SAME pair cannot start a match immediately
-    after its own replacement within a pass) is kept via ``last``;
-    a DIFFERENT pair matching there merges, exactly as its own
-    separate replace call would. O(word_len · passes) instead of
-    O(word_len · batch) — the difference between minutes and hours
-    per round at 4k-wide batches. ``batch`` may be a prebuilt
-    {(l, r): l+r} dict (hoist it out of per-word loops — profiling
-    showed the per-word dictcomp costing more than the scan)."""
-    out = (
-        batch
-        if isinstance(batch, dict)
-        else {(l, r): l + r for l, r in batch}
-    )
-    for _ in range(_BPE_PASSES):
-        res: list[str] = []
-        i = 0
-        n = len(parts)
-        changed = False
-        last: tuple[str, str] | None = None
-        while i < n:
-            p = (parts[i], parts[i + 1]) if i + 1 < n else None
-            if p is not None and p != last and p in out:
-                res.append(out[p])
-                i += 2
-                changed = True
-                last = p
-            else:
-                res.append(parts[i])
-                i += 1
-                last = None
-        parts = res
-        if not changed:
-            break
-    return parts
-
-
-def bpe_train_batched_reference(
-    word_counts: dict[str, int],
-    n_merges: int,
-    min_count: int = 2,
-    batch_cap: int = 256,
-    stats: dict | None = None,
-    on_round=None,
-) -> list[tuple[str, str, int]]:
-    """Plain-Python BATCHED BPE trainer — bpe_train's schedule twin:
-    identical counts, identical _select_compatible_batch calls,
-    identical merge application, so its trajectory AND round count
-    are the Spark trainer's by construction (property-tested equal to
-    the sequential bpe_train_reference). Exists so a 50k-merge round
-    -count measurement costs seconds instead of 50k Spark jobs; pass
-    ``stats`` to receive {'rounds': N, 'batch_sizes': [...]}."""
-    vocab: list[tuple[list[str], int]] = [
-        (list(w), int(c)) for w, c in word_counts.items() if w
-    ]
-    merges: list[tuple[str, str, int]] = []
-    rounds = 0
-    sizes: list[int] = []
-    while len(merges) < n_merges:
-        cap = min(batch_cap, n_merges - len(merges))
-        pair_counts: dict[tuple[str, str], int] = {}
-        tri_counts: dict[tuple[str, str, str], int] = {}
-        for parts, c in vocab:
-            for j in range(len(parts) - 1):
-                p = (parts[j], parts[j + 1])
-                pair_counts[p] = pair_counts.get(p, 0) + c
-        if not pair_counts:
-            break
-        order = sorted(
-            pair_counts.items(), key=lambda kv: (-kv[1], kv[0])
-        )
-        cands = [(l, r, c) for (l, r), c in order[:cap]]
-        cset = {(l, r) for l, r, _ in cands}
-        # second pass restricted to candidate-adjacent triples — the
-        # only ones maxtri/tri3 can ever query (mirrors the Spark
-        # side, where the triple frame joins against the broadcast
-        # candidate relation before collecting)
-        maxtri: dict[tuple[str, str], int] = {}
-        tri3: dict[tuple[str, str, str], int] = {}
-        for parts, c in vocab:
-            for j in range(len(parts) - 2):
-                a, b, c3 = parts[j], parts[j + 1], parts[j + 2]
-                lp, rp = (a, b) in cset, (b, c3) in cset
-                if not (lp or rp):
-                    continue
-                t = (a, b, c3)
-                n = tri_counts.get(t, 0) + c
-                tri_counts[t] = n
-                if lp and n > maxtri.get((a, b), 0):
-                    maxtri[(a, b)] = n
-                if rp and n > maxtri.get((b, c3), 0):
-                    maxtri[(b, c3)] = n
-                if lp and rp:
-                    tri3[t] = n
-        syms = {s for p in pair_counts for s in p}
-        collide = {(l, r) for l, r, _ in cands if l + r in syms}
-        batch = _select_compatible_batch(
-            cands, maxtri, collide, min_count, tri3
-        )
-        if not batch:
-            break
-        out = {(l, r): l + r for l, r, _ in batch}
-        vocab = [(_apply_merge_batch(p, out), c) for p, c in vocab]
-        merges.extend(batch)
-        rounds += 1
-        sizes.append(len(batch))
-        if on_round is not None:
-            on_round(rounds, len(merges))
-    if stats is not None:
-        stats["rounds"] = rounds
-        stats["batch_sizes"] = sizes
-    return merges
-
-
 def bpe_train_incremental_reference(
     word_counts: dict[str, int],
     n_merges: int,
@@ -4379,7 +4052,7 @@ def bpe_train_incremental_reference(
     BENCH_bpe_train round-10 tier) costs the same per merge as the
     flat tail here, because this trainer never recounts anything.
 
-    Trajectory-EXACT twin of ``bpe_train_reference``: identical
+    Trajectory-EXACT twin of the sequential Sennrich loop: identical
     zip-adjacent counting (overlapping runs count), identical
     (count desc, lexicographic pair) argmax via the heap's
     (-count, pair) order, identical ``min_count`` stop, identical
@@ -4477,8 +4150,8 @@ def bpe_train(
     driver_vocab_max: int = 4_000_000,
 ):
     """Distributed BPE TRAINING — the tokenizer-learning half next to
-    the encode paths (bpe_encoded_word_sql / gpt2_encode_batch consume
-    what this produces). Classic Sennrich iteration, shaped for
+    the encode paths (bpe_encoded_word_sql / gpt2_encode_ids_batch
+    consume what this produces). Classic Sennrich iteration, shaped for
     scale: the corpus is touched EXACTLY ONCE (one token explode +
     count aggregation — the only corpus-sized exchange); every
     training round then runs on the VOCABULARY (wordform → count,
@@ -4501,7 +4174,7 @@ def bpe_train(
     tiny broadcast joins against the same gram frame); then
     ``_select_compatible_batch`` keeps the longest candidate PREFIX
     that provably reproduces the sequential schedule — trajectory
-    equality with ``bpe_train_reference`` is a theorem, not a hope
+    equality with the sequential loop is a theorem, not a hope
     (see its docstring for the four guards), and is property-tested
     on adversarial fixtures (created-pair overtakes, ties, output
     conflation). The whole batch applies in ONE chained-replace
@@ -4820,21 +4493,6 @@ def bpe_train(
         stats["rounds"] = rounds
         stats["batch_sizes"] = sizes
     return merges, vocab
-
-
-def merges_to_text(merges: list[tuple[str, str]] | list[tuple[str, str, int]]) -> str:
-    """Serialize a merge table (learned by bpe_train or hand-built)
-    into the published merges.txt format parse_merges reads — the
-    export half of the tokenizer round-trip (train → ship → load →
-    encode). Counts, if present, are dropped (the format carries rank
-    order only)."""
-    lines = ["#version: 0.2"]
-    for m in merges:
-        a, b = m[0], m[1]
-        if " " in a or " " in b or not a or not b:
-            raise ValueError(f"unserializable merge pair ({a!r}, {b!r})")
-        lines.append(f"{a} {b}")
-    return "\n".join(lines) + "\n"
 
 
 def remove_duplicated_spans(

@@ -105,9 +105,9 @@ def viterbi_segment_reference(
     word: str, costs: dict[str, int], max_piece_len: int
 ) -> list[str] | None:
     """Plain-Python Viterbi under the spec's tie-break — the ground
-    truth the Spark fold is property-tested against, and the E-step
-    of :func:`unigram_train_reference`. Returns the best segmentation
-    or None when the word cannot be covered by the vocabulary."""
+    truth the Spark fold is property-tested against, and the Arrow
+    E-step's segmenter. Returns the best segmentation or None when the
+    word cannot be covered by the vocabulary."""
     n = len(word)
     best: list[tuple[int, int, int]] = [(0, 0, -1)]  # (cost, np, back)
     for i in range(1, n + 1):
@@ -128,72 +128,6 @@ def viterbi_segment_reference(
         out.append(word[j:pos])
         pos = j
     return out[::-1]
-
-
-def unigram_train_reference(
-    word_counts: dict[str, int],
-    vocab_size: int,
-    seed_size: int,
-    max_piece_len: int = 4,
-    rounds: int = 3,
-    seed_min_count: int = 2,
-    max_word_len: int = 16,
-) -> list[tuple[str, int, int]]:
-    """Plain-Python reference unigram trainer (the module spec,
-    executed naively) — the ground truth :func:`unigram_train` is
-    trajectory-pinned against. Returns the final vocabulary as
-    (piece, count, cost_q16) in (count DESC, piece ASC) rank order;
-    the list index is the piece id."""
-    wc = {
-        w: int(c)
-        for w, c in word_counts.items()
-        if w and len(w) <= max_word_len
-    }
-    sub: dict[str, int] = {}
-    for w, c in wc.items():
-        for i in range(len(w)):
-            for k in range(1, max_piece_len + 1):
-                if i + k > len(w):
-                    break
-                p = w[i : i + k]
-                sub[p] = sub.get(p, 0) + c
-    chars = sorted({ch for w in wc for ch in w})
-    multi = sorted(
-        (
-            (p, c)
-            for p, c in sub.items()
-            if len(p) > 1 and c >= seed_min_count
-        ),
-        key=lambda kv: (-kv[1], kv[0]),
-    )
-    counts = {ch: sub[ch] for ch in chars}
-    counts.update(dict(multi[: max(seed_size - len(chars), 0)]))
-
-    for t in range(1, rounds + 1):
-        total = sum(counts.values())
-        costs = {p: ilog2_q16(total, c) for p, c in counts.items()}
-        usage: dict[str, int] = {}
-        for w, c in wc.items():
-            for p in viterbi_segment_reference(w, costs, max_piece_len):
-                usage[p] = usage.get(p, 0) + c
-        keep = max(
-            vocab_size,
-            seed_size - ((seed_size - vocab_size) * t) // rounds,
-        )
-        kept_multi = sorted(
-            (
-                (p, c)
-                for p, c in usage.items()
-                if len(p) > 1 and c >= 1
-            ),
-            key=lambda kv: (-kv[1], kv[0]),
-        )[: max(keep - len(chars), 0)]
-        counts = {ch: max(usage.get(ch, 0), 1) for ch in chars}
-        counts.update(dict(kept_multi))
-
-    total = sum(counts.values())
-    ranked = sorted(counts.items(), key=lambda kv: (-kv[1], kv[0]))
-    return [(p, c, ilog2_q16(total, c)) for p, c in ranked]
 
 
 # ------------------------------------------------------- Spark Viterbi
@@ -292,8 +226,7 @@ def unigram_token_ids(
     A word the vocabulary cannot cover contributes ONE NULL element
     (the gpt2_token_ids honest-OOV rule: counts reflect the miss, the
     NULL-guard pattern catches it downstream). Zero shuffle — the
-    vocabulary rides the plan as literal maps; use
-    :func:`unigram_ids_batch` for production-scale vocabularies."""
+    vocabulary rides the plan as literal maps."""
     t = F.col(text) if isinstance(text, str) else text
     cm = _cost_map([(p, cost) for p, _c, cost in vocab])
     im = F.create_map(
@@ -324,65 +257,13 @@ def unigram_token_ids(
     return F.flatten(per_word)
 
 
-def unigram_ids_batch(
-    df: DataFrame,
-    text_col: str,
-    vocab: list[tuple[str, int, int]],
-    max_piece_len: int = 4,
-    id_col: str = "doc_id",
-):
-    """Arrow-batched encode twin of :func:`unigram_token_ids` for
-    production vocabularies (a 32k-piece cost map is too large as a
-    plan literal; as a Python dict broadcast once per executor it is
-    ~1 MB). Same spec DP (viterbi_segment_reference), same honest-OOV
-    NULL-element rule; property-tested equal to the Column path.
-    Output: (id_col, n_tokens, token_ids space-joined with 'x' for
-    OOV slots)."""
-    import pandas as pd
-
-    costs = {p: cost for p, _c, cost in vocab}
-    ids = {p: i for i, (p, _c, _cost) in enumerate(vocab)}
-    from .text import TOKEN_RE
-
-    import re
-
-    rx = re.compile(TOKEN_RE)
-
-    def run(batches):
-        for pdf in batches:
-            out_n, out_ids = [], []
-            for text in pdf[text_col]:
-                toks: list[str] = []
-                for w in rx.findall((text or "").lower()):
-                    segs = viterbi_segment_reference(
-                        w, costs, max_piece_len
-                    )
-                    if segs is None:
-                        toks.append("x")
-                    else:
-                        toks.extend(str(ids[p]) for p in segs)
-                out_n.append(len(toks))
-                out_ids.append(" ".join(toks))
-            yield pd.DataFrame(
-                {
-                    id_col: pdf[id_col],
-                    "n_tokens": out_n,
-                    "token_ids": out_ids,
-                }
-            )
-
-    return df.select(id_col, text_col).mapInPandas(
-        run, f"{id_col} bigint, n_tokens bigint, token_ids string"
-    )
-
-
 def _segment_words_arrow(
     words: DataFrame, costs: dict[str, int], max_piece_len: int
 ) -> DataFrame:
     """Arrow E-step twin of the Column Viterbi fold for production
     vocabularies: the SAME spec DP (viterbi_segment_reference) over
     the distinct-words frame, costs shipped once per executor as an
-    O(1) Python dict (the sft_tokens_batch discipline). Emits one
+    O(1) Python dict. Emits one
     (n, piece) row per placed piece — the identical explode shape the
     Column path feeds the usage aggregate. Training words are always
     coverable (single chars stay in the vocabulary), asserted rather
@@ -425,7 +306,7 @@ def unigram_train(
     mode: str = "auto",
 ) -> list[tuple[str, int, int]]:
     """Distributed unigram-LM trainer (module spec; trajectory-equal
-    to :func:`unigram_train_reference`, oracle-checked end to end by
+    to a plain-Python run of the spec, oracle-checked end to end by
     the t_unigram_train catalog row).
 
     Plan shape per stage — the bpe_train discipline:

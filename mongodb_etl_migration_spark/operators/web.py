@@ -72,11 +72,6 @@ def path_depth_of(path: Column) -> Column:
     return F.size(F.filter(F.split(path, "/"), lambda s: s != ""))
 
 
-def url_path_depth(c: Column | str) -> Column:
-    """Number of non-empty path segments ('/a/b/' → 2, '/' → 0)."""
-    return path_depth_of(url_path(c))
-
-
 def registered_domain(c: Column | str) -> Column:
     """Heuristic eTLD+1: the last two labels of the host (www.a.com →
     a.com) — the zero-join per-row form. Wrong for multi-label public
@@ -526,11 +521,13 @@ def strip_tracking_params(query: Column) -> Column:
 def canonical_from_parts(
     scheme: Column, host: Column, path: Column, q: Column
 ) -> Column:
-    """Canonical URL assembled from already-materialized part columns
-    (``q`` post-strip_tracking_params). Prefer this over
-    canonicalize_url when the parts exist as columns: Spark's CSE
-    does not deduplicate subtrees across when-branches and lambda
-    bodies, so the inlined form re-runs each regex several times."""
+    """Canonical URL for exact-dedup keys — lowercase scheme+host,
+    default port dropped, fragment and tracking params stripped, the
+    path's trailing slash stripped — assembled from already-materialized
+    part columns (``q`` post-strip_tracking_params; see
+    with_url_parts). Materialized parts matter: Spark's CSE does not
+    deduplicate subtrees across when-branches and lambda bodies, so an
+    inlined form re-runs each regex several times."""
     base = F.concat(scheme, F.lit("://"), host, path)
     return F.when(
         scheme.isNotNull() & host.isNotNull(),
@@ -538,20 +535,6 @@ def canonical_from_parts(
             base,
             F.when(q.isNotNull(), F.concat(F.lit("?"), q)).otherwise(F.lit("")),
         ),
-    )
-
-
-def canonicalize_url(c: Column | str) -> Column:
-    """Canonical URL for exact-dedup keys: lowercase scheme+host, drop
-    default port, strip fragment, strip tracking params, strip the
-    path's trailing slash. Deterministic, engine-mirrorable, one
-    expression — for hot paths, materialize the parts first (see
-    with_url_parts / canonical_from_parts)."""
-    return canonical_from_parts(
-        url_scheme(c),
-        url_host(c),
-        url_path(c),
-        strip_tracking_params(url_query(c)),
     )
 
 

@@ -7,8 +7,7 @@ one HuggingFace tokenizers ships).
 The engine's trainer discipline applied once more: a pure-Python
 reference twin every path is trajectory-pinned against, integer-exact
 arithmetic end to end, an unrolled SQL oracle for the catalog rows,
-and a Column literal-map encoder with an Arrow twin above the
-column-feasible vocabulary bound.
+and a Column literal-map encoder.
 
 Deterministic spec (documented here, mirrored bit-for-bit by the
 DuckDB oracle in queries.py):
@@ -56,31 +55,15 @@ pair/symbol counts DELTA-MAINTAINED per merge (only words containing
 the merged pair are touched — the bpe_train_incremental_reference
 rule; the per-round argmax is a scan of the held pair table, exact
 because stale entries are never kept). Encoding is a zero-shuffle
-per-row fold over literal maps with an Arrow twin above
-``COLUMN_VOCAB_MAX``.
+per-row fold over literal maps.
 """
 
 from __future__ import annotations
 
-from typing import Iterator
-
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
-from pyspark.sql.types import (
-    ArrayType,
-    IntegerType,
-    LongType,
-    StringType,
-    StructField,
-    StructType,
-)
 
 from .text import _apply_pair_passes, tokens
-
-#: above this vocabulary size the Column literal-map encoder's linear
-#: map scans dominate (the unigram COLUMN_VOCAB_MAX rule — measured
-#: there, same element_at cost model here); use wordpiece_ids_batch.
-COLUMN_VOCAB_MAX = 2048
 
 _SCALE_BITS = 100
 
@@ -101,48 +84,6 @@ def merge_token(l: str, r: str) -> str:
     return l + r[2:]
 
 
-def wordpiece_train_reference(
-    word_counts: dict[str, int], n_merges: int, min_count: int = 2
-) -> list[tuple[str, str, int, int, int]]:
-    """Plain-Python reference WordPiece TRAINER — recount-per-round
-    ground truth the incremental path is trajectory-pinned against.
-    Per round: adjacent-pair counts AND symbol counts over the
-    weighted vocabulary, argmax by (score_key DESC, (l, r) ASC),
-    merge applied everywhere via ``_apply_pair_passes``. Returns
-    (left, right, pair_count, left_count, right_count) in rank
-    order."""
-    vocab = {
-        w: (word_symbols(w), int(c))
-        for w, c in word_counts.items()
-        if w
-    }
-    merges: list[tuple[str, str, int, int, int]] = []
-    for _ in range(n_merges):
-        pc: dict[tuple[str, str], int] = {}
-        sc: dict[str, int] = {}
-        for parts, c in vocab.values():
-            for s in parts:
-                sc[s] = sc.get(s, 0) + c
-            for a, b in zip(parts, parts[1:]):
-                pc[(a, b)] = pc.get((a, b), 0) + c
-        cands = [
-            (l, r, c) for (l, r), c in pc.items() if c >= min_count
-        ]
-        if not cands:
-            break
-        l, r, c = min(
-            cands,
-            key=lambda t: (-score_key(t[2], sc[t[0]], sc[t[1]]), t[0], t[1]),
-        )
-        merges.append((l, r, c, sc[l], sc[r]))
-        out_sym = merge_token(l, r)
-        vocab = {
-            w: (_apply_pair_passes(parts, l, r, out_sym), n)
-            for w, (parts, n) in vocab.items()
-        }
-    return merges
-
-
 def wordpiece_train_incremental_reference(
     word_counts: dict[str, int], n_merges: int, min_count: int = 2
 ) -> list[tuple[str, str, int, int, int]]:
@@ -157,8 +98,8 @@ def wordpiece_train_incremental_reference(
     untouched pair containing it (the denominator shrinks), so stale
     heap keys would under-rank true maxima; the scan of a
     dimension-sized dict is memory-speed and exact. Trajectory-equal
-    to :func:`wordpiece_train_reference` (pinned by hypothesis sweep
-    + the unrolled SQL oracle)."""
+    to the recount-per-round loop (pinned by hypothesis sweep + the
+    unrolled SQL oracle)."""
     words: list[tuple[list[str], int]] = [
         (word_symbols(w), int(c)) for w, c in word_counts.items() if w
     ]
@@ -277,28 +218,6 @@ def wordpiece_train(
     return merges, wordpiece_vocab(wc, merges)
 
 
-def wordpiece_encode_reference(
-    word: str, vocab: list[str]
-) -> list[int] | None:
-    """Greedy longest-match encode of one word (BERT's
-    WordpieceTokenizer): None = OOV (no match at some position)."""
-    start = {t: i for i, t in enumerate(vocab) if not t.startswith("##")}
-    cont = {t[2:]: i for i, t in enumerate(vocab) if t.startswith("##")}
-    out: list[int] = []
-    pos = 0
-    while pos < len(word):
-        table = start if pos == 0 else cont
-        for ln in range(len(word) - pos, 0, -1):
-            i = table.get(word[pos:pos + ln])
-            if i is not None:
-                out.append(i)
-                pos += ln
-                break
-        else:
-            return None
-    return out
-
-
 def _id_map(pairs: list[tuple[str, int]]) -> Column:
     return F.create_map(
         *[x for t, i in pairs for x in (F.lit(t), F.lit(i).cast("int"))]
@@ -312,8 +231,7 @@ def wordpiece_word_ids(word: Column, vocab: list[str]) -> Column:
     the lang_id_hashed pattern): zero shuffle, zero UDF. One fold
     iteration per character upper-bounds the token walk (every step
     consumes ≥ 1 char); the longest-match probe is a coalesce chain
-    of length-descending map lookups. Use :func:`wordpiece_ids_batch`
-    above ``COLUMN_VOCAB_MAX``."""
+    of length-descending map lookups."""
     starts = [
         (t, i) for i, t in enumerate(vocab) if not t.startswith("##")
     ]
@@ -397,70 +315,3 @@ def wordpiece_token_ids(
         ),
     )
     return F.flatten(per_word)
-
-
-WORDPIECE_IDS_SCHEMA = StructType(
-    [
-        StructField("doc_id", LongType()),
-        StructField("n_tokens", LongType()),
-        StructField("token_ids", ArrayType(IntegerType())),
-    ]
-)
-
-
-def wordpiece_ids_batch(
-    df: DataFrame,
-    text_col: str,
-    vocab: list[str],
-    id_col: str = "doc_id",
-) -> DataFrame:
-    """Arrow twin of :func:`wordpiece_token_ids` for production-scale
-    vocabularies (> ``COLUMN_VOCAB_MAX``): dict lookups beat the
-    literal map's linear scans exactly as unigram_ids_batch's
-    measured crossover showed. Same greedy spec
-    (:func:`wordpiece_encode_reference`), same honest-OOV NULL
-    element. Output: (doc_id, n_tokens, token_ids)."""
-    import re as _re
-
-    import pandas as pd
-
-    from .text import TOKEN_RE
-
-    start = {t: i for i, t in enumerate(vocab) if not t.startswith("##")}
-    cont = {t[2:]: i for i, t in enumerate(vocab) if t.startswith("##")}
-    max_len = max([len(t) for t in start] + [len(t) for t in cont] + [1])
-    rex = _re.compile(TOKEN_RE)
-
-    def encode_word(w: str) -> list:
-        out: list = []
-        pos = 0
-        n = len(w)
-        while pos < n:
-            table = start if pos == 0 else cont
-            for ln in range(min(max_len, n - pos), 0, -1):
-                i = table.get(w[pos:pos + ln])
-                if i is not None:
-                    out.append(i)
-                    pos += ln
-                    break
-            else:
-                return [None]
-        return out
-
-    def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            ids, nt, toks = [], [], []
-            for doc_id, text in zip(pdf["doc_id"], pdf[text_col]):
-                stream: list = []
-                for w in rex.findall((text or "").lower()):
-                    stream.extend(encode_word(w))
-                ids.append(doc_id)
-                nt.append(len(stream))
-                toks.append(stream)
-            yield pd.DataFrame(
-                {"doc_id": ids, "n_tokens": nt, "token_ids": toks}
-            )
-
-    return df.select(
-        F.col(id_col).alias("doc_id"), text_col
-    ).mapInPandas(gen, WORDPIECE_IDS_SCHEMA)

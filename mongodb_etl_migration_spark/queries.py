@@ -1474,11 +1474,10 @@ def d8_incremental_neardup(spark: SparkSession, sf_dir: str) -> DataFrame:
     historical corpus (original doc_ids) is banded ONCE as the index;
     the arriving batch (the planted +1M/+2M rows) is shingled/hashed
     alone and probes the index with a band equi-join — shuffle scales
-    with the batch, never the 100 TB history (write_minhash_index
-    persists the same bands Hive-partitioned for directory pruning).
-    Same signature family as d2, so batch and incremental candidates
-    agree; the oracle computes both sides' bands from one CTE and
-    splits on the id range."""
+    with the batch, never the 100 TB history. Same signature family
+    as d2, so batch and incremental candidates agree; the oracle
+    computes both sides' bands from one CTE and splits on the id
+    range."""
     corpus = _corpus(spark, sf_dir)
     history = corpus.filter(F.col("doc_id") < 1000000).filter(
         F.size(T.tokens("text")) >= 3
@@ -1532,8 +1531,7 @@ def d5_minhash_estimate(spark: SparkSession, sf_dir: str) -> DataFrame:
     # pairs, and both rename-sides of the estimate join, which key on
     # different ids so ReuseExchange can't help) — one narrow
     # (id, 16 longs) materialization beats recomputing the md5
-    # pipeline 3× over the corpus; at index scale the materialized
-    # form is write_minhash_index instead. Eager localCheckpoint, not
+    # pipeline 3× over the corpus. Eager localCheckpoint, not
     # .persist(): a CacheManager entry is plan-keyed and lives until
     # someone explicitly unpersists it (a long-lived session running
     # this query repeatedly accumulates caches — round-3 heap creep),
@@ -3402,9 +3400,9 @@ def e_windowed_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
 )
 def e_sessionization(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Gap-based sessionization (30-min gap), batch form — the twin of
-    the applyInPandasWithState streaming operator
-    (streaming/stateful.py); one shuffle on user_id for the windows."""
+    """Gap-based sessionization (30-min gap) with lag + running-sum
+    windows (streaming/stateful.py); one shuffle on user_id for the
+    windows."""
     from mongodb_etl_migration_spark.streaming.stateful import sessionize_batch
 
     e = Catalog(spark, sf_dir).events
@@ -3464,12 +3462,12 @@ def j15_scd2_versions(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def e_session_window_builtin(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Native session windows (F.session_window) — Spark's built-in
-    gap-merge sessionization, the one-liner twin of the
-    applyInPandasWithState operator. NOTE the boundary semantics
-    differ from e_sessionization: session_window starts a NEW session
-    when the gap is >= the window (windows [t, t+gap) merge only on
-    overlap), while the stateful operator uses strictly-greater — the
-    oracle mirrors >= here."""
+    gap-merge sessionization, the one-liner twin of
+    e_sessionization. NOTE the boundary semantics differ:
+    session_window starts a NEW session when the gap is >= the window
+    (windows [t, t+gap) merge only on overlap), while
+    sessionize_batch uses strictly-greater — the oracle mirrors >=
+    here."""
     e = Catalog(spark, sf_dir).events
     return (
         e.groupBy(
@@ -10710,10 +10708,8 @@ def t_bpe_tokens(spark: SparkSession, sf_dir: str) -> DataFrame:
     compiles to a pure Column replace-chain (rank-order application is
     provably equivalent to the greedy lowest-rank loop — a new pair
     always contains the just-created symbol, whose merges rank later),
-    so the count is zero-shuffle whole-stage codegen; the ~50k-merge
-    general path is the Arrow-batched bpe_encode_batch pandas UDF,
-    property-tested equal. The oracle runs the IDENTICAL chain in
-    DuckDB."""
+    so the count is zero-shuffle whole-stage codegen. The oracle runs
+    the IDENTICAL chain in DuckDB."""
     d = Catalog(spark, sf_dir).documents
     toks = T.tokens("text")
     return d.select(
@@ -10728,7 +10724,7 @@ def t_bpe_tokens(spark: SparkSession, sf_dir: str) -> DataFrame:
 # use the GPT-2 bytes_to_unicode mapping (0x20 -> 'Ġ'), rank-ordered
 # so the compiled Column chain is exactly the greedy loop. A real
 # 50k-line GPT-2 merges.txt loads through the same parser into
-# gpt2_encode_batch.
+# gpt2_encode_ids_batch.
 GPT2_DEMO_MERGES_TXT = """\
 #version: 0.2
 Ġ t
@@ -10855,7 +10851,7 @@ def t_bpe_pretok(spark: SparkSession, sf_dir: str) -> DataFrame:
     identical alphabet + merge chain — hash equality proves
     pretokenizer, byte mapping, and merges end-to-end. Real ~50k
     GPT-2 vocabularies load through the same parser into the
-    Arrow-batched gpt2_encode_batch (same results, tested)."""
+    Arrow-batched gpt2_encode_ids_batch."""
     d = Catalog(spark, sf_dir).documents
     t2 = F.concat(
         F.replace(F.col("text"), F.lit(" table"), F.lit("   table")),
@@ -11751,8 +11747,7 @@ def t_unigram_ids(spark: SparkSession, sf_dir: str) -> DataFrame:
     every distinct word under the final cost table and reassembles
     per-doc id streams — training AND encoding cross-checked in one
     row, and the oracle's encw/distinct shape now mirrors the
-    engine's plan. The Arrow twin (unigram_ids_batch) for
-    production vocabularies is property-tested equal in the suite."""
+    engine's plan."""
     d = Catalog(spark, sf_dir).documents
     vocab = U.unigram_train(
         d, "text", vocab_size=56, seed_size=120, rounds=3
@@ -11977,9 +11972,7 @@ def t_wordpiece_ids(spark: SparkSession, sf_dir: str) -> DataFrame:
     The oracle re-trains the same trajectory in SQL, materializes
     the per-(word, position) longest-match table, walks it with a
     linear recursive CTE and reassembles per-doc id streams —
-    training AND encoding cross-checked in one row. The Arrow twin
-    (wordpiece_ids_batch) for production vocabularies is
-    property-tested equal in the suite."""
+    training AND encoding cross-checked in one row."""
     d = Catalog(spark, sf_dir).documents
     merges, vocab = WP.wordpiece_train(d, "text", n_merges=14)
     ids_df = T.token_ids_dedup(
@@ -12558,8 +12551,8 @@ def a37_hll_registers(spark: SparkSession, sf_dir: str) -> DataFrame:
     never enters), and the estimate — including the small-range
     linear-counting branch — is IEEE ops over exact integers plus a
     literal table. The register digest IS the mergeable state:
-    hll_merge (register-wise max) is tested bit-identical to
-    sketching the concatenation."""
+    register-wise max of shard digests equals sketching the
+    concatenation."""
     from mongodb_etl_migration_spark.operators import profiling as P
 
     e = Catalog(spark, sf_dir).events
@@ -13883,14 +13876,13 @@ def c_conv_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
 def c_conv_dedup_probe(spark: SparkSession, sf_dir: str) -> DataFrame:
     """INCREMENTAL conversation dedup (chat.conv_dedup_probe): the
     historical corpus (doc_id %% 3 != 0) is keyed ONCE into the
-    (conv_key, kept_id, n_dups) index write_conv_key_index persists;
+    (conv_key, kept_id, n_dups) index (chat.conversation_dedup);
     the arriving batch (doc_id %% 3 == 0) is keyed alone and probes
     the index with a broadcast-batch join — only the batch moves, the
     100 TB history is scanned, never shuffled or re-keyed. The canned
     duplicate groups straddle the split, so the probe finds real
     cross-half transcript collisions; batch-internal duplicates with
-    no history are correctly absent (the merge side of continuous
-    ingestion is conv_dedup_merge, equivalence-tested in the suite).
+    no history are correctly absent.
     Oracle computes both halves' keys from one CTE and splits on the
     id range (the d8_incremental_neardup device)."""
     conv = _chat_conv(spark, sf_dir).filter(F.size("turns") > 0)
@@ -14514,8 +14506,7 @@ def c_sft_tokens(spark: SparkSession, sf_dir: str) -> DataFrame:
     the render/mask alignment property lifted to token space. Plan:
     constant segments ride as literal id arrays; per-turn encodes run
     inside one transform + one fold — pure projection, zero shuffle,
-    zero UDF (the full-UTF-8 path is the Arrow-batched
-    sft_tokens_batch, property-tested equal on this scope)."""
+    zero UDF."""
     # fan_out=None: per-turn BPE encode costs ~10^3 CPU per input byte
     # vs the scan, so the single-row-group testdata file would run the
     # whole encode on one core (r13 bench: 7.3 s wall / 6.1 s cpu on

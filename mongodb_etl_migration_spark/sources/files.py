@@ -80,8 +80,7 @@ class DirectoryTailReader(SimpleDataSourceStreamReader):
     batch as end.seen − start.seen (files are immutable once written).
     The seen list grows with the number of drops: bounded for the
     backup-drop and crawl-drop patterns; compact externally if a
-    directory accretes forever. Pair with
-    streaming/incremental.run_incremental for entity plans downstream."""
+    directory accretes forever."""
 
     def __init__(self, reader: type[FileReader], schema: StructType, options: dict):
         self._reader = reader

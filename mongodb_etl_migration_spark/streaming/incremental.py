@@ -1,9 +1,4 @@
-"""Structured-Streaming incremental mode.
-
-``run_incremental`` wraps a batch transformation into a foreachBatch
-stream: each micro-batch flows through the exact same plan the batch
-path uses (one code path, two execution modes — the idiom for
-ETL pipelines that start batch and go continuous).
+"""Structured-Streaming event-time aggregation.
 
 ``windowed_event_counts`` is the watermarked tumbling-window
 aggregation pattern for late-arriving event data; in batch mode the
@@ -13,62 +8,8 @@ which is how the DuckDB oracle verifies it.
 
 from __future__ import annotations
 
-from collections.abc import Callable
-
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
-from pyspark.sql.streaming import StreamingQuery
-
-
-def run_incremental(
-    stream_df: DataFrame,
-    transform: Callable[[DataFrame], DataFrame],
-    sink_path: str,
-    checkpoint: str,
-    trigger_once: bool = True,
-) -> StreamingQuery:
-    """Apply a batch entity plan incrementally via foreachBatch.
-
-    Exactly-once to the parquet sink: the checkpoint dedups INPUT
-    (source offsets), and each micro-batch lands in its own
-    ``batch_id=N`` directory with overwrite — so a batch REPLAYED
-    after a mid-write crash rewrites the same directory instead of
-    appending duplicates (a bare ``mode("append")`` is only
-    at-least-once). Readers scan ``sink_path`` and partition
-    discovery exposes batch_id as a column they can ignore.
-    trigger_once makes it a catch-up batch job (the reference's whole
-    pipeline shape, but restartable and incremental).
-
-    Layout migration note: earlier revisions appended flat files
-    directly under ``sink_path``. A sink created by that code must
-    NOT be reused — mixing flat files with ``batch_id=N`` partition
-    directories breaks Spark partition discovery, and downstream
-    readers would also see the new batch_id column. This function
-    refuses such a sink rather than corrupting it; start a fresh
-    ``sink_path`` (and checkpoint) instead.
-    """
-    import os
-
-    if os.path.isdir(sink_path) and any(
-        not e.name.startswith(("batch_id=", "_", "."))
-        for e in os.scandir(sink_path)
-    ):
-        raise ValueError(
-            f"sink_path {sink_path!r} holds non-partitioned files from "
-            "the legacy flat-append layout; use a fresh sink directory"
-        )
-
-    def sink(batch_df: DataFrame, batch_id: int) -> None:
-        transform(batch_df).write.mode("overwrite").parquet(
-            f"{sink_path}/batch_id={batch_id}"
-        )
-
-    writer = stream_df.writeStream.foreachBatch(sink).option(
-        "checkpointLocation", checkpoint
-    )
-    if trigger_once:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
 
 
 def windowed_event_counts(

@@ -1,56 +1,14 @@
-"""Custom stateful streaming operator: event sessionization.
+"""Event sessionization: a new session starts after a gap.
 
-The canonical applyInPandasWithState pattern (beyond-parity — the
-reference has no streaming, SURVEY §2.10): per-key session windows with
-a gap timeout, state bounded by the event-time watermark.
-
-The BATCH twin (`sessionize_batch`) expresses identical semantics with
-lag + running-sum windows — SQL-expressible, so the DuckDB oracle
-verifies it (query `e_sessionization`); the streaming test then checks
-the stateful operator against the batch twin on the same data.
-
-Scale: state is one open session per active key (a few tens of bytes);
-the watermark evicts idle keys, so state size tracks ACTIVE users, not
-history. The batch twin's windows shuffle once on user_id.
+``sessionize_batch`` expresses gap sessions with lag + running-sum
+windows — SQL-expressible, so the DuckDB oracle verifies it (query
+``e_sessionization``). The windows shuffle once on user_id.
 """
 
 from __future__ import annotations
 
-from typing import Any, Iterator, Tuple
-
-import pandas as pd
-from pyspark.sql import Column, DataFrame, Window
+from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
-from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
-from pyspark.sql.streaming.stateful_processor import (
-    StatefulProcessor,
-    StatefulProcessorHandle,
-    TimerValues,
-)
-from pyspark.sql.types import (
-    IntegerType,
-    LongType,
-    StructField,
-    StructType,
-    TimestampType,
-)
-
-SESSION_SCHEMA = StructType(
-    [
-        StructField("user_id", LongType()),
-        StructField("session_start", TimestampType()),
-        StructField("session_end", TimestampType()),
-        StructField("n_events", LongType()),
-    ]
-)
-
-_STATE_SCHEMA = StructType(
-    [
-        StructField("start_us", LongType()),
-        StructField("last_us", LongType()),
-        StructField("n", LongType()),
-    ]
-)
 
 
 def sessionize_batch(
@@ -84,154 +42,4 @@ def sessionize_batch(
             F.max(ts_col).alias("session_end"),
             F.count("*").alias("n_events"),
         )
-    )
-
-
-def sessionize_stateful(
-    stream: DataFrame,
-    ts_col: str = "ts",
-    key_col: str = "user_id",
-    gap_minutes: int = 30,
-    watermark: str = "1 hour",
-) -> DataFrame:
-    """Streaming sessionization via applyInPandasWithState.
-
-    State per key: the one OPEN session (start, last, count). Each
-    batch merges its sorted events into the open session, emitting
-    every session CLOSED by an observed gap; the open tail session
-    stays in state with an event-time timeout of last+gap — when the
-    watermark passes it, the session flushes and the key's state clears
-    (bounded state).
-    """
-    gap_us = gap_minutes * 60 * 1_000_000
-
-    def fn(
-        key: Tuple[Any, ...],
-        pdfs: Iterator[pd.DataFrame],
-        state: GroupState,
-    ) -> Iterator[pd.DataFrame]:
-        uid = key[0]
-        closed: list[tuple[int, int, int]] = []  # (start_us, last_us, n)
-
-        if state.hasTimedOut:
-            if state.exists:
-                s, last, n = state.get
-                closed.append((s, last, n))
-                state.remove()
-        else:
-            ts_us: list[int] = []
-            for pdf in pdfs:
-                col = pd.to_datetime(pdf[ts_col])
-                ts_us.extend(int(v.value // 1000) for v in col)
-            ts_us.sort()
-            if state.exists:
-                start, last, n = state.get
-            else:
-                start, last, n = None, None, 0
-            for t in ts_us:
-                if start is None:
-                    start, last, n = t, t, 1
-                elif t - last > gap_us:
-                    closed.append((start, last, n))
-                    start, last, n = t, t, 1
-                else:
-                    last, n = t, n + 1
-            if start is not None:
-                state.update((start, last, n))
-                state.setTimeoutTimestamp((last + gap_us) // 1000)
-
-        if closed:
-            yield pd.DataFrame(
-                {
-                    "user_id": [uid] * len(closed),
-                    "session_start": [pd.Timestamp(s * 1000, unit="ns") for s, _, _ in closed],
-                    "session_end": [pd.Timestamp(e * 1000, unit="ns") for _, e, _ in closed],
-                    "n_events": [n for _, _, n in closed],
-                }
-            )
-
-    src = stream.withColumn(ts_col, F.col(ts_col).cast("timestamp")).withWatermark(
-        ts_col, watermark
-    )
-    return src.groupBy(key_col).applyInPandasWithState(
-        fn,
-        outputStructType=SESSION_SCHEMA,
-        stateStructType=_STATE_SCHEMA,
-        outputMode="append",
-        timeoutConf=GroupStateTimeout.EventTimeTimeout,
-    )
-
-
-class _FirstWinsDedupProcessor(StatefulProcessor):
-    """transformWithStateInPandas processor for streaming first-wins
-    dedup (the streaming twin of the reference's A7 first-wins dedup,
-    SURVEY §2.6 — `etl/orchestrator.py` drop-duplicate-on-first-seen).
-
-    State per key: a single `seen` flag (ValueState, optional TTL).
-    The first time a key is observed, its first row (by the caller's
-    order columns, applied within the micro-batch) is emitted; every
-    later row of that key — same batch or any later batch — is
-    dropped. With `ttl_ms`, RocksDB evicts idle keys so state tracks
-    RECENTLY-SEEN keys, not all history (the same bound
-    `dropDuplicatesWithinWatermark` gives, but under processor
-    control and usable with processing-time streams).
-    """
-
-    def __init__(self, order_cols: list[str], ttl_ms: int | None = None):
-        self._order_cols = order_cols
-        self._ttl_ms = ttl_ms
-
-    def init(self, handle: StatefulProcessorHandle) -> None:
-        self._seen = handle.getValueState("seen", "seen BYTE", self._ttl_ms)
-
-    def handleInputRows(
-        self,
-        key: Any,
-        rows: Iterator[pd.DataFrame],
-        timerValues: TimerValues,
-    ) -> Iterator[pd.DataFrame]:
-        if self._seen.exists():
-            return
-        first: pd.DataFrame | None = None
-        for pdf in rows:
-            if len(pdf) == 0:
-                continue
-            cand = pdf.sort_values(self._order_cols).head(1)
-            if first is None:
-                first = cand
-            else:
-                first = (
-                    pd.concat([first, cand]).sort_values(self._order_cols).head(1)
-                )
-        if first is not None:
-            self._seen.update((1,))
-            yield first
-
-    def close(self) -> None:
-        pass
-
-
-def dedup_stream_stateful(
-    stream: DataFrame,
-    key_col: str,
-    order_cols: list[str],
-    ttl_minutes: int | None = None,
-) -> DataFrame:
-    """Streaming first-wins dedup via Spark 4's transformWithStateInPandas.
-
-    Requires the RocksDB state store provider
-    (`spark.sql.streaming.stateStore.providerClass` =
-    `...state.RocksDBStateStoreProvider`) — transformWithState is
-    RocksDB-only. Output schema == input schema.
-
-    Scale: state is ~1 byte per distinct key in RocksDB (disk-backed,
-    so 10^9 keys is fine); with `ttl_minutes` the store self-compacts
-    to keys seen within the TTL window.
-    """
-    ttl_ms = ttl_minutes * 60_000 if ttl_minutes is not None else None
-    return stream.groupBy(key_col).transformWithStateInPandas(
-        _FirstWinsDedupProcessor(order_cols, ttl_ms),
-        outputStructType=stream.schema,
-        outputMode="append",
-        timeMode="ProcessingTime",
     )

@@ -214,8 +214,8 @@ NOTES = {
     "d8_incremental_neardup": (
         "Incremental near-dup: only the NEW batch runs the "
         "shingle/md5 signature pipeline; the history side is the "
-        "persisted band index (write_minhash_index — read in full: "
-        "a probe carries every band id). The join shuffles band "
+        "band index over the history (read in full: a probe "
+        "carries every band id). The join shuffles band "
         "rows, never raw text."
     ),
     "t_shard_pack": (
@@ -839,7 +839,7 @@ def scale_receipt_section() -> str:
     rows = []
     for cfg, r in d["configs"].items():
         if "d2_minhash_pairs" not in r:
-            continue  # the media configs time other operators
+            continue  # media configs: _media_scale_section
         d2 = r["d2_minhash_pairs"]
         sd = r.get("sim_semdedup", {})
         bl = r.get("t_decontaminate_bloom", {})
@@ -879,6 +879,53 @@ def scale_receipt_section() -> str:
         "- sim_topk_lsh stays ~0.2 s / ~3 KB shuffle at 10x vectors: "
         "the bucket probe prunes before any wide work.\n"
         + _text_index_lines(s)
+        + _media_scale_section(d)
+    )
+
+
+def _media_scale_section(d: dict) -> str:
+    """The ``media_*`` configs of BENCH_scale.json: image and video
+    near-dup and unigram training at base, 10x and 100x media."""
+    def cell(r: dict, op: str) -> str:
+        m = r.get(op)
+        if m is None:
+            return "— | — | —"
+        out = m.get("pairs_found", m.get("pieces"))
+        return f"{m['shuffle_bytes']/1e6:.1f} MB | {m['sec']} s | {out:,}"
+
+    rows = [
+        f"| {cfg} ({r['dup_pct']}% dups) | {r['images']:,} "
+        f"| {cell(r, 'm_image_neardup')} "
+        f"| {format(r['videos'], ',') if 'videos' in r else '—'} "
+        f"| {cell(r, 'm_video_neardup_capped')} "
+        f"| {cell(r, 't_unigram_train')} |"
+        for cfg, r in d["configs"].items()
+        if cfg.startswith("media_")
+    ]
+    if not rows:
+        return ""
+    s = d["summary"]
+    bullets = {
+        "m_image_neardup_shuffle_growth_at_100x_corpus":
+            "image near-dup shuffle growth at 100x media",
+        "m_video_neardup_shuffle_growth_at_100x_corpus":
+            "video near-dup (hot-frame capped) shuffle growth at 100x media",
+        "image_neardup_pair_growth_at_4x_dup_rate":
+            "image near-dup pair OUTPUT growth at 4x dup rate",
+        "unigram_train_shuffle_growth_at_10x_corpus":
+            "unigram training shuffle growth at 10x corpus",
+    }
+    return (
+        "\n## Scale receipt: media near-dup and unigram at 10x and 100x "
+        "(BENCH_scale.json)\n\n"
+        "| config | images | image shuffle | image wall | image pairs "
+        "| videos | video shuffle | video wall | video pairs "
+        "| unigram shuffle | unigram wall | unigram pieces |\n"
+        "|---|---|---|---|---|---|---|---|---|---|---|---|\n"
+        + "\n".join(rows) + "\n\n"
+        + "".join(
+            f"- {text}: {s[key]}x.\n" for key, text in bullets.items() if key in s
+        )
     )
 
 

@@ -325,14 +325,11 @@ def test_parse_turns_json_roundtrip_matches_parse_turns(spark):
 
 
 def test_conv_dedup_incremental_matches_batch(spark, tmp_path):
-    """Continuous-ingestion contract: (1) conv_dedup_merge over the
-    persisted history index + a batch's own aggregate equals
-    conversation_dedup over the full union row-for-row — including a
-    key split across halves (min kept_id comes from history, counts
-    add) and a key only the batch has; (2) conv_dedup_probe flags
-    exactly the batch conversations whose transcript history already
-    holds, and its physical plan broadcasts the BATCH side (the index
-    is scanned, never shuffled: no SortMergeJoin)."""
+    """Continuous-ingestion contract: conv_dedup_probe against the
+    persisted history index (conversation_dedup's rows) flags exactly
+    the batch conversations whose transcript history already holds,
+    and its physical plan broadcasts the BATCH side (the index is
+    scanned, never shuffled: no SortMergeJoin)."""
     # turn_words=5: words 1-5 = user turn (varies), words 6-10 =
     # assistant turn (shared across 1, 2, 10 -> same transcript key)
     hist = _conv(
@@ -353,13 +350,8 @@ def test_conv_dedup_incremental_matches_batch(spark, tmp_path):
         turn_words=5,
     )
     path = str(tmp_path / "convidx")
-    CH.write_conv_key_index(hist, path)
+    CH.conversation_dedup(hist).write.parquet(path)
     idx = spark.read.parquet(path)
-    merged = CH.conv_dedup_merge(idx, CH.conversation_dedup(batch))
-    full = CH.conversation_dedup(hist.unionByName(batch))
-    assert sorted(map(tuple, merged.collect())) == sorted(
-        map(tuple, full.collect())
-    )
     probe = CH.conv_dedup_probe(batch, idx)
     plan = probe._jdf.queryExecution().executedPlan().toString()
     assert "SortMergeJoin" not in plan
@@ -379,6 +371,7 @@ def test_conv_dedup_incremental_matches_batch(spark, tmp_path):
 
 from mongodb_etl_migration_spark.operators import text as T
 from mongodb_etl_migration_spark.queries import _GPT2_DEMO_MERGES
+from tests.references import sft_tokens_reference
 
 
 def test_render_exact_strings_per_preset(spark):
@@ -509,63 +502,6 @@ def test_sft_tokens_roundtrip_and_full_decode(spark):
             .collect()[0][0]
         )
         assert bad == 0, f"preset {tpl}: token roundtrip broke"
-
-
-def test_sft_tokens_batch_matches_column_path(spark):
-    rows = [
-        (1, "how do i sort a table use the order by clause here"),
-        (2, ""),
-        (3, "one two three four five six seven"),
-    ]
-    conv = _conv(spark, rows)
-    col = conv.select(
-        "doc_id",
-        CH.sft_tokens("turns", _GPT2_DEMO_MERGES, "chatml").alias("s"),
-    ).select(
-        "doc_id",
-        F.size("s.token_ids").cast("bigint").alias("n_tokens"),
-        F.array_join(
-            F.transform("s.token_ids", lambda i: i.cast("string")), " "
-        ).alias("token_ids"),
-        F.array_join(
-            F.transform(
-                "s.mask_spans",
-                lambda x: F.concat_ws(
-                    ":",
-                    x["turn_idx"].cast("string"),
-                    x["tok_start"].cast("string"),
-                    x["tok_end"].cast("string"),
-                ),
-            ),
-            ",",
-        ).alias("mask_spans"),
-    )
-    bat = CH.sft_tokens_batch(conv, "turns", _GPT2_DEMO_MERGES, "chatml")
-    assert sorted(map(tuple, bat.collect())) == sorted(
-        map(tuple, col.collect())
-    )
-
-
-def test_sft_tokens_batch_lossless_on_unicode(spark):
-    """The batch twin's full-UTF-8 scope: non-ASCII content encodes
-    through the byte alphabet with NO OOV, and the masked ids decode
-    back to the assistant content via the reference decoder."""
-    turns = [
-        {"turn_idx": 0, "role": "user", "content": "héllo ¿qué?"},
-        {"turn_idx": 1, "role": "assistant", "content": "naïve — café"},
-    ]
-    df = spark.createDataFrame([(1, turns)], f"doc_id long, turns {CH.TURN_STRUCT}")
-    row = CH.sft_tokens_batch(df, "turns", _GPT2_DEMO_MERGES, "chatml").collect()[0]
-    ids = [int(x) for x in row["token_ids"].split(" ")]
-    t, s, e = (int(x) for x in row["mask_spans"].split(":"))
-    vocab = T.gpt2_vocab(_GPT2_DEMO_MERGES)
-    rev = {v: k for k, v in vocab.items()}
-    b2u = T.gpt2_bytes_to_unicode()
-    u2b = {u: bytes([b]) for b, u in b2u.items()}
-    dec = b"".join(
-        u2b[ch] for i in ids[s:e] for ch in rev[i]
-    ).decode("utf-8")
-    assert dec == "naïve — café"
 
 
 def test_sft_tokens_null_and_empty_turns(spark):
@@ -728,8 +664,8 @@ def test_sft_tokens_special_ids_never_split_and_roundtrip(spark):
     """Reserved special tokens (chat.special_token_ids): control
     strings become SINGLE ids after the BPE space and are never
     BPE-split — every header starts with exactly [im_start_id] and
-    every suffix is [im_end_id, newline_id]; the batch twin agrees;
-    masked decode still reproduces assistant contents (specials
+    every suffix is [im_end_id, newline_id]; the plain-Python reference
+    agrees; masked decode still reproduces assistant contents (specials
     never land inside content spans); duplicates refuse."""
     import pytest
 
@@ -762,33 +698,15 @@ def test_sft_tokens_special_ids_never_split_and_roundtrip(spark):
     dec = "".join(rev[i] for i in seg).replace("Ġ", " ")
     want = [t["content"] for t in out["turns"] if t["role"] == "assistant"][0]
     assert dec == want
-    # batch twin equality under specials
-    col = conv.select(
-        "doc_id",
-        CH.sft_tokens("turns", _GPT2_DEMO_MERGES, "chatml", special_ids=sp).alias("s"),
-    ).select(
-        "doc_id",
-        F.size("s.token_ids").cast("bigint").alias("n_tokens"),
-        F.array_join(
-            F.transform("s.token_ids", lambda i: i.cast("string")), " "
-        ).alias("token_ids"),
-        F.array_join(
-            F.transform(
-                "s.mask_spans",
-                lambda x: F.concat_ws(
-                    ":",
-                    x["turn_idx"].cast("string"),
-                    x["tok_start"].cast("string"),
-                    x["tok_end"].cast("string"),
-                ),
-            ),
-            ",",
-        ).alias("mask_spans"),
+    # reference equality under specials
+    ref_ids, ref_spans = sft_tokens_reference(
+        out["turns"], _GPT2_DEMO_MERGES, "chatml", special_ids=sp
     )
-    bat = CH.sft_tokens_batch(
-        conv, "turns", _GPT2_DEMO_MERGES, "chatml", special_ids=sp
-    )
-    assert sorted(map(tuple, bat.collect())) == sorted(map(tuple, col.collect()))
+    assert ids == ref_ids
+    assert [
+        (m["turn_idx"], m["tok_start"], m["tok_end"])
+        for m in out["s"]["mask_spans"]
+    ] == ref_spans
 
 
 def test_sft_pipeline_end_to_end_tokenize_pack_shuffle_shard(spark):

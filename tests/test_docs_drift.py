@@ -4,7 +4,8 @@ Round 8's verdict caught README claiming a 215-query catalog against
 216 registered queries — the number had been hand-maintained through
 three rounds of growth. These tests make the documented counts fail
 loudly the moment the catalog moves, so the fix happens in the same
-commit as the query.
+commit as the query. The same holds for package code: a def that no
+entry point reaches fails the reach guard at the bottom.
 """
 
 from __future__ import annotations
@@ -85,3 +86,99 @@ def test_documented_package_names_exist():
         if mod in defined and name != "py" and name not in defined[mod]
     }
     assert missing == set(), f"docs name package members that do not exist: {missing}"
+
+
+PACKAGE = REPO / "mongodb_etl_migration_spark"
+ENTRY_FILES = ["bench.py", "__spark_entry__.py", "scripts/*.py", "perfbench/*.py"]
+_DEFS = (ast.FunctionDef, ast.AsyncFunctionDef, ast.ClassDef)
+
+
+def _foreign_aliases(tree: ast.AST) -> set[str]:
+    """Names a file binds to a module outside the package."""
+    bound = set()
+    for node in ast.walk(tree):
+        if isinstance(node, ast.Import):
+            bound |= {
+                (a.asname or a.name).split(".")[0]
+                for a in node.names
+                if not a.name.startswith(PACKAGE.name)
+            }
+        elif isinstance(node, ast.ImportFrom) and node.level == 0:
+            if not (node.module or "").startswith(PACKAGE.name):
+                bound |= {a.asname or a.name for a in node.names}
+    return bound
+
+
+def _names_used(nodes, foreign: set[str]) -> set[str]:
+    """Identifiers, import names and string constants under ``nodes``,
+    except attributes read off a module imported from outside the
+    package (``pq.write_table`` is not the package's ``write_table``)."""
+    used = set()
+    for node in (n for root in nodes for n in ast.walk(root)):
+        if isinstance(node, ast.Name):
+            used.add(node.id)
+        elif isinstance(node, ast.Attribute):
+            base = node.value
+            while isinstance(base, ast.Attribute):
+                base = base.value
+            if not (isinstance(base, ast.Name) and base.id in foreign):
+                used.add(node.attr)
+        elif isinstance(node, ast.alias):
+            used.add(node.name.split(".")[-1])
+        elif isinstance(node, ast.Constant) and isinstance(node.value, str):
+            used.add(node.value)
+    return used
+
+
+def unreached_package_defs() -> list[str]:
+    """Top-level package defs and classes that no entry point reaches.
+
+    Reach starts at the module-level statements of every non-``__init__``
+    package module (decorated defs count: ``@query`` registers them) and
+    at the whole of each entry file, and follows names transitively
+    through the bodies of reached defs. ``__init__`` re-exports are not
+    reach."""
+    defs: dict[str, list[tuple[str, ast.AST, set[str]]]] = {}
+    reached: set[str] = set()
+    for path in sorted(PACKAGE.rglob("*.py")):
+        tree = ast.parse(path.read_text())
+        foreign = _foreign_aliases(tree)
+        rel = path.relative_to(REPO)
+        module = ".".join(rel.with_suffix("").parts)
+        for node in tree.body:
+            if isinstance(node, _DEFS):
+                defs.setdefault(node.name, []).append(
+                    (f"{module}.{node.name} ({rel}:{node.lineno})", node, foreign)
+                )
+        if path.name == "__init__.py":
+            continue
+        top = [n for n in tree.body if not isinstance(n, _DEFS)]
+        top += [d for n in tree.body if isinstance(n, _DEFS) for d in n.decorator_list]
+        reached |= _names_used(top, foreign)
+        reached |= {
+            n.name for n in tree.body if isinstance(n, _DEFS) and n.decorator_list
+        }
+    for pattern in ENTRY_FILES:
+        for path in sorted(REPO.glob(pattern)):
+            tree = ast.parse(path.read_text())
+            reached |= _names_used([tree], _foreign_aliases(tree))
+    todo = [name for name in reached if name in defs]
+    seen = set(todo)
+    while todo:
+        for _, node, foreign in defs[todo.pop()]:
+            for name in _names_used([node], foreign) - seen:
+                if name in defs:
+                    seen.add(name)
+                    todo.append(name)
+    return sorted(where for name, entries in defs.items() if name not in seen
+                  for where, _, _ in entries)
+
+
+def test_every_package_def_is_reached_from_an_entry_point():
+    """Package code that only tests call is a capability nobody uses:
+    delete it, or move a test reference into ``tests/``."""
+    unreached = unreached_package_defs()
+    assert unreached == [], (
+        f"{len(unreached)} package defs no entry point reaches:\n  "
+        + "\n  ".join(unreached)
+    )

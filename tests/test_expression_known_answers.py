@@ -35,6 +35,7 @@ from mongodb_etl_migration_spark.operators.similarity import (
     lit_vec_sql,
     norm,
 )
+from tests.references import sft_tokens_reference
 
 INF, NAN = float("inf"), float("nan")
 
@@ -290,26 +291,20 @@ def test_sft_tokens_known_answers(conv_df, template, use_special):
         if use_special
         else None
     )
-    got = {
-        r["doc_id"]: r["s"]
-        for r in conv_df.select(
-            "doc_id",
-            CH.sft_tokens("turns", MERGES, template, special_ids=sids)
-            .alias("s"),
-        ).collect()
-    }
-    ref = CH.sft_tokens_batch(
-        conv_df, "turns", MERGES, template, special_ids=sids
+    rows = conv_df.select(
+        "doc_id",
+        "turns",
+        CH.sft_tokens("turns", MERGES, template, special_ids=sids).alias("s"),
     ).collect()
-    assert len(ref) == len(CONVS)
-    for r in ref:
-        s = got[r["doc_id"]]
-        assert " ".join(map(str, s["token_ids"])) == r["token_ids"]
-        spans = ",".join(
-            f"{m['turn_idx']}:{m['tok_start']}:{m['tok_end']}"
-            for m in s["mask_spans"]
-        )
-        assert spans == r["mask_spans"], r["doc_id"]
+    assert len(rows) == len(CONVS)
+    for r in rows:
+        ids, spans = sft_tokens_reference(r["turns"], MERGES, template, sids)
+        assert list(r["s"]["token_ids"]) == ids, r["doc_id"]
+        got_spans = [
+            (m["turn_idx"], m["tok_start"], m["tok_end"])
+            for m in r["s"]["mask_spans"]
+        ]
+        assert got_spans == spans, r["doc_id"]
 
 
 def _escaping_rows(session):

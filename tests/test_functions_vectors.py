@@ -5,6 +5,7 @@ per encryption.py:326-353).
 
 from __future__ import annotations
 
+import base64
 import hashlib
 import math
 import uuid as _uuid
@@ -12,6 +13,8 @@ import uuid as _uuid
 from pyspark.sql import functions as F
 
 from mongodb_etl_migration_spark.functions.crypto import (
+    prepare_salsa_iv,
+    prepare_salsa_key,
     salsa20_decrypt_str,
     salsa20_encrypt_str,
     salsa20_xor,
@@ -44,6 +47,40 @@ def test_salsa20_roundtrip_and_edge_semantics():
     assert salsa20_decrypt_str("k", "i", None) is None
     assert salsa20_decrypt_str("k", "i", "") == ""
     assert salsa20_decrypt_str("k", "i", "!!!not-base64!!!") is None
+
+
+def test_salsa20_decrypt_udfs_edge_known_answers(spark):
+    """Both decrypt UDFs over NULL, '', bad base64, a non-UTF-8
+    plaintext and a normal ciphertext: the plain UDF gives NULL for
+    the undecryptable rows, the fallback UDF returns them verbatim."""
+    from mongodb_etl_migration_spark.functions.crypto import (
+        make_salsa20_decrypt_fallback_udf,
+        make_salsa20_decrypt_udf,
+    )
+
+    key, iv = "migration-key", "iv123"
+    # bytes that decrypt to an invalid UTF-8 sequence
+    non_utf8 = base64.b64encode(
+        salsa20_xor(prepare_salsa_key(key), prepare_salsa_iv(iv), b"\xff\xfe")
+    ).decode("ascii")
+    normal = salsa20_encrypt_str(key, iv, "héllo")
+    rows = [(0, None), (1, ""), (2, "!!!not-base64!!!"), (3, non_utf8), (4, normal)]
+    df = spark.createDataFrame(rows, "i int, v string")
+    got = {
+        r.i: (r.dec, r.fb)
+        for r in df.select(
+            "i",
+            make_salsa20_decrypt_udf(key, iv)("v").alias("dec"),
+            make_salsa20_decrypt_fallback_udf(key, iv)("v").alias("fb"),
+        ).collect()
+    }
+    assert got == {
+        0: (None, None),
+        1: ("", ""),
+        2: (None, "!!!not-base64!!!"),
+        3: (None, non_utf8),
+        4: ("héllo", "héllo"),
+    }
 
 
 def test_uuid5_udf_matches_python(spark):

@@ -1,4 +1,4 @@
-"""JSONL source/sink: write→read roundtrip, corrupt capture, schema
+"""JSONL source: json.dumps→read roundtrip, corrupt capture, schema
 NULLs, gzip transparency."""
 
 from __future__ import annotations
@@ -8,10 +8,9 @@ import json
 import os
 
 import pytest
-from pyspark.sql import functions as F
 from pyspark.sql.types import LongType, StringType, StructField, StructType
 
-from mongodb_etl_migration_spark.sources.jsonl import read_jsonl, write_jsonl
+from mongodb_etl_migration_spark.sources.jsonl import read_jsonl
 
 SCHEMA = StructType(
     [
@@ -21,11 +20,17 @@ SCHEMA = StructType(
 )
 
 
+def _dump(path, rows, opener=open):
+    """Write ``rows`` (dicts) to ``path`` as JSON Lines."""
+    with opener(path, "wt", encoding="utf-8") as f:
+        f.writelines(json.dumps(r, ensure_ascii=False) + "\n" for r in rows)
+
+
 def test_jsonl_roundtrip_exact_including_hard_strings(spark, tmp_path):
     """Escape-relevant content must round-trip byte-exact through
-    to_json -> text writer -> schema'd reader: embedded newlines
-    (serialized as \\n, one object per line holds), quotes,
-    backslashes, unicode, empty string, NULL text."""
+    json.dumps -> schema'd reader: embedded newlines (serialized as
+    \\n, one object per line holds), quotes, backslashes, unicode,
+    empty string, NULL text."""
     rows = [
         (1, "plain words"),
         (2, 'quotes " and \\ backslash'),
@@ -34,58 +39,40 @@ def test_jsonl_roundtrip_exact_including_hard_strings(spark, tmp_path):
         (5, ""),
         (6, None),
     ]
-    df = spark.createDataFrame(rows, SCHEMA)
-    path = str(tmp_path / "rt")
-    write_jsonl(df, path)
-    back = read_jsonl(spark, path, SCHEMA).collect()
+    path = tmp_path / "rt"
+    path.mkdir()
+    _dump(path / "rt.jsonl", [{"doc_id": d, "text": t} for d, t in rows])
+    back = read_jsonl(spark, str(path), SCHEMA).collect()
     assert all(r._corrupt_record is None for r in back)
     got = {(r.doc_id, r.text) for r in back}
     assert got == set(rows)
 
 
 def test_jsonl_null_field_bytes(spark, tmp_path):
-    """NULL handling on the WIRE, not just after re-read: the default
-    (keep_nulls=True) writes an explicit '"text": null' member —
-    byte-faithful interchange with json.dumps-style producers — while
-    keep_nulls=False omits the field entirely (Spark to_json's own
-    default), which is still value-lossless through read_jsonl's
+    """NULL on the wire: an explicit '"text": null' member and an
+    omitted field both read back as the same NULL row through the
     explicit schema."""
-    df = spark.createDataFrame([(6, None)], SCHEMA)
-
-    kept = str(tmp_path / "kept")
-    write_jsonl(df, kept)
-    (line,) = [
-        ln
-        for f in os.listdir(kept)
-        if f.startswith("part-")
-        for ln in open(os.path.join(kept, f)).read().splitlines()
-    ]
-    assert json.loads(line) == {"doc_id": 6, "text": None}
-    assert '"text":null' in line.replace(" ", "")
-
-    dropped = str(tmp_path / "dropped")
-    write_jsonl(df, dropped, keep_nulls=False)
-    (line2,) = [
-        ln
-        for f in os.listdir(dropped)
-        if f.startswith("part-")
-        for ln in open(os.path.join(dropped, f)).read().splitlines()
-    ]
-    assert json.loads(line2) == {"doc_id": 6}
-    # both re-read to the same NULL row through the explicit schema
+    kept = tmp_path / "kept"
+    dropped = tmp_path / "dropped"
+    kept.mkdir()
+    dropped.mkdir()
+    _dump(kept / "a.jsonl", [{"doc_id": 6, "text": None}])
+    _dump(dropped / "a.jsonl", [{"doc_id": 6}])
     for p in (kept, dropped):
-        (r,) = read_jsonl(spark, p, SCHEMA).collect()
+        (r,) = read_jsonl(spark, str(p), SCHEMA).collect()
         assert (r.doc_id, r.text) == (6, None)
 
 
 def test_jsonl_gzip_roundtrip_and_mixed_dirs(spark, tmp_path):
-    """compression='gzip' parts read back transparently, and a
-    directory mixing plain and hand-gzipped shards reads as one."""
-    df = spark.createDataFrame([(i, f"t{i}") for i in range(20)], SCHEMA)
-    path = str(tmp_path / "gz")
-    write_jsonl(df, path, compression="gzip")
+    """gzip shards read back transparently, and a directory mixing
+    plain and gzipped shards reads as one."""
+    rows = [{"doc_id": i, "text": f"t{i}"} for i in range(20)]
+    path = tmp_path / "gz"
+    path.mkdir()
+    _dump(path / "a.jsonl.gz", rows[:10], gzip.open)
+    _dump(path / "b.jsonl.gz", rows[10:], gzip.open)
     assert any(f.endswith(".gz") for f in os.listdir(path))
-    back = read_jsonl(spark, path, SCHEMA)
+    back = read_jsonl(spark, str(path), SCHEMA)
     assert back.count() == 20
     # mixed: one plain + one gz shard in a fresh dir
     mixed = tmp_path / "mixed"
@@ -124,54 +111,6 @@ def test_jsonl_corrupt_vs_missing_field(spark, tmp_path):
         (2, None, False),
         (3, "y", False),
     }
-
-
-def test_jsonl_stream_tails_directory_exactly_once(spark, tmp_path):
-    """The streaming tail picks each landed shard up exactly once and
-    agrees row-for-row with the batch reader over the same files —
-    including the corrupt-capture convention."""
-    from mongodb_etl_migration_spark.sources.jsonl import read_jsonl_stream
-
-    land = tmp_path / "landing"
-    land.mkdir()
-    (land / "a.jsonl").write_text(
-        '{"doc_id":1,"text":"first"}\nbroken line\n'
-    )
-    with gzip.open(land / "b.jsonl.gz", "wt") as f:
-        f.write('{"doc_id":2,"text":"second"}\n')
-
-    stream = read_jsonl_stream(spark, str(land), SCHEMA)
-    assert stream.isStreaming
-    out: list = []
-
-    def sink(batch_df, _bid):
-        out.extend(
-            (r.doc_id, r.text, r._corrupt_record is not None)
-            for r in batch_df.collect()
-        )
-
-    q = (
-        stream.writeStream.foreachBatch(sink)
-        .option("checkpointLocation", str(tmp_path / "ckpt"))
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination(120)
-    assert set(out) == {(1, "first", False), (None, None, True), (2, "second", False)}
-
-    # a new shard lands; a second availableNow run from the SAME
-    # checkpoint processes ONLY it (exactly-once file tracking)
-    (land / "c.jsonl").write_text('{"doc_id":3,"text":"third"}\n')
-    out.clear()
-    q2 = (
-        read_jsonl_stream(spark, str(land), SCHEMA)
-        .writeStream.foreachBatch(sink)
-        .option("checkpointLocation", str(tmp_path / "ckpt"))
-        .trigger(availableNow=True)
-        .start()
-    )
-    q2.awaitTermination(120)
-    assert out == [(3, "third", False)]
 
 
 def test_jsonl_schema_guard():

@@ -78,40 +78,3 @@ def test_zorder_layout_bounds_every_dimension(spark):
     rowmajor = grid.withColumn("file_id", (F.col("d2") / 2).cast("bigint"))
     rstats = LO.layout_pruning_stats(rowmajor, ["d1", "d2"]).collect()
     assert all(r.max_d1 - r.min_d1 == 31 for r in rstats)
-
-
-def test_write_zordered_files_are_z_ranges(spark, tmp_path):
-    """The z-ordered sink's parquet files cover disjoint compact
-    Z-ranges: reading back with input_file_name, per-file Z-key
-    intervals don't overlap (so parquet min/max stats prune any
-    interleaved-dimension predicate). Uses the writer's own key
-    (writers.zorder_key — which delegates its interleave to
-    layout.zvalue) so the check reflects exactly what was written."""
-    from mongodb_etl_migration_spark.sources.writers import (
-        write_zordered,
-        zorder_key,
-    )
-
-    grid = spark.range(32 * 32).select(
-        (F.col("id") % 32).alias("d1"),
-        (F.col("id") / 32).cast("long").alias("d2"),
-    )
-    out = str(tmp_path / "zordered")
-    write_zordered(grid, out, ["d1", "d2"], bits=5, n_files=4)
-    minmax = [(0.0, 31.0), (0.0, 31.0)]
-    back = spark.read.parquet(out).select(
-        "d1",
-        "d2",
-        zorder_key(["d1", "d2"], minmax, bits=5).alias("z"),
-        F.input_file_name().alias("f"),
-    )
-    per_file = (
-        back.groupBy("f")
-        .agg(F.min("z").alias("lo"), F.max("z").alias("hi"))
-        .collect()
-    )
-    assert len(per_file) >= 2  # range partitioner actually split
-    ivals = sorted((r.lo, r.hi) for r in per_file)
-    for (lo1, hi1), (lo2, _) in zip(ivals, ivals[1:]):
-        assert hi1 < lo2, ivals  # disjoint, ordered Z-ranges
-    assert back.count() == 1024

@@ -158,9 +158,6 @@ def test_streaming_backups_through_incremental_entity(spark, tmp_path):
     from pyspark.sql import functions as F
 
     from mongodb_etl_migration_spark.fixtures import roles_df
-    from mongodb_etl_migration_spark.streaming.incremental import (
-        run_incremental,
-    )
 
     roles = roles_df(spark)
     drops = tmp_path / "drops"
@@ -185,7 +182,14 @@ def test_streaming_backups_through_incremental_entity(spark, tmp_path):
             .option("path", str(drops))
             .load()
         )
-        q = run_incremental(stream, entity, sink, chk)
+        q = (
+            stream.writeStream.foreachBatch(
+                lambda df, _bid: entity(df).write.mode("append").parquet(sink)
+            )
+            .option("checkpointLocation", chk)
+            .trigger(availableNow=True)
+            .start()
+        )
         q.awaitTermination(60)
 
     first = roles.limit(3)

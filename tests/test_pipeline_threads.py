@@ -42,6 +42,12 @@ def grouped_run(spark):
     src = all_sources(spark)
     bus.waitUntilEmpty()
     ungrouped_before = set(tracker.getJobIdsForGroup(None))
+    # Releasing a py4j proxy left by an earlier test (a foreachBatch
+    # function) opens a JVM-to-Python callback connection, which runs
+    # on a new Python thread. Finalize such proxies now, so a JVM GC
+    # during the build cannot add that thread to the build's.
+    sc._jvm.System.gc()
+    sc._jvm.System.runFinalization()
     threads_before = set(threading.enumerate())
     sc.setJobGroup(GROUP, GROUP)
     try:

@@ -13,6 +13,7 @@ from pyspark.sql import functions as F
 from mongodb_etl_migration_spark.catalog import Catalog
 from mongodb_etl_migration_spark.operators import multimodal as M
 from mongodb_etl_migration_spark.operators import similarity as SIM
+from mongodb_etl_migration_spark.operators.dedup import connected_components
 
 
 def _planes_and_query(spark, sf_dir):
@@ -71,16 +72,10 @@ def test_multimodal_decode_schema_and_determinism(spark, sf_dir):
     assert joined.filter(F.col("byte_size") != F.col("true_len")).count() == 0
 
 
-def test_multimodal_resize_and_frame_sampling(spark, sf_dir):
+def test_multimodal_frame_sampling(spark, sf_dir):
     docs = Catalog(spark, sf_dir).documents
     mm = M.attach_binary_payload(docs, "doc_id", "text", "video")
     n = docs.count()
-
-    resized = M.resize_images(mm, 224, 224)
-    assert resized.count() == n
-    budget = 224 * 224 // 64
-    lens = resized.select(F.length("payload").alias("l")).distinct().collect()
-    assert [r["l"] for r in lens] == [budget]  # fixed-size output
 
     frames = M.sample_frames(mm, every_n=8)
     # 1→N fan-out: every doc contributes ≥1 frame, idx stride 8
@@ -93,60 +88,6 @@ def test_multimodal_resize_and_frame_sampling(spark, sf_dir):
         for r in M.sample_frames(mm, every_n=8).collect()
     }
     assert a == b
-
-
-def test_ivf_index_prunes_and_matches_inmemory_lsh(spark, sf_dir, tmp_path):
-    emb, planes, q = _planes_and_query(spark, sf_dir)
-    path = str(tmp_path / "ivf")
-    SIM.write_ivf_index(emb, path, planes)
-    probe = SIM.ivf_probe_topk(spark, path, q, planes, k=10)
-    plan = probe._jdf.queryExecution().executedPlan().toString()
-    assert "PartitionFilters" in plan and "bucket" in plan
-    # identical results to the in-memory bucketed variant
-    mem = SIM.ann_topk_lsh(emb, q, planes, k=10).collect()
-    got = probe.collect()
-    assert [(r["vec_id"], r["cos_sim"]) for r in got] == [
-        (r["vec_id"], r["cos_sim"]) for r in mem
-    ]
-
-
-def test_ivf_append_probe_parity_and_stats(spark, sf_dir, tmp_path):
-    """Incremental IVF maintenance (r12 verdict stretch): append a
-    batch to the persisted index — planes derived from the index's
-    OWN stats, never re-passed — and the maintained index must probe
-    IDENTICALLY to a from-scratch rebuild over the union (bucket is a
-    pure function of (vector, planes), so parity is bit-level).
-    Stats fold additively; the maintained-stats planes match the
-    build's."""
-    emb, planes, q = _planes_and_query(spark, sf_dir)
-    hist = emb.filter(F.col("vec_id") % 3 != 0)
-    batch = emb.filter(F.col("vec_id") % 3 == 0)
-    n_hist, n_batch = hist.count(), batch.count()
-
-    maintained = str(tmp_path / "ivf_maintained")
-    SIM.write_ivf_index(hist, maintained, planes)
-    SIM.append_ivf_index(batch, maintained)
-    n, got_planes = SIM.read_ivf_stats(spark, maintained)
-    assert n == n_hist + n_batch
-    assert got_planes == [[float(x) for x in p] for p in planes]
-
-    rebuilt = str(tmp_path / "ivf_rebuilt")
-    SIM.write_ivf_index(emb, rebuilt, planes)
-
-    a = SIM.ivf_probe_indexed(spark, maintained, q, k=10).collect()
-    b = SIM.ivf_probe_topk(spark, rebuilt, q, planes, k=10).collect()
-    assert [(r["vec_id"], r["cos_sim"]) for r in a] == [
-        (r["vec_id"], r["cos_sim"]) for r in b
-    ]
-    # the probe still prunes to the query bucket on the maintained
-    # index (appends land inside the existing directory scheme)
-    plan = (
-        SIM.ivf_probe_indexed(spark, maintained, q, k=10)
-        ._jdf.queryExecution()
-        .executedPlan()
-        .toString()
-    )
-    assert "PartitionFilters" in plan and "bucket" in plan
 
 
 def test_l2_normalize_and_centroids(spark):
@@ -274,10 +215,9 @@ def _make_wav(rate=8000, n=1600, ch=1):
     return buf.getvalue()
 
 
-def test_real_bmp_decode_and_resize(spark):
+def test_real_bmp_decode(spark):
     """BMP payloads go through a REAL codec: parsed dimensions and
-    channel means come from actual pixels, and resize round-trips
-    through parse→resample→encode with verifiable pixel values."""
+    channel means come from actual pixels."""
     import numpy as np
 
     from mongodb_etl_migration_spark.operators import multimodal as MM
@@ -293,12 +233,6 @@ def test_real_bmp_decode_and_resize(spark):
     assert rows[1].mean_g == float(np.arange(9).mean())
     assert rows[1].mean_b == 7.0
     assert rows[2].width is None  # honest NULL for undecodable bytes
-
-    resized = {r.doc_id: r for r in MM.resize_images(df, 8, 3).collect()}
-    w2, h2, px2 = MM.parse_bmp(bytes(resized[1].payload))
-    assert (w2, h2) == (8, 3)
-    # nearest-neighbor: pixel (y,x) = source (y*9//3, x*16//8)
-    assert (px2 == px[(np.arange(3) * 9) // 3][:, (np.arange(8) * 16) // 8]).all()
 
 
 def test_real_wav_decode(spark):
@@ -765,29 +699,6 @@ def test_png_gray_rgba_and_dispatch():
         parse_png(bad)
 
 
-def test_png_resize_real(spark):
-    """resize_images must route PNG payloads through the real codec:
-    nearest-neighbor downsample of a gradient, re-encoded as PNG."""
-    import numpy as np
-
-    from mongodb_etl_migration_spark.operators.multimodal import (
-        encode_png,
-        parse_png,
-        resize_images,
-    )
-
-    px = np.zeros((16, 16, 3), dtype=np.uint8)
-    px[:, :, 0] = np.arange(16, dtype=np.uint8)[None, :]
-    df = spark.createDataFrame(
-        [(1, bytearray(encode_png(px)))], "doc_id long, payload binary"
-    )
-    out = resize_images(df, target_w=4, target_h=4).collect()[0]
-    w, h, small = parse_png(bytes(out["payload"]))
-    assert (w, h) == (4, 4)
-    # nearest-neighbor on an x-gradient: columns 0,4,8,12
-    assert list(small[0, :, 0]) == [0, 4, 8, 12]
-
-
 def test_png_roundtrip_property():
     """Property: encode_png → parse_png is the identity for any uint8
     RGB image, including degenerate 1×1 and thin strips (hypothesis
@@ -1099,23 +1010,6 @@ def test_jpeg_dispatched_by_parse_image():
 
     w, h, px = parse_image(encode_jpeg(np.full((8, 16, 3), 120, dtype=np.uint8)))
     assert (w, h) == (16, 8) and int(px[0, 0, 0]) == 120
-
-
-def test_resize_reencodes_jpeg_as_jpeg(spark):
-    import numpy as np
-
-    from mongodb_etl_migration_spark.operators import multimodal as M
-
-    px = np.full((16, 16, 3), 120, dtype=np.uint8)
-    df = spark.createDataFrame(
-        [(1, bytearray(M.encode_jpeg(px)), {"media_type": "image", "byte_size": 1})],
-        "doc_id long, payload binary, meta struct<media_type:string,byte_size:long>",
-    )
-    out = M.resize_images(df, target_w=8, target_h=8).first()
-    raw = bytes(out.payload)
-    assert raw[:2] == b"\xff\xd8"  # stayed JPEG
-    w, h, dec = M.parse_jpeg(raw)
-    assert (w, h) == (8, 8) and int(dec[0, 0, 0]) == 120
 
 
 def test_jpeg_420_and_odd_dims_and_restart_roundtrip():
@@ -2313,8 +2207,8 @@ def test_audio_neardup_pairs_cap_and_clusters(spark):
     assert uncapped[(0, 1)] == 8
     comps = {
         r.id: r.component
-        for r in M.audio_neardup_clusters(
-            fp, min_shared=5, max_key_audios=3
+        for r in connected_components(
+            M.audio_neardup_pairs(fp, min_shared=5, max_key_audios=3)
         ).collect()
     }
     assert comps == {

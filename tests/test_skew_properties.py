@@ -196,15 +196,17 @@ def test_aqe_splits_skewed_join(spark):
 
 
 def test_incremental_neardup_matches_batch(spark, sf_dir, tmp_path):
-    """neardup_against_index(new, index(old)) == the old-new cross
-    pairs of a full batch minhash_dedup_pairs over old ∪ new (same
-    hash family + banding ⇒ identical candidate generation)."""
+    """neardup_probe(new, persisted band index(old)) == the old-new
+    cross pairs of a full batch minhash_dedup_pairs over old ∪ new
+    (same hash family + banding ⇒ identical candidate generation)."""
     from mongodb_etl_migration_spark.catalog import Catalog
     from mongodb_etl_migration_spark.operators.dedup import (
+        lsh_bands,
         minhash_dedup_pairs,
-        neardup_against_index,
-        write_minhash_index,
+        minhash_signatures_narrow,
+        neardup_probe,
     )
+    from mongodb_etl_migration_spark.operators.text import tokens as _tok
 
     docs = Catalog(spark, sf_dir).documents.select("doc_id", "text")
     old = docs.filter(F.col("doc_id") % 3 != 0)
@@ -217,8 +219,11 @@ def test_incremental_neardup_matches_batch(spark, sf_dir, tmp_path):
     )
 
     idx_path = str(tmp_path / "mh_index")
-    write_minhash_index(old, "doc_id", "text", idx_path)
-    inc = neardup_against_index(new, idx_path, "doc_id", "text")
+    sig = minhash_signatures_narrow(
+        old.filter(F.size(_tok(F.col("text"))) >= 3), "doc_id", "text", 3, 16
+    )
+    lsh_bands(sig, "doc_id", 16, 4).write.parquet(idx_path)
+    inc = neardup_probe(new, spark.read.parquet(idx_path), "doc_id", "text")
 
     batch = minhash_dedup_pairs(
         old.unionByName(new), "doc_id", "text"
@@ -235,8 +240,6 @@ def test_incremental_neardup_matches_batch(spark, sf_dir, tmp_path):
         F.col("id_new") - F.lit(1_000_000) == F.col("id_indexed")
     ).count()
     # only docs with >=k tokens participate
-    from mongodb_etl_migration_spark.operators.text import tokens as _tok
-
     eligible = new.filter(F.size(_tok(F.col("text"))) >= 3).join(
         old, new["text"] == old["text"], "left_semi"
     ).count()
@@ -343,6 +346,13 @@ def test_minhash_estimate_exact_dup_is_one(spark):
     assert est[(1, 3)] == 0.0
 
 
+def stable_round_sql(expr: str, digits: int) -> str:
+    """The DuckDB twin of ``scalars.stable_round``: the identical
+    floor(x·10^d + 0.5)/10^d formula, inline in SQL."""
+    s = 10 ** digits
+    return f"floor(({expr}) * {s} + 0.5) / {s} + 0.0"
+
+
 @settings(max_examples=15, deadline=None)
 @given(
     st.lists(
@@ -357,10 +367,7 @@ def test_stable_round_matches_duckdb_formula(spark, duck, xs):
     """stable_round must agree with its SQL twin bit-for-bit on
     arbitrary doubles — including repr-half values like 0.78575 where
     Spark's own round() and DuckDB's round() disagree."""
-    from mongodb_etl_migration_spark.functions.scalars import (
-        stable_round,
-        stable_round_sql,
-    )
+    from mongodb_etl_migration_spark.functions.scalars import stable_round
 
     df = spark.createDataFrame([(float(x),) for x in xs], "x double")
     got = [r["y"] for r in df.select(stable_round(F.col("x"), 4).alias("y")).collect()]
@@ -380,10 +387,7 @@ def test_stable_round_known_boundary(spark, duck):
     """The sf0.1 regression value: 0.78575 (binary 0.78574999…) must
     round identically on both engines — Spark's plain round() gets
     this wrong (0.7858 vs DuckDB round's 0.7857)."""
-    from mongodb_etl_migration_spark.functions.scalars import (
-        stable_round,
-        stable_round_sql,
-    )
+    from mongodb_etl_migration_spark.functions.scalars import stable_round
 
     df = spark.createDataFrame([(0.78575,)], "x double")
     got = df.select(stable_round(F.col("x"), 4).alias("y")).head()["y"]
@@ -452,6 +456,17 @@ def test_weighted_mix_composes_with_resampling(spark, sf_dir):
 # ------------------------------------------------- fuzzy join property
 
 
+def _levenshtein(a: str, b: str) -> int:
+    """Edit distance by the textbook row-by-row DP."""
+    prev = list(range(len(b) + 1))
+    for i, ca in enumerate(a, 1):
+        cur = [i]
+        for j, cb in enumerate(b, 1):
+            cur.append(min(prev[j] + 1, cur[j - 1] + 1, prev[j - 1] + (ca != cb)))
+        prev = cur
+    return prev[-1]
+
+
 @settings(max_examples=15, deadline=None)
 @given(
     st.lists(
@@ -473,12 +488,7 @@ def test_fuzzy_join_equals_bruteforce(spark, words):
         (r.a, r.b)
         for r in fuzzy_join(left, right, "a", "b", max_dist=1).collect()
     }
-    brute = {
-        (r.a, r.b)
-        for r in left.crossJoin(right)
-        .filter(F.levenshtein("a", "b") <= 1)
-        .collect()
-    }
+    brute = {(a, b) for a in words for b in words if _levenshtein(a, b) <= 1}
     assert blocked == brute
 
 
@@ -515,70 +525,3 @@ def test_salted_count_guard_normalizes_key_duplicates(spark):
     assert out == {1: 4000}
     n = hot.select(_stable_salt("k", ["k"], hot, 8).alias("s")).distinct().count()
     assert n > 1
-
-
-def test_lsh_tune_s_curve_and_optimum():
-    """lsh_tune picks (bands, rows) minimizing the weighted FP/FN
-    S-curve mass: the curve itself is pinned at closed-form points
-    (s=0 -> 0, s=1 -> 1, b=r=1 -> identity), the numeric integral
-    agrees with the closed form for b=r=1 (fp mass = t^2/2), the
-    choice is exhaustively optimal, and the threshold knob behaves —
-    a higher target threshold never picks FEWER rows per band (the
-    curve must steepen later)."""
-    from mongodb_etl_migration_spark.operators.dedup import (
-        lsh_hit_probability,
-        lsh_threshold,
-        lsh_tune,
-    )
-
-    assert lsh_hit_probability(0.0, 4, 4) == 0.0
-    assert lsh_hit_probability(1.0, 4, 4) == 1.0
-    for s in (0.1, 0.5, 0.9):
-        assert abs(lsh_hit_probability(s, 1, 1) - s) < 1e-12
-
-    # numeric integral vs closed form at b=r=1: fp(t) = t^2/2
-    b, r = lsh_tune(0.5, 1)
-    assert (b, r) == (1, 1)
-
-    # exhaustive optimality for n=16, t=0.5 (the engine's defaults)
-    def err(b, r, t=0.5, steps=200):
-        h1 = t / steps
-        fp = sum(
-            lsh_hit_probability(i * h1, b, r) for i in range(steps + 1)
-        ) * h1 - 0.5 * h1 * (
-            lsh_hit_probability(0, b, r) + lsh_hit_probability(t, b, r)
-        )
-        h2 = (1 - t) / steps
-        fn = sum(
-            1 - lsh_hit_probability(t + i * h2, b, r)
-            for i in range(steps + 1)
-        ) * h2 - 0.5 * h2 * (
-            (1 - lsh_hit_probability(t, b, r))
-            + (1 - lsh_hit_probability(1, b, r))
-        )
-        return 0.5 * fp + 0.5 * fn
-
-    bt, rt = lsh_tune(0.5, 16)
-    assert bt * rt <= 16
-    # exhaustive over the FULL lattice (every b*r <= 16), matching
-    # the documented objective
-    best = min(
-        err(b, r) for b in range(1, 17) for r in range(1, 16 // b + 1)
-    )
-    assert abs(err(bt, rt) - best) < 1e-9
-
-    # monotonicity: higher threshold -> rows per band not lower
-    rows_at = [lsh_tune(t, 16)[1] for t in (0.2, 0.5, 0.8)]
-    assert rows_at == sorted(rows_at)
-
-    # the inverse check: tuned banding's (1/b)^(1/r) lands near the
-    # requested threshold for a roomy budget
-    b128, r128 = lsh_tune(0.5, 128)
-    assert abs(lsh_threshold(b128, r128) - 0.5) < 0.15
-
-    import pytest
-
-    with pytest.raises(ValueError, match="threshold"):
-        lsh_tune(1.5, 16)
-    with pytest.raises(ValueError, match="num_hashes"):
-        lsh_tune(0.5, 0)

@@ -1,70 +1,34 @@
-"""Structured-Streaming incremental mode tests.
+"""Structured-Streaming tests.
 
-The reference has no streaming (SURVEY §2.10) — this is the
-beyond-parity incremental mode: the SAME batch plan applied per
-micro-batch via foreachBatch, and a watermarked windowed aggregation
-whose batch-mode twin is oracle-checked (e_windowed_counts).
+The reference has no streaming (SURVEY §2.10) — these check that the
+SAME batch plan applied per micro-batch via foreachBatch equals the
+batch run, and that a watermarked windowed aggregation equals its
+oracle-checked batch twin (e_windowed_counts).
 """
 
 from __future__ import annotations
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+from pyspark.sql.streaming import StreamingQuery
 
 from mongodb_etl_migration_spark.catalog import Catalog
 from mongodb_etl_migration_spark.streaming.incremental import (
-    run_incremental,
     windowed_event_counts,
 )
 
 
-def _entity_plan(df: DataFrame) -> DataFrame:
-    """A miniature entity plan: filter + projection + derived column
-    (the batch path shape from queries.p7_filter_then_project)."""
-    return df.filter(F.col("event_type") != "error").select(
-        "event_id",
-        "user_id",
-        F.coalesce(F.col("value"), F.lit(0.0)).alias("value_filled"),
+def _each_batch(stream: DataFrame, transform, sink: str, ckpt: str) -> StreamingQuery:
+    """Run ``transform`` on every micro-batch of ``stream`` until the
+    input is drained, appending each result under ``sink``."""
+    return (
+        stream.writeStream.foreachBatch(
+            lambda df, _bid: transform(df).write.mode("append").parquet(sink)
+        )
+        .option("checkpointLocation", ckpt)
+        .trigger(availableNow=True)
+        .start()
     )
-
-
-def test_run_incremental_matches_batch(spark, sf_dir, tmp_path):
-    events = Catalog(spark, sf_dir).events
-    # Streamify the static table: one parquet dir read as a stream.
-    src_dir = str(tmp_path / "src")
-    events.write.parquet(src_dir)
-    stream = spark.readStream.schema(
-        spark.read.parquet(src_dir).schema
-    ).parquet(src_dir)
-
-    sink = str(tmp_path / "sink")
-    ckpt = str(tmp_path / "ckpt")
-    q = run_incremental(stream, _entity_plan, sink, ckpt, trigger_once=True)
-    q.awaitTermination(120)
-
-    # the sink is partitioned by batch_id (idempotent replay); the
-    # discovered partition column is sink bookkeeping, not payload
-    got = spark.read.parquet(sink).drop("batch_id")
-    want = _entity_plan(spark.read.parquet(src_dir))
-    assert got.count() == want.count()
-    assert sorted(got.columns) == sorted(want.columns)
-    assert got.agg(F.sum("value_filled")).collect()[0][0] == (
-        want.agg(F.sum("value_filled")).collect()[0][0]
-    )
-
-    # Restart with the same checkpoint: no new data ⇒ no duplicate rows
-    # (exactly-once via checkpointed source offsets).
-    q2 = run_incremental(stream, _entity_plan, sink, ckpt, trigger_once=True)
-    q2.awaitTermination(120)
-    assert spark.read.parquet(sink).count() == want.count()
-
-    # Replayed batch (same batch_id, e.g. crash between sink write and
-    # checkpoint commit): overwrite-by-batch-directory keeps the sink
-    # exactly-once where a bare append would have doubled the rows.
-    ckpt2 = str(tmp_path / "ckpt_replay")
-    q3 = run_incremental(stream, _entity_plan, sink, ckpt2, trigger_once=True)
-    q3.awaitTermination(120)
-    assert spark.read.parquet(sink).count() == want.count()
 
 
 def test_windowed_counts_streaming_equals_batch(spark, sf_dir, tmp_path):
@@ -104,68 +68,6 @@ def test_windowed_counts_streaming_equals_batch(spark, sf_dir, tmp_path):
     assert got.count() > 0
 
 
-def test_stateful_sessionization_matches_batch(spark, sf_dir, tmp_path):
-    """applyInPandasWithState sessionization vs the oracle-checked
-    batch twin: with availableNow over static data, the stream emits
-    exactly the sessions CLOSED by an observed gap — i.e. every batch
-    session except each user's last (the open tail stays in state)."""
-    from mongodb_etl_migration_spark.streaming.stateful import (
-        sessionize_batch,
-        sessionize_stateful,
-    )
-
-    events = Catalog(spark, sf_dir).events
-    src_dir = str(tmp_path / "ssrc")
-    # one file ⇒ one micro-batch: files arrive in arbitrary order, so a
-    # multi-file source would interleave out-of-order event time across
-    # batches (production streams are watermark-ordered; this test pins
-    # the single-batch semantics deterministically)
-    events.coalesce(1).write.parquet(src_dir)
-    stream = spark.readStream.schema(
-        spark.read.parquet(src_dir).schema
-    ).parquet(src_dir)
-
-    sink = str(tmp_path / "ssink")
-    ckpt = str(tmp_path / "sckpt")
-    q = (
-        sessionize_stateful(stream, gap_minutes=30)
-        .writeStream.outputMode("append")
-        .option("checkpointLocation", ckpt)
-        .trigger(availableNow=True)
-        .format("parquet")
-        .option("path", sink)
-        .start()
-    )
-    q.awaitTermination(180)
-
-    got = spark.read.parquet(sink).select(
-        "user_id",
-        F.col("session_start").cast("timestamp_ntz").alias("session_start"),
-        F.col("session_end").cast("timestamp_ntz").alias("session_end"),
-        "n_events",
-    )
-    batch = sessionize_batch(spark.read.parquet(src_dir), gap_minutes=30)
-    # expected = gap-closed sessions (all but each user's last) PLUS
-    # tail sessions flushed by the final watermark timeout sweep:
-    # timeout fires when watermark (max_ts - 1h) passes session_end+gap
-    last = batch.groupBy("user_id").agg(
-        F.max("session_idx").alias("session_idx")
-    )
-    max_ts = spark.read.parquet(src_dir).agg(F.max("ts")).head()[0]
-    closed_by_gap = batch.join(last, ["user_id", "session_idx"], "left_anti")
-    flushed_tails = batch.join(last, ["user_id", "session_idx"], "left_semi").filter(
-        F.col("session_end").cast("timestamp") + F.expr("INTERVAL 30 MINUTES")
-        < F.lit(max_ts).cast("timestamp") - F.expr("INTERVAL 1 HOUR")
-    )
-    expected = closed_by_gap.unionByName(flushed_tails).select(
-        "user_id", "session_start", "session_end", "n_events"
-    )
-    assert got.count() == expected.count()
-    assert got.exceptAll(expected).count() == 0
-    assert expected.exceptAll(got).count() == 0
-    assert got.count() > 0
-
-
 def test_incremental_entity_plan(spark, tmp_path):
     """The SAME entity spec the batch DAG compiles runs incrementally
     via foreachBatch (one code path, two execution modes): stream the
@@ -187,7 +89,6 @@ def test_incremental_entity_plan(spark, tmp_path):
         user_spec,
     )
     from mongodb_etl_migration_spark.plans.compiler import compile_entity
-    from mongodb_etl_migration_spark.streaming.incremental import run_incremental
 
     run_ts = datetime(2021, 1, 1)
     role = compile_entity(role_spec(), roles_df(spark))
@@ -212,7 +113,7 @@ def test_incremental_entity_plan(spark, tmp_path):
     ).parquet(src_dir)
 
     sink = str(tmp_path / "usink")
-    q = run_incremental(
+    q = _each_batch(
         stream,
         lambda df: compile_entity(user_spec(run_ts), df, id_maps),
         sink,
@@ -220,113 +121,13 @@ def test_incremental_entity_plan(spark, tmp_path):
     )
     q.awaitTermination(120)
 
-    got = spark.read.parquet(sink).drop("batch_id")
+    got = spark.read.parquet(sink)
     want = compile_entity(user_spec(run_ts), spark.read.parquet(src_dir), id_maps)
     assert got.count() == want.count()
     assert sorted(got.columns) == sorted(want.columns)
     assert got.select("mongo_id", "name", "role_id", "dni").exceptAll(
         want.select("mongo_id", "name", "role_id", "dni")
     ).count() == 0
-
-
-def test_transform_with_state_dedup_equals_batch(spark, sf_dir, tmp_path):
-    """Streaming first-wins dedup (Spark 4 transformWithStateInPandas,
-    RocksDB state) over one micro-batch equals the batch twin
-    denorm.top1_per_group — same key, same order columns.
-
-    transformWithState's Python driver worker needs google.protobuf at
-    runtime; skip where it isn't installed (the processor logic itself
-    is covered by test_first_wins_processor_semantics below)."""
-    import pytest
-
-    pytest.importorskip("google.protobuf")
-    from mongodb_etl_migration_spark.operators.denorm import top1_per_group
-    from mongodb_etl_migration_spark.streaming.stateful import (
-        dedup_stream_stateful,
-    )
-
-    events = Catalog(spark, sf_dir).events.select(
-        "event_id", "user_id", F.col("ts").cast("timestamp").alias("ts")
-    )
-    src_dir = str(tmp_path / "dsrc")
-    events.coalesce(1).write.parquet(src_dir)
-    stream = spark.readStream.schema(
-        spark.read.parquet(src_dir).schema
-    ).parquet(src_dir)
-
-    sink = str(tmp_path / "dsink")
-    ckpt = str(tmp_path / "dckpt")
-    prov_key = "spark.sql.streaming.stateStore.providerClass"
-    old = spark.conf.get(prov_key, None)
-    spark.conf.set(
-        prov_key,
-        "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider",
-    )
-    try:
-        q = (
-            dedup_stream_stateful(
-                stream, "user_id", ["ts", "event_id"], ttl_minutes=None
-            )
-            .writeStream.outputMode("append")
-            .option("checkpointLocation", ckpt)
-            .trigger(availableNow=True)
-            .format("parquet")
-            .option("path", sink)
-            .start()
-        )
-        q.awaitTermination(180)
-    finally:
-        if old is None:
-            spark.conf.unset(prov_key)
-        else:
-            spark.conf.set(prov_key, old)
-
-    got = spark.read.parquet(sink)
-    want = top1_per_group(
-        spark.read.parquet(src_dir), ["user_id"], [F.col("ts"), F.col("event_id")]
-    )
-    assert got.count() == want.count() > 0
-    assert got.select(*sorted(got.columns)).exceptAll(
-        want.select(*sorted(want.columns))
-    ).count() == 0
-
-
-def test_first_wins_processor_semantics():
-    """Unit-level check of _FirstWinsDedupProcessor: first row by the
-    order columns wins within a batch; later batches for a seen key
-    emit nothing. Drives handleInputRows directly with a fake
-    ValueState — no protobuf/RocksDB runtime needed."""
-    import pandas as pd
-
-    from mongodb_etl_migration_spark.streaming.stateful import (
-        _FirstWinsDedupProcessor,
-    )
-
-    class FakeState:
-        def __init__(self):
-            self.v = None
-
-        def exists(self):
-            return self.v is not None
-
-        def update(self, v):
-            self.v = v
-
-    p = _FirstWinsDedupProcessor(["ts", "event_id"])
-    p._seen = FakeState()
-
-    b1 = [
-        pd.DataFrame({"event_id": [5, 2], "user_id": [1, 1], "ts": [20, 10]}),
-        pd.DataFrame({"event_id": [9], "user_id": [1], "ts": [5]}),
-    ]
-    out = list(p.handleInputRows((1,), iter(b1), None))
-    assert len(out) == 1 and len(out[0]) == 1
-    # ts=5 is the global min across chunks of the batch
-    assert out[0].iloc[0]["event_id"] == 9 and out[0].iloc[0]["ts"] == 5
-
-    # key already seen → second batch emits nothing
-    b2 = [pd.DataFrame({"event_id": [1], "user_id": [1], "ts": [1]})]
-    assert list(p.handleInputRows((1,), iter(b2), None)) == []
 
 
 def test_stream_stream_attribution_join_equals_batch(spark, sf_dir, tmp_path):
@@ -427,7 +228,7 @@ def test_drop_duplicates_within_watermark(spark, sf_dir, tmp_path):
 
 def test_streaming_curation_gates_match_batch(spark, sf_dir, tmp_path):
     """The LLM-curation gates run UNCHANGED under Structured Streaming
-    via run_incremental (one code path, two execution modes): a
+    via foreachBatch (one code path, two execution modes): a
     crawler drops two document shards, each micro-batch flows through
     Gopher repetition gate → quality classifier → language ID → BPE
     token count, and the union of streamed batches equals the batch
@@ -474,10 +275,10 @@ def test_streaming_curation_gates_match_batch(spark, sf_dir, tmp_path):
 
     sink = str(tmp_path / "curated")
     ckpt = str(tmp_path / "ckpt")
-    q = run_incremental(stream, curate, sink, ckpt, trigger_once=True)
+    q = _each_batch(stream, curate, sink, ckpt)
     q.awaitTermination(180)
 
-    got = spark.read.parquet(sink).drop("batch_id")
+    got = spark.read.parquet(sink)
     want = curate(spark.read.option("recursiveFileLookup", "true").parquet(src_dir))
     g = {tuple(r) for r in got.collect()}
     w = {tuple(r) for r in want.collect()}
@@ -499,10 +300,7 @@ def test_streaming_sft_ingest_matches_batch(spark, tmp_path):
     from pyspark.sql.types import LongType, StringType, StructField, StructType
 
     from mongodb_etl_migration_spark.operators import chat as CH
-    from mongodb_etl_migration_spark.sources.jsonl import (
-        read_jsonl,
-        read_jsonl_stream,
-    )
+    from mongodb_etl_migration_spark.sources.jsonl import read_jsonl
 
     def msgs(*contents, first_role="user"):
         roles = ["user", "assistant"]
@@ -526,7 +324,7 @@ def test_streaming_sft_ingest_matches_batch(spark, tmp_path):
         CH.parse_turns_json("payload").alias("turns"),
     )
     idx_path = str(tmp_path / "convidx")
-    CH.write_conv_key_index(hist, idx_path)
+    CH.conversation_dedup(hist).write.parquet(idx_path)
 
     # two landing drops: 10 duplicates history-1's assistant
     # transcript under a paraphrased user side; 11 is new; 12 is a
@@ -571,14 +369,13 @@ def test_streaming_sft_ingest_matches_batch(spark, tmp_path):
 
     sink = str(tmp_path / "sink")
     ckpt = str(tmp_path / "ckpt")
-    stream = read_jsonl_stream(spark, drops, schema, max_files_per_trigger=1)
-    q = run_incremental(stream, curate, sink, ckpt, trigger_once=True)
+    stream = (
+        spark.readStream.schema(schema).option("maxFilesPerTrigger", 1).json(drops)
+    )
+    q = _each_batch(stream, curate, sink, ckpt)
     q.awaitTermination(180)
 
-    got = {
-        tuple(r)
-        for r in spark.read.parquet(sink).drop("batch_id").collect()
-    }
+    got = {tuple(r) for r in spark.read.parquet(sink).collect()}
     want = {
         tuple(r)
         for r in curate(read_jsonl(spark, drops, schema)).collect()
@@ -604,8 +401,7 @@ def test_streaming_image_ingest_matches_batch(spark, tmp_path):
     sequential batch twin row-for-row; a drop-B image whose only
     near-dup arrived in drop A matches BECAUSE the in-loop append
     advanced the index; and the maintained index is row- and
-    stats-identical to a from-scratch rebuild over history + drops
-    (the append_ivf_index parity rule)."""
+    stats-identical to a from-scratch rebuild over history + drops."""
     import hashlib
     import os
 

@@ -5,25 +5,242 @@ scheme, empty text, all-tracking query strings, sub-min_df terms."""
 
 from __future__ import annotations
 
+from pyspark.sql import Column
 from pyspark.sql import functions as F
 
 from mongodb_etl_migration_spark.operators import text as T
 from mongodb_etl_migration_spark.operators import web as W
 
 
+# ---------------------------------------------------------------------
+# Plain-Python references and test-input builders
+# ---------------------------------------------------------------------
+
+
+def ngrams_array(
+    c: Column | str, n: int, toks: Column | None = None
+) -> Column:
+    """Adjacent-token n-grams as 'a b c' strings for any n >= 1 — the
+    Column-API form the gram folds are checked against. Fewer than n
+    tokens -> empty array (sequence(1, 0) would step DOWNWARD)."""
+    toks = T.tokens(c) if toks is None else toks
+    return F.when(
+        F.size(toks) >= n,
+        F.transform(
+            F.sequence(F.lit(1), F.size(toks) - (n - 1)),
+            lambda i: F.array_join(F.slice(toks, i, n), " "),
+        ),
+    ).otherwise(F.array().cast("array<string>"))
+
+
+def bpe_train_reference(
+    word_counts: dict[str, int], n_merges: int, min_count: int = 2
+) -> list[tuple[str, str, int]]:
+    """Plain-Python reference BPE TRAINER (Sennrich et al. 2016): per
+    round, count adjacent symbol pairs over the weighted vocabulary
+    (overlapping run pairs count, the standard zip-adjacent rule),
+    merge the most frequent everywhere (ties: lexicographically
+    smallest pair), stop when the best count drops below
+    ``min_count``. Returns (left, right, pair_count) in rank order —
+    the ground truth bpe_train is tested against."""
+    vocab = {
+        " " + " ".join(w) + " ": int(c) for w, c in word_counts.items() if w
+    }
+    merges: list[tuple[str, str, int]] = []
+    for _ in range(n_merges):
+        counts: dict[tuple[str, str], int] = {}
+        for sym, c in vocab.items():
+            parts = sym.split()
+            for a, b in zip(parts, parts[1:]):
+                counts[(a, b)] = counts.get((a, b), 0) + c
+        if not counts:
+            break
+        best = min(counts.items(), key=lambda kv: (-kv[1], kv[0]))
+        (a, b), n = best
+        if n < min_count:
+            break
+        merges.append((a, b, n))
+        pat, rep = f" {a} {b} ", f" {a}{b} "
+        vocab = {
+            _replace_passes(sym, pat, rep): c for sym, c in vocab.items()
+        }
+    return merges
+
+
+def _replace_passes(s: str, pat: str, rep: str) -> str:
+    for _ in range(T._BPE_PASSES):
+        s = s.replace(pat, rep)
+    return s
+
+
+def _apply_merge_batch(
+    parts: list[str],
+    batch: list[tuple[str, str]] | dict[tuple[str, str], str],
+) -> list[str]:
+    """Apply a compatible merge batch in ONE combined multi-pass scan
+    — provably equal to the rank-order per-pair replace chain the
+    Spark path runs (and _apply_pair_passes implements), because
+    _select_compatible_batch guarantees accepted pairs never contend
+    for a token occurrence: cross-side symbol sharing is only
+    accepted when the linking triple count is ZERO (no occurrence
+    where the two pairs touch), same-side sharing cannot overlap by
+    construction, and outputs are fresh strings no other batch pair
+    references — so every position's merge fate is pair-independent
+    and one left-to-right scan settles them all. The per-pair
+    string-replace skip rule (a replacement consumes its trailing
+    delimiter, so the SAME pair cannot start a match immediately
+    after its own replacement within a pass) is kept via ``last``;
+    a DIFFERENT pair matching there merges, exactly as its own
+    separate replace call would. O(word_len · passes) instead of
+    O(word_len · batch) — the difference between minutes and hours
+    per round at 4k-wide batches. ``batch`` may be a prebuilt
+    {(l, r): l+r} dict (hoist it out of per-word loops — profiling
+    showed the per-word dictcomp costing more than the scan)."""
+    out = (
+        batch
+        if isinstance(batch, dict)
+        else {(l, r): l + r for l, r in batch}
+    )
+    for _ in range(T._BPE_PASSES):
+        res: list[str] = []
+        i = 0
+        n = len(parts)
+        changed = False
+        last: tuple[str, str] | None = None
+        while i < n:
+            p = (parts[i], parts[i + 1]) if i + 1 < n else None
+            if p is not None and p != last and p in out:
+                res.append(out[p])
+                i += 2
+                changed = True
+                last = p
+            else:
+                res.append(parts[i])
+                i += 1
+                last = None
+        parts = res
+        if not changed:
+            break
+    return parts
+
+
+def bpe_train_batched_reference(
+    word_counts: dict[str, int],
+    n_merges: int,
+    min_count: int = 2,
+    batch_cap: int = 256,
+    stats: dict | None = None,
+    on_round=None,
+) -> list[tuple[str, str, int]]:
+    """Plain-Python BATCHED BPE trainer — bpe_train's schedule twin:
+    identical counts, identical _select_compatible_batch calls,
+    identical merge application, so its trajectory AND round count
+    are the Spark trainer's by construction (property-tested equal to
+    the sequential bpe_train_reference). Exists so a 50k-merge round
+    -count measurement costs seconds instead of 50k Spark jobs; pass
+    ``stats`` to receive {'rounds': N, 'batch_sizes': [...]}."""
+    vocab: list[tuple[list[str], int]] = [
+        (list(w), int(c)) for w, c in word_counts.items() if w
+    ]
+    merges: list[tuple[str, str, int]] = []
+    rounds = 0
+    sizes: list[int] = []
+    while len(merges) < n_merges:
+        cap = min(batch_cap, n_merges - len(merges))
+        pair_counts: dict[tuple[str, str], int] = {}
+        tri_counts: dict[tuple[str, str, str], int] = {}
+        for parts, c in vocab:
+            for j in range(len(parts) - 1):
+                p = (parts[j], parts[j + 1])
+                pair_counts[p] = pair_counts.get(p, 0) + c
+        if not pair_counts:
+            break
+        order = sorted(
+            pair_counts.items(), key=lambda kv: (-kv[1], kv[0])
+        )
+        cands = [(l, r, c) for (l, r), c in order[:cap]]
+        cset = {(l, r) for l, r, _ in cands}
+        # second pass restricted to candidate-adjacent triples — the
+        # only ones maxtri/tri3 can ever query (mirrors the Spark
+        # side, where the triple frame joins against the broadcast
+        # candidate relation before collecting)
+        maxtri: dict[tuple[str, str], int] = {}
+        tri3: dict[tuple[str, str, str], int] = {}
+        for parts, c in vocab:
+            for j in range(len(parts) - 2):
+                a, b, c3 = parts[j], parts[j + 1], parts[j + 2]
+                lp, rp = (a, b) in cset, (b, c3) in cset
+                if not (lp or rp):
+                    continue
+                t = (a, b, c3)
+                n = tri_counts.get(t, 0) + c
+                tri_counts[t] = n
+                if lp and n > maxtri.get((a, b), 0):
+                    maxtri[(a, b)] = n
+                if rp and n > maxtri.get((b, c3), 0):
+                    maxtri[(b, c3)] = n
+                if lp and rp:
+                    tri3[t] = n
+        syms = {s for p in pair_counts for s in p}
+        collide = {(l, r) for l, r, _ in cands if l + r in syms}
+        batch = T._select_compatible_batch(
+            cands, maxtri, collide, min_count, tri3
+        )
+        if not batch:
+            break
+        out = {(l, r): l + r for l, r, _ in batch}
+        vocab = [(_apply_merge_batch(p, out), c) for p, c in vocab]
+        merges.extend(batch)
+        rounds += 1
+        sizes.append(len(batch))
+        if on_round is not None:
+            on_round(rounds, len(merges))
+    if stats is not None:
+        stats["rounds"] = rounds
+        stats["batch_sizes"] = sizes
+    return merges
+
+
+def merges_to_text(merges: list[tuple[str, str]] | list[tuple[str, str, int]]) -> str:
+    """Serialize a merge table (learned by bpe_train or hand-built)
+    into the published merges.txt format parse_merges reads — the
+    export half of the tokenizer round-trip (train → ship → load →
+    encode). Counts, if present, are dropped (the format carries rank
+    order only)."""
+    lines = ["#version: 0.2"]
+    for m in merges:
+        a, b = m[0], m[1]
+        if " " in a or " " in b or not a or not b:
+            raise ValueError(f"unserializable merge pair ({a!r}, {b!r})")
+        lines.append(f"{a} {b}")
+    return "\n".join(lines) + "\n"
+
+
 def _urls(spark, rows):
     return spark.createDataFrame([(i, u) for i, u in enumerate(rows)], "id int, url string")
 
 
+def _canonical(df, url_col="url"):
+    """``df`` plus its canonical URL ``c``, built from the part columns."""
+    parts = W.with_url_parts(df, url_col)
+    return parts.select(
+        *df.columns,
+        W.canonical_from_parts(
+            F.col("__url_scheme"), F.col("__url_host"),
+            F.col("__url_path"), F.col("__url_q"),
+        ).alias("c"),
+    )
+
+
 def test_url_parts_well_formed(spark):
     df = _urls(spark, ["https://WWW.Ex.COM:443/A/b/?utm_source=x&p=1#frag"])
-    row = df.select(
+    row = _canonical(df).select(
         W.url_scheme("url").alias("s"),
         W.url_host("url").alias("h"),
         W.registered_domain("url").alias("d"),
         W.url_path("url").alias("p"),
-        W.url_path_depth("url").alias("n"),
-        W.canonicalize_url("url").alias("c"),
+        W.path_depth_of(W.url_path("url")).alias("n"),
+        "c",
     ).first()
     assert row.s == "https"
     assert row.h == "www.ex.com"
@@ -35,10 +252,10 @@ def test_url_parts_well_formed(spark):
 
 def test_url_parts_missing_scheme_is_null(spark):
     df = _urls(spark, ["www.ex.com/a", "not a url at all", ""])
-    rows = df.select(
+    rows = _canonical(df).select(
         W.url_scheme("url").alias("s"),
         W.url_host("url").alias("h"),
-        W.canonicalize_url("url").alias("c"),
+        "c",
     ).collect()
     assert all(r.s is None and r.h is None and r.c is None for r in rows)
 
@@ -46,7 +263,7 @@ def test_url_parts_missing_scheme_is_null(spark):
 def test_canonicalize_drops_all_tracking_query(spark):
     # every param is tracking -> no '?' at all in the canonical form
     df = _urls(spark, ["http://a.com/x?utm_a=1&gclid=2&fbclid=3"])
-    assert df.select(W.canonicalize_url("url").alias("c")).first().c == "http://a.com/x"
+    assert _canonical(df).first().c == "http://a.com/x"
 
 
 def test_canonicalize_root_path_and_ports(spark):
@@ -54,7 +271,7 @@ def test_canonicalize_root_path_and_ports(spark):
         spark,
         ["http://A.com:80", "http://a.com:8080/", "https://a.com/#f"],
     )
-    got = [r.c for r in df.select(W.canonicalize_url("url").alias("c")).collect()]
+    got = [r.c for r in _canonical(df).collect()]
     # default port dropped; non-default port kept; '' and '/' paths -> '/'
     assert got == ["http://a.com/", "http://a.com:8080/", "https://a.com/"]
     # ...but the port never leaks into the registered domain
@@ -149,8 +366,8 @@ def test_canonicalize_idempotent_property(spark):
         for f in frags
     ]
     df = _urls(spark, urls)
-    once = df.select("id", W.canonicalize_url("url").alias("url"))
-    twice = once.select("id", W.canonicalize_url("url").alias("url"))
+    once = _canonical(df).select("id", F.col("c").alias("url"))
+    twice = _canonical(once).select("id", F.col("c").alias("url"))
     a = {r.id: r.url for r in once.collect()}
     b = {r.id: r.url for r in twice.collect()}
     assert a == b
@@ -1405,11 +1622,9 @@ def test_gpt2_pretokenize_scanner_matches_java_regex(spark):
         assert "".join(got[s]) == s  # tokens tile the input exactly
 
 
-def test_gpt2_encode_column_and_batch_paths_agree(spark):
-    """On ASCII text the zero-shuffle Column chain and the
-    Arrow-batched scanner path produce identical encodings; the batch
-    path additionally handles non-ASCII via UTF-8 byte fallback
-    through the alphabet."""
+def test_gpt2_encode_column_path_matches_reference(spark):
+    """On ASCII text the zero-shuffle Column chain encodes exactly as
+    the reference scanner + greedy loop."""
     merges = T.parse_merges(
         "#version: 0.2\nĠ t\nh e\nĠt he\nt he\na b\nl e\nt ab\ntab le\n"
     )
@@ -1428,11 +1643,6 @@ def test_gpt2_encode_column_and_batch_paths_agree(spark):
             T.gpt2_token_count("text", merges).alias("n"),
         ).collect()
     }
-    bat = {
-        r.doc_id: (r.encoded, r.bpe_tokens)
-        for r in T.gpt2_encode_batch(df, "doc_id", "text", merges).collect()
-    }
-    assert col == bat
     # 'the': (h,e) then (t,he) -> one symbol; ' table': (Ġ,t), (a,b),
     # (l,e) -> Ġt ab le ((Ġt,ab)/(ab,le) are not in the table)
     assert col[1] == ("the Ġt ab le", 4)
@@ -1440,11 +1650,6 @@ def test_gpt2_encode_column_and_batch_paths_agree(spark):
     # reference ground truth agrees too
     for i, s in rows:
         assert col[i][0] == " ".join(T.gpt2_apply_reference(s, merges))
-    # non-ASCII byte fallback (batch path only): é -> 0xC3 0xA9, both
-    # printable-identity bytes in the alphabet
-    nonascii = spark.createDataFrame([(9, "café")], "doc_id long, text string")
-    r = T.gpt2_encode_batch(nonascii, "doc_id", "text", merges).collect()[0]
-    assert r.encoded == "c a f Ã ©" and r.bpe_tokens == 5
 
 
 def test_gpt2_vocab_published_ids():
@@ -1807,34 +2012,6 @@ def test_bpe_column_path_matches_reference_property(spark):
     assert got == expected
 
 
-def test_bpe_batch_udf_matches_column_path(spark):
-    """General pandas-UDF path == compiled Column path on multi-word
-    documents (counts and actual encoded symbols)."""
-    docs = spark.createDataFrame(
-        [
-            (1, "table query join"),
-            (2, "database scans erer"),
-            (3, ""),
-            (4, "DATA Table QUERY"),  # case folding
-        ],
-        "doc_id long, text string",
-    )
-    col = {
-        r.doc_id: r.n
-        for r in docs.select(
-            "doc_id", T.bpe_token_count("text").alias("n")
-        ).collect()
-    }
-    udf = {
-        r.doc_id: (r.bpe_tokens, r.encoded)
-        for r in T.bpe_encode_batch(docs, "doc_id", "text").collect()
-    }
-    assert {k: v[0] for k, v in udf.items()} == col
-    assert udf[1][1] == "table query join"
-    assert udf[2][1] == "data b a s e scan s er er"
-    assert udf[4][1] == "data table query"
-
-
 def test_nfc_normalize_composes_and_flags(spark):
     docs = spark.createDataFrame(
         [
@@ -2113,7 +2290,7 @@ def test_gram_run_stats_matches_bruteforce(spark):
             for r in docs.select(
                 "doc_id",
                 T.gram_run_stats(
-                    F.array_sort(T.ngrams_array("text", n))
+                    F.array_sort(ngrams_array("text", n))
                 ).alias("s"),
             ).collect()
         }
@@ -2146,7 +2323,7 @@ def test_gram_fold_sql_matches_column_form(spark):
         rows = docs.select(
             "doc_id",
             T.gram_run_stats(
-                F.array_sort(T.ngrams_array("text", n, F.col("__grt")))
+                F.array_sort(ngrams_array("text", n, F.col("__grt")))
             ).alias("col_form"),
             F.expr(T._gram_fold_sql(n)).alias("sql_form"),
         ).collect()
@@ -2419,45 +2596,6 @@ def test_dedup_paragraphs_within_doc_duplicates(spark):
     assert (r.n_lines_kept, r.n_lines_total) == (3, 4)
 
 
-def test_bpe_batch_udf_at_vocab_scale(spark):
-    """The general pandas-UDF path with a ~5k-merge synthetic table
-    (the compiled Column chain stops at ~tens): greedy semantics
-    still match the reference encoder exactly."""
-    import random
-
-    rng = random.Random(4)
-    symbols = [chr(c) for c in range(ord("a"), ord("z") + 1)]
-    merges, seen = [], set()
-    while len(merges) < 5000:
-        a, b = rng.choice(symbols), rng.choice(symbols)
-        if (a, b) in seen or len(a + b) > 12:
-            continue
-        seen.add((a, b))
-        merges.append((a, b))
-        symbols.append(a + b)
-    texts = [
-        " ".join(
-            "".join(rng.choice("abcdefgh") for _ in range(rng.randint(1, 12)))
-            for _ in range(8)
-        )
-        for _ in range(40)
-    ]
-    docs = spark.createDataFrame(
-        [(i, t) for i, t in enumerate(texts)], "doc_id long, text string"
-    )
-    got = {
-        r.doc_id: (r.bpe_tokens, r.encoded)
-        for r in T.bpe_encode_batch(docs, "doc_id", "text", merges=merges).collect()
-    }
-    import re
-
-    for i, t in enumerate(texts):
-        pieces = []
-        for w in re.findall("[a-z0-9]+", t.lower()):
-            pieces.extend(T.bpe_apply_reference(w, merges))
-        assert got[i] == (len(pieces), " ".join(pieces)), i
-
-
 def test_crawl_schedule_stalest_first_and_subdomain_budget(spark):
     """NULL lastmod (never crawled) ranks first; the per-domain budget
     spans SUBDOMAINS of one registered domain (farms can't multiply
@@ -2498,20 +2636,17 @@ def test_bpe_train_matches_reference_with_ties_and_early_stop(spark):
 
         for w in re.findall("[a-z0-9]+", t.lower()):
             wc[w] = wc.get(w, 0) + 1
-    ref = T.bpe_train_reference(wc, 10, min_count=2)
+    ref = bpe_train_reference(wc, 10, min_count=2)
     assert merges == ref
     assert len(merges) < 10  # min_count stopped training early
-    # learned merges drop straight into the encode paths; this table
-    # contains a SELF-PAIR ('a','a') from the runs, so the compiled
-    # Column path must reject it and the batch path must take it
+    # this table contains a SELF-PAIR ('a','a') from the runs, so the
+    # compiled Column path must reject it
     flat = [(a, b) for a, b, _ in merges]
     assert ("a", "a") in flat
     import pytest
 
     with pytest.raises(ValueError, match="self-pair"):
         df.select(T.bpe_token_count("text", merges=flat)).collect()
-    enc = T.bpe_encode_batch(df, "doc_id", "text", merges=flat).collect()
-    assert all(r.bpe_tokens >= 1 for r in enc)
     # the audit vocab is fully merged under the learned table
     vrows = {r.w: r.sym for r in vocab.collect()}
     assert set(vrows) == set(wc)
@@ -2533,8 +2668,8 @@ def test_bpe_batched_selection_adversarial_fixtures():
        the collide flag must end the batch at that merge;
     4. genuinely independent merges DO batch (the device actually
        compresses rounds)."""
-    ref = T.bpe_train_reference
-    bat = T.bpe_train_batched_reference
+    ref = bpe_train_reference
+    bat = bpe_train_batched_reference
 
     # 1. overtake: (a,b)=11 > (c,d)=9, but tri (x,a,b)=10 >= 9
     wc1 = {"xab": 10, "ab": 1, "cd": 9}
@@ -2606,8 +2741,8 @@ def test_bpe_batched_equals_sequential_property():
         mc=st.sampled_from([1, 2, 3]),
     )
     def check(wc, cap, mc):
-        ref = T.bpe_train_reference(wc, 12, min_count=mc)
-        got = T.bpe_train_batched_reference(
+        ref = bpe_train_reference(wc, 12, min_count=mc)
+        got = bpe_train_batched_reference(
             wc, 12, min_count=mc, batch_cap=cap
         )
         assert got == ref, (wc, cap, mc)
@@ -2634,7 +2769,7 @@ def test_bpe_train_spark_batched_equals_reference_forced_interactions(spark):
     for _, t in rows:
         for w in re.findall("[a-z0-9]+", t.lower()):
             wc[w] = wc.get(w, 0) + 1
-    ref = T.bpe_train_reference(wc, 14, min_count=2)
+    ref = bpe_train_reference(wc, 14, min_count=2)
     stats = {}
     # mode='distributed': this test pins the vocabulary-resident
     # batch machinery (auto would collect the tiny vocab and train
@@ -2645,7 +2780,7 @@ def test_bpe_train_spark_batched_equals_reference_forced_interactions(spark):
     )
     assert merges == ref
     twin_stats = {}
-    twin = T.bpe_train_batched_reference(
+    twin = bpe_train_batched_reference(
         wc, 14, min_count=2, stats=twin_stats
     )
     assert twin == ref
@@ -2675,18 +2810,17 @@ def test_merges_txt_roundtrip_train_ship_load_encode(spark):
     )
     merges, _ = T.bpe_train(df, "text", n_merges=6)
     flat = [(a, b) for a, b, _ in merges]
-    txt = T.merges_to_text(merges)
+    txt = merges_to_text(merges)
     assert txt.startswith("#version")
     assert T.parse_merges(txt) == flat
-    a = T.bpe_encode_batch(df, "doc_id", "text", merges=flat).collect()
-    b = T.bpe_encode_batch(
-        df, "doc_id", "text", merges=T.parse_merges(txt)
-    ).collect()
-    assert sorted(map(tuple, a)) == sorted(map(tuple, b))
+    words = ["table", "tablet", "stable", "tables"]
+    assert [T.bpe_apply_reference(w, flat) for w in words] == [
+        T.bpe_apply_reference(w, T.parse_merges(txt)) for w in words
+    ]
     import pytest
 
     with pytest.raises(ValueError, match="unserializable"):
-        T.merges_to_text([("a b", "c")])
+        merges_to_text([("a b", "c")])
 
 
 def test_robots_wildcard_matching_fuzz_vs_python_reference(spark):
@@ -3425,7 +3559,7 @@ def test_bpe_batched_selection_rejects_output_equal_to_earlier_input():
     assert batch == [("bc", "x", 1000)]
     # and the combined scan on the SAFE batch matches the chain
     parts = ["b", "c", "x"]
-    combined = T._apply_merge_batch(parts, [(l, r) for l, r, _ in batch])
+    combined = _apply_merge_batch(parts, [(l, r) for l, r, _ in batch])
     chained = parts
     for l, r, _ in batch:
         chained = T._apply_pair_passes(chained, l, r)
@@ -3672,7 +3806,7 @@ def test_bpe_incremental_equals_sequential_property():
     @settings(max_examples=300, deadline=None)
     @given(wc=corpora, mc=st.sampled_from([1, 2, 3]))
     def check(wc, mc):
-        ref = T.bpe_train_reference(wc, 12, min_count=mc)
+        ref = bpe_train_reference(wc, 12, min_count=mc)
         got, _ = T.bpe_train_incremental_reference(wc, 12, min_count=mc)
         assert got == ref, (wc, mc)
 
@@ -3688,7 +3822,7 @@ def test_bpe_incremental_final_vocab_matches_replay():
     cur = {w: " " + " ".join(w) + " " for w in wc}
     for a, b, _ in merges:
         pat, rep = f" {a} {b} ", f" {a}{b} "
-        cur = {w: T._replace_passes(s, pat, rep) for w, s in cur.items()}
+        cur = {w: _replace_passes(s, pat, rep) for w, s in cur.items()}
     assert cur == syms
 
 
@@ -3827,13 +3961,10 @@ def test_pack_bestfit_fewer_truncations_than_concat(spark):
     assert cc_tokens < total             # concat drops bucket tails
 
 
-def test_pack_buckets_tune_and_invariance(spark):
-    """The bucket autotuner (r12 advice: n_buckets was a hand-set
-    knob while the BFD fold is O(items x bins) per bucket): the
-    helper derives n_buckets from the corpus's CHUNK count (or row
-    count in conversation mode), and the packing INVARIANTS — every
-    token packed exactly once, no drops, bins <= seq_len — hold at
-    every bucket count, so tuning is purely a latency knob."""
+def test_pack_bestfit_invariant_across_bucket_counts(spark):
+    """The packing INVARIANTS — every token packed exactly once, no
+    drops, bins <= seq_len — hold at every bucket count, so
+    n_buckets is purely a latency knob."""
     from pyspark.sql import functions as F
 
     docs = spark.read.parquet("/root/testdata/sf0.001/documents.parquet")
@@ -3849,14 +3980,7 @@ def test_pack_buckets_tune_and_invariance(spark):
             F.sum(F.ceil((F.size("tid") + 1) / F.lit(L))).cast("bigint")
         ).collect()[0][0]
     )
-    got = T.pack_buckets_tune(
-        ids, "tid", seq_len=L, target_items_per_bucket=50
-    )
-    assert got == -(-chunks // 50) >= 1
-    # conversation mode: one item per row
-    assert T.pack_buckets_tune(
-        ids, None, seq_len=L, target_items_per_bucket=100
-    ) == -(-ids.count() // 100)
+    got = -(-chunks // 50)  # ~50 chunks per bucket
 
     total = int(
         ids.agg(F.sum(F.size("tid") + 1).cast("bigint")).collect()[0][0]
@@ -3877,11 +4001,6 @@ def test_pack_buckets_tune_and_invariance(spark):
             token_multiset = ms
         else:
             assert ms == token_multiset  # bucket count never changes WHAT is packed
-
-    import pytest
-
-    with pytest.raises(ValueError, match=">= 1"):
-        T.pack_buckets_tune(ids, "tid", seq_len=0)
 
 
 def test_bpe_train_distributed_delta_grams_stay_exact(spark):
@@ -3913,7 +4032,7 @@ def test_bpe_train_distributed_delta_grams_stay_exact(spark):
     for _, t in rows:
         for w in re.findall("[a-z0-9]+", t.lower()):
             wc[w] = wc.get(w, 0) + 1
-    ref = T.bpe_train_reference(wc, n_merges=12, min_count=2)
+    ref = bpe_train_reference(wc, n_merges=12, min_count=2)
     assert merges == ref
     # final vocabulary equals a rank-order replay from scratch
     flat = [(a, b) for a, b, _ in merges]

@@ -16,6 +16,70 @@ from mongodb_etl_migration_spark.operators import wordpiece as WP
 from mongodb_etl_migration_spark.operators.text import _apply_pair_passes
 
 
+def wordpiece_train_reference(
+    word_counts: dict[str, int], n_merges: int, min_count: int = 2
+) -> list[tuple[str, str, int, int, int]]:
+    """Plain-Python reference WordPiece TRAINER — recount-per-round
+    ground truth the incremental path is trajectory-pinned against.
+    Per round: adjacent-pair counts AND symbol counts over the
+    weighted vocabulary, argmax by (score_key DESC, (l, r) ASC),
+    merge applied everywhere via ``_apply_pair_passes``. Returns
+    (left, right, pair_count, left_count, right_count) in rank
+    order."""
+    vocab = {
+        w: (WP.word_symbols(w), int(c))
+        for w, c in word_counts.items()
+        if w
+    }
+    merges: list[tuple[str, str, int, int, int]] = []
+    for _ in range(n_merges):
+        pc: dict[tuple[str, str], int] = {}
+        sc: dict[str, int] = {}
+        for parts, c in vocab.values():
+            for s in parts:
+                sc[s] = sc.get(s, 0) + c
+            for a, b in zip(parts, parts[1:]):
+                pc[(a, b)] = pc.get((a, b), 0) + c
+        cands = [
+            (l, r, c) for (l, r), c in pc.items() if c >= min_count
+        ]
+        if not cands:
+            break
+        l, r, c = min(
+            cands,
+            key=lambda t: (-WP.score_key(t[2], sc[t[0]], sc[t[1]]), t[0], t[1]),
+        )
+        merges.append((l, r, c, sc[l], sc[r]))
+        out_sym = WP.merge_token(l, r)
+        vocab = {
+            w: (_apply_pair_passes(parts, l, r, out_sym), n)
+            for w, (parts, n) in vocab.items()
+        }
+    return merges
+
+
+def wordpiece_encode_reference(
+    word: str, vocab: list[str]
+) -> list[int] | None:
+    """Greedy longest-match encode of one word (BERT's
+    WordpieceTokenizer): None = OOV (no match at some position)."""
+    start = {t: i for i, t in enumerate(vocab) if not t.startswith("##")}
+    cont = {t[2:]: i for i, t in enumerate(vocab) if t.startswith("##")}
+    out: list[int] = []
+    pos = 0
+    while pos < len(word):
+        table = start if pos == 0 else cont
+        for ln in range(len(word) - pos, 0, -1):
+            i = table.get(word[pos:pos + ln])
+            if i is not None:
+                out.append(i)
+                pos += ln
+                break
+        else:
+            return None
+    return out
+
+
 def test_score_key_orders_exact_rationals():
     """The fixed-point key (c << 100) // (ca·cb) induces EXACTLY the
     rational order of c/(ca·cb) whenever denominators stay ≤ 2^100 —
@@ -61,7 +125,7 @@ def test_likelihood_score_diverges_from_raw_count_bpe():
     # 'ab' appears 10× but a,b also appear alone constantly;
     # 'xy' appears 4× and x,y appear ONLY there.
     wc = {"ab": 10, "a": 90, "b": 90, "xy": 4}
-    merges = WP.wordpiece_train_reference(wc, n_merges=1)
+    merges = wordpiece_train_reference(wc, n_merges=1)
     (l, r, c, ca, cb) = merges[0]
     assert (l, r) == ("x", "##y")
     assert (c, ca, cb) == (4, 4, 4)
@@ -85,7 +149,7 @@ def test_trainer_paths_trajectory_equal_sweep():
             )
             wc[w] = wc.get(w, 0) + rng.randrange(1, 20)
         for n_merges, min_count in [(5, 2), (12, 1), (30, 3)]:
-            ref = WP.wordpiece_train_reference(wc, n_merges, min_count)
+            ref = wordpiece_train_reference(wc, n_merges, min_count)
             inc = WP.wordpiece_train_incremental_reference(
                 wc, n_merges, min_count
             )
@@ -94,8 +158,8 @@ def test_trainer_paths_trajectory_equal_sweep():
 
 def test_train_stops_below_min_count():
     wc = {"ab": 1, "cd": 1}
-    assert WP.wordpiece_train_reference(wc, 5, min_count=2) == []
-    got = WP.wordpiece_train_reference(wc, 5, min_count=1)
+    assert wordpiece_train_reference(wc, 5, min_count=2) == []
+    got = wordpiece_train_reference(wc, 5, min_count=1)
     assert len(got) == 2  # each word merges once, then no pairs remain
 
 
@@ -121,7 +185,7 @@ def test_spark_train_equals_reference(spark):
             wc[w] = wc.get(w, 0) + 1
     df = spark.createDataFrame(docs, "doc_id bigint, text string")
     merges, vocab = WP.wordpiece_train(df, "text", n_merges=10)
-    ref = WP.wordpiece_train_reference(wc, 10)
+    ref = wordpiece_train_reference(wc, 10)
     assert merges == ref
     assert vocab == WP.wordpiece_vocab(wc, ref)
 
@@ -140,17 +204,17 @@ def test_encode_reference_greedy_is_spec():
     same): vocab {a, ab, ##bc} on 'abc' → greedy takes 'ab', strands
     '##c', OOV; the feasible a + ##bc is deliberately not found."""
     vocab = ["a", "ab", "##bc"]
-    assert WP.wordpiece_encode_reference("abc", vocab) is None
-    assert WP.wordpiece_encode_reference("a", vocab) == [0]
-    assert WP.wordpiece_encode_reference("abbc", vocab) == [1, 2]
+    assert wordpiece_encode_reference("abc", vocab) is None
+    assert wordpiece_encode_reference("a", vocab) == [0]
+    assert wordpiece_encode_reference("abbc", vocab) == [1, 2]
     # longest match at interior positions too
     vocab2 = ["x", "##y", "##yz", "##z"]
-    assert WP.wordpiece_encode_reference("xyz", vocab2) == [0, 2]
+    assert wordpiece_encode_reference("xyz", vocab2) == [0, 2]
 
 
 def test_encode_paths_agree_and_honest_oov(spark):
-    """Column literal-map walk == Arrow batch twin == per-word
-    reference on trained vocab; an uncoverable word is ONE NULL
+    """Column literal-map walk == per-word reference on trained
+    vocab; an uncoverable word is ONE NULL
     element counted 1 (the catalog row renders it 'x'), empty docs
     keep n_tokens=0 rows."""
     train = spark.createDataFrame(
@@ -171,19 +235,13 @@ def test_encode_paths_agree_and_honest_oov(spark):
             "doc_id", WP.wordpiece_token_ids("text", vocab).alias("ids")
         ).collect()
     }
-    bat = {
-        r.doc_id: r
-        for r in WP.wordpiece_ids_batch(df, "text", vocab).collect()
-    }
     for did, text in docs:
         want: list[int | None] = []
         for w in text.lower().split():
             w = "".join(ch for ch in w if ch.isalnum())
-            got = WP.wordpiece_encode_reference(w, vocab)
+            got = wordpiece_encode_reference(w, vocab)
             want.extend([None] if got is None else got)
         assert list(col[did]) == want, (did, list(col[did]), want)
-        assert list(bat[did].token_ids) == want
-        assert bat[did].n_tokens == len(want)
     assert None in col[2]  # OOV visible, never dropped
     assert col[3] == []
 
@@ -197,7 +255,7 @@ def test_encode_roundtrip_decodes_training_words(spark):
     )
     _merges, vocab = WP.wordpiece_train(train, "text", n_merges=12)
     for w in ["hello", "world", "help", "hold", "holder"]:
-        ids = WP.wordpiece_encode_reference(w, vocab)
+        ids = wordpiece_encode_reference(w, vocab)
         assert ids is not None
         joined = "".join(
             vocab[i][2:] if vocab[i].startswith("##") else vocab[i]
